@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .band_index import BandIndex
 from .dedup_common import materialize
 from .dedup_components import _drop_pair_losers
 
@@ -300,8 +301,6 @@ def embedding_near_dup_pairs(
     (dot + both norms) per pair was measured 3x slower, and the norm
     work grows with the pair count instead of the corpus size.
     """
-    from .similarity import banded_signatures
-
     if bands_df is not None and (
         not isinstance(num_planes, int) or num_planes <= 0
     ):
@@ -360,24 +359,8 @@ def embedding_near_dup_pairs(
             f"embedding_near_dup_pairs: verify_impl must be 'expr', 'arrow' "
             f"or 'auto', got {verify_impl!r}"
         )
-    norm_sq = F.aggregate(
-        F.col(vec_col), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-    )
-    inv_norm = 1.0 / F.sqrt(F.col("_nsq"))
-    scaled = (
-        df.select(F.col(id_col), F.col(vec_col), norm_sq.alias("_nsq"))
-        .filter(F.col("_nsq") > 0)
-        .select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double") * inv_norm).alias("_sv"),
-            F.col(vec_col),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    scaled = _normalized_vectors(df, vec_col, id_col)
+    dot = _dot(F.col("va"), F.col("vb"))
     if num_planes <= 0:
         if exact_impl == "gemm":
             return _exact_pairs_gemm(scaled, id_col, threshold, exact_tile_rows)
@@ -400,9 +383,8 @@ def embedding_near_dup_pairs(
         bands_df.select(F.col(id_col), "band", "sig")
         if bands_df is not None
         else materialize(
-            banded_signatures(
-                scaled, vec_col, id_col, num_planes, num_bands, dim, id_col,
-                impl=signature_impl,
+            embedding_band_state(
+                df, vec_col, id_col, num_planes, num_bands, dim, signature_impl
             )
         )
     )
@@ -521,19 +503,7 @@ def semantic_dedup_pairs(
     assigned = assign_nearest_centroid(df, centroids, id_col, vec_col).select(
         id_col, "cluster_id"
     )
-    norm_sq = F.aggregate(
-        F.col(vec_col), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-    )
-    inv_norm = 1.0 / F.sqrt(F.col("_nsq"))
-    scaled = (
-        df.select(F.col(id_col), F.col(vec_col), norm_sq.alias("_nsq"))
-        .filter(F.col("_nsq") > 0)
-        .select(
-            F.col(id_col),
-            F.transform(F.col(vec_col), lambda x: x.cast("double") * inv_norm).alias("_sv"),
-        )
-        .join(assigned, id_col)
-    )
+    scaled = _normalized_vectors(df, vec_col, id_col).join(assigned, id_col)
     if max_cluster_size is not None:
         scaled = drop_oversized_groups(scaled, ["cluster_id"], max_cluster_size)
     if pair_impl == "gemm":
@@ -580,11 +550,7 @@ def semantic_dedup_pairs(
     b = scaled.select(
         F.col("cluster_id"), F.col(id_col).alias("id_b"), F.col("_sv").alias("vb")
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot(F.col("va"), F.col("vb"))
     return (
         a.join(b, "cluster_id")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -660,42 +626,59 @@ def semantic_dedup(
 # ---------------------------------------------------------------------------
 
 
-def _verified_cosine_pairs(
-    cand: DataFrame,
-    va: DataFrame,
-    vb: DataFrame,
-    a_id: str,
-    b_id: str,
-    threshold: float,
-) -> DataFrame:
-    """Shared candidate verification: join normalized vectors onto the
-    id pairs, fold the dot product in codegen, keep pairs at or above
-    ``threshold``. ``va``/``vb`` carry (a_id, va) / (b_id, vb). Used by
-    both the history probe and the internal sweep of the delta loop so
-    the verify math lives in exactly one place."""
-    dot = F.aggregate(
-        F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+def _norm_sq(v: Column) -> Column:
+    """Squared L2 norm of an array column as double — NULL when the
+    array or any element is NULL, NaN when an element is NaN."""
+    return F.aggregate(
+        v, F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
     )
-    return (
-        cand.join(va, a_id)
-        .join(vb, b_id)
-        .select(a_id, b_id, dot.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
+
+
+def _dot(a: Column, b: Column) -> Column:
+    """Dot product of two array<double> columns, folded in codegen — the
+    cosine of two L2-normalized vectors."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _cosine_index(
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    num_planes: int = 12,
+    num_bands: int = 4,
+    dim: int | None = None,
+    signature_impl: str = "expr",
+    threshold: float = 0.95,
+) -> BandIndex:
+    """The hyperplane/cosine :class:`~.band_index.BandIndex`: signs with
+    :func:`embedding_band_state`, verifies with the certified expr dot
+    fold over L2-normalized vectors. Each side is id-pruned to the
+    candidate set before the vector-width verify join, so the shuffle
+    carries O(candidates * dim) bytes, not O(batch * dim)."""
+    return BandIndex(
+        id_col=id_col,
+        keys=("band", "sig"),
+        family={"num_planes": num_planes, "num_bands": num_bands},
+        noun="plane family",
+        score="cosine",
+        threshold=threshold,
+        sign=lambda df: embedding_band_state(
+            df, vec_col, id_col, num_planes, num_bands, dim, signature_impl
+        ),
+        features=lambda df: _normalized_vectors(df, vec_col, id_col),
+        similarity=_dot,
     )
 
 
 def _normalized_vectors(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     """(id, _sv): L2-normalized double vectors, zero-norm rows dropped
     (no defined cosine) — the shared verify-side projection."""
-    norm_sq = F.aggregate(
-        F.col(vec_col), F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
     inv_norm = 1.0 / F.sqrt(F.col("_nsq"))
     return (
-        df.select(F.col(id_col), F.col(vec_col), norm_sq.alias("_nsq"))
+        df.select(
+            F.col(id_col), F.col(vec_col), _norm_sq(F.col(vec_col)).alias("_nsq")
+        )
         .filter(F.col("_nsq") > 0)
         .select(
             F.col(id_col),
@@ -744,13 +727,9 @@ def embedding_band_state(
         )
     from .similarity import banded_signatures
 
-    norm_sq = F.aggregate(
-        F.col(vec_col), F.lit(0.0),
-        lambda acc, x: acc + x.cast("double") * x.cast("double"),
-    )
-    nonzero = df.filter(norm_sq > 0)
     return banded_signatures(
-        nonzero, vec_col, id_col, num_planes, num_bands, dim, id_col,
+        df.filter(_norm_sq(F.col(vec_col)) > 0),
+        vec_col, id_col, num_planes, num_bands, dim, id_col,
         impl=signature_impl,
     )
 
@@ -790,35 +769,11 @@ def embedding_delta_pairs(
     the state's pinned store contract. ``batch_sigs`` optionally feeds
     precomputed batch band rows so a loop that also appends them
     (:func:`embedding_state_append`) signs the batch once."""
-    sigs = (
-        batch_sigs
-        if batch_sigs is not None
-        else embedding_band_state(
-            batch, vec_col, id_col, num_planes, num_bands, dim, signature_impl
-        )
-    ).select(F.col(id_col).alias("left_id"), "band", "sig")
-    rb = state.select(F.col(id_col).alias("right_id"), "band", "sig")
-    if max_bucket_size is not None:
-        from .skew import drop_oversized_groups
-
-        sigs = drop_oversized_groups(sigs, ["band", "sig"], max_bucket_size)
-        rb = drop_oversized_groups(rb, ["band", "sig"], max_bucket_size)
-    cand = materialize(
-        sigs.join(rb, ["band", "sig"]).select("left_id", "right_id").dropDuplicates()
+    ix = _cosine_index(
+        vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
     )
-    # BOTH sides are id-pruned to the candidate set before the
-    # vector-width verify joins (the minhash twin's side_shingles
-    # semi-join discipline): the shuffle then carries
-    # O(candidates * dim) bytes, not O(batch * dim)
-    batch_ids = cand.select(F.col("left_id").alias(id_col)).dropDuplicates()
-    va = _normalized_vectors(
-        batch.join(batch_ids, id_col, "left_semi"), vec_col, id_col
-    ).select(F.col(id_col).alias("left_id"), F.col("_sv").alias("va"))
-    hist_ids = cand.select(F.col("right_id").alias(id_col)).dropDuplicates()
-    vb = _normalized_vectors(
-        corpus.join(hist_ids, id_col, "left_semi"), vec_col, id_col
-    ).select(F.col(id_col).alias("right_id"), F.col("_sv").alias("vb"))
-    return _verified_cosine_pairs(cand, va, vb, "left_id", "right_id", threshold)
+    lb = batch_sigs if batch_sigs is not None else ix.sign(batch)
+    return ix.cross_pairs(lb, state, batch, corpus, max_bucket_size)
 
 
 def embedding_dedup_delta(
@@ -845,92 +800,9 @@ def embedding_dedup_delta(
     :func:`embedding_state_append` of the survivors to complete the
     cycle. Zero-norm vectors have no cosine to anyone and pass through
     as survivors."""
-    sigs = embedding_band_state(
-        batch, vec_col, id_col, num_planes, num_bands, dim, signature_impl
-    )
-    sigs.persist()
-    try:
-        # The history probe and the batch-internal sweep share ONE
-        # tagged CANDIDATE pass (round-12 restructure, kept): a cycle
-        # previously ran four eager executions; fusing the candidate
-        # materialization cut that without changing a single pair.
-        # The VERIFICATION is split per branch again (round-13, same
-        # finding as the minhash twin): the tagged-union verify
-        # measured 1.8x slower at sf1 (bench_scale_delta_ab —
-        # old-split 16.8 s vs tagged-union 30.9 s) because the union
-        # side defeats per-branch broadcast planning. id_a is always a
-        # BATCH id; id_b is a corpus id on '_src'='h' rows and a batch
-        # id on '_src'='i' rows (ids may collide across sides, so the
-        # branches must never be mixed without the tag).
-        lb = sigs.select(F.col(id_col).alias("id_a"), "band", "sig")
-        rb = state.select(F.col(id_col).alias("id_b"), "band", "sig")
-        ib = sigs
-        if max_bucket_size is not None:
-            from .skew import drop_oversized_groups
-
-            lb = drop_oversized_groups(lb, ["band", "sig"], max_bucket_size)
-            rb = drop_oversized_groups(rb, ["band", "sig"], max_bucket_size)
-            ib = drop_oversized_groups(sigs, ["band", "sig"], max_bucket_size)
-        hist_cand = lb.join(rb, ["band", "sig"]).select(
-            "id_a", "id_b", F.lit("h").alias("_src")
-        )
-        a = ib.select(F.col(id_col).alias("id_a"), "band", "sig")
-        b = ib.select(F.col(id_col).alias("id_b"), "band", "sig")
-        int_cand = (
-            a.join(b, ["band", "sig"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b", F.lit("i").alias("_src"))
-        )
-        # dropDuplicates includes the tag, so dedup stays per-branch —
-        # identical to the two separate dropDuplicates it replaces
-        cand = materialize(
-            hist_cand.unionByName(int_cand).dropDuplicates(
-                ["_src", "id_a", "id_b"]
-            )
-        )
-        # BOTH sides id-pruned to the candidate set before the
-        # vector-width verify joins (the minhash twin's side_shingles
-        # semi-join discipline): the shuffle then carries
-        # O(candidates * dim) bytes, not O(batch * dim). Each branch
-        # verifies through its OWN join (r13 — see the tagged-union
-        # note above), consumed lazily by the returned plan, so the
-        # eager executions stay at one (the candidate checkpoint).
-        hist_cand_v = cand.filter(F.col("_src") == "h").select("id_a", "id_b")
-        int_cand_v = cand.filter(F.col("_src") == "i").select("id_a", "id_b")
-        dot = F.aggregate(
-            F.zip_with(F.col("va"), F.col("vb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-        def _branch_pairs(cand_v, right_src):
-            la = cand_v.select(F.col("id_a").alias(id_col)).dropDuplicates()
-            va = _normalized_vectors(
-                batch.join(la, id_col, "left_semi"), vec_col, id_col
-            ).select(F.col(id_col).alias("id_a"), F.col("_sv").alias("va"))
-            rb_ids = cand_v.select(F.col("id_b").alias(id_col)).dropDuplicates()
-            vb = _normalized_vectors(
-                right_src.join(rb_ids, id_col, "left_semi"), vec_col, id_col
-            ).select(F.col(id_col).alias("id_b"), F.col("_sv").alias("vb"))
-            return (
-                cand_v.join(va, "id_a")
-                .join(vb, "id_b")
-                .select("id_a", "id_b", dot.alias("cosine"))
-                .filter(F.col("cosine") >= threshold)
-            )
-
-        hist_losers = (
-            _branch_pairs(hist_cand_v, corpus)
-            .select(F.col("id_a").alias(id_col))
-            .dropDuplicates()
-        )
-        idups = _branch_pairs(int_cand_v, batch).select("id_a", "id_b")
-        internal_survivors = _drop_pair_losers(
-            batch, idups, id_col, transitive=False, eager=False
-        )
-        return internal_survivors.join(hist_losers, id_col, "left_anti")
-    finally:
-        sigs.unpersist()
+    return _cosine_index(
+        vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
+    ).delta_survivors(batch, state, corpus, max_bucket_size)
 
 
 def embedding_state_append(

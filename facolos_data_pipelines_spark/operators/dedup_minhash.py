@@ -14,6 +14,7 @@ from .dedup_common import (
     _check_lanes,
     _resolve_family,
 )
+from .band_index import BandIndex
 from .dedup_components import _drop_pair_losers
 
 
@@ -249,26 +250,8 @@ def minhash_signatures(
     clear ValueError on ANSI sessions instead of silently switching —
     signatures from different families never match each other.
     """
-    w = df.select(
-        F.col(id_col), F.posexplode(normalized_words(text_col)).alias("_pos", "_w")
-    )
-    if shingle_n <= 1:
-        sh = w.select(id_col, F.col("_w").alias("_sh"))
-    else:
-        win = Window.partitionBy(id_col).orderBy("_pos")
-        leads = [F.lead("_w", j).over(win).alias(f"_w{j}") for j in range(1, shingle_n)]
-        sh = (
-            w.select(id_col, "_pos", "_w", *leads)
-            # full-length shingles only, except the pos-0 one for short docs
-            # (concat_ws skips the NULL tail, yielding the full word join)
-            .filter(F.col(f"_w{shingle_n - 1}").isNotNull() | (F.col("_pos") == 0))
-            .select(
-                id_col,
-                F.concat_ws(
-                    " ", "_w", *[f"_w{j}" for j in range(1, shingle_n)]
-                ).alias("_sh"),
-            )
-        )
+    # (id, _sh) rows, duplicates kept (the min-aggregate absorbs them)
+    sh = exploded_shingles(df, text_col, id_col, shingle_n, distinct=False)
     # Hash the shingle string ONCE, then derive every MinHash lane with
     # a 2-universal multiply-add over the 64-bit hash — 1 string hash +
     # num_hashes long mul/adds per shingle instead of num_hashes string
@@ -536,95 +519,54 @@ def minhash_cross_corpus_pairs(
     sides partition one corpus can sign it once and filter-split
     instead of running two signature pipelines; identical output —
     a document's band rows don't depend on which frame selects them."""
-    lb = (
-        left_buckets
-        if left_buckets is not None
-        else minhash_lsh_buckets(
-            left, text_col, id_col, num_hashes, bands, shingle_n, family
-        )
-    ).select(F.col(id_col).alias("left_id"), "band_id", "band_hash")
-    rb = (
-        right_buckets
-        if right_buckets is not None
-        else minhash_lsh_buckets(
-            right, text_col, id_col, num_hashes, bands, shingle_n, family
-        )
-    ).select(F.col(id_col).alias("right_id"), "band_id", "band_hash")
-    return _cross_verified_pairs(
-        lb, rb, left, right, text_col, id_col, shingle_n, threshold,
-        max_bucket_size, candidates,
+    ix = _minhash_index(
+        text_col, id_col, num_hashes, bands, shingle_n, family, threshold
     )
+    lb = left_buckets if left_buckets is not None else ix.sign(left)
+    rb = right_buckets if right_buckets is not None else ix.sign(right)
+    return ix.cross_pairs(lb, rb, left, right, max_bucket_size, candidates)
 
 
-def _cross_verified_pairs(
-    lb: DataFrame,
-    rb: DataFrame,
-    left: DataFrame,
-    right: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_n: int,
-    threshold: float,
-    max_bucket_size: int | None,
-    candidates: str,
-) -> DataFrame:
-    """Shared tail of the cross-corpus pair search: band-bucket join of
-    two precomputed band frames (``lb``: left_id/band_id/band_hash,
-    ``rb``: right_id/...), candidate materialization per ``candidates``,
-    then exact distinct-shingle Jaccard verification reading only the
-    matched ids' text from each side. Factored out so the persisted-
-    state delta path (:func:`minhash_delta_pairs`) can feed a band frame
-    LOADED from storage instead of recomputing it from text."""
-    if max_bucket_size is not None:
-        from .skew import drop_oversized_groups
-
-        lb = drop_oversized_groups(lb, ["band_id", "band_hash"], max_bucket_size)
-        rb = drop_oversized_groups(rb, ["band_id", "band_hash"], max_bucket_size)
-    cand = (
-        lb.join(rb, ["band_id", "band_hash"])
-        .select("left_id", "right_id")
-        .dropDuplicates()
-    )
-    if candidates == "checkpoint":
-        from .dedup_common import materialize
-
-        cand = materialize(cand)  # no-op under plan_only_mode
-    elif candidates == "persist":
-        from pyspark import StorageLevel
-
-        cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-    elif candidates != "lazy":
-        raise ValueError(
-            "candidates must be 'checkpoint', 'persist' or 'lazy', got "
-            f"{candidates!r}"
-        )
-
-    def side_shingles(df: DataFrame, out_id: str) -> DataFrame:
-        ids = cand.select(F.col(out_id).alias(id_col)).dropDuplicates()
-        # NOTE (r13, measured): the narrow word_shingles transform is
-        # the RIGHT form here — each side's arrays are built once and
-        # candidates are heavily id-pruned, so swapping in the explode
-        # path (shingle_arrays) added a window shuffle per side and
-        # measured 1.3-1.9x SLOWER (A/B: cross_corpus_dedup 3.75 ->
-        # 4.67 s, decontaminate 1.28 -> 2.39 s). shingle_arrays wins
-        # only where one frame feeds BOTH verify sides
-        # (verified_near_dup_pairs).
-        return (
-            df.join(ids, id_col, "left_semi")
-            .select(
-                F.col(id_col).alias(out_id),
-                word_shingles(text_col, shingle_n).alias(f"_sh_{out_id}"),
-            )
-        )
-
-    joined = cand.join(side_shingles(left, "left_id"), "left_id").join(
-        side_shingles(right, "right_id"), "right_id"
-    )
-    jac = F.size(F.array_intersect("_sh_left_id", "_sh_right_id")) / F.size(
-        F.array_union("_sh_left_id", "_sh_right_id")
-    )
-    return joined.select("left_id", "right_id", jac.alias("jaccard")).filter(
-        F.col("jaccard") >= threshold
+def _minhash_index(
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    num_hashes: int = 32,
+    bands: int = 8,
+    shingle_n: int = 3,
+    family: str = "multiply_add",
+    threshold: float = 0.8,
+) -> BandIndex:
+    """The MinHash/Jaccard :class:`~.band_index.BandIndex`: signs with
+    :func:`minhash_lsh_buckets`, verifies with exact distinct-shingle
+    Jaccard. Cross-side verify builds each side's shingle arrays with
+    the narrow :func:`word_shingles` transform: each side is built once
+    over id-pruned docs, and the explode path (:func:`shingle_arrays`)
+    measured 1.3-1.9x SLOWER there (it adds a window shuffle per side;
+    cross_corpus_dedup 3.75 -> 4.67 s, decontaminate 1.28 -> 2.39 s,
+    r13). The in-batch form, where one frame feeds both sides, keeps
+    :func:`verified_near_dup_pairs`' explode path."""
+    return BandIndex(
+        id_col=id_col,
+        keys=("band_id", "band_hash"),
+        family={
+            "num_hashes": num_hashes,
+            "bands": bands,
+            "shingle_n": shingle_n,
+            "family": family,
+        },
+        noun="MinHash signing family",
+        score="jaccard",
+        threshold=threshold,
+        sign=lambda df: minhash_lsh_buckets(
+            df, text_col, id_col, num_hashes, bands, shingle_n, family
+        ),
+        features=lambda df: df.select(id_col, word_shingles(text_col, shingle_n)),
+        similarity=lambda a, b: F.size(F.array_intersect(a, b))
+        / F.size(F.array_union(a, b)),
+        verify_within=lambda cand, df: verified_near_dup_pairs(
+            df, cand, text_col, id_col, shingle_n, threshold
+        ),
+        legacy_meta_ok=True,
     )
 
 
@@ -734,18 +676,11 @@ def minhash_delta_pairs(
     that also appends them to the state (:func:`minhash_state_append`)
     computes them once. ``candidates`` and ``max_bucket_size`` behave
     as in :func:`minhash_cross_corpus_pairs`."""
-    lb = (
-        batch_buckets
-        if batch_buckets is not None
-        else minhash_band_state(
-            batch, text_col, id_col, num_hashes, bands, shingle_n, family
-        )
-    ).select(F.col(id_col).alias("left_id"), "band_id", "band_hash")
-    rb = state.select(F.col(id_col).alias("right_id"), "band_id", "band_hash")
-    return _cross_verified_pairs(
-        lb, rb, batch, corpus, text_col, id_col, shingle_n, threshold,
-        max_bucket_size, candidates,
+    ix = _minhash_index(
+        text_col, id_col, num_hashes, bands, shingle_n, family, threshold
     )
+    lb = batch_buckets if batch_buckets is not None else ix.sign(batch)
+    return ix.cross_pairs(lb, state, batch, corpus, max_bucket_size, candidates)
 
 
 def minhash_dedup_delta(
@@ -760,7 +695,6 @@ def minhash_dedup_delta(
     threshold: float = 0.8,
     family: str = "multiply_add",
     max_bucket_size: int | None = None,
-    candidates: str = "checkpoint",
     batch_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """One cycle of the incremental MinHash dedup loop: the batch rows
@@ -791,125 +725,9 @@ def minhash_dedup_delta(
     append re-signing survivor text. ``batch_buckets`` here accepts the
     batch's precomputed band rows directly (same contract as
     :func:`minhash_delta_pairs`)."""
-    bb = (
-        batch_buckets
-        if batch_buckets is not None
-        else minhash_band_state(
-            batch, text_col, id_col, num_hashes, bands, shingle_n, family
-        )
-    )
-    bb.persist()
-    try:
-        from .dedup_common import materialize
-
-        # The history probe and the batch-internal sweep share ONE
-        # tagged CANDIDATE pass (round-12 restructure, kept): a cycle
-        # previously ran four eager executions; fusing the candidate
-        # materialization cut that without changing a single pair.
-        # The VERIFICATION is split per branch again (round-13): the
-        # r12 tagged-union verify measured 1.8x slower at sf1 — see
-        # the comment at the verify stage below. id_a is always a
-        # BATCH id; id_b is a corpus id on '_src'='h' rows and a
-        # batch id on '_src'='i' rows (ids may collide across sides,
-        # so the branches must never be mixed without the tag).
-        lb = bb.select(F.col(id_col).alias("id_a"), "band_id", "band_hash")
-        rb = state.select(F.col(id_col).alias("id_b"), "band_id", "band_hash")
-        ib = bb
-        if max_bucket_size is not None:
-            from .skew import drop_oversized_groups
-
-            lb = drop_oversized_groups(lb, ["band_id", "band_hash"], max_bucket_size)
-            rb = drop_oversized_groups(rb, ["band_id", "band_hash"], max_bucket_size)
-            ib = drop_oversized_groups(bb, ["band_id", "band_hash"], max_bucket_size)
-        hist_cand = (
-            lb.join(rb, ["band_id", "band_hash"])
-            .select("id_a", "id_b", F.lit("h").alias("_src"))
-        )
-        a, b = ib.alias("a"), ib.alias("b")
-        int_cand = (
-            a.join(
-                b,
-                (F.col("a.band_id") == F.col("b.band_id"))
-                & (F.col("a.band_hash") == F.col("b.band_hash"))
-                & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-            )
-            .select(
-                F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
-                F.lit("i").alias("_src"),
-            )
-        )
-        # dropDuplicates includes the tag, so dedup stays per-branch —
-        # identical to the two separate dropDuplicates it replaces
-        cand = hist_cand.unionByName(int_cand).dropDuplicates(
-            ["_src", "id_a", "id_b"]
-        )
-        if candidates == "checkpoint":
-            cand = materialize(cand)
-        elif candidates == "persist":
-            from pyspark import StorageLevel
-
-            cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        elif candidates != "lazy":
-            raise ValueError(
-                "candidates must be 'checkpoint', 'persist' or 'lazy', got "
-                f"{candidates!r}"
-            )
-
-        # Verification SPLIT per branch (r13): the r12 shape verified
-        # both branches through ONE tagged join against a UNION of the
-        # two shingle sides, keyed on (_src, id_b). That fused the
-        # actions, but the union side defeats per-branch broadcast
-        # planning and funnels both sides through one wide join —
-        # MEASURED 1.8x slower at sf1 (scripts/bench_scale_delta_ab.py:
-        # old-split 12.0 s vs tagged-union 22.1 s medians of 5; at
-        # sf0.1 the difference hides under the action floor, which is
-        # how it shipped). The candidate pass stays FUSED (one tagged
-        # checkpoint — that half is a pure win: one band self-join +
-        # one history probe materialized together), and each branch's
-        # Jaccard verify is a separate, independently-plannable join
-        # consumed lazily by the returned plan — so the action count
-        # stays at r12's level (one checkpoint + the final execution)
-        # while the join shapes are the scale-correct ones.
-        hist_cand_v = cand.filter(F.col("_src") == "h").select("id_a", "id_b")
-        int_cand_v = cand.filter(F.col("_src") == "i").select("id_a", "id_b")
-        jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-            F.array_union("sh_a", "sh_b")
-        )
-        # history branch: sh_a from the batch, sh_b from the corpus —
-        # narrow word_shingles per side (each side is built once over
-        # id-pruned docs; the explode path only wins when ONE frame
-        # feeds both sides, see verified_near_dup_pairs)
-        h_left = hist_cand_v.select(F.col("id_a").alias(id_col)).dropDuplicates()
-        h_sh_a = batch.join(h_left, id_col, "left_semi").select(
-            F.col(id_col).alias("id_a"),
-            word_shingles(text_col, shingle_n).alias("sh_a"),
-        )
-        h_right = hist_cand_v.select(F.col("id_b").alias(id_col)).dropDuplicates()
-        h_sh_b = corpus.join(h_right, id_col, "left_semi").select(
-            F.col(id_col).alias("id_b"),
-            word_shingles(text_col, shingle_n).alias("sh_b"),
-        )
-        hist_losers = (
-            hist_cand_v.join(h_sh_a, "id_a")
-            .join(h_sh_b, "id_b")
-            .filter(jac >= threshold)
-            .select(F.col("id_a").alias(id_col))
-            .dropDuplicates()
-        )
-        # internal branch: both sides are batch docs — exactly the
-        # verified_near_dup_pairs shape (one frame, both sides)
-        idups = verified_near_dup_pairs(
-            batch, int_cand_v, text_col, id_col, shingle_n, threshold
-        ).select("id_a", "id_b")
-        from .dedup_components import _drop_pair_losers
-
-        internal_survivors = _drop_pair_losers(
-            batch, idups, id_col, transitive=False, eager=False
-        )
-        return internal_survivors.join(hist_losers, id_col, "left_anti")
-    finally:
-        bb.unpersist()
+    return _minhash_index(
+        text_col, id_col, num_hashes, bands, shingle_n, family, threshold
+    ).delta_survivors(batch, state, corpus, max_bucket_size, batch_buckets)
 
 
 def minhash_state_append(

@@ -282,7 +282,20 @@ def _hadoop_fs(spark, path: str):
 _META_UNREADABLE = object()
 
 
-def _raise_unreadable_meta(path: str, refusal: str) -> None:
+def _meta_template(index=None) -> str:
+    """The repair text for a store meta: the layout key plus the signing
+    family keys of ``index`` (a :class:`~..operators.band_index.BandIndex`),
+    or a pointer to them when the family is not known here."""
+    if index is None:
+        return (
+            '{"store_partitions": N} plus the signing-family keys its sink '
+            "recorded"
+        )
+    keys = "".join(f', "{k}": <{k}>' for k in index.family)
+    return '{"store_partitions": N' + keys + "}"
+
+
+def _raise_unreadable_meta(path: str, refusal: str, index=None) -> None:
     """The one refusal message for a meta file that EXISTS but can't be
     parsed — shared by every consumer of the _META_UNREADABLE sentinel
     so the contract text (and its repair instructions) can't drift
@@ -291,7 +304,7 @@ def _raise_unreadable_meta(path: str, refusal: str) -> None:
         f"bucket store at {path!r} has a layout meta file "
         f"({_STORE_META_NAME}) that exists but could not be read or "
         f"parsed; {refusal}. Repair or remove the meta file (its content "
-        'should be {"store_partitions": N} with the N the store was '
+        f"should be {_meta_template(index)}, with the values the store was "
         "created with) and retry"
     )
 
@@ -322,17 +335,10 @@ def _read_store_meta(bucket_store_path: str, spark=None):
         try:
             stream = fs.open(jpath)
             try:
-                reader = spark._jvm.java.io.BufferedReader(
-                    spark._jvm.java.io.InputStreamReader(stream, "UTF-8")
-                )
-                chunks = []
-                line = reader.readLine()
-                while line is not None:
-                    chunks.append(line)
-                    line = reader.readLine()
+                payload = bytes(stream.readAllBytes())
             finally:
                 stream.close()
-            return json.loads("\n".join(chunks))
+            return json.loads(payload.decode("utf-8"))
         except Exception:
             return _META_UNREADABLE
     if not os.path.isfile(mp):
@@ -378,39 +384,46 @@ def _effective_store_partitions(
     spark,
     bucket_store_path: str,
     requested: int,
-    hash_col: str = "band_hash",
-    adopt_extra: dict | None = None,
+    index=None,
 ) -> int:
     """Layout of an EXISTING bucket store is sticky: the partition count it
     was created with wins, and a mismatched request raises instead of
     silently probing the wrong pmod space (a wrong N computes
-    pmod(``hash_col``, N_new) != stored bucket_pmod, so every probe
-    misses and cross-batch duplicates leak through). ``hash_col`` is
-    the store's bucket-hash column (band_hash for the minhash store,
-    sig for the embedding band store); ``adopt_extra`` travels into the
-    meta when a remote legacy store adopts the configured layout. Legacy stores written
-    before the meta file: unpartitioned layout -> keep writing
-    unpartitioned (mixing layouts makes Spark's partition-discovery read
-    silently drop the root-level legacy rows); local partitioned layout
-    without meta -> unrecoverable N, raise with a migration instruction.
+    pmod(hash key, N_new) != stored bucket_pmod, so every probe
+    misses and cross-batch duplicates leak through). ``index`` is the
+    store's :class:`~..operators.band_index.BandIndex`: its hash key
+    (band_hash for the minhash store, sig for the embedding band store;
+    band_hash when None) is the pmod column, and its family travels
+    into the meta when a remote legacy store adopts the configured
+    layout. Legacy stores written before the meta file: unpartitioned
+    layout -> keep writing unpartitioned (mixing layouts makes Spark's
+    partition-discovery read silently drop the root-level legacy rows);
+    local partitioned layout without meta -> unrecoverable N, raise with
+    a migration instruction.
     REMOTE ('://') partitioned stores whose meta is provably ABSENT
     (pre-meta legacy stores, or object stores where the best-effort write
     failed) trust the configured value instead of raising — the pre-meta
     behavior, since a raise there is unrecoverable through this API — and
     adopt it as the sticky layout by (re)writing the meta, but only after a
     data-level consistency proof: stored ``bucket_pmod`` must equal
-    ``pmod(band_hash, requested)`` on a row sample (any mismatch proves the
+    ``pmod(hash key, requested)`` on a row sample (any mismatch proves the
     store was written with a DIFFERENT N — including a smaller one, which
     the max-pmod bound alone can't detect). A meta file that EXISTS but
     can't be read (transient store error, corrupt JSON) raises instead of
     adopting: overwriting a valid-but-unreadable meta would silently pin
     the wrong N."""
+    hash_col = index.keys[1] if index is not None else "band_hash"
+    repair = (
+        f"write the meta file ({_meta_template(index)}) with the values the "
+        "store was created with before probing it"
+    )
     meta = _read_store_meta(bucket_store_path, spark)
     if meta is _META_UNREADABLE:
         _raise_unreadable_meta(
             bucket_store_path,
             "refusing to adopt the configured store_partitions over a "
             "possibly-valid recorded layout",
+            index,
         )
     if meta is not None:
         n = int(meta["store_partitions"])
@@ -441,8 +454,7 @@ def _effective_store_partitions(
                     f"bucket_pmod={max_pmod} on disk, which is impossible "
                     f"under the configured store_partitions={requested}; "
                     "the original N is larger and unrecoverable from data "
-                    "alone — write the meta file with the original value "
-                    '({"store_partitions": N}) before probing it'
+                    f"alone — {repair}"
                 )
             # The max-pmod bound only rules out a LARGER original N. A
             # store written with a SMALLER N (e.g. N=4, requested=8) has
@@ -470,20 +482,169 @@ def _effective_store_partitions(
                     f"stored bucket_pmod != pmod({hash_col}, {requested}): "
                     "it was written with a different store_partitions than "
                     "the configured value; the original N is unrecoverable "
-                    "from data alone — write the meta file with the "
-                    'original value ({"store_partitions": N}) before '
-                    "probing it"
+                    f"from data alone — {repair}"
                 )
-            _write_store_meta(bucket_store_path, requested, spark, adopt_extra)
+            _write_store_meta(
+                bucket_store_path, requested, spark,
+                index.family if index is not None else None,
+            )
             return requested
         raise ValueError(
             f"bucket store at {bucket_store_path!r} is bucket_pmod-"
             f"partitioned but has no {_STORE_META_NAME}; its partition "
-            "count is unrecoverable from data alone — write the meta file "
-            'with the original value ({"store_partitions": N}) before '
-            "probing it"
+            f"count is unrecoverable from data alone — {repair}"
         )
     return 0  # legacy unpartitioned store: stay unpartitioned
+
+
+def _pinned_store_partitions(
+    spark,
+    store_path: str,
+    requested: int,
+    index,
+    adopt_family_if_meta_absent: bool = False,
+) -> int:
+    """Check an EXISTING store's recorded signing family against
+    ``index`` before any probe, then resolve its sticky layout
+    (:func:`_effective_store_partitions`). A recorded family that
+    differs raises: signatures under another family never match, so the
+    probe would silently miss every historical bucket. A layout-only or
+    absent meta is accepted only for an index with ``legacy_meta_ok``
+    (the sink then records the configured family on its next write);
+    otherwise the true family is unrecoverable from band rows, so both
+    refuse — the absent case unless ``adopt_family_if_meta_absent``."""
+    meta = _read_store_meta(store_path, spark)
+    if meta is _META_UNREADABLE:
+        _raise_unreadable_meta(
+            store_path,
+            f"refusing to probe — the recorded {index.noun} and layout "
+            "must be readable before any signature can be trusted",
+            index,
+        )
+    configured = ", ".join(f"{k}={v!r}" for k, v in index.family.items())
+    if meta is not None and index.family.keys() & meta.keys():
+        recorded = {k: meta.get(k) for k in index.family}
+        if recorded != index.family:
+            stored = ", ".join(f"{k}={v!r}" for k, v in recorded.items())
+            raise ValueError(
+                f"band store at {store_path!r} was created with {stored} "
+                f"but the sink was configured with {configured}; signatures "
+                f"under a different {index.noun} never match — pass the "
+                "stored family, or re-index the accepted corpus into a new "
+                "store"
+            )
+    elif meta is not None and not index.legacy_meta_ok:
+        # a family-less meta (e.g. hand-written from the layout-repair
+        # instructions) must not silently disable the family check
+        raise ValueError(
+            f"band store at {store_path!r} has a layout meta without the "
+            f"pinned {index.noun}; write the meta the store was CREATED "
+            f"with ({_meta_template(index)}) before probing — adopting the "
+            "configured family would silently miss every historical "
+            "bucket if it differs"
+        )
+    elif meta is None and not (index.legacy_meta_ok or adopt_family_if_meta_absent):
+        raise ValueError(
+            f"band store at {store_path!r} exists but has no meta file, so "
+            f"its {index.noun} cannot be verified; adopting the configured "
+            f"family ({configured}) would silently miss every historical "
+            "bucket if it differs, and pin the wrong family forever — "
+            f"write the meta file ({_meta_template(index)}) with the family "
+            "the store was CREATED with, or pass "
+            "adopt_family_if_meta_absent=True if the configured family is "
+            "known to be the creation family"
+        )
+    return _effective_store_partitions(spark, store_path, requested, index)
+
+
+def _band_store_sink(
+    index,
+    docs_sink_path: str,
+    store_path: str,
+    store_partitions: int,
+    sweep,
+    admit=None,
+    adopt_family_if_meta_absent: bool = False,
+):
+    """The foreachBatch body both near-dup sinks share; the store it
+    keeps follows the band-store contract of
+    :class:`~..operators.band_index.BandIndex`. Per micro-batch: check
+    the store's pinned family and layout, sign the batch ONCE
+    (checkpointed band rows), ``sweep(batch, bands) -> survivors``
+    within the batch, drop every survivor sharing a band key with the
+    store (broadcast probe), checkpoint the survivors, then append the
+    docs, their band rows and — when it lacks the family — the meta.
+    ``admit(batch_df, batch_id) -> (batch, after_sign)`` optionally
+    filters the batch first; ``after_sign`` runs once the signing
+    checkpoint (the batch's first full scan) has returned."""
+    from ..sources.io import table_exists
+
+    id_col, keys = index.id_col, list(index.keys)
+
+    def filter_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        if not batch_df.head(1):
+            return
+        store_exists = table_exists(spark, store_path)
+        n_parts = (
+            _pinned_store_partitions(
+                spark, store_path, store_partitions, index,
+                adopt_family_if_meta_absent,
+            )
+            if store_exists
+            else store_partitions
+        )
+        batch, after_sign = admit(batch_df, batch_id) if admit else (batch_df, None)
+        # ONE signing chain per micro-batch: the in-batch sweep, the
+        # store probe and the store append all select from these rows.
+        bands = index.sign(batch)
+        if n_parts:
+            bands = bands.withColumn(
+                "bucket_pmod", F.pmod(F.col(keys[1]), F.lit(n_parts))
+            )
+        bands = bands.localCheckpoint(eager=True)
+        if after_sign:
+            after_sign()
+        survivors = sweep(batch, bands.select(id_col, *keys))
+        if store_exists:
+            store = spark.read.parquet(store_path)
+            probe_keys = (
+                ["bucket_pmod"] if n_parts and "bucket_pmod" in store.columns else []
+            ) + keys
+            # Broadcast the (small) batch side; the store is scanned
+            # map-side only — no store shuffle, and the partition-column
+            # equi-join key lets dynamic partition pruning skip store
+            # partitions the batch doesn't touch. Probing the WHOLE
+            # batch's band rows (not just in-batch survivors) returns a
+            # superset of hit ids whose extras are exactly the in-batch
+            # losers — already dropped — so the survivor set is unchanged.
+            hit_ids = (
+                store.join(
+                    F.broadcast(
+                        bands.select(*probe_keys, F.col(id_col).alias("_probe_id"))
+                    ),
+                    probe_keys,
+                )
+                .select(F.col("_probe_id").alias(id_col))
+                .dropDuplicates()
+            )
+            survivors = survivors.join(hit_ids, id_col, "left_anti")
+        survivors = survivors.localCheckpoint(eager=True)
+        survivors.write.mode("append").parquet(docs_sink_path)
+        out = bands.join(survivors.select(id_col), id_col, "left_semi").select(
+            *(["bucket_pmod"] if n_parts else []), *keys, id_col
+        )
+        writer = out.write.mode("append")
+        if n_parts:
+            writer = writer.partitionBy("bucket_pmod")
+        writer.parquet(store_path)
+        meta = _read_store_meta(store_path, spark)
+        if meta is None or (
+            meta is not _META_UNREADABLE and not index.family.keys() <= meta.keys()
+        ):
+            _write_store_meta(store_path, n_parts, spark, index.family)
+
+    return filter_batch
 
 
 def near_dup_filter_sink(
@@ -504,7 +665,7 @@ def near_dup_filter_sink(
     1. WITHIN-batch near-dedup with the full verified MinHash pipeline
        (minhash_dedup's exact semantics — LSH candidates, exact Jaccard
        verify, drop the higher id — built from band rows the batch
-       signs ONCE per micro-batch, r13);
+       signs ONCE per micro-batch);
     2. CROSS-batch dedup against the persisted band-bucket store: a doc
        sharing ANY (band_id, band_hash) bucket with prior ingests is
        dropped. This decision is bucket-level — the LSH collision
@@ -516,125 +677,53 @@ def near_dup_filter_sink(
        ``bucket_store_path`` (band_id, band_hash, doc_id — id kept for
        lineage/debugging).
 
-    REPLAY-IDEMPOTENT by construction: a redelivered micro-batch finds
-    its own buckets already in the store and drops every doc, so the
-    sink never duplicates — the property foreachBatch sinks must
-    provide under at-least-once delivery. State is one parquet table of
-    id-width bucket rows, O(docs x bands), never text.
-
-    SCALE SHAPE (long-running streams): the store is written
+    The store follows the band-store contract of
+    :class:`~..operators.band_index.BandIndex`: it is written
     PARTITIONED by ``bucket_pmod = pmod(band_hash, store_partitions)``
-    and probed by broadcasting the micro-batch's buckets (small — one
-    batch x bands rows) against the store scan: an inner broadcast-hash
-    join, so the per-batch cost is a MAP-ONLY scan of the store with
-    zero store-side shuffle (the previous shape dropDuplicates-shuffled
-    the entire store every batch). Duplicate bucket rows in the store
-    are harmless to the probe (hit ids are deduped batch-side), so
-    appends never need a read-modify-write; ``compact_bucket_store``
-    dedups and re-files each partition at maintenance time, keeping the
-    per-partition file count and the scan input bounded.
-    ``store_partitions=0`` keeps the legacy unpartitioned layout. The
-    layout is STICKY and PERSISTED: the store's creation-time partition
-    count is recorded in ``_NEAR_DUP_STORE_META.json`` inside the store
-    directory; re-opening with a different ``store_partitions`` raises
-    (a mismatched N would probe the wrong pmod space and silently miss
-    every historical bucket), and a legacy unpartitioned store keeps
+    and probed by broadcasting the micro-batch's buckets against a
+    map-only store scan, so the per-batch cost never shuffles the store;
+    ``compact_bucket_store`` dedups and re-files it at maintenance time.
+    State is one parquet table of id-width bucket rows, O(docs x bands),
+    never text.
+
+    REPLAY: a redelivered micro-batch whose earlier delivery completed
+    BOTH appends finds its own buckets in the store and drops every
+    doc. It is not replay-safe by construction: the crash window is the
+    gap between the survivor append and the bucket append. A failure
+    there leaves the docs landed but un-indexed, and the redelivery
+    appends them again — at-least-once on the docs side for that one
+    batch. Recovery: ``compact_bucket_store`` plus a doc-id dedup pass
+    over the docs sink.
+
+    The layout AND the signing family are STICKY and PERSISTED in
+    ``_NEAR_DUP_STORE_META.json`` inside the store directory
+    (store_partitions + num_hashes + bands + shingle_n + family):
+    re-opening with a different ``store_partitions`` raises (a
+    mismatched N would probe the wrong pmod space), and so does a
+    different signing family (its buckets never match). A store whose
+    meta records only the layout, or none, is probed as configured and
+    gains the family on its next write. ``store_partitions=0`` keeps the
+    legacy unpartitioned layout, and a legacy unpartitioned store keeps
     being written unpartitioned regardless of the configured default
     (mixing layouts makes Spark's partition discovery silently drop the
     root-level legacy rows).
     """
-    from ..operators.dedup import minhash_lsh_buckets
-    from ..operators.dedup_minhash import (
-        lsh_candidate_pairs,
-        verified_near_dup_pairs,
+    from ..operators.dedup_components import _drop_pair_losers
+    from ..operators.dedup_minhash import _minhash_index, lsh_candidate_pairs
+
+    index = _minhash_index(
+        text_col, id_col, num_hashes, bands, shingle_n, family, threshold
     )
-    from ..sources.io import table_exists
 
-    def filter_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if not batch_df.head(1):
-            return
-        store_exists = table_exists(spark, bucket_store_path)
-        n_parts = (
-            _effective_store_partitions(spark, bucket_store_path, store_partitions)
-            if store_exists
-            else store_partitions
-        )
-        # ONE signing chain per micro-batch (r13): the previous shape
-        # ran the explode/minhash pipeline up to FOUR times per batch
-        # (inside minhash_dedup, for the probe buckets, again for the
-        # post-probe buckets, and once more when the bucket append
-        # executed) plus two extra eager executions. The batch's band
-        # rows are now computed once and checkpointed; the
-        # within-batch sweep (identical minhash_dedup semantics:
-        # lsh_candidate_pairs -> exact-Jaccard verify -> drop id_b),
-        # the store probe, and the store append are all projections /
-        # semi-joins of those rows — a doc's band rows don't depend on
-        # which frame selects them (the minhash_state_append
-        # contract).
-        bb = minhash_lsh_buckets(
-            batch_df, text_col, id_col, num_hashes, bands, shingle_n, family
-        ).localCheckpoint(eager=True)
-        ipairs = lsh_candidate_pairs(bb, id_col)
-        idups = verified_near_dup_pairs(
-            batch_df, ipairs, text_col, id_col, shingle_n, threshold
-        )
-        internal_losers = idups.select(F.col("id_b").alias(id_col)).dropDuplicates()
-        survivors = batch_df.join(internal_losers, id_col, "left_anti")
+    def sweep(batch: DataFrame, band_rows: DataFrame) -> DataFrame:
+        # minhash_dedup's one-sweep semantics: lsh_candidate_pairs ->
+        # exact-Jaccard verify (verified_near_dup_pairs) -> drop id_b
+        pairs = index.verify(lsh_candidate_pairs(band_rows, id_col), batch)
+        return _drop_pair_losers(batch, pairs, id_col, transitive=False)
 
-        def with_pmod(b: DataFrame) -> DataFrame:
-            if n_parts:
-                return b.withColumn(
-                    "bucket_pmod", F.pmod(F.col("band_hash"), F.lit(n_parts))
-                )
-            return b
-
-        if store_exists:
-            store = spark.read.parquet(bucket_store_path)
-            probe_keys = (
-                ["bucket_pmod", "band_id", "band_hash"]
-                if n_parts and "bucket_pmod" in store.columns
-                else ["band_id", "band_hash"]
-            )
-            # Broadcast the (small) batch side; the store is scanned
-            # map-side only — no store shuffle, and the partition-column
-            # equi-join key lets dynamic partition pruning skip store
-            # partitions the batch doesn't touch. Probing the WHOLE
-            # batch's buckets (not just within-batch survivors) returns
-            # a superset of hit ids whose extras are exactly the
-            # within-batch losers — already dropped — so the survivor
-            # set is unchanged while the probe reuses the one signing.
-            hit_ids = (
-                store.join(
-                    F.broadcast(
-                        with_pmod(bb).select(
-                            *probe_keys, F.col(id_col).alias("_probe_id")
-                        )
-                    ),
-                    probe_keys,
-                )
-                .select(F.col("_probe_id").alias(id_col))
-                .dropDuplicates()
-            )
-            survivors = survivors.join(hit_ids, id_col, "left_anti")
-        survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("append").parquet(docs_sink_path)
-        out = with_pmod(
-            bb.join(survivors.select(id_col), id_col, "left_semi")
-        ).select(
-            *(["bucket_pmod"] if n_parts else []),
-            "band_id",
-            "band_hash",
-            id_col,
-        )
-        writer = out.write.mode("append")
-        if n_parts:
-            writer = writer.partitionBy("bucket_pmod")
-        writer.parquet(bucket_store_path)
-        if _read_store_meta(bucket_store_path, spark) is None:
-            _write_store_meta(bucket_store_path, n_parts, spark)
-
-    return filter_batch
+    return _band_store_sink(
+        index, docs_sink_path, bucket_store_path, store_partitions, sweep
+    )
 
 
 def hist_state_sink(
@@ -655,8 +744,8 @@ def hist_state_sink(
     scoring query never touches a historical fact row.
 
     REPLAY-IDEMPOTENT the way a counting sink must be: unlike the
-    near-dup sink (where redelivery is naturally absorbed by the
-    bucket probe), recounting a redelivered micro-batch would DOUBLE
+    near-dup sinks (where the redelivery of a completed batch is
+    absorbed by the bucket probe), recounting a redelivered micro-batch would DOUBLE
     its mass, so rows land partitioned by ``_batch_id`` with dynamic
     partition overwrite — a replayed batch id overwrites its own
     partition instead of appending next to it (the standard
@@ -768,38 +857,23 @@ def embedding_near_dup_sink(
     3. survivors append to ``docs_sink_path``; their band rows append
        to ``band_store_path`` (band, sig, id — id kept for lineage).
 
-    REPLAY-IDEMPOTENT by construction — when the prior delivery
-    completed BOTH appends: a redelivered micro-batch finds its own
-    buckets already in the store and drops every vector, so
-    at-least-once delivery never duplicates the sink. The crash window
-    is the gap between the survivor append and the band-row append
-    (survivors write first so the accepted corpus is never missing an
-    indexed vector): a failure between the two leaves the docs landed
-    but UN-indexed, and the redelivery re-appends every survivor —
-    at-least-once on the docs side for that one batch, same trade-off
-    as ``near_dup_filter_sink``. Recovery: ``compact_bucket_store``
-    plus a doc-id dedup pass over the docs sink. ZERO-NORM
-    vectors are DROPPED (logged per batch): they have no defined
-    cosine and no bucket identity, so they carry no replay protection
-    — a policy difference from the batch operators (which pass them
-    through as survivors) that the streaming contract forces.
+    The store follows the band-store contract of
+    :class:`~..operators.band_index.BandIndex` — broadcast pmod probe,
+    sticky layout, replay and its crash window are those of
+    :func:`near_dup_filter_sink`; here the store is partitioned by
+    ``bucket_pmod = pmod(sig, store_partitions)`` and
+    ``compact_bucket_store`` takes ``id_col="vec_id", key_cols=("band",
+    "sig")``. ZERO-NORM vectors are DROPPED (logged per batch): they
+    have no defined cosine and no bucket identity, so they carry no
+    replay protection — a policy difference from the batch operators
+    (which pass them through as survivors) that the streaming contract
+    forces.
 
-    SCALE SHAPE: identical to the minhash sink — the store is written
-    PARTITIONED by ``bucket_pmod = pmod(sig, store_partitions)`` and
-    probed by broadcasting the micro-batch's band rows against the
-    store scan (inner broadcast-hash join on (bucket_pmod, band, sig))
-    so the per-batch cost is a MAP-ONLY store scan with zero
-    store-side shuffle, and the partition-column key lets dynamic
-    partition pruning skip untouched store partitions. Duplicate
-    bucket rows are harmless to the probe; ``compact_bucket_store``
-    (id_col=...) re-files partitions at maintenance time. The layout
-    AND the plane family are STICKY and PERSISTED in the store meta
+    The plane family is STICKY and PERSISTED in the store meta
     (``_NEAR_DUP_STORE_META.json``: store_partitions + num_planes +
-    num_bands): signatures under a different plane family never match,
-    so re-opening the store with mismatched ``num_planes``/``num_bands``
-    raises instead of silently missing every historical bucket — the
-    pinned-family contract of embedding_band_state, enforced at the
-    sink boundary. ``num_planes`` must be an explicit int
+    num_bands): re-opening the store with mismatched
+    ``num_planes``/``num_bands`` raises instead of silently missing
+    every historical bucket. ``num_planes`` must be an explicit int
     (embedding_band_state rejects 'auto'/bool) and — because the
     decision here is bucket-level, NOT verified — it must be sized for
     the COLLISION RATE at the target corpus, not for bucket occupancy:
@@ -813,23 +887,24 @@ def embedding_near_dup_sink(
     default (12) suits the verified batch loop, not this sink, at
     large N. ``store_partitions=0`` keeps an unpartitioned layout.
 
-    When an EXISTING store has provably NO meta (a remote store whose
-    best-effort meta write failed, or a local legacy unpartitioned
-    store), the true plane family is unrecoverable from (band, sig)
-    data, so the sink REFUSES to probe rather than silently adopting
-    the configured family (which, if wrong, would miss every
-    historical bucket AND pin the wrong family forever).
-    ``adopt_family_if_meta_absent=True`` is the explicit operator
-    override for the one legitimate case — you know the store was
-    created with exactly this (num_planes, num_bands) and only the
-    meta is missing; the sink then adopts and pins the configured
-    family (layout still data-proven via the pmod check for remote
-    partitioned stores)."""
+    When an EXISTING store's meta lacks the plane family, or is
+    provably ABSENT (a remote store whose best-effort meta write
+    failed, or a local legacy unpartitioned store), the true plane
+    family is unrecoverable from (band, sig) data, so the sink REFUSES
+    to probe rather than silently adopting the configured family
+    (which, if wrong, would miss every historical bucket AND pin the
+    wrong family forever). ``adopt_family_if_meta_absent=True`` is the
+    explicit operator override for the absent case when you know the
+    store was created with exactly this (num_planes, num_bands); the
+    sink then adopts and pins the configured family (layout still
+    data-proven via the pmod check for remote partitioned stores)."""
+    import logging
+
     from ..operators.dedup_embedding import (
-        embedding_band_state,
+        _cosine_index,
+        _norm_sq,
         embedding_dedup,
     )
-    from ..sources.io import table_exists
 
     # fail fast on a drifting plane family (bool subclasses int)
     if not isinstance(num_planes, int) or isinstance(num_planes, bool):
@@ -838,76 +913,11 @@ def embedding_near_dup_sink(
             "— the store pins one plane family across the stream's whole "
             "life; size it for the TARGET corpus"
         )
+    index = _cosine_index(
+        vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
+    )
 
-    def filter_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import logging
-
-        spark = batch_df.sparkSession
-        if not batch_df.head(1):
-            return
-        store_exists = table_exists(spark, band_store_path)
-        family = {"num_planes": int(num_planes), "num_bands": int(num_bands)}
-        if store_exists:
-            meta = _read_store_meta(band_store_path, spark)
-            if meta is _META_UNREADABLE:
-                _raise_unreadable_meta(
-                    band_store_path,
-                    "refusing to probe — the recorded plane family and "
-                    "layout must be readable before any signature can "
-                    "be trusted",
-                )
-            if meta is not None and "num_planes" in meta:
-                stored = (int(meta["num_planes"]), int(meta.get("num_bands", -1)))
-                if stored != (num_planes, num_bands):
-                    raise ValueError(
-                        f"embedding band store at {band_store_path!r} was "
-                        f"created with num_planes={stored[0]}, "
-                        f"num_bands={stored[1]} but the sink was configured "
-                        f"with num_planes={num_planes}, num_bands={num_bands}; "
-                        "signatures under different plane families never "
-                        "match — pass the stored family, or re-index the "
-                        "accepted corpus into a new store"
-                    )
-            elif meta is not None:
-                # a meta without the family (e.g. hand-written from the
-                # layout-repair instructions) must not silently disable
-                # the family check forever: the true family is
-                # unrecoverable from (band, sig) data, so refuse rather
-                # than adopt a possibly-wrong configured one
-                raise ValueError(
-                    f"embedding band store at {band_store_path!r} has a "
-                    "layout meta without the pinned plane family; add the "
-                    'family the store was CREATED with ("num_planes": P, '
-                    '"num_bands": B) to the meta file before probing — '
-                    "adopting the configured family would silently miss "
-                    "every historical bucket if it differs"
-                )
-            elif meta is None and not adopt_family_if_meta_absent:
-                # meta provably ABSENT (remote best-effort write failed,
-                # or a local legacy unpartitioned store): the true plane
-                # family is unrecoverable from (band, sig) data — the
-                # same refusal as the family-less-meta branch above, but
-                # with an explicit operator override since no meta file
-                # exists to hand-edit in place
-                raise ValueError(
-                    f"embedding band store at {band_store_path!r} exists "
-                    "but has no meta file, so its plane family cannot be "
-                    "verified; adopting the configured family "
-                    f"(num_planes={num_planes}, num_bands={num_bands}) "
-                    "would silently miss every historical bucket if it "
-                    "differs, and pin the wrong family forever — write "
-                    "the meta file with the family the store was CREATED "
-                    'with ({"num_planes": P, "num_bands": B}), or pass '
-                    "adopt_family_if_meta_absent=True if the configured "
-                    "family is known to be the creation family"
-                )
-            n_parts = _effective_store_partitions(
-                spark, band_store_path, store_partitions,
-                hash_col="sig", adopt_extra=family,
-            )
-        else:
-            n_parts = store_partitions
-
+    def admit(batch_df: DataFrame, batch_id: int):
         # degenerate vectors — NULL, zero-norm, or carrying a NaN/NULL
         # element — have no defined cosine and no stable bucket
         # identity (a NaN dot-product compares TRUE against every
@@ -915,29 +925,20 @@ def embedding_near_dup_sink(
         # NaN vectors would collide in every band), hence no replay
         # protection: drop loudly, not silently. The kept predicate is
         # the exact complement of the counted one.
-        norm_sq = F.aggregate(
-            F.col(vec_col), F.lit(0.0),
-            lambda acc, x: acc + x.cast("double") * x.cast("double"),
-        )
-        scoped = batch_df.withColumn("_nsq", norm_sq)
+        scoped = batch_df.withColumn("_nsq", _norm_sq(F.col(vec_col)))
         bad = (
             F.col(vec_col).isNull()
             | F.col("_nsq").isNull()  # a NULL element nulls the fold
             | F.isnan("_nsq")
             | (F.col("_nsq") <= 0)
         )
-        # The degenerate count rides the batch's first full scan via the
-        # Observation API instead of a dedicated count() job (the
-        # common all-clean case previously paid a whole extra batch
-        # scan just to decide whether to log). CollectMetrics sits
-        # BELOW the keep-filter so it sees every row, and the first
-        # action on this lineage is the band-row checkpoint right
-        # below — an unconditional FULL scan of the batch — so the
-        # observed metric is complete (and correct) by the time the
-        # checkpoint returns. (Previously the first action could be
-        # embedding_dedup's LocalLimit-bounded verify-dispatch probe,
-        # which on a batch larger than the probe bound would have
-        # reported a PARTIAL degenerate count — r13 hardening.)
+        # The degenerate count rides the batch's first full scan — the
+        # band-row checkpoint — via the Observation API instead of a
+        # dedicated count() job. CollectMetrics sits BELOW the
+        # keep-filter so it sees every row, and the checkpoint is an
+        # unconditional FULL scan, so the count is complete once it
+        # returns (embedding_dedup's LocalLimit-bounded verify-dispatch
+        # probe runs later and can never be the scan that fills it).
         deg_obs = Observation()
         batch = (
             scoped.observe(deg_obs, F.count(F.when(bad, True)).alias("n_bad"))
@@ -945,83 +946,28 @@ def embedding_near_dup_sink(
             .drop("_nsq")
         )
 
-        def with_pmod(b: DataFrame) -> DataFrame:
-            if n_parts:
-                return b.withColumn(
-                    "bucket_pmod", F.pmod(F.col("sig"), F.lit(n_parts))
+        def log_degenerate() -> None:
+            n_bad = int(deg_obs.get["n_bad"])
+            if n_bad:
+                logging.getLogger(__name__).info(
+                    "embedding_near_dup_sink batch %s: dropped %d degenerate "
+                    "vector(s) (NULL/zero-norm/NaN) — no bucket identity, "
+                    "not replay-protectable",
+                    batch_id, n_bad,
                 )
-            return b
 
-        # ONE signing chain per micro-batch (r13): the previous shape
-        # signed the batch inside embedding_dedup AND re-signed the
-        # within-batch survivors for the store append. The batch's
-        # band rows are now computed once and checkpointed; the
-        # within-batch sweep consumes them via bands_df, the store
-        # probe broadcasts them, and the append is a survivor
-        # semi-join of them (the embedding_state_append contract: a
-        # vector's band rows don't depend on which frame selects
-        # them). Probing the WHOLE batch's rows (not just
-        # within-batch survivors) returns a superset of hit ids whose
-        # extras are exactly the within-batch losers — already
-        # dropped — so the survivor set is unchanged.
-        sigs_all = with_pmod(
-            embedding_band_state(
-                batch, vec_col, id_col, num_planes, num_bands, dim,
-                signature_impl,
-            )
-        ).localCheckpoint(eager=True)
-        n_bad = int(deg_obs.get["n_bad"])
-        if n_bad:
-            logging.getLogger(__name__).info(
-                "embedding_near_dup_sink batch %s: dropped %d degenerate "
-                "vector(s) (NULL/zero-norm/NaN) — no bucket identity, not "
-                "replay-protectable",
-                batch_id, n_bad,
-            )
+        return batch, log_degenerate
 
-        survivors = embedding_dedup(
+    def sweep(batch: DataFrame, band_rows: DataFrame) -> DataFrame:
+        return embedding_dedup(
             batch, vec_col, id_col, threshold, num_planes, num_bands, dim,
-            signature_impl=signature_impl,
-            bands_df=sigs_all.select(F.col(id_col), "band", "sig"),
+            signature_impl=signature_impl, bands_df=band_rows,
         )
-        if store_exists:
-            store = spark.read.parquet(band_store_path)
-            probe_keys = (
-                ["bucket_pmod", "band", "sig"]
-                if n_parts and "bucket_pmod" in store.columns
-                else ["band", "sig"]
-            )
-            # broadcast the (small) batch side; the store is scanned
-            # map-side only — no store shuffle, and the partition-column
-            # equi-join key enables dynamic partition pruning
-            hit_ids = (
-                store.join(
-                    F.broadcast(
-                        sigs_all.select(
-                            *probe_keys, F.col(id_col).alias("_probe_id")
-                        )
-                    ),
-                    probe_keys,
-                )
-                .select(F.col("_probe_id").alias(id_col))
-                .dropDuplicates()
-            )
-            survivors = survivors.join(hit_ids, id_col, "left_anti")
-        survivors = survivors.localCheckpoint(eager=True)
-        survivors.write.mode("append").parquet(docs_sink_path)
-        out = sigs_all.join(
-            survivors.select(id_col).dropDuplicates(), id_col, "left_semi"
-        ).select(
-            *(["bucket_pmod"] if n_parts else []), "band", "sig", id_col
-        )
-        writer = out.write.mode("append")
-        if n_parts:
-            writer = writer.partitionBy("bucket_pmod")
-        writer.parquet(band_store_path)
-        if _read_store_meta(band_store_path, spark) is None:
-            _write_store_meta(band_store_path, n_parts, spark, family)
 
-    return filter_batch
+    return _band_store_sink(
+        index, docs_sink_path, band_store_path, store_partitions, sweep,
+        admit, adopt_family_if_meta_absent,
+    )
 
 
 def compact_bucket_store(

@@ -1754,6 +1754,44 @@ def test_embedding_dedup_delta_semantics(spark):
     assert set(app.columns) == {"vec_id", "band", "sig"}
 
 
+def test_delta_operators_leave_no_cache_behind(spark):
+    """Building and collecting both delta operators leaves no cached
+    RDD registered: the batch band rows are unpersisted before the
+    operator returns and the candidate pairs are checkpointed, never
+    cached. localCheckpoint registers its own RDD as persistent until
+    the ContextCleaner reaps the frame, so those are the only entries
+    the count may gain."""
+    from facolos_data_pipelines_spark.operators.dedup import (
+        embedding_band_state,
+        embedding_dedup_delta,
+        minhash_band_state,
+        minhash_dedup_delta,
+    )
+
+    jsc = spark.sparkContext._jsc
+
+    def cached() -> set:
+        rdds = jsc.getPersistentRDDs()
+        return {
+            int(i)
+            for i in rdds.keySet().toArray()
+            if not rdds.get(i).rdd().isLocallyCheckpointed()
+        }
+
+    before = cached()
+    corpus, batch = _delta_fixture(spark)
+    state = minhash_band_state(corpus, family="xxhash")
+    survivors = minhash_dedup_delta(batch, state, corpus, family="xxhash")
+    assert {r["doc_id"] for r in survivors.collect()} == {13, 15}
+    hist, ebatch = _edelta_fixture(spark)
+    kw = dict(num_planes=6, num_bands=4, dim=4)
+    esurv = embedding_dedup_delta(
+        ebatch, embedding_band_state(hist, **kw), hist, threshold=0.95, **kw
+    )
+    assert {r["vec_id"] for r in esurv.collect()} == {13, 15, 16}
+    assert cached() == before
+
+
 def test_embedding_band_state_rejects_auto(spark):
     import pytest
 

@@ -654,7 +654,10 @@ def test_near_dup_sink_store_layout_is_sticky_and_validated(spark, tmp_root):
     psink, pstore = f"{tmp_root}/par_sink", f"{tmp_root}/par_store"
     fold4 = near_dup_filter_sink(psink, pstore, store_partitions=4)
     fold4(spark.createDataFrame([(1, base)], doc_schema), 0)
-    assert _read_store_meta(pstore) == {"store_partitions": 4}
+    assert _read_store_meta(pstore) == {
+        "store_partitions": 4, "num_hashes": 32, "bands": 8, "shingle_n": 3,
+        "family": "multiply_add",
+    }
     fold8 = near_dup_filter_sink(psink, pstore, store_partitions=8)
     with pytest.raises(ValueError, match="sticky"):
         fold8(spark.createDataFrame([(9, "whatever text")], doc_schema), 1)
@@ -672,6 +675,61 @@ def test_near_dup_sink_store_layout_is_sticky_and_validated(spark, tmp_root):
     # and the compacted store still probes correctly at the recorded N
     fold4(spark.createDataFrame([(5, base + " xi")], doc_schema), 3)
     assert {r["doc_id"] for r in spark.read.parquet(psink).collect()} == {1}
+
+
+def test_near_dup_sink_refuses_foreign_signing_family(spark, tmp_root):
+    """The MinHash store meta pins the signing family (num_hashes,
+    bands, shingle_n, family) next to the layout: a sink reopened with
+    a different family or band count raises before any probe instead
+    of silently missing every historical bucket. A layout-only meta —
+    what every MinHash store written before the family was pinned
+    carries — is probed as configured and gains the family on the next
+    write."""
+    import json
+    import os
+
+    import pytest
+    from pyspark.sql import types as T
+
+    from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
+    from facolos_data_pipelines_spark.streaming.pipeline import (
+        _STORE_META_NAME,
+        _read_store_meta,
+    )
+
+    doc_schema = T.StructType(
+        [
+            T.StructField("doc_id", T.LongType()),
+            T.StructField("text", T.StringType()),
+        ]
+    )
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    sink, store = f"{tmp_root}/fam_sink", f"{tmp_root}/fam_store"
+    fold = near_dup_filter_sink(sink, store, store_partitions=2)
+    fold(spark.createDataFrame([(1, base)], doc_schema), 0)
+    full_meta = {
+        "store_partitions": 2, "num_hashes": 32, "bands": 8, "shingle_n": 3,
+        "family": "multiply_add",
+    }
+    assert _read_store_meta(store) == full_meta
+
+    for drift in ({"family": "xxhash"}, {"bands": 4}):
+        other = near_dup_filter_sink(sink, store, store_partitions=2, **drift)
+        with pytest.raises(ValueError, match="MinHash signing family"):
+            other(spark.createDataFrame([(9, "whatever text here")], doc_schema), 1)
+    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1}
+
+    with open(os.path.join(store, _STORE_META_NAME), "w") as fh:
+        json.dump({"store_partitions": 2}, fh)
+    fold(
+        spark.createDataFrame(
+            [(2, base + " nu"), (3, "totally different words about spark here")],
+            doc_schema,
+        ),
+        2,
+    )
+    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1, 3}
+    assert _read_store_meta(store) == full_meta
 
 
 def test_near_dup_sink_store_meta_on_uri_paths(spark, tmp_root):
@@ -709,7 +767,10 @@ def test_near_dup_sink_store_meta_on_uri_paths(spark, tmp_root):
     fold4 = near_dup_filter_sink(sink, store, store_partitions=4)
     fold4(spark.createDataFrame([(1, base)], doc_schema), 0)
     assert os.path.isfile(local_meta)
-    assert _read_store_meta(store, spark) == {"store_partitions": 4}
+    assert _read_store_meta(store, spark) == {
+        "store_partitions": 4, "num_hashes": 32, "bands": 8, "shingle_n": 3,
+        "family": "multiply_add",
+    }
     assert _read_store_meta(store) is None  # URI path without spark: opaque
 
     # sticky mismatch raises on URI stores too
@@ -727,7 +788,10 @@ def test_near_dup_sink_store_meta_on_uri_paths(spark, tmp_root):
         ),
         2,
     )
-    assert _read_store_meta(store, spark) == {"store_partitions": 4}
+    assert _read_store_meta(store, spark) == {
+        "store_partitions": 4, "num_hashes": 32, "bands": 8, "shingle_n": 3,
+        "family": "multiply_add",
+    }
     assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1, 3}
 
     # direct writer round-trip (covers overwrite)
@@ -832,6 +896,30 @@ def test_store_meta_unreadable_is_not_absent(spark, tmp_root):
         _effective_store_partitions(spark, store, 16)
     with open(meta) as fh:
         assert fh.read() == "{not json", "unreadable meta must not be overwritten"
+
+    # an embedding band store: the repair text names the plane-family
+    # keys a repaired meta must carry, not just the layout
+    from pyspark.sql import types as T
+
+    from facolos_data_pipelines_spark.streaming import embedding_near_dup_sink
+
+    schema = T.StructType(
+        [
+            T.StructField("vec_id", T.LongType()),
+            T.StructField("embedding", T.ArrayType(T.DoubleType())),
+        ]
+    )
+    estore = f"{tmp_root}/corrupt_meta_emb_store"
+    fold = embedding_near_dup_sink(
+        f"{tmp_root}/corrupt_meta_emb_sink", estore,
+        num_planes=4, num_bands=2, dim=8, store_partitions=2,
+    )
+    fold(spark.createDataFrame([(1, _vec(0))], schema), 0)
+    with open(os.path.join(estore, _STORE_META_NAME), "w") as fh:
+        fh.write("{not json")
+    with pytest.raises(ValueError, match="could not be read") as err:
+        fold(spark.createDataFrame([(2, _vec(3))], schema), 1)
+    assert '"num_planes": <num_planes>, "num_bands": <num_bands>' in str(err.value)
 
 
 def test_compact_refuses_unreadable_meta(spark, tmp_root):
