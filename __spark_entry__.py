@@ -702,7 +702,7 @@ def q_cross_corpus_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from facolos_data_pipelines_spark.operators.dedup import minhash_band_state
-    from facolos_data_pipelines_spark.operators.dedup_common import materialize
+    from facolos_data_pipelines_spark.eager import materialize
 
     docs = _t(spark, sf_dir, "documents")
     # One signature pipeline for the whole corpus, checkpointed, then
@@ -744,7 +744,7 @@ def q_minhash_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         minhash_dedup_delta,
     )
 
-    from facolos_data_pipelines_spark.operators.dedup_common import materialize
+    from facolos_data_pipelines_spark.eager import materialize
 
     docs = _t(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 2 == 1)

@@ -1,11 +1,10 @@
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
 
-Runs a representative subset of ``__spark_entry__.queries()`` (joins,
-aggs, windows, dedup, similarity, text) on local[$SPARK_GRAFT_CPUS] and
-prints ONE JSON line:
+Runs every ``__spark_entry__.queries()`` entry, in ``queries()`` order,
+on local[$SPARK_GRAFT_CPUS] and prints ONE JSON line:
 
     {"metric": ..., "value": total_sec, "unit": "sec",
-     "queries": {name: sec, ...}, "stub_queries": {...}, "sf": ...}
+     "queries": {name: sec, ...}, "sf": ...}
 
 Each query is forced end-to-end with a noop write (full execution, no
 driver-side collect of large results — the cluster-realistic cost).
@@ -15,9 +14,7 @@ Noise control: every query runs $SPARK_GRAFT_BENCH_REPEATS times
 single-execution timings on a shared local[32] JVM vary by 2-3x
 (GC pauses, codegen compilation racing other queries), which round 2
 demonstrated by "regressing" untouched code paths. ``value`` is the sum
-of medians over the real headline queries; the stub-backed
-``multimodal_features`` (its cost is a documented pure-Python fake
-decode, not a Spark plan) is reported separately in ``stub_queries``.
+of medians over the timed queries.
 """
 
 from __future__ import annotations
@@ -29,231 +26,6 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-HEADLINE = [
-    # round 10 additions (incremental drift-state + moments-profile loops)
-    "hist_state_append",
-    "psi_state_series",
-    "hist_edges_drift",
-    "hist_percentiles",
-    "hist_rebin_stitch",
-    "hist_percentiles_daily",
-    "profile_state_append",
-    "incremental_profile",
-    # round 9 session 2 additions
-    "minhash_dedup_delta",
-    "robust_profile",
-    "decayed_user_value",
-    "embedding_dedup_delta",
-    "rolling_psi_drift",
-    "robust_anomaly",
-    "daily_sales_summary",
-    "flatten_explode",
-    "derived_columns",
-    "dim_enrichment_join",
-    "latest_by_key",
-    "window_rank",
-    "tumbling_window",
-    "lookback_filter",
-    "topk_orders",
-    "exact_dedup",
-    "minhash_dedup",
-    "simhash_dedup",
-    "similarity_topk",
-    "embedding_near_dups",
-    "token_counts",
-    "quality_scores",
-    "pricing_summary",
-    "region_volume",
-    "doc_fingerprint",
-    "video_frame_sample",
-    "cycle_metrics",
-    "corpus_clean",
-    "language_id",
-    "sessionization",
-    "asof_join_events",
-    "decontaminate",
-    "cluster_assign",
-    "funnel",
-    "cohort_retention",
-    "scd2_history",
-    "pivot_status",
-    "tfidf_top_terms",
-    "pack_documents",
-    "order_priority_check",
-    "snapshot_diff_cdc",
-    "mix_corpus",
-    "zorder_key",
-    "rolling_user_value",
-    "referential_orphans",
-    "revenue_share",
-    "window_percentiles",
-    "daily_revenue_delta",
-    "session_window_agg",
-    "group_percentiles",
-    "incremental_daily_sales",
-    "customer_order_distribution",
-    "weighted_sample",
-    "json_props_stats",
-    "repeat_buyers",
-    "small_quantity_revenue",
-    "scd2_asof_lookup",
-    "dup_rate_by_source",
-    # round 4: headline widened to EVERY queries() entry (was 52) — the
-    # bench now times the complete oracle-certified surface.
-    "anti_join_new_keys",
-    "approx_distinct",
-    "asof_join_forward",
-    "chunk_documents",
-    "column_profile",
-    "conditional_agg",
-    "dataset_split",
-    "date_parts",
-    "doc_length_stats",
-    "embedding_near_dups_exact",
-    "flatten_invariants",
-    "incremental_distinct",
-    "interval_join",
-    "ivf_topk",
-    "json_construct",
-    "knn_join",
-    "knn_join_lsh",
-    "merge_stats",
-    "minhash_dedup_portable",
-    "multi_table_summary",
-    "negative_count",
-    "ngram_jaccard_dedup",
-    "pii_redaction",
-    "quality_gate",
-    "quality_quantile_filter",
-    "repetition_stats",
-    "retention_filter",
-    "rollup_sales",
-    "safe_cast",
-    "sample_per_group",
-    "schedule_health",
-    "shipping_priority",
-    "simhash_dedup_portable",
-    "similarity_threshold",
-    "sliding_window",
-    "snapshot_drift",
-    "status_filter",
-    "string_funcs",
-    "table_stats",
-    "time_range_filter",
-    "top_ngrams",
-    "union_sources",
-    "value_buckets",
-    # round-4 additions: linkage, line dedup, join-heavy analytics
-    "fuzzy_match",
-    "line_dedup",
-    "supplier_wait",
-    "market_share",
-    "anomaly_zscore",
-    "expectations",
-    "key_skew",
-    "unigram_scores",
-    "dup_components",
-    # round-5 additions: curation (SemDeDup, spans, bloom, leakage)
-    "semantic_dedup",
-    "duplicate_spans",
-    "strip_dup_spans",
-    "decontaminate_bloom",
-    "split_leakage",
-    # round-5 additions: remaining TPC-H plan shapes
-    "forecast_revenue",
-    "top_supplier",
-    "large_orders",
-    "disjunctive_revenue",
-    "cold_customers",
-    # round-6 additions: the rest of the expressible TPC-H sweep plus
-    # heavy hitters, curriculum, drift, and temperature mixing
-    "nation_trade",
-    "nation_profit",
-    "returned_top_customers",
-    "priority_shipclass",
-    "promo_revenue",
-    "excess_suppliers",
-    "frequent_items",
-    "curriculum_order",
-    "psi_drift",
-    "temperature_mix",
-    "c4_clean",
-    "pq_topk",
-    "ivfpq_topk",
-    # round-7 additions: last TPC-H shapes (Q2/Q11/Q16), quality-keep
-    # dedup, token-budget mixing, semantic decontamination
-    "min_cost_supplier",
-    "important_parts",
-    "supplier_variety",
-    "dedup_keep_best",
-    "token_budget_mix",
-    "semantic_decontaminate",
-    "ann_recall",
-    "dup_cluster_sizes",
-    # round-8 addition: trained IVF-PQ + exact rerank recall gate
-    "ann_recall_trained",
-    # round-9 additions: near-dup-component-keyed train/val/test split,
-    # frozen-literal logistic quality-model scoring
-    "leakage_safe_split",
-    "quality_model_score",
-    # column_profile's default-path twin (approx distinct; the pinned
-    # exact query keeps its own row for the oracle)
-    "column_profile_approx",
-    # PCA dimensionality reduction (expression-only projection)
-    "pca_project",
-    # drift monitors (binning-free KS, categorical chi-squared) and
-    # lexical BM25 retrieval
-    "ks_drift",
-    "chi2_drift",
-    "bm25_search",
-    # embedding-space outlier gate (centroid-distance z-scores)
-    "embedding_outliers",
-    # time-series regularization (date-spine densify + forward fill)
-    # and calendar-correct trailing features over the spine
-    "gap_fill_daily",
-    "rolling_features",
-    # entropy / compression text-quality signals
-    "char_entropy",
-    "compression_signal",
-    # feature engineering (robust clipping, categorical encoding)
-    "winsorize_prices",
-    "freq_encode_priority",
-    # Unicode-script composition / mixed-script junk flag
-    "script_profile",
-    # multimodal decode: REAL stdlib PNG/WAV codecs over genuine
-    # synthesized payloads (decode_mode='real' on every row) — headline
-    # since round 6, when the fake-path bench payloads were replaced
-    "multimodal_features",
-    "audio_signal_features",
-    # round-6 additions: lexical+vector hybrid retrieval (RRF), graded
-    # n-gram contamination scoring, the full-approx (HLL + t-digest)
-    # profile path, and DSIR importance weighting + Gumbel resampling
-    "hybrid_search",
-    "contamination_score",
-    "column_profile_tdigest",
-    "dsir_weights",
-    "dsir_sample",
-    # round-7 additions: bigram conditional-LM fluency, corpus-level
-    # n-gram overlap, log2 token-length histogram, quantile binning
-    "bigram_lm_scores",
-    "corpus_overlap",
-    "length_histogram",
-    "quantile_bin_prices",
-    "cube_sales",
-    "corpus_diversity",
-    "doc_containment",
-    # round-8 additions: incremental corpus-overlap monitoring and
-    # cross-corpus (new-batch vs existing/eval) near-dup pairs
-    "corpus_overlap_delta",
-    "cross_corpus_dedup",
-    # round-9 addition: the monitoring loop's state write-back rows
-    "gram_state_append",
-]
-
-# Reported outside the headline wall (empty since round 6: the
-# multimodal queries now run real decoders on genuine payloads).
-STUB: list[str] = []
 
 
 def main() -> None:
@@ -279,16 +51,7 @@ def main() -> None:
         df.count()
 
     qs = entry_mod.queries()
-    names = HEADLINE + STUB
-    # coverage guard: the headline claims to time the COMPLETE surface;
-    # a queries() entry missing from HEADLINE (round 9 shipped one) was
-    # silently untimed — fail loudly instead
-    uncovered = sorted(set(qs) - set(names))
-    if uncovered:
-        raise SystemExit(
-            f"bench.py HEADLINE is missing queries() entries: {uncovered} — "
-            "add them to the HEADLINE list"
-        )
+    names = list(qs)
     # Optional subset (scale-curve runs): comma-separated query names.
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     if subset:
@@ -304,16 +67,7 @@ def main() -> None:
             df = qs[name](spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             samples[name].append(time.time() - t0)
-    timings = {
-        name: round(statistics.median(samples[name]), 3)
-        for name in names
-        if name in HEADLINE
-    }
-    stub_timings = {
-        name: round(statistics.median(samples[name]), 3)
-        for name in names
-        if name in STUB
-    }
+    timings = {name: round(statistics.median(samples[name]), 3) for name in names}
     total = round(sum(timings.values()), 3)
     # The stable round-over-round signal: sum of the RECORDED isolated
     # baselines (BENCH_ISOLATED.json, maintained by scripts/
@@ -344,7 +98,6 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "stub_queries": stub_timings,
         "repeats": repeats,
         "sf": sf,
         # full-surface runs share one JVM back-to-back, so individual

@@ -10,6 +10,8 @@ Structured Streaming), plus large-scale training-data-pipeline operators
 
 Layout:
     session     — tuned SparkSession builder for local + cluster
+    eager       — the one localCheckpoint choke point (plan-only mode,
+                  row counts observed on the checkpoint)
     catalog     — declared staging StructType schemas + table registry
     operators   — conform (flatten/cast), dedup, similarity, text,
                   multimodal, merge, incremental

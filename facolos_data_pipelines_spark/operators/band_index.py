@@ -15,7 +15,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup_common import materialize
+from ..eager import materialize
 from .dedup_components import _drop_pair_losers
 
 
@@ -120,31 +120,18 @@ class BandIndex:
         left: DataFrame,
         right: DataFrame,
         max_bucket_size: int | None = None,
-        candidates: str = "checkpoint",
     ) -> DataFrame:
         """(left_id, right_id, score) — the verified pairs between two
         band frames (``lb`` signs ``left``, ``rb`` signs ``right``; ids
-        may collide across sides). ``candidates`` materializes the
-        candidate pairs, which verify reads three times: ``'checkpoint'``
-        (eager ``localCheckpoint``), ``'persist'`` (lazy, the caller
-        owns the unpersist) or ``'lazy'`` (pure plan)."""
-        cand = (
+        may collide across sides). The candidate pairs, which verify
+        reads three times, are materialized once (skipped under
+        :func:`~..eager.plan_only_mode`)."""
+        cand = materialize(
             self._keyed(lb, "id_a", max_bucket_size)
             .join(self._keyed(rb, "id_b", max_bucket_size), list(self.keys))
             .select("id_a", "id_b")
             .dropDuplicates()
         )
-        if candidates == "checkpoint":
-            cand = materialize(cand)
-        elif candidates == "persist":
-            from pyspark import StorageLevel
-
-            cand = cand.persist(StorageLevel.MEMORY_AND_DISK)
-        elif candidates != "lazy":
-            raise ValueError(
-                "candidates must be 'checkpoint', 'persist' or 'lazy', got "
-                f"{candidates!r}"
-            )
         return self.verify(cand, left, right).select(
             F.col("id_a").alias("left_id"), F.col("id_b").alias("right_id"), self.score
         )

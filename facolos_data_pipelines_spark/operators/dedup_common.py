@@ -5,8 +5,7 @@ surface lives in operators.dedup, which re-exports everything."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 _U64 = (1 << 64) - 1
@@ -85,58 +84,3 @@ def _check_lanes(num_hashes: int) -> None:
             f"num_hashes={num_hashes} exceeds the fixed multiply-add "
             f"hash family size ({_MAX_LANES} lanes)"
         )
-
-
-
-# ---------------------------------------------------------------------------
-# Plan-only mode: disable eager mid-plan materialization for inspection.
-#
-# Several operators eagerly localCheckpoint an expensive subtree (pair
-# searches, LSH buckets, per-round component labels) because the plan
-# references it multiple times. Correct at runtime — but a checkpoint
-# truncates the logical plan, so `.explain()` / scripts/dump_plans.py
-# see only a LogicalRDD scan above the boundary and lose the pushdown /
-# join-strategy evidence for exactly the subtree that costs the most.
-#
-# `plan_only_mode()` flips a module switch that `materialize()` (the
-# shared checkpoint wrapper) consults: inside the context, frames flow
-# through un-checkpointed, so the full Catalyst plan stays visible and
-# nothing executes at build time. Iterative operators additionally
-# compile a single representative round instead of looping to
-# convergence (the convergence check itself is an action). INSPECTION
-# ONLY: collecting a frame built under plan-only mode recomputes shared
-# subtrees and, for iterative operators, returns un-converged labels.
-
-import contextvars as _contextvars
-
-# a ContextVar, not a module global: a thread (or async task) holding
-# the flag for a plan dump cannot leak it into sibling threads building
-# real operator plans concurrently
-_PLAN_ONLY = _contextvars.ContextVar("dedup_plan_only", default=False)
-
-
-def plan_only_active() -> bool:
-    """True inside a :func:`plan_only_mode` context (current thread/task)."""
-    return _PLAN_ONLY.get()
-
-
-class plan_only_mode:
-    """Context manager: disable eager materialization inside operators
-    so the full logical plan stays visible for explain/plan dumps."""
-
-    def __enter__(self):
-        self._token = _PLAN_ONLY.set(True)
-        return self
-
-    def __exit__(self, *exc):
-        _PLAN_ONLY.reset(self._token)
-        return False
-
-
-def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``df.localCheckpoint(eager)`` — unless plan-only mode is active,
-    in which case ``df`` flows through untouched (plan stays visible,
-    nothing executes)."""
-    if _PLAN_ONLY.get():
-        return df
-    return df.localCheckpoint(eager=eager)

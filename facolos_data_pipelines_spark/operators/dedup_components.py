@@ -10,7 +10,7 @@ import logging
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup_common import materialize, plan_only_active
+from ..eager import materialize, materialize_counted, plan_only_active
 
 log = logging.getLogger(__name__)
 
@@ -108,7 +108,7 @@ def connected_components(
         raise ValueError(
             f"on_nonconverged={on_nonconverged!r}; expected 'warn' or 'raise'"
         )
-    pairs = materialize(pairs.select("id_a", "id_b"))
+    pairs = pairs.select("id_a", "id_b")
     # The "~80 MB at 5M pairs" driver-dispatch sizing only holds for
     # fixed-width integral ids. With string ids (supported everywhere in
     # the dedup family) each pandas cell is a Python object (~60+ bytes
@@ -125,9 +125,11 @@ def connected_components(
         effective_threshold = min(effective_threshold, 1_000_000)
     # plan-only mode compiles the DISTRIBUTED path (the size dispatch is
     # itself an action) and a single representative round — see
-    # dedup_common.plan_only_mode
-    if not plan_only_active() and effective_threshold:
-        n_pairs = pairs.count()
+    # eager.plan_only_mode
+    if plan_only_active() or not effective_threshold:
+        pairs = materialize(pairs)
+    else:
+        pairs, n_pairs = materialize_counted(pairs)
         if n_pairs <= effective_threshold:
             # observable dispatch: post-hoc debugging of driver memory
             # pressure needs to know this path fired, with how many

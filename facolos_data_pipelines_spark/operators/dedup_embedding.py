@@ -8,8 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..eager import materialize
 from .band_index import BandIndex
-from .dedup_common import materialize
 from .dedup_components import _drop_pair_losers
 
 # verify_impl='auto' dispatch memo: (applicationId, plan semanticHash,

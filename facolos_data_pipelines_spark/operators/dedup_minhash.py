@@ -469,7 +469,6 @@ def minhash_cross_corpus_pairs(
     threshold: float = 0.8,
     family: str = "multiply_add",
     max_bucket_size: int | None = None,
-    candidates: str = "checkpoint",
     left_buckets: DataFrame | None = None,
     right_buckets: DataFrame | None = None,
 ) -> DataFrame:
@@ -480,24 +479,16 @@ def minhash_cross_corpus_pairs(
     (left_id, right_id, jaccard) for every cross pair whose verified
     distinct-shingle Jaccard clears ``threshold``.
 
-    ``candidates`` picks how the (left_id, right_id) candidate set —
-    referenced three times downstream (verify join + both side-shingle
-    semi-joins) — is materialized:
-
-    - ``'checkpoint'`` (default): eager ``localCheckpoint``. Right for
-      single-box / bench runs: the expensive band-join subtree runs
-      once and the checkpointed rows are id-pair-width only. NOT the
-      right durability choice for a 1000-executor 100 TB run —
-      executor-local checkpoint blocks are lost with the executor.
-    - ``'persist'``: lazy MEMORY_AND_DISK persist, the gentler sibling
-      pattern (minhash_dedup's buckets). The caller owns unpersist.
-    - ``'lazy'``: no materialization — a pure Catalyst plan that
-      recomputes the band-join subtree at each reference. Use for plan
-      inspection/explain, or when the caller materializes candidates
-      itself. On a real cluster the recommended shape for huge corpora
-      is exactly that: write the candidate set to a bucketed table
-      once (``sources.io.write_bucketed`` with left_id as the bucket
-      column), then run verification from it.
+    The (left_id, right_id) candidate set — referenced three times
+    downstream (verify join + both side-shingle semi-joins) — is
+    materialized once with an eager ``localCheckpoint``: the expensive
+    band-join subtree runs once and the checkpointed rows are
+    id-pair-width only. Under :func:`~..eager.plan_only_mode` it stays
+    a pure Catalyst plan for inspection. Executor-local checkpoint
+    blocks are lost with the executor, so for huge corpora on a real
+    cluster write the candidate set to a bucketed table once
+    (``sources.io.write_bucketed`` with left_id as the bucket column)
+    and verify from it.
 
     Plan shape: both sides reduce to (id, band_id, band_hash) bucket
     rows under the SAME hash family (signatures from different
@@ -524,7 +515,7 @@ def minhash_cross_corpus_pairs(
     )
     lb = left_buckets if left_buckets is not None else ix.sign(left)
     rb = right_buckets if right_buckets is not None else ix.sign(right)
-    return ix.cross_pairs(lb, rb, left, right, max_bucket_size, candidates)
+    return ix.cross_pairs(lb, rb, left, right, max_bucket_size)
 
 
 def _minhash_index(
@@ -581,24 +572,16 @@ def cross_corpus_dedup(
     threshold: float = 0.8,
     family: str = "multiply_add",
     max_bucket_size: int | None = None,
-    candidates: str = "checkpoint",
 ) -> DataFrame:
     """Keep only the ``left`` rows that near-duplicate NO ``right``
     document (minhash-LSH blocked, Jaccard-verified) — incremental
     corpus ingestion: ``right`` is what you already have (or must not
     leak, for eval sets), ``left`` is the new batch; survivors are safe
     to append. One left-anti join on the matched left ids; ``right``
-    is never mutated or copied. ``candidates`` passes through to
-    :func:`minhash_cross_corpus_pairs` (materialization strategy for
-    the candidate pair set). Note for ``'persist'``: the cached
-    candidate frame is internal here and cannot be unpersisted by the
-    caller — it stays pinned for the session. In a loop over many
-    batches call :func:`minhash_cross_corpus_pairs` directly and own
-    the unpersist, or keep the default ``'checkpoint'`` (released by
-    the ContextCleaner when the frame drops)."""
+    is never mutated or copied."""
     pairs = minhash_cross_corpus_pairs(
         left, right, text_col, id_col, num_hashes, bands, shingle_n,
-        threshold, family, max_bucket_size, candidates,
+        threshold, family, max_bucket_size,
     )
     losers = pairs.select(F.col("left_id").alias(id_col)).dropDuplicates()
     return left.join(losers, id_col, "left_anti")
@@ -650,7 +633,6 @@ def minhash_delta_pairs(
     threshold: float = 0.8,
     family: str = "multiply_add",
     max_bucket_size: int | None = None,
-    candidates: str = "checkpoint",
     batch_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs between a NEW batch and the PERSISTED corpus
@@ -674,13 +656,13 @@ def minhash_delta_pairs(
     contract — parameters are part of the schema). ``batch_buckets``
     optionally supplies the batch's precomputed band rows so a loop
     that also appends them to the state (:func:`minhash_state_append`)
-    computes them once. ``candidates`` and ``max_bucket_size`` behave
-    as in :func:`minhash_cross_corpus_pairs`."""
+    computes them once. Candidate materialization and
+    ``max_bucket_size`` behave as in :func:`minhash_cross_corpus_pairs`."""
     ix = _minhash_index(
         text_col, id_col, num_hashes, bands, shingle_n, family, threshold
     )
     lb = batch_buckets if batch_buckets is not None else ix.sign(batch)
-    return ix.cross_pairs(lb, state, batch, corpus, max_bucket_size, candidates)
+    return ix.cross_pairs(lb, state, batch, corpus, max_bucket_size)
 
 
 def minhash_dedup_delta(

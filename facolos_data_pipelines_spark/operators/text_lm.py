@@ -8,8 +8,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..eager import materialize
 from .dedup import normalized_words
-from .dedup_common import materialize
 from .text_quality import token_count_whitespace
 
 

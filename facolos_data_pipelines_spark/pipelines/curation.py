@@ -10,11 +10,12 @@ flow (C4/Gopher/Dolma-shaped):
       -> fingerprint + write survivors, with a per-stage metrics frame
 
 Every stage is one of the individually oracle-certified operators; the
-pipeline adds composition, stage metrics, and the write. All counts are
-computed from the SAME lazy frames the next stage consumes (one
-localCheckpoint per stage boundary keeps each stage's work from being
-re-executed by the count AND truncates lineage — the minhash self-join
-downstream must not re-run the quality filter per side).
+pipeline adds composition, stage metrics, and the write. Each stage
+boundary is one eager checkpoint (``eager.materialize_counted``): the
+stage's row count is observed on the checkpoint's own job, so the
+metrics cost no extra action, and the next stage reads the
+checkpointed rows with their lineage truncated — the minhash self-join
+downstream must not re-run the quality filter per side.
 
 At 100 TB the stage order matters: quality filtering and
 decontamination are narrow-ish early reducers (drop 30-60% of the
@@ -29,6 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..eager import materialize_counted
 from ..operators.dedup import minhash_dedup
 from ..operators.sampling import (
     curriculum_order,
@@ -120,18 +122,20 @@ def curate_corpus(
         docs = c4_clean(docs, text_col=text_col, id_col=id_col).drop(
             "n_lines_orig", "n_lines_kept"
         )
-        docs = docs.localCheckpoint(eager=True)
-        stages.append(("c4_rules", n_raw, docs.count()))
 
-    n0 = docs.count()
+    # scoring adds a column and drops no row: its checkpoint counts the
+    # quality stage's input (the c4 stage's output)
     if quality_model is not None:
         from ..operators.quality_model import score_quality_model
 
         scored = score_quality_model(
             docs, quality_model, text_col=text_col, score_col="quality_score"
-        ).localCheckpoint(eager=True)
+        )
     else:
-        scored = quality_score(docs, text_col).localCheckpoint(eager=True)
+        scored = quality_score(docs, text_col)
+    scored, n0 = materialize_counted(scored)
+    if c4_rules:
+        stages.append(("c4_rules", n_raw, n0))
     kept = filter_by_score_quantile(
         scored, "quality_score", q=quality_quantile, approx=True
     )
@@ -140,16 +144,14 @@ def curate_corpus(
     # member, not an arbitrary id.
     if keep != "best":
         kept = kept.drop("quality_score")
-    kept = kept.localCheckpoint(eager=True)
-    n1 = kept.count()
+    kept, n1 = materialize_counted(kept)
     stages.append(("quality_filter", n0, n1))
 
     if benchmark is not None:
         flags = decontaminate(kept, benchmark, n=decontaminate_n, id_col=id_col,
                               text_col=text_col)
         clean_ids = flags.filter(~F.col("contaminated")).select(id_col)
-        kept = kept.join(clean_ids, id_col, "left_semi").localCheckpoint(eager=True)
-        n2 = kept.count()
+        kept, n2 = materialize_counted(kept.join(clean_ids, id_col, "left_semi"))
     else:
         n2 = n1
     stages.append(("decontaminate", n1, n2))
@@ -163,8 +165,7 @@ def curate_corpus(
     )
     if keep == "best":
         deduped = deduped.drop("quality_score")
-    deduped = deduped.localCheckpoint(eager=True)
-    n3 = deduped.count()
+    deduped, n3 = materialize_counted(deduped)
     stages.append(("near_dedup", n2, n3))
 
     if mix_col is not None:
@@ -174,8 +175,7 @@ def curate_corpus(
             deduped = temperature_mix(
                 deduped, mix_col, mix_temperature, id_col=id_col
             )
-        deduped = deduped.localCheckpoint(eager=True)
-        n4 = deduped.count()
+        deduped, n4 = materialize_counted(deduped)
         stages.append(("mixture", n3, n4))
     else:
         n4 = n3

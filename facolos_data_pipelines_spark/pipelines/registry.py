@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog.schemas import DATA_SOURCES_SCHEMA
+from ..eager import materialize_counted
 from ..sources.io import table_exists
 
 
@@ -82,10 +83,8 @@ def mark_extracted(
     now = now or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
     names = list(source_names)
     reg = load_registry(spark, path)
-    updated = reg.withColumn(
-        "last_extract_time",
-        F.when(F.col("source_name").isin(names), F.lit(now)).otherwise(
-            F.col("last_extract_time")
-        ),
-    ).localCheckpoint(eager=True)
+    stamp = F.when(F.col("source_name").isin(names), F.lit(now)).otherwise(
+        F.col("last_extract_time")
+    )
+    updated, _ = materialize_counted(reg.withColumn("last_extract_time", stamp))
     updated.write.mode("overwrite").parquet(path)

@@ -133,24 +133,14 @@ def run_incremental_cycle(
         path = f"{staging_root}/{ep.table()}"
         try:
             conformed = ep.transform(ep.extract(spark), batch_id)
+            # Both loaders checkpoint the extract→conform plan once and
+            # return the rows loaded, counted on that checkpoint's job.
             if ep.load_mode == "upsert":
-                # Materialize the extract→conform plan ONCE; the count
-                # and the upsert both read the checkpointed blocks
-                # (previously count() re-executed the whole plan after
-                # upsert_parquet had already consumed it).
-                conformed = conformed.localCheckpoint(eager=True)
-                n = conformed.count()
-                upsert_parquet(
-                    spark,
-                    conformed,
-                    path,
-                    ep.primary_keys,
-                    ep.order_col,
+                n = upsert_parquet(
+                    spark, conformed, path, ep.primary_keys, ep.order_col,
                     partition_by=ep.partition_by,
-                    incoming_materialized=True,
                 )
             else:
-                # append_with_pk_rejection checkpoints internally.
                 n = append_with_pk_rejection(spark, conformed, path, ep.primary_keys)
             report["endpoints"][ep.name] = {
                 "status": "success",

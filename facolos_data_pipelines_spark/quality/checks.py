@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..eager import materialize_counted
+
 
 def table_stats(
     df: DataFrame,
@@ -530,10 +532,10 @@ def ks_two_sample(
         F.sum("_c").cast("long").alias("_nc"),
     )
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
-    parts = (
-        counts.repartitionByRange(n_parts, "_v")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
+    parts, _ = materialize_counted(
+        counts.repartitionByRange(n_parts, "_v").withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     subtotals = sorted(
         parts.groupBy("_pid")

@@ -18,6 +18,7 @@ import datetime as dt
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..eager import materialize_counted
 from ..operators.incremental import retention_filter
 from ..operators.merge import append_dedup, merge_upsert
 
@@ -74,14 +75,12 @@ def append_with_pk_rejection(
     landed table) — tiktok_shop_staging_loader.py:144-149 semantics.
     Returns rows actually appended.
 
-    The anti-joined plan is eagerly materialized ONCE via
-    localCheckpoint before the count + write — previously count() and
-    write() each executed the full extract→conform→anti-join plan, a
-    2x cost per cycle at 100 TB."""
+    The anti-joined plan is eagerly materialized ONCE, with its row
+    count observed on the same job, before the write: the
+    extract→conform→anti-join plan executes once per cycle."""
     existing = spark.read.parquet(path) if table_exists(spark, path) else None
     fresh = incoming if existing is None else append_dedup(existing, incoming, keys)
-    fresh = fresh.localCheckpoint(eager=True)
-    n = fresh.count()
+    fresh, n = materialize_counted(fresh)
     if n:
         fresh.write.mode("append").parquet(path)
     return n
@@ -94,9 +93,14 @@ def upsert_parquet(
     keys: list[str],
     order_col: str = "etl_updated_at",
     partition_by: list[str] | None = None,
-    incoming_materialized: bool = False,
-) -> None:
-    """S11 MERGE upsert onto a parquet staging table.
+) -> int:
+    """S11 MERGE upsert onto a parquet staging table; returns the rows
+    loaded (the incoming row count).
+
+    ``incoming`` is eagerly materialized ONCE, with its row count
+    observed on the same job: every read below (the touched-partition
+    collect, the merge, a first write) reuses those blocks, so the
+    extract→conform plan executes once per cycle.
 
     Uses Delta ``MERGE INTO`` when available (partition-pruned, the
     100 TB path). The parquet fallback has two modes:
@@ -116,6 +120,7 @@ def upsert_parquet(
       the path we just read is safe. Acceptable for small staging
       tables only.
     """
+    incoming, n = materialize_counted(incoming)
     if HAS_DELTA and DeltaTable is not None and DeltaTable.isDeltaTable(spark, path):
         cond = " AND ".join(f"t.{k} <=> s.{k}" for k in keys)
         (
@@ -126,52 +131,36 @@ def upsert_parquet(
             .whenNotMatchedInsertAll()
             .execute()
         )
-        return
-    if not table_exists(spark, path):
-        w = incoming.write.mode("overwrite")
+        return n
+    out = incoming
+    if table_exists(spark, path):
+        existing = spark.read.parquet(path)
         if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(path)
-        return
-    existing = spark.read.parquet(path)
-    if partition_by:
-        import functools
-        import operator
+            import functools
+            import operator
 
-        # Touched-partition values: bounded by partitions-per-batch
-        # (metadata-scale), not rows — safe to collect. The incoming
-        # plan executes for the value collect AND inside the merge, so
-        # it is materialized once here — unless the caller already did
-        # (incoming_materialized, e.g. the cycle runner's checkpoint),
-        # in which case a second copy would just double block storage.
-        if not incoming_materialized:
-            incoming = incoming.localCheckpoint(eager=True)
-        touched = incoming.select(*partition_by).dropDuplicates().collect()
-        if not touched:
-            return
-        pred = functools.reduce(
-            operator.or_,
-            [
-                functools.reduce(
-                    operator.and_,
-                    [F.col(c).eqNullSafe(F.lit(row[c])) for c in partition_by],
-                )
-                for row in touched
-            ],
-        )
-        scoped = existing.filter(pred)  # partition pruning: only touched files
-        merged = merge_upsert(scoped, incoming, keys, order_col).localCheckpoint(
-            eager=True
-        )
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(*partition_by)
-            .parquet(path)
-        )
-        return
-    merged = merge_upsert(existing, incoming, keys, order_col).localCheckpoint(eager=True)
-    merged.write.mode("overwrite").parquet(path)
+            # Touched-partition values: bounded by partitions-per-batch
+            # (metadata-scale), not rows — safe to collect.
+            touched = incoming.select(*partition_by).dropDuplicates().collect()
+            if not touched:
+                return n
+            pred = functools.reduce(
+                operator.or_,
+                [
+                    functools.reduce(
+                        operator.and_,
+                        [F.col(c).eqNullSafe(F.lit(row[c])) for c in partition_by],
+                    )
+                    for row in touched
+                ],
+            )
+            existing = existing.filter(pred)  # partition pruning: only touched files
+        out, _ = materialize_counted(merge_upsert(existing, incoming, keys, order_col))
+    w = out.write.mode("overwrite")
+    if partition_by:
+        w = w.option("partitionOverwriteMode", "dynamic").partitionBy(*partition_by)
+    w.parquet(path)
+    return n
 
 
 def apply_retention(
@@ -186,8 +175,7 @@ def apply_retention(
     becomes a partition drop — O(partitions), not O(rows)."""
     df = spark.read.parquet(path)
     total = df.count()
-    kept = retention_filter(df, ts_col, retention_days, now).localCheckpoint(eager=True)
-    n_kept = kept.count()
+    kept, n_kept = materialize_counted(retention_filter(df, ts_col, retention_days, now))
     kept.write.mode("overwrite").parquet(path)
     return total - n_kept
 

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..eager import materialize_counted
+
 
 def read_parquet_stream(
     spark: SparkSession,
@@ -602,7 +604,7 @@ def _band_store_sink(
             bands = bands.withColumn(
                 "bucket_pmod", F.pmod(F.col(keys[1]), F.lit(n_parts))
             )
-        bands = bands.localCheckpoint(eager=True)
+        bands, _ = materialize_counted(bands)
         if after_sign:
             after_sign()
         survivors = sweep(batch, bands.select(id_col, *keys))
@@ -629,7 +631,7 @@ def _band_store_sink(
                 .dropDuplicates()
             )
             survivors = survivors.join(hit_ids, id_col, "left_anti")
-        survivors = survivors.localCheckpoint(eager=True)
+        survivors, _ = materialize_counted(survivors)
         survivors.write.mode("append").parquet(docs_sink_path)
         out = bands.join(survivors.select(id_col), id_col, "left_semi").select(
             *(["bucket_pmod"] if n_parts else []), *keys, id_col
@@ -789,7 +791,7 @@ def hist_state_sink(
             "_batch_id", F.lit(int(batch_id))
         )
         if edge_guard_threshold is not None:
-            rows = rows.localCheckpoint(eager=True)
+            rows, _ = materialize_counted(rows)
         (
             rows.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

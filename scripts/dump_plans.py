@@ -67,10 +67,11 @@ def main() -> int:
         "evidence. Note AQE may still replace sort-merge joins with",
         "broadcast joins at runtime; this is the static plan.",
         "",
-        "Queries are compiled under `dedup_common.plan_only_mode()`: eager",
-        "mid-plan checkpoints become no-ops so the expensive pre-checkpoint",
-        "subtrees (pair searches, LSH buckets) stay visible instead of",
-        "appearing as an opaque `Scan ExistingRDD`; iterative operators",
+        "Queries are compiled under `eager.plan_only_mode()`: eager",
+        "mid-plan checkpoints (`eager.materialize`) become no-ops so the",
+        "expensive pre-checkpoint subtrees (pair searches, LSH buckets)",
+        "stay visible instead of appearing as an opaque `Scan ExistingRDD`;",
+        "iterative operators",
         "(connected components) compile ONE representative propagation",
         "round. At runtime those subtrees are materialized once and the",
         "loops run to convergence — see the operators' docstrings.",
@@ -78,9 +79,7 @@ def main() -> int:
         "| query | plan nodes | scans (ReadSchema / PushedFilters) |",
         "|---|---|---|",
     ]
-    from facolos_data_pipelines_spark.operators.dedup_common import (
-        plan_only_mode,
-    )
+    from facolos_data_pipelines_spark.eager import plan_only_mode
 
     qs = entry_mod.queries()
     for name, fn in qs.items():

@@ -4,7 +4,7 @@ Usage:
     python scripts/explain_query.py OUT_DIR SUFFIX query [query ...]
 
 Writes OUT_DIR/<query>_<SUFFIX>.txt per query. Plans are compiled under
-``dedup_common.plan_only_mode()`` (as dump_plans.py does) so eager
+``eager.plan_only_mode()`` (as dump_plans.py does) so eager
 mid-plan checkpoints stay visible instead of appearing as opaque
 ``Scan ExistingRDD`` nodes. Honors SPARK_GRAFT_SF_DIR (default sf0.1 —
 the bench scale, so AQE/broadcast estimates match what the bench sees).
@@ -23,7 +23,7 @@ def main() -> int:
     os.makedirs(out_dir, exist_ok=True)
 
     import __spark_entry__ as entry_mod
-    from facolos_data_pipelines_spark.operators import dedup_common
+    from facolos_data_pipelines_spark.eager import plan_only_mode
     from facolos_data_pipelines_spark.session import build_spark
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -32,7 +32,7 @@ def main() -> int:
     unknown = [n for n in names if n not in qs]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
-    with dedup_common.plan_only_mode():
+    with plan_only_mode():
         for name in names:
             df = qs[name](spark, sf_dir)
             plan = df._sc._jvm.PythonSQLUtils.explainString(

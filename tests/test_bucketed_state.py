@@ -24,7 +24,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from facolos_data_pipelines_spark.operators import dedup_common
+from facolos_data_pipelines_spark.eager import plan_only_mode
 from facolos_data_pipelines_spark.operators.dedup import (
     embedding_band_state,
     embedding_delta_pairs,
@@ -126,7 +126,8 @@ def test_minhash_bucketed_state_elides_state_side_shuffle(
     )
     try:
         state = spark.table("t_mh_band_state")
-        probe = minhash_delta_pairs(batch, state, corpus, candidates="lazy")
+        with plan_only_mode():
+            probe = minhash_delta_pairs(batch, state, corpus)
         sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
         plan = probe._jdf.queryExecution().executedPlan().toString()
         _assert_state_side_never_shuffles(plan, "band_id", nb, sp)
@@ -164,7 +165,7 @@ def test_embedding_bucketed_state_elides_state_side_shuffle(
     try:
         state = spark.table("t_emb_band_state")
         sp = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        with dedup_common.plan_only_mode():
+        with plan_only_mode():
             probe = embedding_delta_pairs(
                 batch, state, corpus, threshold=0.9, **kw
             )

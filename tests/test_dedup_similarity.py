@@ -1424,14 +1424,13 @@ def test_cross_corpus_pairs_empty_sides(spark):
     assert minhash_cross_corpus_pairs(empty, docs, family="xxhash").count() == 0
 
 
-def test_cross_corpus_candidates_knob(spark):
-    """The candidate-set materialization strategy must not change the
-    answer: 'checkpoint' (default, bench-scale), 'persist' (cluster
-    sibling pattern) and 'lazy' (pure plan; the dump_plans /
-    write-your-own-candidate-table path) produce identical pair sets
-    with identical rounded jaccards. Unknown strategies refuse."""
-    import pytest
-
+def test_cross_corpus_plan_only_candidates(spark, tmp_path):
+    """Under plan_only_mode the candidate set stays a pure plan (no
+    checkpoint, no cache) — the dump_plans /
+    write-your-own-candidate-table path — and collecting it yields the
+    same pairs, with the same rounded jaccards, as the default
+    checkpointed candidates."""
+    from facolos_data_pipelines_spark.eager import plan_only_mode
     from facolos_data_pipelines_spark.operators.dedup import (
         minhash_cross_corpus_pairs,
     )
@@ -1440,48 +1439,49 @@ def test_cross_corpus_candidates_knob(spark):
         "alpha beta gamma delta epsilon zeta eta theta iota kappa "
         "lambda mu nu xi omicron pi rho sigma tau upsilon"
     )
-    left = spark.createDataFrame(
+    # parquet sides, so a checkpoint is the only ExistingRDD a plan can hold
+    spark.createDataFrame(
         [(1, base), (2, base + " extra"), (3, "unrelated words entirely here")],
         "doc_id long, text string",
-    )
-    right = spark.createDataFrame(
+    ).write.parquet(str(tmp_path / "left"))
+    spark.createDataFrame(
         [(9, base + " omega"), (10, "different right side corpus text")],
         "doc_id long, text string",
-    )
+    ).write.parquet(str(tmp_path / "right"))
+    left = spark.read.parquet(str(tmp_path / "left"))
+    right = spark.read.parquet(str(tmp_path / "right"))
 
-    def run(strategy):
-        return sorted(
-            (r["left_id"], r["right_id"], round(r["jaccard"], 6))
-            for r in minhash_cross_corpus_pairs(
-                left, right, threshold=0.5, family="xxhash",
-                candidates=strategy,
-            ).collect()
+    def pairs():
+        return minhash_cross_corpus_pairs(
+            left, right, threshold=0.5, family="xxhash"
         )
 
-    # plan purity first, BEFORE any persist run: a live persisted
-    # candidate set would be substituted into later matching plans by
-    # the cache manager and mask a non-lazy implementation
-    plan = minhash_cross_corpus_pairs(
-        left, right, threshold=0.5, family="xxhash", candidates="lazy"
-    )._jdf.queryExecution().toString()
-    assert "Checkpoint" not in plan and "InMemoryRelation" not in plan
-    ck, lz, ps = run("checkpoint"), run("lazy"), run("persist")
-    assert ck == ps == lz
-    assert ck, "expected at least one cross pair in the fixture"
-    spark.catalog.clearCache()  # drop the strategy='persist' cache
-    with pytest.raises(ValueError, match="candidates must be"):
-        minhash_cross_corpus_pairs(left, right, candidates="bogus")
+    def rows(df):
+        return sorted(
+            (r["left_id"], r["right_id"], round(r["jaccard"], 6))
+            for r in df.collect()
+        )
+
+    with plan_only_mode():
+        lazy = pairs()
+        plan = lazy._jdf.queryExecution().toString()
+    assert "ExistingRDD" not in plan and "InMemoryRelation" not in plan
+    checkpointed = pairs()
+    assert "ExistingRDD" in checkpointed._jdf.queryExecution().toString()
+    default = rows(checkpointed)
+    assert rows(lazy) == default
+    assert default, "expected at least one cross pair in the fixture"
 
 
 def test_plan_only_mode_exposes_pre_checkpoint_plan(spark):
-    """Under dedup_common.plan_only_mode, connected_components compiles a
+    """Under eager.plan_only_mode, connected_components compiles a
     full lazy plan (the pair subtree + one propagation round visible —
     no opaque ExistingRDD scan, nothing executed); outside the context
     behavior is unchanged (converged, driver-dispatched labels)."""
     from facolos_data_pipelines_spark.operators.dedup import (
         connected_components,
     )
-    from facolos_data_pipelines_spark.operators.dedup_common import (
+    from facolos_data_pipelines_spark.eager import (
         plan_only_active,
         plan_only_mode,
     )

@@ -1,0 +1,54 @@
+"""The eager-materialisation choke point: every checkpoint in the
+package goes through ``facolos_data_pipelines_spark.eager``."""
+
+import ast
+import pathlib
+
+import facolos_data_pipelines_spark
+
+PACKAGE = pathlib.Path(facolos_data_pipelines_spark.__file__).parent
+
+
+def test_local_checkpoint_only_in_eager_module():
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if path == PACKAGE / "eager.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                offenders.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
+    assert not offenders, (
+        "call eager.materialize / eager.materialize_counted instead of "
+        f"localCheckpoint: {offenders}"
+    )
+
+
+def test_materialize_counted_counts_and_keeps_session_serializable(spark):
+    """The count rides the checkpoint, empty frames included, and a
+    pyspark.ml model fitted afterwards still transforms: its training
+    summary captures the session, which an ``Observation`` would have
+    made unserializable."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.sql import functions as F
+
+    from facolos_data_pipelines_spark.eager import materialize_counted
+
+    df = spark.range(100).withColumn("k", F.col("id") % 7)
+    out, n = materialize_counted(df.groupBy("k").count())
+    assert n == 7 and out.count() == 7
+    out, n = materialize_counted(df.join(df, "id", "left_anti"))
+    assert n == 0 and out.count() == 0
+
+    rows = spark.createDataFrame(
+        [(float(i), i % 2) for i in range(20)], "x double, label int"
+    )
+    assembled = VectorAssembler(inputCols=["x"], outputCol="v").transform(rows)
+    model = LogisticRegression(featuresCol="v", labelCol="label", maxIter=5).fit(
+        assembled
+    )
+    assert len(model.transform(assembled).select("probability").collect()) == 20

@@ -107,30 +107,67 @@ def test_append_with_pk_rejection_file(spark, tmp_path):
 
 
 def test_append_with_pk_rejection_executes_plan_once(spark, tmp_path):
-    """The incoming plan must run exactly once per load (the count and
-    the write read the localCheckpoint blocks) — previously count()
-    then write() each executed the full extract→conform→anti-join
-    plan, doubling the cycle cost at scale. A mapInPandas tap writes
-    one char per row it actually processes; double execution would
-    double the char count."""
-    marker = str(tmp_path / "exec_tap.txt")
+    """The incoming plan must run exactly once per load, for the
+    PK-rejecting append and for the upsert with and without
+    partition_by: the row count rides the load's one checkpoint and
+    every later read (touched partitions, merge, write) reads its
+    blocks. A mapInPandas tap writes one char per row it actually
+    processes; double execution would double the char count. Each
+    target already holds an untapped row, so the merge paths run."""
     df = spark.createDataFrame(
         [(i, f"v{i}", _ts("2024-01-01T00:00:00"), "b0") for i in range(10)],
         ["pk", "val", "etl_updated_at", "batch"],
     )
+    loads = {
+        "append": lambda d, p: sio.append_with_pk_rejection(spark, d, p, ["pk"]),
+        "upsert": lambda d, p: sio.upsert_parquet(spark, d, p, ["pk"]),
+        "upsert_partitioned": lambda d, p: sio.upsert_parquet(
+            spark, d, p, ["pk"], partition_by=["batch"]
+        ),
+    }
+    for name, load in loads.items():
+        marker = str(tmp_path / f"exec_tap_{name}.txt")
 
-    def tap(batches):
-        for pdf in batches:
-            if len(pdf):
-                with open(marker, "a") as f:
-                    f.write("x" * len(pdf))
-            yield pdf
+        def tap(batches, marker=marker):
+            for pdf in batches:
+                if len(pdf):
+                    with open(marker, "a") as f:
+                        f.write("x" * len(pdf))
+                yield pdf
 
-    tapped = df.mapInPandas(tap, df.schema)
-    n = sio.append_with_pk_rejection(spark, tapped, str(tmp_path / "t_once"), ["pk"])
-    assert n == 10
-    with open(marker) as f:
-        assert len(f.read()) == 10  # each row flowed through the plan exactly once
+        path = str(tmp_path / f"t_once_{name}")
+        load(df.filter(F.col("pk") == 0).withColumn("pk", F.lit(100).cast("long")), path)
+        n = load(df.mapInPandas(tap, df.schema), path)
+        assert n == 10, name
+        with open(marker) as f:
+            # each row flowed through the plan exactly once
+            assert len(f.read()) == 10, name
+        assert spark.read.parquet(path).count() == 11, name
+
+
+def test_counted_loads_execute_under_plan_only_mode(spark, tmp_path):
+    """plan_only_mode skips only the checkpoints a returned plan would
+    reuse; a load's counted checkpoint guards an overwrite of the path
+    it just read, so upsert_parquet and apply_retention still execute
+    and land the same table contents inside it."""
+    from facolos_data_pipelines_spark.eager import plan_only_mode
+
+    p = str(tmp_path / "t_plan_only")
+    old, new = _ts("2024-01-01T00:00:00"), _ts("2024-05-31T00:00:00")
+    sio.upsert_parquet(spark, _df(spark, [(1, "a", old, "b0"), (2, "b", old, "b0")]), p, ["pk"])
+    with plan_only_mode():
+        n = sio.upsert_parquet(
+            spark, _df(spark, [(2, "b2", new, "b1"), (3, "c", new, "b1")]), p, ["pk"]
+        )
+        assert n == 2
+        rows = {r["pk"]: r["val"] for r in spark.read.parquet(p).collect()}
+        assert rows == {1: "a", 2: "b2", 3: "c"}
+        removed = sio.apply_retention(
+            spark, p, "etl_updated_at", 30, now=dt.datetime(2024, 6, 1)
+        )
+        assert removed == 1
+        rows = {r["pk"]: r["val"] for r in spark.read.parquet(p).collect()}
+        assert rows == {2: "b2", 3: "c"}
 
 
 def test_upsert_parquet_fallback(spark, tmp_path):

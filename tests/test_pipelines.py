@@ -227,6 +227,47 @@ def test_curate_corpus_end_to_end(spark, sf_dir, tmp_path):
     assert surv.join(train, "doc_id", "left_anti").count() == 0
 
 
+def test_curate_corpus_c4_rules_stage_chain(spark, tmp_path):
+    """c4_rules=True prepends the hard C4 pass: its rows_in is the input
+    count, every later stage consumes the previous stage's rows_out
+    (the scoring checkpoint counts the c4 output), and the written
+    survivors number the last rows_out."""
+    from facolos_data_pipelines_spark.pipelines import curate_corpus
+
+    topics = ["river", "mountain", "harbor", "forest", "desert", "valley",
+              "island", "glacier"]
+
+    def doc(topic, extra=""):
+        return (
+            f"The {topic} near the old town changes with every season.\n"
+            f"Visitors walk along the {topic} and write long letters home.\n"
+            f"Local guides explain how the {topic} shaped the region{extra}."
+        )
+
+    rows = [(i + 1, doc(t)) for i, t in enumerate(topics)]
+    rows += [
+        (20, doc("river", " over many centuries")),  # near-dup of doc 1
+        (30, "A single line document that cannot survive the line rule."),
+        (31, "Lorem ipsum dolor sit amet here.\nSecond line of filler text."),
+        (32, "too short\nstill short\nno punctuation anywhere"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    out_path = str(tmp_path / "curated_c4")
+    res = curate_corpus(
+        spark, docs, c4_rules=True, quality_quantile=0.0, dedup_threshold=0.5,
+        output_path=out_path,
+    )
+    stages = [tuple(r) for r in res.metrics.collect()]
+    assert [s for s, _, _ in stages][:2] == ["c4_rules", "quality_filter"]
+    assert stages[0][1] == len(rows)
+    assert stages[0][2] == len(rows) - 3  # the three C4 rejects
+    for (_, _, prev_out), (stage, rows_in, rows_out) in zip(stages, stages[1:]):
+        assert rows_in == prev_out, stage
+        assert rows_out <= rows_in, stage
+    assert dict((s, (i, o)) for s, i, o in stages)["near_dedup"][1] < stages[0][2]
+    assert spark.read.parquet(out_path).count() == stages[-1][2]
+
+
 def test_curate_corpus_with_mixture_stage(spark, sf_dir):
     from facolos_data_pipelines_spark.pipelines import curate_corpus
 
