@@ -9,14 +9,17 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..eager import materialize
+from ..session import local_frame
 from .band_index import BandIndex
 from .dedup_components import _drop_pair_losers
 
 # verify_impl='auto' dispatch memo: (applicationId, plan semanticHash,
 # threshold) -> bool ("more than threshold vectors?"). Both verify
 # implementations return identical pairs, so this caches a
-# performance-only routing decision, never data; bounded at 256.
+# performance-only routing decision, never data; bounded, oldest entry
+# evicted first.
 _VERIFY_DISPATCH_MEMO: dict[tuple, bool] = {}
+_VERIFY_DISPATCH_MEMO_MAX = 256
 
 
 # ---------------------------------------------------------------------------
@@ -350,8 +353,9 @@ def embedding_near_dup_pairs(
                         df.select(id_col).limit(arrow_verify_threshold + 1).count()
                         > arrow_verify_threshold
                     )
-                    if len(_VERIFY_DISPATCH_MEMO) >= 256:
-                        _VERIFY_DISPATCH_MEMO.clear()
+                    if len(_VERIFY_DISPATCH_MEMO) >= _VERIFY_DISPATCH_MEMO_MAX:
+                        # dicts iterate in insertion order: evict the oldest
+                        del _VERIFY_DISPATCH_MEMO[next(iter(_VERIFY_DISPATCH_MEMO))]
                     _VERIFY_DISPATCH_MEMO[key] = over
             verify_impl = "arrow" if over else "expr"
     elif verify_impl not in ("expr", "arrow"):
@@ -605,7 +609,8 @@ def semantic_dedup(
             n = df.count()
             k = max(8, min(65_536, ceil(n / max(1, target_cluster_size))))
         codebook = ivf_train(df, k=k, vec_col=vec_col)
-        centroids = df.sparkSession.createDataFrame(
+        centroids = local_frame(
+            df.sparkSession,
             [(i, [float(x) for x in c]) for i, c in enumerate(codebook)],
             "cluster_id int, centroid array<double>",
         )

@@ -20,6 +20,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import local_frame
 
 _HASH_DENOM = float(1 << 32)
 
@@ -255,9 +258,16 @@ def mix_to_weights(
         raise ValueError(f"mix weights must sum to 1 (got {total})")
 
     spark = df.sparkSession
+    # the lookup keys take the group column's own type, so the joins
+    # below compare like with like
+    group_type = df.schema[group_col].dataType
     wdf = F.broadcast(
-        spark.createDataFrame(
-            [(g, float(w)) for g, w in weights.items()], ["_wg", "_w"]
+        local_frame(
+            spark,
+            [(g, float(w)) for g, w in weights.items()],
+            T.StructType(
+                [T.StructField("_wg", group_type), T.StructField("_w", T.DoubleType())]
+            ),
         )
     )
     counts = {
@@ -279,12 +289,12 @@ def mix_to_weights(
         )
     t = min(counts[g] / w for g, w in weights.items())
     thresholds = F.broadcast(
-        spark.createDataFrame(
-            [
-                (g, min(1.0, t * w / counts[g]))
-                for g, w in weights.items()
-            ],
-            ["_g", "_thr"],
+        local_frame(
+            spark,
+            [(g, min(1.0, t * w / counts[g])) for g, w in weights.items()],
+            T.StructType(
+                [T.StructField("_g", group_type), T.StructField("_thr", T.DoubleType())]
+            ),
         )
     )
     frac = _hash_fraction(id_col, salt)
@@ -738,7 +748,8 @@ def dsir_logratio_weights(
     spark = raw.sparkSession
     tr = sum(r["_cr"] for r in merged_rows)  # exact integer totals on the driver
     tt = sum(r["_ct"] for r in merged_rows)
-    merged = spark.createDataFrame(
+    merged = local_frame(
+        spark,
         [(r["_b"], r["_cr"], r["_ct"]) for r in merged_rows],
         "_b long, _cr long, _ct long",
     )

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .dedup import normalized_words
 from .text_quality import _require_unique_ids, token_count_whitespace
 
@@ -380,7 +381,7 @@ def decontaminate_bloom(
     )
     bitmap = bloom_bitmap(bench_grams, "_g", m_bits, num_hashes)
     spark = docs.sparkSession
-    bm = spark.createDataFrame([(bitmap,)], "_bm array<long>")
+    bm = local_frame(spark, [(bitmap,)], "_bm array<long>")
     doc_grams = (
         exploded_shingles(docs, text_col, id_col, n, distinct=True)
         .select(F.col(id_col), F.col("_sh").alias("_g"))

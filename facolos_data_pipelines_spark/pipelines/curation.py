@@ -39,6 +39,7 @@ from ..operators.sampling import (
     temperature_mix,
 )
 from ..operators.text import c4_clean, decontaminate, fingerprint, quality_score
+from ..session import local_frame
 
 
 @dataclass
@@ -199,8 +200,9 @@ def curate_corpus(
         survivors.write.mode("overwrite").parquet(output_path)
     stages.append(("fingerprint", n4, n4))
 
-    metrics = spark.createDataFrame(
+    metrics = local_frame(
+        spark,
         [(s, int(i), int(o)) for s, i, o in stages],
-        ["stage", "rows_in", "rows_out"],
+        "stage string, rows_in bigint, rows_out bigint",
     )
     return CurationResult(survivors=survivors, metrics=metrics)

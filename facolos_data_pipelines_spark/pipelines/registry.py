@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog.schemas import DATA_SOURCES_SCHEMA
 from ..eager import materialize_counted
+from ..session import local_frame
 from ..sources.io import table_exists
 
 
@@ -39,11 +40,11 @@ def seed_data_sources(
     if table_exists(spark, path) and not overwrite:
         return
     rows = [(name, platform, float(freq), None, True) for name, platform, freq in sources]
-    spark.createDataFrame(rows, DATA_SOURCES_SCHEMA).write.mode("overwrite").parquet(path)
+    local_frame(spark, rows, DATA_SOURCES_SCHEMA).write.mode("overwrite").parquet(path)
 
 
 def load_registry(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+    return spark.read.schema(DATA_SOURCES_SCHEMA).parquet(path)
 
 
 def due_sources(

@@ -9,7 +9,10 @@ control-table row per run (create_facolos_enterprise_schemas.sql:79-91).
 Where the reference materialized at every stage boundary (XCom JSON,
 /tmp parquet — dags/tiktok_shop_orders_etl_dag.py:83-185), a cycle here
 is one lazy plan per endpoint: the only materializations are the final
-staging write and the tiny metric aggregates. Endpoints are independent
+staging write and the tiny metric aggregates. Control rows (the
+``batch_runs`` log, the registry) enter Spark as Arrow-built local
+relations (``session.local_frame``), so the control plane starts no
+Python worker. Endpoints are independent
 and can run concurrently; priority ordering is preserved as input order
 (production_etl_orchestrator.py:136-145 — business value under a time
 budget, not a correctness constraint).
@@ -27,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog.schemas import BATCH_RUNS_SCHEMA
 from ..quality.checks import multi_table_summary, quality_gate
+from ..session import local_frame
 from ..sources.io import append_with_pk_rejection, table_exists, upsert_parquet
 
 
@@ -78,7 +82,7 @@ def _log_run(
             error,
         )
     ]
-    spark.createDataFrame(row, BATCH_RUNS_SCHEMA).write.mode("append").parquet(
+    local_frame(spark, row, BATCH_RUNS_SCHEMA).write.mode("append").parquet(
         f"{control_root}/batch_runs"
     )
 

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..eager import materialize_counted
+from ..session import local_frame
 
 
 def table_stats(
@@ -557,7 +558,7 @@ def ks_two_sample(
             "statistic is undefined against an empty sample"
         )
     odf = F.broadcast(
-        spark.createDataFrame(offsets, "_pid int, _ob long, _oc long")
+        local_frame(spark, offsets, "_pid int, _ob long, _oc long")
     )
     w = Window.partitionBy("_pid").orderBy("_v")
     gaps = (

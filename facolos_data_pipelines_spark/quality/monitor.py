@@ -15,6 +15,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 # One row per pipeline cycle — the reference's metrics dict
 # (production_monitor.py:43-62).
 CYCLE_METRICS_SCHEMA = T.StructType(
@@ -134,7 +136,7 @@ def alert_conditions(
             T.StructField("success_rate_alert", T.BooleanType()),
         ]
     )
-    return spark.createDataFrame(row, schema)
+    return local_frame(spark, row, schema)
 
 
 def schedule_accuracy(
@@ -271,7 +273,8 @@ def record_cycle(
 ) -> None:
     """Append one cycle-metrics row (the runner calls this; a
     StreamingQueryListener would do the same from query progress)."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(cycle_id, started_at, float(duration_seconds), int(records_processed), bool(success))],
         CYCLE_METRICS_SCHEMA,
     ).write.mode("append").parquet(path)

@@ -6,14 +6,19 @@ partitions sized to the cluster, Arrow enabled for the few Pandas-UDF
 operators, session timezone pinned to UTC so timestamp semantics are
 identical everywhere (the reference mixed utcnow()/now(); we standardize
 on UTC — see SURVEY.md §7.4).
+
+Driver-side Python rows (control-table rows, small lookup frames) enter
+Spark through :func:`local_frame`: one Arrow batch that becomes a JVM
+``LocalRelation``, so no pickled Python RDD and no Python worker.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 # Shuffle parallelism follows core count by default; on a cluster (and in
 # the sfN scale-curve protocol) partitions must scale with DATA so the
@@ -124,6 +129,29 @@ def ensure_engine_confs(spark: SparkSession) -> None:
                 spark.conf.set(k, v)
         except Exception:  # pragma: no cover — static-conf sessions
             pass
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over driver-side rows (tuples in schema order, or
+    dicts whose missing keys read as NULL), built as one Arrow batch.
+
+    ``spark.createDataFrame(<list>)`` ships the rows as a pickled Python
+    RDD, so every action over the frame starts Python-worker tasks;
+    an Arrow table becomes a JVM ``LocalRelation`` (``LocalTableScan``)
+    that Catalyst can size. ``schema`` is a ``StructType`` or a DDL
+    string. A naive ``datetime`` is read as UTC, the session zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.names
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema)
 
 
 # Logical-plan reuse across load_tables calls: ``spark.read.parquet``

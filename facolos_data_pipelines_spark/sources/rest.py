@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import local_frame
+
 FetchPage = Callable[[int, int], list[dict]]  # (page, page_size) -> records
 FetchCursor = Callable[[str | None, int], tuple[list[dict], str | None]]
 # (cursor, page_size) -> (records, next_cursor or None)
@@ -120,7 +122,7 @@ def read_page_paginated(
         page += 1
         if rate_limit_s:
             time.sleep(rate_limit_s)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 def read_cursor_paginated(
@@ -141,7 +143,7 @@ def read_cursor_paginated(
             break
         if rate_limit_s:
             time.sleep(rate_limit_s)
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # ---------------------------------------------------------------------------

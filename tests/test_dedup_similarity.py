@@ -1926,3 +1926,24 @@ def test_state_append_bucket_reuse_identity(spark):
         map(tuple, embedding_state_append(esurv, batch_sigs=esigs).collect())
     )
     assert eresign == ereuse and eresign
+
+
+def test_verify_dispatch_memo_evicts_oldest(spark, monkeypatch):
+    """Past its cap the verify_impl='auto' memo drops its oldest entry,
+    not the whole memo: the newest verdicts survive."""
+    from facolos_data_pipelines_spark.operators import dedup_embedding
+
+    monkeypatch.setattr(dedup_embedding, "_VERIFY_DISPATCH_MEMO", {})
+    monkeypatch.setattr(dedup_embedding, "_VERIFY_DISPATCH_MEMO_MAX", 3)
+    df = spark.createDataFrame(
+        [(i, [float(i % 3), 1.0, -0.5, 0.25]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    thresholds = [2, 4, 6, 8, 10]
+    for t in thresholds:
+        dedup_embedding.embedding_near_dup_pairs(
+            df, num_planes=4, num_bands=2, dim=4, arrow_verify_threshold=t
+        )
+    memo = dedup_embedding._VERIFY_DISPATCH_MEMO
+    assert [k[2] for k in memo] == thresholds[-3:]
+    assert list(memo.values()) == [8 > t for t in thresholds[-3:]]
