@@ -1,6 +1,6 @@
 """Eager materialisation: the one place the package checkpoints a frame.
 
-Two entry points, both an eager ``localCheckpoint``:
+Three entry points, each an eager ``localCheckpoint``:
 
 - :func:`materialize` caches a subtree the returned plan references
   more than once (pair searches, LSH band rows, per-round component
@@ -13,6 +13,9 @@ Two entry points, both an eager ``localCheckpoint``:
   count rides the checkpoint's own job as an observed metric, so it
   costs no separate ``count()``. It always executes, plan-only mode or
   not.
+- :func:`materialize_observed` is the general form: it reads back any
+  named observed metrics in the frame's plan (a sink's count of the
+  rows it dropped before signing).
 
 Plan-only mode is INSPECTION ONLY: inside it nothing the returned plan
 references executes at build time, and iterative operators compile a
@@ -62,18 +65,28 @@ def materialize(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
+def materialize_observed(df: DataFrame, *names: str) -> tuple[DataFrame, list[int]]:
+    """``(df.localCheckpoint(eager=True), values)``: ``values`` holds the
+    named observed metrics ``names`` (``df.observe(name, <one long
+    aggregate>)`` nodes anywhere in ``df``'s plan), read back from the
+    checkpoint's own query execution. Always executes.
+
+    The metrics are NAMED observations, not ``pyspark.sql.Observation``
+    objects: on Spark 4.1 an ``Observation`` starts the session's
+    ObservationManager, which cannot be serialized, and every later
+    task that captures the session (``pyspark.ml`` models keep it in
+    their training summary) then fails with "Task not serializable"."""
+    out = df.localCheckpoint(eager=True)
+    metrics = df._jdf.queryExecution().observedMetrics()
+    return out, [metrics.get(name).get().getLong(0) for name in names]
+
+
 def materialize_counted(df: DataFrame) -> tuple[DataFrame, int]:
     """``(df.localCheckpoint(eager=True), rows)``: the row count is
-    observed on the checkpoint's own scan. Always executes.
-
-    The metric is a NAMED observation read back from the checkpoint's
-    query execution, not a ``pyspark.sql.Observation``: on Spark 4.1 an
-    ``Observation`` starts the session's ObservationManager, which
-    cannot be serialized, and every later task that captures the
-    session (``pyspark.ml`` models keep it in their training summary)
-    then fails with "Task not serializable"."""
+    observed on the checkpoint's own scan (:func:`materialize_observed`).
+    Always executes."""
     name = f"rows_{uuid.uuid4().hex}"
-    observed = df.observe(name, F.count(F.lit(1)).alias("rows"))
-    out = observed.localCheckpoint(eager=True)
-    metrics = observed._jdf.queryExecution().observedMetrics()
-    return out, metrics.get(name).get().getLong(0)
+    out, (rows,) = materialize_observed(
+        df.observe(name, F.count(F.lit(1)).alias("rows")), name
+    )
+    return out, rows

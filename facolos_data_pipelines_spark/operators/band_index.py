@@ -32,35 +32,36 @@ class BandIndex:
       documents are candidates iff they share a full key. Rows signed
       under a different ``family`` never match, so the family is part
       of the schema and never mixes within one store.
-    - The sinks' store meta (``_NEAR_DUP_STORE_META.json``) records
-      ``store_partitions`` plus every key of ``family``: MinHash pins
-      ``num_hashes``, ``bands``, ``shingle_n`` and ``family``; cosine
-      pins ``num_planes`` and ``num_bands``. A recorded family that
-      differs from the configured one raises before any probe. With
-      ``legacy_meta_ok`` (MinHash: every store written before the family
-      was pinned has a layout-only meta) a layout-only or absent meta is
-      accepted and the next write records the configured family;
-      otherwise (cosine) both refuse, the absent case unless the
-      operator opts in with ``adopt_family_if_meta_absent``.
+    - A sink store's manifest (``_NEAR_DUP_STORE_META.json`` in the
+      store directory) records ``store_partitions`` (an int >= 1) plus
+      every key of ``family``: MinHash pins ``num_hashes``, ``bands``,
+      ``shingle_n`` and ``family``; cosine pins ``num_planes`` and
+      ``num_bands``. A new store's manifest is written before its first
+      batch appends anything, and a failed write raises. A reopened
+      store must have a readable manifest whose family and
+      ``store_partitions`` equal the sink's; otherwise the sink raises
+      before any probe or append. There is no adoption: a store with
+      other parameters is re-indexed into a new store, never
+      reinterpreted. A store directory holding only its manifest reads
+      as empty.
     - Sign once: a batch is signed once and its band rows are
       materialized (persisted in the delta operators, checkpointed in
       the sinks); the in-batch sweep, the history probe and the store
       append all select from them. A document's band rows do not depend
       on which frame selects them, so every consumer sees the same rows.
     - Probe: a sink store is written partitioned by ``bucket_pmod =
-      pmod(keys[1], store_partitions)`` (sticky: the creation-time N
-      wins, a mismatch raises) and probed by broadcasting the batch's
-      band rows against a map-only store scan on ``(bucket_pmod,
+      pmod(keys[1], store_partitions)`` and probed by broadcasting the
+      batch's band rows against a map-only store scan on ``(bucket_pmod,
       *keys)``. Duplicate store rows are harmless to the probe;
       ``compact_bucket_store`` dedups them.
-    - Replay: a sink appends the survivors first, then their band rows,
-      then the meta. A redelivered batch whose earlier delivery
-      completed both appends finds its own band rows in the store and
-      drops every document. A crash between the two appends leaves the
-      documents landed but unindexed, and the redelivery appends them
-      again: at-least-once on the documents side for that one batch.
-      Recovery is ``compact_bucket_store`` plus a doc-id dedup pass over
-      the documents sink.
+    - Replay: a sink appends the survivors first, then their band rows.
+      A redelivered batch whose earlier delivery completed both appends
+      finds its own band rows in the store and drops every document. A
+      crash between the two appends leaves the documents landed but
+      unindexed, and the redelivery appends them again: at-least-once
+      on the documents side for that one batch. Recovery is
+      ``compact_bucket_store`` plus a doc-id dedup pass over the
+      documents sink.
 
     ``verify(cand, left, right)`` scores ``(id_a, id_b)`` candidates,
     reading each side's documents id-pruned to the candidate set, and
@@ -80,7 +81,6 @@ class BandIndex:
     features: Callable[[DataFrame], DataFrame]
     similarity: Callable[[Column, Column], Column]
     verify_within: Callable[[DataFrame, DataFrame], DataFrame] | None = None
-    legacy_meta_ok: bool = False
 
     def verify(
         self, cand: DataFrame, left: DataFrame, right: DataFrame | None = None

@@ -557,7 +557,6 @@ def _minhash_index(
         verify_within=lambda cand, df: verified_near_dup_pairs(
             df, cand, text_col, id_col, shingle_n, threshold
         ),
-        legacy_meta_ok=True,
     )
 
 

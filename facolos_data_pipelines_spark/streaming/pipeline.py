@@ -24,11 +24,11 @@ reference's re-read-and-dedup loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..eager import materialize_counted
+from ..eager import materialize_counted, materialize_observed
 
 
 def read_parquet_stream(
@@ -265,6 +265,9 @@ def merge_upsert_sink(
 
 _STORE_META_NAME = "_NEAR_DUP_STORE_META.json"
 
+#: The observed metric an ``admit`` step counts its dropped rows under.
+_UNSIGNABLE = "unsignable_rows"
+
 
 def _store_meta_path(bucket_store_path: str) -> str:
     return bucket_store_path.rstrip("/") + "/" + _STORE_META_NAME
@@ -277,17 +280,16 @@ def _hadoop_fs(spark, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-#: Sentinel distinguishing "meta file exists but could not be read/parsed"
-#: from "meta file absent" (None). A transient read failure of a VALID meta
-#: must never route into the adopt-and-overwrite branch — overwriting the
-#: true N with the configured one silently breaks cross-batch dedup.
-_META_UNREADABLE = object()
+def _is_partition_count(n) -> bool:
+    # bool subclasses int: True would pin a one-partition layout by accident
+    return isinstance(n, int) and not isinstance(n, bool) and n >= 1
 
 
 def _meta_template(index=None) -> str:
-    """The repair text for a store meta: the layout key plus the signing
-    family keys of ``index`` (a :class:`~..operators.band_index.BandIndex`),
-    or a pointer to them when the family is not known here."""
+    """The repair text for a store manifest: the layout key plus the
+    signing-family keys of ``index`` (a
+    :class:`~..operators.band_index.BandIndex`), or a pointer to them
+    when the family is not known here."""
     if index is None:
         return (
             '{"store_partitions": N} plus the signing-family keys its sink '
@@ -297,266 +299,125 @@ def _meta_template(index=None) -> str:
     return '{"store_partitions": N' + keys + "}"
 
 
-def _raise_unreadable_meta(path: str, refusal: str, index=None) -> None:
-    """The one refusal message for a meta file that EXISTS but can't be
-    parsed — shared by every consumer of the _META_UNREADABLE sentinel
-    so the contract text (and its repair instructions) can't drift
-    between the adopt and compact sites."""
-    raise ValueError(
-        f"bucket store at {path!r} has a layout meta file "
-        f"({_STORE_META_NAME}) that exists but could not be read or "
-        f"parsed; {refusal}. Repair or remove the meta file (its content "
-        f"should be {_meta_template(index)}, with the values the store was "
-        "created with) and retry"
+def _refusal(
+    path: str, problem: str, index=None, action: str = "probe or append"
+) -> ValueError:
+    """The one refusal for a store whose manifest does not admit the
+    caller: its repair text names every key the manifest must hold."""
+    return ValueError(
+        f"band store at {path!r} {problem}; refusing to {action}. Write its "
+        f"meta file ({_STORE_META_NAME}) as {_meta_template(index)}, with "
+        "the values the store was created with, or re-index the accepted "
+        "corpus into a new store"
     )
 
 
-def _read_store_meta(bucket_store_path: str, spark=None):
-    """Read the bucket store's layout meta (underscore-prefixed, so Spark's
-    parquet reader ignores it like _SUCCESS). Plain-local paths use the
-    local filesystem directly; URI paths ('://' — HDFS, object stores,
-    file://) go through the Hadoop FileSystem API and need ``spark``.
-    Returns the parsed dict, ``None`` when the file is provably ABSENT, or
-    the ``_META_UNREADABLE`` sentinel when it exists (or its existence can't
-    be established) but can't be read/parsed — callers must treat the
-    sentinel as "layout unknown, do NOT adopt/overwrite"."""
-    import json
-    import os
+def _store_is_new(spark, store_path: str) -> bool:
+    """True when the store holds neither a manifest nor band rows: it is
+    absent, or a first batch whose manifest write failed left only the
+    directory (hidden ``_``/``.`` files are not band rows)."""
+    fs, jpath = _hadoop_fs(spark, store_path)
+    if not fs.exists(jpath):
+        return True
+    names = [s.getPath().getName() for s in fs.listStatus(jpath)]
+    return _STORE_META_NAME not in names and all(
+        n.startswith(("_", ".")) for n in names
+    )
 
-    mp = _store_meta_path(bucket_store_path)
-    if "://" in bucket_store_path:
-        if spark is None:
-            return None
-        try:
+
+def _read_manifest(
+    spark, store_path: str, index=None, action: str = "probe or append"
+) -> dict:
+    """The store's manifest. Raises the repair ``ValueError`` when it is
+    absent, unreadable, not a JSON object, or its ``store_partitions``
+    is not an int >= 1. Plain paths are read with Python file IO: Hadoop's
+    LocalFileSystem would check the ``.crc`` it wrote beside the file,
+    which a hand repair leaves stale. ``://`` paths go through the
+    Hadoop FileSystem API."""
+    import json
+
+    from py4j.protocol import Py4JJavaError
+
+    mp = _store_meta_path(store_path)
+    try:
+        if "://" in store_path:
             fs, jpath = _hadoop_fs(spark, mp)
             if not fs.exists(jpath):
-                return None
-        except Exception:
-            # Can't even establish existence: ambiguous, not provably absent.
-            return _META_UNREADABLE
-        try:
+                raise FileNotFoundError(mp)
             stream = fs.open(jpath)
             try:
                 payload = bytes(stream.readAllBytes())
             finally:
                 stream.close()
-            return json.loads(payload.decode("utf-8"))
-        except Exception:
-            return _META_UNREADABLE
-    if not os.path.isfile(mp):
-        return None
-    try:
-        with open(mp) as fh:
-            return json.load(fh)
-    except Exception:
-        return _META_UNREADABLE
+        else:
+            with open(mp, "rb") as fh:
+                payload = fh.read()
+        meta = json.loads(payload)
+    except FileNotFoundError:
+        raise _refusal(store_path, "has no meta file", index, action) from None
+    except (OSError, ValueError, Py4JJavaError):
+        # a checksum failure, an IO error or bad JSON alike
+        meta = None
+    if not isinstance(meta, dict):
+        raise _refusal(
+            store_path, "has a meta file that could not be read or parsed",
+            index, action,
+        )
+    if not _is_partition_count(meta.get("store_partitions")):
+        raise _refusal(
+            store_path, "has a meta without a valid store_partitions (an int >= 1)",
+            index, action,
+        )
+    return meta
 
 
-def _write_store_meta(
-    bucket_store_path: str,
-    store_partitions: int,
-    spark=None,
-    extra: dict | None = None,
-) -> None:
+def _write_manifest(spark, store_path: str, manifest: dict) -> None:
+    """Write ``manifest`` into the store directory, creating it; raises
+    on failure."""
     import json
+    import os
 
-    record = {"store_partitions": int(store_partitions)}
-    if extra:
-        record.update(extra)
-    payload = json.dumps(record)
-    mp = _store_meta_path(bucket_store_path)
-    if "://" in bucket_store_path:
-        if spark is None:
-            return
+    payload = json.dumps(manifest)
+    if "://" in store_path:
+        fs, jpath = _hadoop_fs(spark, _store_meta_path(store_path))
+        out = fs.create(jpath, True)
         try:
-            fs, jpath = _hadoop_fs(spark, mp)
-            out = fs.create(jpath, True)
-            try:
-                out.write(bytearray(payload.encode("utf-8")))
-            finally:
-                out.close()
-        except Exception:
-            pass  # best-effort: _effective_store_partitions trusts config then
+            out.write(bytearray(payload.encode("utf-8")))
+        finally:
+            out.close()
         return
-    with open(mp, "w") as fh:
+    os.makedirs(store_path, exist_ok=True)
+    with open(_store_meta_path(store_path), "w") as fh:
         fh.write(payload)
 
 
-def _effective_store_partitions(
-    spark,
-    bucket_store_path: str,
-    requested: int,
-    index=None,
-) -> int:
-    """Layout of an EXISTING bucket store is sticky: the partition count it
-    was created with wins, and a mismatched request raises instead of
-    silently probing the wrong pmod space (a wrong N computes
-    pmod(hash key, N_new) != stored bucket_pmod, so every probe
-    misses and cross-batch duplicates leak through). ``index`` is the
-    store's :class:`~..operators.band_index.BandIndex`: its hash key
-    (band_hash for the minhash store, sig for the embedding band store;
-    band_hash when None) is the pmod column, and its family travels
-    into the meta when a remote legacy store adopts the configured
-    layout. Legacy stores written before the meta file: unpartitioned
-    layout -> keep writing unpartitioned (mixing layouts makes Spark's
-    partition-discovery read silently drop the root-level legacy rows);
-    local partitioned layout without meta -> unrecoverable N, raise with
-    a migration instruction.
-    REMOTE ('://') partitioned stores whose meta is provably ABSENT
-    (pre-meta legacy stores, or object stores where the best-effort write
-    failed) trust the configured value instead of raising — the pre-meta
-    behavior, since a raise there is unrecoverable through this API — and
-    adopt it as the sticky layout by (re)writing the meta, but only after a
-    data-level consistency proof: stored ``bucket_pmod`` must equal
-    ``pmod(hash key, requested)`` on a row sample (any mismatch proves the
-    store was written with a DIFFERENT N — including a smaller one, which
-    the max-pmod bound alone can't detect). A meta file that EXISTS but
-    can't be read (transient store error, corrupt JSON) raises instead of
-    adopting: overwriting a valid-but-unreadable meta would silently pin
-    the wrong N."""
-    hash_col = index.keys[1] if index is not None else "band_hash"
-    repair = (
-        f"write the meta file ({_meta_template(index)}) with the values the "
-        "store was created with before probing it"
-    )
-    meta = _read_store_meta(bucket_store_path, spark)
-    if meta is _META_UNREADABLE:
-        _raise_unreadable_meta(
-            bucket_store_path,
-            "refusing to adopt the configured store_partitions over a "
-            "possibly-valid recorded layout",
-            index,
-        )
-    if meta is not None:
-        n = int(meta["store_partitions"])
-        if n == 0:
-            return 0  # unpartitioned stores stay unpartitioned, like legacy
-        if requested != n:
-            raise ValueError(
-                f"bucket store at {bucket_store_path!r} was created with "
-                f"store_partitions={n} but the sink was configured with "
-                f"{requested}; the layout is sticky — pass {n}, or rebuild "
-                "the store (compact_bucket_store keeps the existing layout)"
-            )
-        return n
-    store = spark.read.parquet(bucket_store_path)
-    cols = store.columns
-    if "bucket_pmod" in cols:
-        if "://" in bucket_store_path and requested > 0:
-            # Sanity-check before adopting: a stored pmod value >=
-            # requested proves the store was written with a LARGER N —
-            # adopting the configured value would probe the wrong pmod
-            # space and silently leak cross-batch duplicates (and pin
-            # the wrong N as sticky). Partition-column max is a
-            # metadata-only scan.
-            max_pmod = store.agg(F.max("bucket_pmod")).first()[0]
-            if max_pmod is not None and int(max_pmod) >= requested:
-                raise ValueError(
-                    f"bucket store at {bucket_store_path!r} has "
-                    f"bucket_pmod={max_pmod} on disk, which is impossible "
-                    f"under the configured store_partitions={requested}; "
-                    "the original N is larger and unrecoverable from data "
-                    f"alone — {repair}"
-                )
-            # The max-pmod bound only rules out a LARGER original N. A
-            # store written with a SMALLER N (e.g. N=4, requested=8) has
-            # every pmod < requested and would pass it — so prove
-            # consistency on the data itself: recompute pmod(band_hash,
-            # requested) on a bounded row sample and compare to the stored
-            # partition value. Identical for every row iff the layouts
-            # agree (different moduli disagree on ~half of uniformly
-            # hashed rows, so 1000 rows make a false adopt vanishingly
-            # unlikely); one mismatching row proves a different N.
-            mismatch = (
-                store.select(hash_col, "bucket_pmod")
-                .where(F.col(hash_col).isNotNull())
-                .limit(1000)
-                .where(
-                    F.pmod(F.col(hash_col), F.lit(requested)).cast("long")
-                    != F.col("bucket_pmod").cast("long")
-                )
-                .limit(1)
-                .count()
-            )
-            if mismatch:
-                raise ValueError(
-                    f"bucket store at {bucket_store_path!r} has rows whose "
-                    f"stored bucket_pmod != pmod({hash_col}, {requested}): "
-                    "it was written with a different store_partitions than "
-                    "the configured value; the original N is unrecoverable "
-                    f"from data alone — {repair}"
-                )
-            _write_store_meta(
-                bucket_store_path, requested, spark,
-                index.family if index is not None else None,
-            )
-            return requested
-        raise ValueError(
-            f"bucket store at {bucket_store_path!r} is bucket_pmod-"
-            f"partitioned but has no {_STORE_META_NAME}; its partition "
-            f"count is unrecoverable from data alone — {repair}"
-        )
-    return 0  # legacy unpartitioned store: stay unpartitioned
-
-
-def _pinned_store_partitions(
-    spark,
-    store_path: str,
-    requested: int,
-    index,
-    adopt_family_if_meta_absent: bool = False,
-) -> int:
-    """Check an EXISTING store's recorded signing family against
-    ``index`` before any probe, then resolve its sticky layout
-    (:func:`_effective_store_partitions`). A recorded family that
-    differs raises: signatures under another family never match, so the
-    probe would silently miss every historical bucket. A layout-only or
-    absent meta is accepted only for an index with ``legacy_meta_ok``
-    (the sink then records the configured family on its next write);
-    otherwise the true family is unrecoverable from band rows, so both
-    refuse — the absent case unless ``adopt_family_if_meta_absent``."""
-    meta = _read_store_meta(store_path, spark)
-    if meta is _META_UNREADABLE:
-        _raise_unreadable_meta(
+def _check_manifest(meta: dict, store_path: str, index, store_partitions: int) -> None:
+    """Refuse a reopened store whose manifest does not pin ``index``'s
+    signing family and ``store_partitions``: signatures under another
+    family never match, and another N probes the wrong pmod space, so
+    either would silently miss every historical bucket."""
+    if not index.family.keys() <= meta.keys():
+        raise _refusal(store_path, f"has a meta without the pinned {index.noun}", index)
+    recorded = {k: meta[k] for k in index.family}
+    if recorded != index.family:
+        stored = ", ".join(f"{k}={v!r}" for k, v in recorded.items())
+        configured = ", ".join(f"{k}={v!r}" for k, v in index.family.items())
+        raise _refusal(
             store_path,
-            f"refusing to probe — the recorded {index.noun} and layout "
-            "must be readable before any signature can be trusted",
+            f"was created with {stored} but the sink was configured with "
+            f"{configured}; signatures under a different {index.noun} never "
+            "match",
             index,
         )
-    configured = ", ".join(f"{k}={v!r}" for k, v in index.family.items())
-    if meta is not None and index.family.keys() & meta.keys():
-        recorded = {k: meta.get(k) for k in index.family}
-        if recorded != index.family:
-            stored = ", ".join(f"{k}={v!r}" for k, v in recorded.items())
-            raise ValueError(
-                f"band store at {store_path!r} was created with {stored} "
-                f"but the sink was configured with {configured}; signatures "
-                f"under a different {index.noun} never match — pass the "
-                "stored family, or re-index the accepted corpus into a new "
-                "store"
-            )
-    elif meta is not None and not index.legacy_meta_ok:
-        # a family-less meta (e.g. hand-written from the layout-repair
-        # instructions) must not silently disable the family check
-        raise ValueError(
-            f"band store at {store_path!r} has a layout meta without the "
-            f"pinned {index.noun}; write the meta the store was CREATED "
-            f"with ({_meta_template(index)}) before probing — adopting the "
-            "configured family would silently miss every historical "
-            "bucket if it differs"
+    n = meta["store_partitions"]
+    if n != store_partitions:
+        raise _refusal(
+            store_path,
+            f"was created with store_partitions={n} but the sink was "
+            f"configured with {store_partitions}; the layout is sticky, so "
+            f"pass {n}",
+            index,
         )
-    elif meta is None and not (index.legacy_meta_ok or adopt_family_if_meta_absent):
-        raise ValueError(
-            f"band store at {store_path!r} exists but has no meta file, so "
-            f"its {index.noun} cannot be verified; adopting the configured "
-            f"family ({configured}) would silently miss every historical "
-            "bucket if it differs, and pin the wrong family forever — "
-            f"write the meta file ({_meta_template(index)}) with the family "
-            "the store was CREATED with, or pass "
-            "adopt_family_if_meta_absent=True if the configured family is "
-            "known to be the creation family"
-        )
-    return _effective_store_partitions(spark, store_path, requested, index)
 
 
 def _band_store_sink(
@@ -566,53 +427,60 @@ def _band_store_sink(
     store_partitions: int,
     sweep,
     admit=None,
-    adopt_family_if_meta_absent: bool = False,
 ):
     """The foreachBatch body both near-dup sinks share; the store it
     keeps follows the band-store contract of
-    :class:`~..operators.band_index.BandIndex`. Per micro-batch: check
-    the store's pinned family and layout, sign the batch ONCE
-    (checkpointed band rows), ``sweep(batch, bands) -> survivors``
-    within the batch, drop every survivor sharing a band key with the
-    store (broadcast probe), checkpoint the survivors, then append the
-    docs, their band rows and — when it lacks the family — the meta.
-    ``admit(batch_df, batch_id) -> (batch, after_sign)`` optionally
-    filters the batch first; ``after_sign`` runs once the signing
-    checkpoint (the batch's first full scan) has returned."""
-    from ..sources.io import table_exists
+    :class:`~..operators.band_index.BandIndex`. Per micro-batch: check a
+    reopened store's manifest, or write a new store's, before anything
+    else; sign the batch ONCE (checkpointed band rows); ``sweep(batch,
+    bands) -> survivors`` within the batch; drop every survivor sharing
+    a band key with the store (broadcast probe); checkpoint the
+    survivors; then append the docs and their band rows.
+    ``admit(batch_df) -> batch`` optionally drops rows the index cannot
+    sign, counting them as the observed metric ``_UNSIGNABLE``; the
+    count is read back from the signing checkpoint and logged."""
+    import logging
 
+    if not _is_partition_count(store_partitions):
+        raise ValueError(
+            f"store_partitions must be an int >= 1, got {store_partitions!r}"
+        )
     id_col, keys = index.id_col, list(index.keys)
+    manifest = {"store_partitions": store_partitions, **index.family}
 
     def filter_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         if not batch_df.head(1):
             return
-        store_exists = table_exists(spark, store_path)
-        n_parts = (
-            _pinned_store_partitions(
-                spark, store_path, store_partitions, index,
-                adopt_family_if_meta_absent,
-            )
-            if store_exists
-            else store_partitions
-        )
-        batch, after_sign = admit(batch_df, batch_id) if admit else (batch_df, None)
+        store_is_new = _store_is_new(spark, store_path)
+        if store_is_new:
+            _write_manifest(spark, store_path, manifest)
+        else:
+            meta = _read_manifest(spark, store_path, index)
+            _check_manifest(meta, store_path, index, store_partitions)
+        batch = admit(batch_df) if admit else batch_df
         # ONE signing chain per micro-batch: the in-batch sweep, the
         # store probe and the store append all select from these rows.
-        bands = index.sign(batch)
-        if n_parts:
-            bands = bands.withColumn(
-                "bucket_pmod", F.pmod(F.col(keys[1]), F.lit(n_parts))
+        bands = index.sign(batch).withColumn(
+            "bucket_pmod", F.pmod(F.col(keys[1]), F.lit(store_partitions))
+        )
+        bands, unsignable = materialize_observed(
+            bands, *([_UNSIGNABLE] if admit else [])
+        )
+        if any(unsignable):
+            logging.getLogger(__name__).info(
+                "batch %s: dropped %d row(s) with no bucket identity under "
+                "the %s — not replay-protectable",
+                batch_id, unsignable[0], index.noun,
             )
-        bands, _ = materialize_counted(bands)
-        if after_sign:
-            after_sign()
         survivors = sweep(batch, bands.select(id_col, *keys))
-        if store_exists:
-            store = spark.read.parquet(store_path)
-            probe_keys = (
-                ["bucket_pmod"] if n_parts and "bucket_pmod" in store.columns else []
-            ) + keys
+        probe_keys = ["bucket_pmod", *keys]
+        if not store_is_new:
+            # The band rows' own schema, not inference: a store holding
+            # only its manifest reads as empty instead of failing.
+            store = spark.read.schema(bands.select(*probe_keys).schema).parquet(
+                store_path
+            )
             # Broadcast the (small) batch side; the store is scanned
             # map-side only — no store shuffle, and the partition-column
             # equi-join key lets dynamic partition pruning skip store
@@ -633,18 +501,9 @@ def _band_store_sink(
             survivors = survivors.join(hit_ids, id_col, "left_anti")
         survivors, _ = materialize_counted(survivors)
         survivors.write.mode("append").parquet(docs_sink_path)
-        out = bands.join(survivors.select(id_col), id_col, "left_semi").select(
-            *(["bucket_pmod"] if n_parts else []), *keys, id_col
-        )
-        writer = out.write.mode("append")
-        if n_parts:
-            writer = writer.partitionBy("bucket_pmod")
-        writer.parquet(store_path)
-        meta = _read_store_meta(store_path, spark)
-        if meta is None or (
-            meta is not _META_UNREADABLE and not index.family.keys() <= meta.keys()
-        ):
-            _write_store_meta(store_path, n_parts, spark, index.family)
+        bands.join(survivors.select(id_col), id_col, "left_semi").select(
+            *probe_keys, id_col
+        ).write.mode("append").partitionBy("bucket_pmod").parquet(store_path)
 
     return filter_batch
 
@@ -680,35 +539,13 @@ def near_dup_filter_sink(
        lineage/debugging).
 
     The store follows the band-store contract of
-    :class:`~..operators.band_index.BandIndex`: it is written
-    PARTITIONED by ``bucket_pmod = pmod(band_hash, store_partitions)``
-    and probed by broadcasting the micro-batch's buckets against a
-    map-only store scan, so the per-batch cost never shuffles the store;
-    ``compact_bucket_store`` dedups and re-files it at maintenance time.
-    State is one parquet table of id-width bucket rows, O(docs x bands),
-    never text.
-
-    REPLAY: a redelivered micro-batch whose earlier delivery completed
-    BOTH appends finds its own buckets in the store and drops every
-    doc. It is not replay-safe by construction: the crash window is the
-    gap between the survivor append and the bucket append. A failure
-    there leaves the docs landed but un-indexed, and the redelivery
-    appends them again — at-least-once on the docs side for that one
-    batch. Recovery: ``compact_bucket_store`` plus a doc-id dedup pass
-    over the docs sink.
-
-    The layout AND the signing family are STICKY and PERSISTED in
-    ``_NEAR_DUP_STORE_META.json`` inside the store directory
-    (store_partitions + num_hashes + bands + shingle_n + family):
-    re-opening with a different ``store_partitions`` raises (a
-    mismatched N would probe the wrong pmod space), and so does a
-    different signing family (its buckets never match). A store whose
-    meta records only the layout, or none, is probed as configured and
-    gains the family on its next write. ``store_partitions=0`` keeps the
-    legacy unpartitioned layout, and a legacy unpartitioned store keeps
-    being written unpartitioned regardless of the configured default
-    (mixing layouts makes Spark's partition discovery silently drop the
-    root-level legacy rows).
+    :class:`~..operators.band_index.BandIndex` (manifest, pmod layout,
+    broadcast probe, replay and its crash window): here the manifest
+    pins ``store_partitions``, ``num_hashes``, ``bands``, ``shingle_n``
+    and ``family``, the store is partitioned by ``bucket_pmod =
+    pmod(band_hash, store_partitions)``, and ``compact_bucket_store``
+    dedups and re-files it at maintenance time. State is one parquet
+    table of id-width bucket rows, O(docs x bands), never text.
     """
     from ..operators.dedup_components import _drop_pair_losers
     from ..operators.dedup_minhash import _minhash_index, lsh_candidate_pairs
@@ -833,7 +670,6 @@ def embedding_near_dup_sink(
     dim: int | None = None,
     signature_impl: str = "expr",
     store_partitions: int = 16,
-    adopt_family_if_meta_absent: bool = False,
 ):
     """foreachBatch factory: streaming EMBEDDING ingestion with
     near-dup dedup against everything already ingested — the
@@ -860,48 +696,29 @@ def embedding_near_dup_sink(
        to ``band_store_path`` (band, sig, id — id kept for lineage).
 
     The store follows the band-store contract of
-    :class:`~..operators.band_index.BandIndex` — broadcast pmod probe,
-    sticky layout, replay and its crash window are those of
-    :func:`near_dup_filter_sink`; here the store is partitioned by
-    ``bucket_pmod = pmod(sig, store_partitions)`` and
+    :class:`~..operators.band_index.BandIndex`, like
+    :func:`near_dup_filter_sink`'s: here the manifest pins
+    ``store_partitions``, ``num_planes`` and ``num_bands``, the store is
+    partitioned by ``bucket_pmod = pmod(sig, store_partitions)``, and
     ``compact_bucket_store`` takes ``id_col="vec_id", key_cols=("band",
-    "sig")``. ZERO-NORM vectors are DROPPED (logged per batch): they
-    have no defined cosine and no bucket identity, so they carry no
-    replay protection — a policy difference from the batch operators
-    (which pass them through as survivors) that the streaming contract
-    forces.
+    "sig")``. DEGENERATE vectors (NULL, zero-norm, or with a NaN/NULL
+    element) are DROPPED and counted in the batch's log line: they have
+    no defined cosine and no bucket identity, so they carry no replay
+    protection — a policy difference from the batch operators (which
+    pass them through as survivors) that the streaming contract forces.
 
-    The plane family is STICKY and PERSISTED in the store meta
-    (``_NEAR_DUP_STORE_META.json``: store_partitions + num_planes +
-    num_bands): re-opening the store with mismatched
-    ``num_planes``/``num_bands`` raises instead of silently missing
-    every historical bucket. ``num_planes`` must be an explicit int
-    (embedding_band_state rejects 'auto'/bool) and — because the
-    decision here is bucket-level, NOT verified — it must be sized for
-    the COLLISION RATE at the target corpus, not for bucket occupancy:
-    expected false drops per vector ~= N_target * num_bands * 2^-p for
-    near-orthogonal embeddings, so pick p >= log2(N_target * num_bands
-    / eps) for a false-drop budget eps (e.g. p=24 holds eps ~0.05 at
-    N=200k, bands=4). Larger p trades recall on merely-similar pairs
-    (P[band] = (1 - theta/pi)^p) for precision — near-EXACT duplicates
-    (theta ~ 0) keep colliding at any practical p, which is the
-    regime a bucket-level streaming gate is for; the occupancy-sized
-    default (12) suits the verified batch loop, not this sink, at
-    large N. ``store_partitions=0`` keeps an unpartitioned layout.
-
-    When an EXISTING store's meta lacks the plane family, or is
-    provably ABSENT (a remote store whose best-effort meta write
-    failed, or a local legacy unpartitioned store), the true plane
-    family is unrecoverable from (band, sig) data, so the sink REFUSES
-    to probe rather than silently adopting the configured family
-    (which, if wrong, would miss every historical bucket AND pin the
-    wrong family forever). ``adopt_family_if_meta_absent=True`` is the
-    explicit operator override for the absent case when you know the
-    store was created with exactly this (num_planes, num_bands); the
-    sink then adopts and pins the configured family (layout still
-    data-proven via the pmod check for remote partitioned stores)."""
-    import logging
-
+    ``num_planes`` must be an explicit int (embedding_band_state rejects
+    'auto'/bool) and — because the decision here is bucket-level, NOT
+    verified — it must be sized for the COLLISION RATE at the target
+    corpus, not for bucket occupancy: expected false drops per vector
+    ~= N_target * num_bands * 2^-p for near-orthogonal embeddings, so
+    pick p >= log2(N_target * num_bands / eps) for a false-drop budget
+    eps (e.g. p=24 holds eps ~0.05 at N=200k, bands=4). Larger p trades
+    recall on merely-similar pairs (P[band] = (1 - theta/pi)^p) for
+    precision — near-EXACT duplicates (theta ~ 0) keep colliding at any
+    practical p, which is the regime a bucket-level streaming gate is
+    for; the occupancy-sized default (12) suits the verified batch loop,
+    not this sink, at large N."""
     from ..operators.dedup_embedding import (
         _cosine_index,
         _norm_sq,
@@ -919,7 +736,7 @@ def embedding_near_dup_sink(
         vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
     )
 
-    def admit(batch_df: DataFrame, batch_id: int):
+    def admit(batch_df: DataFrame) -> DataFrame:
         # degenerate vectors — NULL, zero-norm, or carrying a NaN/NULL
         # element — have no defined cosine and no stable bucket
         # identity (a NaN dot-product compares TRUE against every
@@ -934,31 +751,16 @@ def embedding_near_dup_sink(
             | F.isnan("_nsq")
             | (F.col("_nsq") <= 0)
         )
-        # The degenerate count rides the batch's first full scan — the
-        # band-row checkpoint — via the Observation API instead of a
-        # dedicated count() job. CollectMetrics sits BELOW the
-        # keep-filter so it sees every row, and the checkpoint is an
-        # unconditional FULL scan, so the count is complete once it
-        # returns (embedding_dedup's LocalLimit-bounded verify-dispatch
-        # probe runs later and can never be the scan that fills it).
-        deg_obs = Observation()
-        batch = (
-            scoped.observe(deg_obs, F.count(F.when(bad, True)).alias("n_bad"))
+        # The count rides the batch's first full scan — the band-row
+        # checkpoint, which reads it back — instead of a count() job.
+        # CollectMetrics sits BELOW the keep-filter so it sees every
+        # row, and the checkpoint is an unconditional FULL scan, so the
+        # count is complete once it returns.
+        return (
+            scoped.observe(_UNSIGNABLE, F.count(F.when(bad, True)).alias("rows"))
             .filter(~bad)
             .drop("_nsq")
         )
-
-        def log_degenerate() -> None:
-            n_bad = int(deg_obs.get["n_bad"])
-            if n_bad:
-                logging.getLogger(__name__).info(
-                    "embedding_near_dup_sink batch %s: dropped %d degenerate "
-                    "vector(s) (NULL/zero-norm/NaN) — no bucket identity, "
-                    "not replay-protectable",
-                    batch_id, n_bad,
-                )
-
-        return batch, log_degenerate
 
     def sweep(batch: DataFrame, band_rows: DataFrame) -> DataFrame:
         return embedding_dedup(
@@ -967,8 +769,7 @@ def embedding_near_dup_sink(
         )
 
     return _band_store_sink(
-        index, docs_sink_path, band_store_path, store_partitions, sweep,
-        admit, adopt_family_if_meta_absent,
+        index, docs_sink_path, band_store_path, store_partitions, sweep, admit
     )
 
 
@@ -976,15 +777,16 @@ def compact_bucket_store(
     spark: SparkSession,
     bucket_store_path: str,
     id_col: str = "doc_id",
-    target_file_mb: int = 128,
     key_cols: tuple[str, ...] = ("band_id", "band_hash"),
 ) -> dict[str, int]:
     """Maintenance compaction for a streaming band-bucket store: dedup
     bucket rows (one row per ``key_cols`` bucket — (band_id, band_hash)
     for ``near_dup_filter_sink``'s minhash store, ("band", "sig") with
     ``id_col="vec_id"`` for ``embedding_near_dup_sink``'s store — min-id
-    owner kept for lineage) and rewrite with bounded file counts,
-    preserving the ``bucket_pmod`` partition layout when present.
+    owner kept for lineage) and rewrite them one file per ``bucket_pmod``
+    partition. The store's manifest must be readable (the band-store
+    contract of :class:`~..operators.band_index.BandIndex`); it is
+    checked before any work and travels whole with the compacted store.
 
     Run this between micro-batch cycles (single-writer contract and
     local-path rename swap, same as ``compact_parquet``) on whatever
@@ -1004,6 +806,7 @@ def compact_bucket_store(
             "format's compaction on remote filesystems"
         )
     path = bucket_store_path.rstrip("/")
+    manifest = _read_manifest(spark, path, action="compact")
     files = [
         f
         for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
@@ -1011,51 +814,23 @@ def compact_bucket_store(
     ]
     if not files:
         raise ValueError(f"compact_bucket_store: no parquet files under {path!r}")
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))  # ceil
-
-    # read the layout meta BEFORE any compaction work: a meta file that
-    # exists but can't be parsed must refuse up front (same contract as
-    # _effective_store_partitions) — compacting without it would strand
-    # the store's pinned partition count
-    meta = _read_store_meta(path, spark)
-    if meta is _META_UNREADABLE:
-        _raise_unreadable_meta(
-            path,
-            "refusing to compact — the meta must travel with the "
-            "compacted store",
-        )
 
     store = spark.read.parquet(path)
     rows_before = store.count()
-    partitioned = "bucket_pmod" in store.columns
-    part_cols = ["bucket_pmod"] if partitioned else []
-    deduped = store.groupBy(*part_cols, *key_cols).agg(
-        F.min(id_col).alias(id_col)
+    # one output file per store partition (buckets are id-width; a
+    # partition of a 100 TB store is still modest parquet)
+    deduped = (
+        store.groupBy("bucket_pmod", *key_cols)
+        .agg(F.min(id_col).alias(id_col))
+        .repartition("bucket_pmod")
     )
-    if partitioned:
-        # one output file per store partition (buckets are id-width;
-        # a partition of a 100 TB store is still modest parquet)
-        deduped = deduped.repartition("bucket_pmod")
-    else:
-        deduped = deduped.repartition(int(n_out))
     tmp = path + "._compact_tmp"
     old = path + "._compact_old"
     for stale in (tmp, old):
         shutil.rmtree(stale, ignore_errors=True)
-    writer = deduped.write.mode("overwrite")
-    if partitioned:
-        writer = writer.partitionBy("bucket_pmod")
-    writer.parquet(tmp)
+    deduped.write.mode("overwrite").partitionBy("bucket_pmod").parquet(tmp)
     rows_after = spark.read.parquet(tmp).count()
-    if meta is not None:
-        # the WHOLE meta travels with the compacted store — an
-        # embedding band store's record also pins the plane family
-        # (num_planes/num_bands); rewriting only the layout key would
-        # silently disable the family check and let a later mismatched
-        # family miss every historical bucket
-        extra = {k: v for k, v in meta.items() if k != "store_partitions"}
-        _write_store_meta(tmp, meta["store_partitions"], spark, extra or None)
+    _write_manifest(spark, tmp, manifest)
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)

@@ -27,6 +27,31 @@ def test_local_checkpoint_only_in_eager_module():
     )
 
 
+
+def test_no_module_uses_observation():
+    """``pyspark.sql.Observation`` starts the session's unserializable
+    ObservationManager, after which a ``pyspark.ml`` model's transform
+    fails; observed metrics are read back through ``eager`` instead."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            named = (
+                (isinstance(node, ast.Name) and node.id == "Observation")
+                or (isinstance(node, ast.Attribute) and node.attr == "Observation")
+                or (
+                    isinstance(node, (ast.Import, ast.ImportFrom))
+                    and any(
+                        a.name.split(".")[-1] == "Observation" for a in node.names
+                    )
+                )
+            )
+            if named:
+                offenders.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
+    assert not offenders, (
+        "use eager.materialize_observed with a named df.observe metric "
+        f"instead of Observation: {offenders}"
+    )
+
 def test_materialize_counted_counts_and_keeps_session_serializable(spark):
     """The count rides the checkpoint, empty frames included, and a
     pyspark.ml model fitted afterwards still transforms: its training

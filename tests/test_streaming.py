@@ -489,12 +489,12 @@ def test_streaming_near_dup_filter_across_batches(spark, tmp_root):
 def test_near_dup_sink_partitioned_store_many_batches(spark, tmp_root):
     """Long-running-stream shape of the bucket store: 20 micro-batches
     against a bucket_pmod-partitioned store, then compaction. Checks:
-    (a) dedup results are identical to the unpartitioned legacy layout,
-    (b) the store lands partitioned by pmod(band_hash, N) so per-batch
-    probes scan bounded per-partition inputs, and (c) compact_bucket_store
-    collapses the one-file-per-batch accumulation to one file per
-    partition with bucket rows deduped — the growth-control the sink
-    needs under continuous ingestion."""
+    (a) the cross-batch near-dups are dropped, (b) the store lands
+    partitioned by pmod(band_hash, N) so per-batch probes scan bounded
+    per-partition inputs, and (c) compact_bucket_store collapses the
+    one-file-per-batch accumulation to one file per partition with
+    bucket rows deduped — the growth-control the sink needs under
+    continuous ingestion."""
     import glob
     import os
 
@@ -541,10 +541,6 @@ def test_near_dup_sink_partitioned_store_many_batches(spark, tmp_root):
     part_ids = run(
         f"{tmp_root}/p_sink", f"{tmp_root}/p_store", f"{tmp_root}/p_ckpt", n_parts
     )
-    legacy_ids = run(
-        f"{tmp_root}/l_sink", f"{tmp_root}/l_store", f"{tmp_root}/l_ckpt", 0
-    )
-    assert part_ids == legacy_ids, (part_ids, legacy_ids)
     # the every-4th-batch near-dups were dropped
     dropped = {100 + b for b in range(20) if b % 4 == 3}
     assert part_ids.isdisjoint(dropped)
@@ -599,15 +595,14 @@ def test_near_dup_sink_partitioned_store_many_batches(spark, tmp_root):
 
 
 def test_near_dup_sink_store_layout_is_sticky_and_validated(spark, tmp_root):
-    """Bucket-store layout safety: (a) a legacy unpartitioned store keeps
-    being written unpartitioned even under the partitioned default —
-    mixing layouts would make Spark's partition discovery silently drop
-    the root-level legacy rows, losing pre-upgrade dedup state; (b) the
-    creation-time partition count is persisted and a mismatched
-    store_partitions raises instead of probing the wrong pmod space;
-    (c) a partitioned store whose meta file is missing raises with a
-    migration instruction; (d) the meta survives compaction."""
+    """Bucket-store layout safety: (a) a sink factory refuses a
+    store_partitions that is not an int >= 1 — there is no unpartitioned
+    layout; (b) the creation-time partition count is persisted and a
+    mismatched store_partitions raises instead of probing the wrong pmod
+    space; (c) a partitioned store whose meta file is missing raises
+    with the repair instruction; (d) the meta survives compaction."""
     import glob
+    import json
     import os
 
     import pytest
@@ -615,11 +610,12 @@ def test_near_dup_sink_store_layout_is_sticky_and_validated(spark, tmp_root):
 
     from facolos_data_pipelines_spark.streaming import (
         compact_bucket_store,
+        embedding_near_dup_sink,
         near_dup_filter_sink,
     )
     from facolos_data_pipelines_spark.streaming.pipeline import (
         _STORE_META_NAME,
-        _read_store_meta,
+        _read_manifest,
     )
 
     doc_schema = T.StructType(
@@ -630,48 +626,40 @@ def test_near_dup_sink_store_layout_is_sticky_and_validated(spark, tmp_root):
     )
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
 
-    # (a) legacy store created unpartitioned, then reopened with the
-    # partitioned default: stays unpartitioned, cross-batch dedup intact
+    # (a) no legacy unpartitioned layout: 0, negatives and bools refuse
+    # when the sink is built, for both families
     sink, store = f"{tmp_root}/leg_sink", f"{tmp_root}/leg_store"
-    fold0 = near_dup_filter_sink(sink, store, store_partitions=0)
-    fold0(spark.createDataFrame([(1, base)], doc_schema), 0)
-    os.remove(os.path.join(store, _STORE_META_NAME))  # simulate pre-meta store
-    fold16 = near_dup_filter_sink(sink, store)  # default store_partitions=16
-    fold16(
-        spark.createDataFrame(
-            [(2, base + " nu"), (3, "totally different words about spark here")],
-            doc_schema,
-        ),
-        1,
-    )
-    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1, 3}
-    assert not glob.glob(os.path.join(store, "bucket_pmod=*")), (
-        "legacy store must never gain a partitioned layer"
-    )
-    assert "bucket_pmod" not in spark.read.parquet(store).columns
+    for bad in (0, -1, True, 2.0):
+        with pytest.raises(ValueError, match="store_partitions must be an int"):
+            near_dup_filter_sink(sink, store, store_partitions=bad)
+        with pytest.raises(ValueError, match="store_partitions must be an int"):
+            embedding_near_dup_sink(sink, store, store_partitions=bad)
+    assert not os.path.exists(store)
 
     # (b) partitioned store: N persisted at creation, mismatch raises
     psink, pstore = f"{tmp_root}/par_sink", f"{tmp_root}/par_store"
     fold4 = near_dup_filter_sink(psink, pstore, store_partitions=4)
     fold4(spark.createDataFrame([(1, base)], doc_schema), 0)
-    assert _read_store_meta(pstore) == {
+    full_meta = {
         "store_partitions": 4, "num_hashes": 32, "bands": 8, "shingle_n": 3,
         "family": "multiply_add",
     }
+    assert _read_manifest(spark, pstore) == full_meta
+    assert glob.glob(os.path.join(pstore, "bucket_pmod=*"))
     fold8 = near_dup_filter_sink(psink, pstore, store_partitions=8)
     with pytest.raises(ValueError, match="sticky"):
         fold8(spark.createDataFrame([(9, "whatever text")], doc_schema), 1)
 
-    # (c) partitioned store without meta: unrecoverable N, raise
+    # (c) partitioned store without meta: its N is unrecoverable, raise
     os.remove(os.path.join(pstore, _STORE_META_NAME))
-    with pytest.raises(ValueError, match="unrecoverable"):
+    with pytest.raises(ValueError, match="no meta file"):
         fold4(spark.createDataFrame([(9, "whatever text")], doc_schema), 2)
 
-    # (d) meta survives compaction (restore it first)
+    # (d) meta survives compaction (restore the full manifest first)
     with open(os.path.join(pstore, _STORE_META_NAME), "w") as fh:
-        fh.write('{"store_partitions": 4}')
+        json.dump(full_meta, fh)
     compact_bucket_store(spark, pstore)
-    assert _read_store_meta(pstore) == {"store_partitions": 4}
+    assert _read_manifest(spark, pstore) == full_meta
     # and the compacted store still probes correctly at the recorded N
     fold4(spark.createDataFrame([(5, base + " xi")], doc_schema), 3)
     assert {r["doc_id"] for r in spark.read.parquet(psink).collect()} == {1}
@@ -681,10 +669,8 @@ def test_near_dup_sink_refuses_foreign_signing_family(spark, tmp_root):
     """The MinHash store meta pins the signing family (num_hashes,
     bands, shingle_n, family) next to the layout: a sink reopened with
     a different family or band count raises before any probe instead
-    of silently missing every historical bucket. A layout-only meta —
-    what every MinHash store written before the family was pinned
-    carries — is probed as configured and gains the family on the next
-    write."""
+    of silently missing every historical bucket. A layout-only meta
+    refuses too: the family it would be probed under is unverifiable."""
     import json
     import os
 
@@ -694,7 +680,7 @@ def test_near_dup_sink_refuses_foreign_signing_family(spark, tmp_root):
     from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
     from facolos_data_pipelines_spark.streaming.pipeline import (
         _STORE_META_NAME,
-        _read_store_meta,
+        _read_manifest,
     )
 
     doc_schema = T.StructType(
@@ -711,7 +697,7 @@ def test_near_dup_sink_refuses_foreign_signing_family(spark, tmp_root):
         "store_partitions": 2, "num_hashes": 32, "bands": 8, "shingle_n": 3,
         "family": "multiply_add",
     }
-    assert _read_store_meta(store) == full_meta
+    assert _read_manifest(spark, store) == full_meta
 
     for drift in ({"family": "xxhash"}, {"bands": 4}):
         other = near_dup_filter_sink(sink, store, store_partitions=2, **drift)
@@ -719,27 +705,31 @@ def test_near_dup_sink_refuses_foreign_signing_family(spark, tmp_root):
             other(spark.createDataFrame([(9, "whatever text here")], doc_schema), 1)
     assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1}
 
+    rows_before = spark.read.parquet(store).count()
     with open(os.path.join(store, _STORE_META_NAME), "w") as fh:
         json.dump({"store_partitions": 2}, fh)
-    fold(
-        spark.createDataFrame(
-            [(2, base + " nu"), (3, "totally different words about spark here")],
-            doc_schema,
-        ),
-        2,
+    batch = spark.createDataFrame(
+        [(2, base + " nu"), (3, "totally different words about spark here")],
+        doc_schema,
     )
+    with pytest.raises(ValueError, match="without the pinned MinHash signing family"):
+        fold(batch, 2)
+    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1}
+    assert spark.read.parquet(store).count() == rows_before
+
+    # the full manifest, written back by hand, reopens the store
+    with open(os.path.join(store, _STORE_META_NAME), "w") as fh:
+        json.dump(full_meta, fh)
+    fold(batch, 2)
     assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1, 3}
-    assert _read_store_meta(store) == full_meta
+    assert _read_manifest(spark, store) == full_meta
 
 
 def test_near_dup_sink_store_meta_on_uri_paths(spark, tmp_root):
     """URI ('://') store paths — HDFS/object stores in production,
-    file:// here — go through the Hadoop FileSystem API: the layout
-    meta is written and read back, the sticky-N mismatch still raises,
-    and a partitioned URI store with NO readable meta (pre-meta legacy,
-    or an object store where the best-effort write failed) trusts the
-    configured N and adopts it instead of raising — the scenario where
-    the second micro-batch used to die unrecoverably."""
+    file:// here — go through the Hadoop FileSystem API: the manifest
+    is written and read back, the sticky-N mismatch still raises, and a
+    partitioned URI store with no meta refuses like a local one."""
     import os
 
     import pytest
@@ -748,8 +738,8 @@ def test_near_dup_sink_store_meta_on_uri_paths(spark, tmp_root):
     from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
     from facolos_data_pipelines_spark.streaming.pipeline import (
         _STORE_META_NAME,
-        _read_store_meta,
-        _write_store_meta,
+        _read_manifest,
+        _write_manifest,
     )
 
     doc_schema = T.StructType(
@@ -762,124 +752,51 @@ def test_near_dup_sink_store_meta_on_uri_paths(spark, tmp_root):
     sink = f"file://{tmp_root}/uri_sink"
     store = f"file://{tmp_root}/uri_store"
     local_meta = os.path.join(f"{tmp_root}/uri_store", _STORE_META_NAME)
+    full_meta = {
+        "store_partitions": 4, "num_hashes": 32, "bands": 8, "shingle_n": 3,
+        "family": "multiply_add",
+    }
 
     # round-trip through the Hadoop FS branch
     fold4 = near_dup_filter_sink(sink, store, store_partitions=4)
     fold4(spark.createDataFrame([(1, base)], doc_schema), 0)
     assert os.path.isfile(local_meta)
-    assert _read_store_meta(store, spark) == {
-        "store_partitions": 4, "num_hashes": 32, "bands": 8, "shingle_n": 3,
-        "family": "multiply_add",
-    }
-    assert _read_store_meta(store) is None  # URI path without spark: opaque
+    assert _read_manifest(spark, store) == full_meta
 
     # sticky mismatch raises on URI stores too
     fold8 = near_dup_filter_sink(sink, store, store_partitions=8)
     with pytest.raises(ValueError, match="sticky"):
         fold8(spark.createDataFrame([(9, "whatever text")], doc_schema), 1)
 
-    # meta-less partitioned URI store: trust the configured N, adopt it,
-    # and the next micro-batch still dedups against batch-0 state
+    # meta-less partitioned URI store: refuse, nothing lands
     os.remove(local_meta)
-    fold4(
-        spark.createDataFrame(
-            [(2, base + " nu"), (3, "totally different words about spark here")],
-            doc_schema,
-        ),
-        2,
-    )
-    assert _read_store_meta(store, spark) == {
-        "store_partitions": 4, "num_hashes": 32, "bands": 8, "shingle_n": 3,
-        "family": "multiply_add",
-    }
-    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1, 3}
+    with pytest.raises(ValueError, match="no meta file"):
+        fold4(
+            spark.createDataFrame(
+                [(2, base + " nu"), (3, "totally different words about spark here")],
+                doc_schema,
+            ),
+            2,
+        )
+    assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1}
 
-    # direct writer round-trip (covers overwrite)
-    _write_store_meta(store, 4, spark)
-    assert _read_store_meta(store, spark) == {"store_partitions": 4}
-
-
-def test_uri_store_adopt_rejects_provably_wrong_n(spark, tmp_root):
-    """Adopting the configured N on a meta-less partitioned URI store
-    is sanity-checked: a stored bucket_pmod >= requested proves the
-    store was written with a larger N, so the adopt path must raise
-    instead of probing the wrong pmod space and pinning the wrong N."""
-    import os
-
-    import pytest
-
-    from facolos_data_pipelines_spark.streaming.pipeline import (
-        _STORE_META_NAME,
-        _effective_store_partitions,
-    )
-
-    local = f"{tmp_root}/wrongn_store"
-    store = f"file://{local}"
-    # band_hash=28 under N=16 -> pmod 12; consistent with an N=16 layout
-    spark.createDataFrame(
-        [(12, 0, 28, 1)], "bucket_pmod int, band_id int, band_hash long, doc_id long"
-    ).write.partitionBy("bucket_pmod").parquet(store)
-    meta = os.path.join(local, _STORE_META_NAME)
-    if os.path.exists(meta):
-        os.remove(meta)
-    # requested 8 but pmod=12 exists on disk -> provably wrong, raise
-    with pytest.raises(ValueError, match="impossible"):
-        _effective_store_partitions(spark, store, 8)
-    assert not os.path.exists(meta), "wrong N must not be pinned"
-    # requested 16 is consistent with pmod=12 AND pmod(28,16)==12 -> adopted
-    assert _effective_store_partitions(spark, store, 16) == 16
-    assert os.path.exists(meta)
-
-
-def test_uri_store_adopt_rejects_smaller_original_n(spark, tmp_root):
-    """The max-pmod bound only rules out a LARGER original N. A store
-    written with a SMALLER N (here N=4, requested 8) has every pmod <
-    requested and used to slip through, pinning the wrong N and silently
-    leaking cross-batch duplicates. The adopt path now recomputes
-    pmod(band_hash, requested) on a row sample and raises on mismatch."""
-    import os
-
-    import pytest
-
-    from facolos_data_pipelines_spark.streaming.pipeline import (
-        _STORE_META_NAME,
-        _effective_store_partitions,
-    )
-
-    local = f"{tmp_root}/smalln_store"
-    store = f"file://{local}"
-    # Written with N=4: pmod(h, 4) for h in 5,6,7 -> 1,2,3 (all < 8, so the
-    # max-pmod check alone would wrongly accept requested=8).
-    rows = [(int(h % 4), 0, h, i) for i, h in enumerate([5, 6, 7])]
-    spark.createDataFrame(
-        rows, "bucket_pmod int, band_id int, band_hash long, doc_id long"
-    ).write.partitionBy("bucket_pmod").parquet(store)
-    meta = os.path.join(local, _STORE_META_NAME)
-    if os.path.exists(meta):
-        os.remove(meta)
-    with pytest.raises(ValueError, match="different store_partitions"):
-        _effective_store_partitions(spark, store, 8)
-    assert not os.path.exists(meta), "wrong N must not be pinned"
-    # the true N=4 recomputes consistently -> adopted and pinned
-    assert _effective_store_partitions(spark, store, 4) == 4
-    assert os.path.exists(meta)
+    # direct writer round-trip (covers overwrite of the stale .crc)
+    _write_manifest(spark, store, full_meta)
+    assert _read_manifest(spark, store) == full_meta
 
 
 def test_store_meta_unreadable_is_not_absent(spark, tmp_root):
-    """A meta file that EXISTS but cannot be parsed must NOT route into the
-    adopt-and-overwrite branch: _read_store_meta returns the
-    _META_UNREADABLE sentinel (not None) and _effective_store_partitions
-    raises instead of overwriting a possibly-valid recorded layout."""
+    """A meta file that EXISTS but cannot be parsed refuses with the
+    repair text and is never overwritten: rewriting it with the
+    configured values could pin a layout the store was not written
+    with."""
     import os
 
     import pytest
+    from pyspark.sql import types as T
 
-    from facolos_data_pipelines_spark.streaming.pipeline import (
-        _META_UNREADABLE,
-        _STORE_META_NAME,
-        _effective_store_partitions,
-        _read_store_meta,
-    )
+    from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
+    from facolos_data_pipelines_spark.streaming.pipeline import _STORE_META_NAME
 
     local = f"{tmp_root}/corrupt_meta_store"
     store = f"file://{local}"
@@ -889,18 +806,15 @@ def test_store_meta_unreadable_is_not_absent(spark, tmp_root):
     meta = os.path.join(local, _STORE_META_NAME)
     with open(meta, "w") as fh:
         fh.write("{not json")
-    # sentinel on both the local-path and Hadoop-FS read branches
-    assert _read_store_meta(local) is _META_UNREADABLE
-    assert _read_store_meta(store, spark) is _META_UNREADABLE
+    doc_schema = "doc_id long, text string"
+    fold = near_dup_filter_sink(f"{tmp_root}/corrupt_meta_sink", store)
     with pytest.raises(ValueError, match="could not be read"):
-        _effective_store_partitions(spark, store, 16)
+        fold(spark.createDataFrame([(2, "some words here")], doc_schema), 0)
     with open(meta) as fh:
         assert fh.read() == "{not json", "unreadable meta must not be overwritten"
 
     # an embedding band store: the repair text names the plane-family
     # keys a repaired meta must carry, not just the layout
-    from pyspark.sql import types as T
-
     from facolos_data_pipelines_spark.streaming import embedding_near_dup_sink
 
     schema = T.StructType(
@@ -1317,14 +1231,12 @@ def test_embedding_sink_plane_family_sticky_and_compactable(spark, tmp_root):
 
 
 def test_embedding_sink_meta_absent_refuses_unless_opted_in(spark, tmp_root):
-    """A store whose meta is provably ABSENT (not just family-less)
-    must refuse to probe: the true plane family is unrecoverable from
-    (band, sig) data, and silently adopting the CONFIGURED family
-    would miss every historical bucket if it differs — then pin the
-    wrong family forever via the end-of-batch meta rewrite.
-    ``adopt_family_if_meta_absent=True`` is the explicit operator
-    override; after it runs, the configured family is pinned and the
-    store filters replays again."""
+    """A store whose meta is ABSENT (not just family-less) refuses to
+    probe, whatever family the sink is configured with: the true plane
+    family is unrecoverable from (band, sig) data, and adopting the
+    configured one would miss every historical bucket if it differs.
+    There is no opt-in: the only way back is the full manifest, written
+    with the values the store was created with."""
     import json
     import os
 
@@ -1341,42 +1253,235 @@ def test_embedding_sink_meta_absent_refuses_unless_opted_in(spark, tmp_root):
     )
     sink = f"{tmp_root}/ma_sink"
     store = f"{tmp_root}/ma_store"
-    # unpartitioned layout: the one local meta-absent shape that is
-    # layout-recoverable (a local pmod-partitioned store without meta
-    # already raises in _effective_store_partitions regardless)
     fold = embedding_near_dup_sink(
-        sink, store, num_planes=4, num_bands=2, dim=8, store_partitions=0
+        sink, store, num_planes=4, num_bands=2, dim=8, store_partitions=2
     )
     fold(spark.createDataFrame([(1, _vec(0)), (2, _vec(3))], schema), 0)
     meta_path = os.path.join(store, "_NEAR_DUP_STORE_META.json")
     full_meta = json.load(open(meta_path))
-    assert full_meta["num_planes"] == 4
+    assert full_meta == {"store_partitions": 2, "num_planes": 4, "num_bands": 2}
     os.remove(meta_path)
+    rows_before = spark.read.parquet(store).count()
 
-    # meta provably absent -> refuse, even with the matching family
-    with pytest.raises(ValueError, match="no meta file"):
-        fold(spark.createDataFrame([(3, _vec(5))], schema), 1)
-    # ...and refuse a DIFFERENT family identically (nothing to compare
-    # against; the refusal is the protection)
+    # meta absent -> refuse, with the matching family and with another
     other = embedding_near_dup_sink(
-        sink, store, num_planes=6, num_bands=3, dim=8, store_partitions=0
+        sink, store, num_planes=6, num_bands=3, dim=8, store_partitions=2
     )
-    with pytest.raises(ValueError, match="no meta file"):
-        other(spark.createDataFrame([(3, _vec(5))], schema), 1)
+    batch = spark.createDataFrame([(4, _vec(0, noise=0.01)), (5, _vec(6))], schema)
+    for refused in (fold, other):
+        with pytest.raises(ValueError, match="no meta file"):
+            refused(batch, 1)
+    assert {r["vec_id"] for r in spark.read.parquet(sink).collect()} == {1, 2}
+    assert spark.read.parquet(store).count() == rows_before
+    assert not os.path.exists(meta_path)
 
-    # explicit opt-in: adopts + re-pins the configured family, and the
-    # store still drops a replayed batch-0 near-dup
-    opted = embedding_near_dup_sink(
-        sink, store, num_planes=4, num_bands=2, dim=8, store_partitions=0,
-        adopt_family_if_meta_absent=True,
-    )
-    opted(
-        spark.createDataFrame([(4, _vec(0, noise=0.01)), (5, _vec(6))], schema),
-        1,
-    )
-    landed = {r["vec_id"] for r in spark.read.parquet(sink).collect()}
-    assert landed == {1, 2, 5}
+    # the full manifest written back by hand reopens the store, which
+    # still drops a replayed batch-0 near-dup
+    with open(meta_path, "w") as fh:
+        json.dump(full_meta, fh)
+    fold(batch, 1)
+    assert {r["vec_id"] for r in spark.read.parquet(sink).collect()} == {1, 2, 5}
     assert json.load(open(meta_path)) == full_meta
+
+
+_DOC_SCHEMA = "doc_id long, text string"
+_VEC_SCHEMA = "vec_id long, embedding array<double>"
+_BASE_TEXT = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+
+#: family -> (sink factory kwargs, first batch, refused batch, family drift)
+_SINK_FAMILIES = {
+    "minhash": (
+        {},
+        ([(1, _BASE_TEXT)], _DOC_SCHEMA),
+        ([(2, _BASE_TEXT + " nu"), (3, "other words about spark")], _DOC_SCHEMA),
+        {"bands": 4},
+    ),
+    "embedding": (
+        {"num_planes": 4, "num_bands": 2, "dim": 8},
+        ([(1, _vec(0)), (2, _vec(3))], _VEC_SCHEMA),
+        ([(4, _vec(0, noise=0.01)), (5, _vec(6))], _VEC_SCHEMA),
+        {"num_planes": 6},
+    ),
+}
+
+#: case -> (manifest edit, sink overrides, refusal text). The edit is
+#: "drop" (delete the manifest), raw text, a function of the full
+#: manifest, or None (leave the sink-written manifest alone).
+_MANIFEST_CASES = {
+    "absent": ("drop", {}, "no meta file"),
+    "unreadable": ("{not json", {}, "could not be read"),
+    "not_an_object": ("[2]", {}, "could not be read"),
+    "layout_only": (
+        lambda m: {"store_partitions": m["store_partitions"]}, {},
+        "without the pinned",
+    ),
+    "no_store_partitions": (
+        lambda m: {k: v for k, v in m.items() if k != "store_partitions"}, {},
+        "valid store_partitions",
+    ),
+    "string_store_partitions": (
+        lambda m: {**m, "store_partitions": "2"}, {}, "valid store_partitions"
+    ),
+    "bool_store_partitions": (
+        lambda m: {**m, "store_partitions": True}, {}, "valid store_partitions"
+    ),
+    "zero_store_partitions": (
+        lambda m: {**m, "store_partitions": 0}, {}, "valid store_partitions"
+    ),
+    "family_mismatch": (None, "drift", "never match"),
+    "n_mismatch": (None, {"store_partitions": 4}, "sticky"),
+}
+
+
+def _sink_factory(family):
+    from facolos_data_pipelines_spark.streaming import (
+        embedding_near_dup_sink,
+        near_dup_filter_sink,
+    )
+
+    return near_dup_filter_sink if family == "minhash" else embedding_near_dup_sink
+
+
+def _tree_bytes(root):
+    """relative path -> bytes for every file under ``root``."""
+    import pathlib
+
+    return {
+        str(p.relative_to(root)): p.read_bytes()
+        for p in sorted(pathlib.Path(root).rglob("*"))
+        if p.is_file()
+    }
+
+
+@pytest.fixture(scope="module")
+def band_stores(spark, tmp_path_factory):
+    """(family, scheme) -> a directory holding ``sink`` and ``store``
+    after one batch, written through ``scheme`` paths; built once."""
+    built = {}
+
+    def get(family, scheme):
+        if (family, scheme) not in built:
+            root = tmp_path_factory.mktemp(f"{family}_{bool(scheme)}")
+            kwargs, (rows, schema), _, _ = _SINK_FAMILIES[family]
+            fold = _sink_factory(family)(
+                f"{scheme}{root}/sink", f"{scheme}{root}/store",
+                store_partitions=2, **kwargs,
+            )
+            fold(spark.createDataFrame(rows, schema), 0)
+            built[family, scheme] = root
+        return built[family, scheme]
+
+    return get
+
+
+@pytest.mark.parametrize("scheme", ["", "file://"], ids=["plain", "uri"])
+@pytest.mark.parametrize("family", sorted(_SINK_FAMILIES))
+@pytest.mark.parametrize("case", sorted(_MANIFEST_CASES))
+def test_band_store_refuses_without_matching_manifest(
+    spark, band_stores, tmp_path, case, family, scheme
+):
+    """A reopened band store must carry a readable manifest whose
+    store_partitions and signing family match the sink; otherwise the
+    sink raises the repair ValueError before any probe or append, so
+    the docs sink and the store are left byte-for-byte unchanged."""
+    import json
+
+    from facolos_data_pipelines_spark.streaming.pipeline import _STORE_META_NAME
+
+    root = tmp_path / "copy"
+    shutil.copytree(band_stores(family, scheme), root)
+    meta = root / "store" / _STORE_META_NAME
+    edit, overrides, refusal = _MANIFEST_CASES[case]
+    kwargs, _, (rows, schema), drift = _SINK_FAMILIES[family]
+    if edit is not None:
+        # a hand edit leaves Hadoop's checksum stale; drop it with the file
+        (root / "store" / f".{_STORE_META_NAME}.crc").unlink(missing_ok=True)
+        if edit == "drop":
+            meta.unlink()
+        else:
+            text = edit if isinstance(edit, str) else json.dumps(
+                edit(json.loads(meta.read_text()))
+            )
+            meta.write_text(text)
+    overrides = drift if overrides == "drift" else overrides
+    before = _tree_bytes(root)
+    fold = _sink_factory(family)(
+        f"{scheme}{root}/sink", f"{scheme}{root}/store",
+        **{"store_partitions": 2, **kwargs, **overrides},
+    )
+    with pytest.raises(ValueError, match=refusal) as err:
+        fold(spark.createDataFrame(rows, schema), 1)
+    assert "with the values the store was created with" in str(err.value)
+    assert _tree_bytes(root) == before
+
+
+def test_band_store_manifest_write_failure_then_redelivery(
+    spark, tmp_root, monkeypatch
+):
+    """A new store's manifest is written before anything is appended: a
+    write that fails (after creating the store directory) raises, lands
+    nothing, and the redelivered batch then lands exactly once."""
+    import os
+
+    from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
+    from facolos_data_pipelines_spark.streaming import pipeline
+
+    sink, store = f"{tmp_root}/mf_sink", f"{tmp_root}/mf_store"
+    fold = near_dup_filter_sink(sink, store, store_partitions=2)
+    _, _, (rows, schema), _ = _SINK_FAMILIES["minhash"]
+
+    def failing_write(spark, store_path, manifest):
+        os.makedirs(store_path, exist_ok=True)
+        raise OSError("injected manifest write failure")
+
+    monkeypatch.setattr(pipeline, "_write_manifest", failing_write)
+    with pytest.raises(OSError, match="injected"):
+        fold(spark.createDataFrame(rows, schema), 0)
+    assert not os.path.exists(sink)
+    assert os.listdir(store) == []
+
+    monkeypatch.undo()
+    fold(spark.createDataFrame(rows, schema), 0)
+    ids = [r["doc_id"] for r in spark.read.parquet(sink).collect()]
+    assert sorted(ids) == [2, 3]
+    assert pipeline._read_manifest(spark, store) == {
+        "store_partitions": 2, "num_hashes": 32, "bands": 8, "shingle_n": 3,
+        "family": "multiply_add",
+    }
+    assert spark.read.parquet(store).select("doc_id").distinct().count() == 2
+
+
+def test_embedding_sink_leaves_session_usable_for_ml(spark, tmp_root, caplog):
+    """The embedding sink's degenerate-vector count is a named observed
+    metric read back from the signing checkpoint (and logged), not a
+    ``pyspark.sql.Observation``: a ``pyspark.ml`` model fitted and
+    applied afterwards in the same session still transforms."""
+    import logging
+
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.feature import VectorAssembler
+
+    from facolos_data_pipelines_spark.streaming import embedding_near_dup_sink
+
+    fold = embedding_near_dup_sink(
+        f"{tmp_root}/ml_sink", f"{tmp_root}/ml_store",
+        num_planes=4, num_bands=2, dim=8, store_partitions=2,
+    )
+    batch = [(1, _vec(0)), (2, [0.0] * 8), (3, [float("nan")] + [0.0] * 7)]
+    with caplog.at_level(logging.INFO):
+        fold(spark.createDataFrame(batch, _VEC_SCHEMA), 7)
+
+    rows = spark.createDataFrame(
+        [(float(i), i % 2) for i in range(20)], "x double, label int"
+    )
+    assembled = VectorAssembler(inputCols=["x"], outputCol="v").transform(rows)
+    model = LogisticRegression(featuresCol="v", labelCol="label", maxIter=5).fit(
+        assembled
+    )
+    assert len(model.transform(assembled).select("probability").collect()) == 20
+    landed = spark.read.parquet(f"{tmp_root}/ml_sink").collect()
+    assert [r["vec_id"] for r in landed] == [1]
+    assert "batch 7: dropped 2 row(s)" in caplog.text
 
 
 def test_hist_state_sink_edge_guard_alerts_on_outgrown_feed(spark, tmp_root, caplog):
