@@ -657,7 +657,7 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from facolos_data_pipelines_spark.operators.dedup import minhash_dedup
 
-    ansi = spark.conf.get("spark.sql.ansi.enabled", "false") == "true"
+    ansi = spark.conf.get("spark.sql.ansi.enabled") == "true"
     docs = _t(spark, sf_dir, "documents")
     return minhash_dedup(
         docs, family="xxhash" if ansi else "multiply_add"

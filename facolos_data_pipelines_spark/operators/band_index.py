@@ -5,17 +5,23 @@ tails (``minhash_delta_pairs`` / ``minhash_cross_corpus_pairs`` /
 (``streaming.pipeline``). Each family supplies a :class:`BandIndex`
 instance (``dedup_minhash._minhash_index``,
 ``dedup_embedding._cosine_index``); the skeletons here are written
-once."""
+once. :class:`BandStore` owns the sinks' persisted band rows: manifest,
+probe, per-batch overwrite and compaction."""
 
 from __future__ import annotations
 
+import json
+import logging
+import os
 from dataclasses import dataclass
+from functools import partial
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..eager import materialize
+from ..eager import materialize, materialize_counted, materialize_observed
 from .dedup_components import _drop_pair_losers
 
 
@@ -24,7 +30,7 @@ class BandIndex:
     """A banded-LSH signing family plus its verify math.
 
     THE BAND-STORE CONTRACT (the persisted ``state`` of the delta
-    operators and the stores of the streaming sinks):
+    operators and the :class:`BandStore` of the streaming sinks):
 
     - Rows are ``(id_col, *keys)``, one per document per band, as
       ``sign`` returns them: ``("band_id", "band_hash")`` for
@@ -36,32 +42,37 @@ class BandIndex:
       store directory) records ``store_partitions`` (an int >= 1) plus
       every key of ``family``: MinHash pins ``num_hashes``, ``bands``,
       ``shingle_n`` and ``family``; cosine pins ``num_planes`` and
-      ``num_bands``. A new store's manifest is written before its first
-      batch appends anything, and a failed write raises. A reopened
-      store must have a readable manifest whose family and
-      ``store_partitions`` equal the sink's; otherwise the sink raises
-      before any probe or append. There is no adoption: a store with
-      other parameters is re-indexed into a new store, never
-      reinterpreted. A store directory holding only its manifest reads
-      as empty.
+      ``num_bands``. A new store's manifest is written (atomically:
+      a hidden temp file renamed into place) before its first batch
+      writes anything, and a failed write raises. A reopened store must
+      have a readable manifest whose family and ``store_partitions``
+      equal the sink's; otherwise the sink raises before any probe or
+      write. There is no adoption: a store with other parameters is
+      re-indexed into a new store, never reinterpreted. A store
+      directory holding only its manifest reads as empty.
     - Sign once: a batch is signed once and its band rows are
       materialized (persisted in the delta operators, checkpointed in
       the sinks); the in-batch sweep, the history probe and the store
-      append all select from them. A document's band rows do not depend
+      write all select from them. A document's band rows do not depend
       on which frame selects them, so every consumer sees the same rows.
-    - Probe: a sink store is written partitioned by ``bucket_pmod =
-      pmod(keys[1], store_partitions)`` and probed by broadcasting the
-      batch's band rows against a map-only store scan on ``(bucket_pmod,
-      *keys)``. Duplicate store rows are harmless to the probe;
-      ``compact_bucket_store`` dedups them.
-    - Replay: a sink appends the survivors first, then their band rows.
-      A redelivered batch whose earlier delivery completed both appends
-      finds its own band rows in the store and drops every document. A
-      crash between the two appends leaves the documents landed but
-      unindexed, and the redelivery appends them again: at-least-once
-      on the documents side for that one batch. Recovery is
-      ``compact_bucket_store`` plus a doc-id dedup pass over the
-      documents sink.
+    - Probe: a sink store is partitioned by ``bucket_pmod =
+      pmod(keys[1], store_partitions)`` and then by ``_batch_id``, and
+      probed by broadcasting the batch's band rows against a map-only
+      store scan on ``(bucket_pmod, *keys)``. Duplicate store rows are
+      harmless to the probe; :meth:`BandStore.compact` dedups them.
+    - Replay is exactly-once. A sink tags its docs rows and band rows
+      with the micro-batch's ``_batch_id`` and writes each by dynamic
+      partition overwrite of that batch's own partitions; the probe
+      skips the batch's own id. A redelivered batch therefore sees the
+      history its first delivery saw, keeps the same survivors and
+      rewrites the same partitions, wherever the first delivery
+      stopped: the docs sink and the store end equal to a clean run.
+      Compaction files every row under ``_batch_id = -1``, an id no
+      micro-batch carries: a redelivered batch that compaction already
+      folded finds its own band rows there, keeps no survivor and
+      rewrites nothing. A store or docs sink written before the
+      ``_batch_id`` layout is compacted (the store) or moved aside (the
+      docs) before a sink reopens it.
 
     ``verify(cand, left, right)`` scores ``(id_a, id_b)`` candidates,
     reading each side's documents id-pruned to the candidate set, and
@@ -188,3 +199,359 @@ class BandIndex:
             ).join(hist_losers, self.id_col, "left_anti")
         finally:
             bb.unpersist()
+
+
+_STORE_META_NAME = "_NEAR_DUP_STORE_META.json"
+_LAYOUT = "bucket_pmod"
+_BATCH = "_batch_id"
+#: The ``_batch_id`` compaction files every row under; no micro-batch
+#: carries it, so no redelivery overwrites compacted rows.
+_COMPACTED = -1
+#: The observed metric an ``admit`` step counts its dropped rows under.
+_UNSIGNABLE = "unsignable_rows"
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for any Hadoop-resolvable URI — file://, hdfs://,
+    s3a://, ... — via the session's Hadoop configuration."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _is_partition_count(n) -> bool:
+    # bool subclasses int: True would pin a one-partition layout by accident
+    return isinstance(n, int) and not isinstance(n, bool) and n >= 1
+
+
+def _refusal(
+    path: str, problem: str, index=None, action: str = "probe or append"
+) -> ValueError:
+    """The one refusal for a store whose manifest does not admit the
+    caller: its repair text names every key the manifest must hold —
+    the signing-family keys of ``index``, or a pointer to them when the
+    family is not known here."""
+    if index is None:
+        template = (
+            '{"store_partitions": N} plus the signing-family keys its sink '
+            "recorded"
+        )
+    else:
+        keys = "".join(f', "{k}": <{k}>' for k in index.family)
+        template = '{"store_partitions": N' + keys + "}"
+    return ValueError(
+        f"band store at {path!r} {problem}; refusing to {action}. Write its "
+        f"meta file ({_STORE_META_NAME}) as {template}, with the values the "
+        "store was created with, or re-index the accepted corpus into a new "
+        "store"
+    )
+
+
+def _store_is_new(spark: SparkSession, path: str) -> bool:
+    """True when the store holds neither a manifest nor band rows: it is
+    absent, or a first batch whose manifest write failed left only the
+    directory and perhaps a hidden temp file (hidden ``_``/``.`` names
+    are not band rows)."""
+    fs, jpath = _hadoop_fs(spark, path)
+    if not fs.exists(jpath):
+        return True
+    names = [s.getPath().getName() for s in fs.listStatus(jpath)]
+    return _STORE_META_NAME not in names and all(
+        n.startswith(("_", ".")) for n in names
+    )
+
+
+def _read_manifest(
+    spark: SparkSession, path: str, index=None, action: str = "probe or append"
+) -> dict:
+    """The store's manifest. Raises the repair ``ValueError`` when it is
+    absent, unreadable, not a JSON object, or its ``store_partitions``
+    is not an int >= 1. Plain paths are read with Python file IO: Hadoop's
+    LocalFileSystem would check the ``.crc`` it wrote beside the file,
+    which a hand repair leaves stale. ``://`` paths go through the
+    Hadoop FileSystem API."""
+    from py4j.protocol import Py4JJavaError
+
+    mp = f"{path.rstrip('/')}/{_STORE_META_NAME}"
+    try:
+        if "://" in path:
+            fs, jpath = _hadoop_fs(spark, mp)
+            if not fs.exists(jpath):
+                raise FileNotFoundError(mp)
+            stream = fs.open(jpath)
+            try:
+                payload = bytes(stream.readAllBytes())
+            finally:
+                stream.close()
+        else:
+            with open(mp, "rb") as fh:
+                payload = fh.read()
+        meta = json.loads(payload)
+    except FileNotFoundError:
+        raise _refusal(path, "has no meta file", index, action) from None
+    except (OSError, ValueError, Py4JJavaError):
+        # a checksum failure, an IO error or bad JSON alike
+        meta = None
+    if not isinstance(meta, dict):
+        raise _refusal(
+            path, "has a meta file that could not be read or parsed",
+            index, action,
+        )
+    if not _is_partition_count(meta.get("store_partitions")):
+        raise _refusal(
+            path, "has a meta without a valid store_partitions (an int >= 1)",
+            index, action,
+        )
+    return meta
+
+
+def _write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
+    """Write ``manifest`` into the store directory, creating it; raises
+    on failure. The bytes go to a hidden temp file that is then renamed
+    into place, so a failed write leaves no torn manifest and the
+    directory still counts as a new store."""
+    path = path.rstrip("/")
+    payload = json.dumps(manifest).encode("utf-8")
+    final, tmp = f"{path}/{_STORE_META_NAME}", f"{path}/.{_STORE_META_NAME}.tmp"
+    if "://" in path:
+        fs, jtmp = _hadoop_fs(spark, tmp)
+        out = fs.create(jtmp, True)
+        try:
+            out.write(bytearray(payload))
+        finally:
+            out.close()
+        _, jfinal = _hadoop_fs(spark, final)
+        if not fs.rename(jtmp, jfinal):
+            raise OSError(f"could not rename {tmp!r} to {final!r}")
+        return
+    os.makedirs(path, exist_ok=True)
+    with open(tmp, "wb") as fh:
+        fh.write(payload)
+    os.replace(tmp, final)
+
+
+@dataclass(frozen=True)
+class BandStore:
+    """The persisted band rows of ``index`` at ``path``, laid out in
+    ``partitions`` pmod partitions — the store of a streaming near-dup
+    sink, under the band-store contract of :class:`BandIndex`. It owns
+    the manifest (:meth:`open`), the history read (:meth:`state`), the
+    per-batch fold (:meth:`fold`, bound to a docs sink by :meth:`sink`)
+    and compaction (:meth:`compact`). Compaction reads only
+    ``index.id_col`` and ``index.keys`` and carries the store's own
+    manifest, so a compaction-only handle (``compact_bucket_store``)
+    passes an index with just those two and ``partitions=None``."""
+
+    path: str
+    index: BandIndex
+    partitions: int | None
+
+    def open(
+        self,
+        spark: SparkSession,
+        exclude_batch: int | None = None,
+        schema: T.StructType | None = None,
+    ) -> DataFrame | None:
+        """Write a new store's manifest before anything else touches the
+        store and return None (no history to probe); for a reopened
+        store, return :meth:`state`, which checks its manifest first."""
+        if _store_is_new(spark, self.path):
+            _write_manifest(
+                spark, self.path,
+                {"store_partitions": self.partitions, **self.index.family},
+            )
+            return None
+        return self.state(spark, exclude_batch, schema)
+
+    def state(
+        self,
+        spark: SparkSession,
+        exclude_batch: int | None = None,
+        schema: T.StructType | None = None,
+    ) -> DataFrame:
+        """The store's band rows ``(id_col, *keys)`` with their layout
+        column ``bucket_pmod``. ``exclude_batch`` drops the rows one
+        micro-batch wrote. ``schema`` (a frame of this index's band rows
+        supplies it) skips the footer-inference job and reads a store
+        holding only its manifest as empty.
+
+        The manifest is checked first, so a store under another family
+        or layout refuses (the repair ``ValueError``) before any join is
+        planned: signatures under another family never match, and
+        another N probes the wrong pmod space, so either would silently
+        miss every historical bucket. A missing or unreadable manifest
+        refuses too."""
+        ix = self.index
+        meta = _read_manifest(spark, self.path, ix)
+        if not ix.family.keys() <= meta.keys():
+            raise _refusal(self.path, f"has a meta without the pinned {ix.noun}", ix)
+        recorded = {k: meta[k] for k in ix.family}
+        if recorded != ix.family:
+            stored = ", ".join(f"{k}={v!r}" for k, v in recorded.items())
+            configured = ", ".join(f"{k}={v!r}" for k, v in ix.family.items())
+            raise _refusal(
+                self.path,
+                f"was created with {stored} but the sink was configured with "
+                f"{configured}; signatures under a different {ix.noun} never "
+                "match",
+                ix,
+            )
+        n = meta["store_partitions"]
+        if n != self.partitions:
+            raise _refusal(
+                self.path,
+                f"was created with store_partitions={n} but the sink was "
+                f"configured with {self.partitions}; the layout is sticky, so "
+                f"pass {n}",
+                ix,
+            )
+        cols = [ix.id_col, *ix.keys, _LAYOUT]
+        reader = spark.read
+        if schema is not None:
+            reader = reader.schema(
+                T.StructType([schema[c] for c in cols]).add(_BATCH, "long")
+            )
+        rows = reader.parquet(self.path)
+        if exclude_batch is not None:
+            rows = rows.filter(~F.col(_BATCH).eqNullSafe(exclude_batch))
+        return rows.select(*cols)
+
+    def fold(
+        self,
+        batch_df: DataFrame,
+        batch_id: int,
+        docs_path: str,
+        sweep: Callable[[DataFrame, DataFrame], DataFrame],
+        admit: Callable[[DataFrame], DataFrame] | None = None,
+    ) -> None:
+        """One micro-batch: sign the batch ONCE (checkpointed band rows);
+        ``sweep(batch, bands) -> survivors`` within the batch; drop every
+        survivor sharing a band key with the rest of the store
+        (broadcast probe); checkpoint the survivors; then write them to
+        ``docs_path`` and their band rows to the store, each tagged
+        with ``batch_id`` by dynamic partition overwrite, so a
+        redelivery lands exactly once. ``admit(batch_df) -> batch``
+        optionally drops rows the index cannot sign, counting them as
+        the observed metric ``_UNSIGNABLE``; the count is read back from
+        the signing checkpoint and logged."""
+        from ..sources.io import overwrite_partitions
+
+        spark = batch_df.sparkSession
+        if not batch_df.head(1):
+            return
+        ix = self.index
+        id_col, keys = ix.id_col, list(ix.keys)
+        batch = admit(batch_df) if admit else batch_df
+        # ONE signing chain per micro-batch: the in-batch sweep, the
+        # store probe and the store write all select from these rows.
+        # Signing is lazy, so the manifest is still written or checked
+        # before any job runs.
+        bands = ix.sign(batch).withColumn(
+            _LAYOUT, F.pmod(F.col(keys[1]), F.lit(self.partitions))
+        )
+        history = self.open(spark, batch_id, bands.schema)
+        bands, unsignable = materialize_observed(
+            bands, *([_UNSIGNABLE] if admit else [])
+        )
+        if any(unsignable):
+            logging.getLogger(__name__).info(
+                "batch %s: dropped %d row(s) with no bucket identity under "
+                "the %s — not replay-protectable",
+                batch_id, unsignable[0], ix.noun,
+            )
+        survivors = sweep(batch, bands.select(id_col, *keys))
+        probe_keys = [_LAYOUT, *keys]
+        if history is not None:
+            # Broadcast the (small) batch side; the store is scanned
+            # map-side only — no store shuffle, and the partition-column
+            # equi-join key lets dynamic partition pruning skip store
+            # partitions the batch doesn't touch. Probing the WHOLE
+            # batch's band rows (not just in-batch survivors) returns a
+            # superset of hit ids whose extras are exactly the in-batch
+            # losers — already dropped — so the survivor set is unchanged.
+            hit_ids = (
+                history.select(*probe_keys)
+                .join(
+                    F.broadcast(
+                        bands.select(*probe_keys, F.col(id_col).alias("_probe_id"))
+                    ),
+                    probe_keys,
+                )
+                .select(F.col("_probe_id").alias(id_col))
+                .dropDuplicates()
+            )
+            survivors = survivors.join(hit_ids, id_col, "left_anti")
+        survivors, _ = materialize_counted(survivors)
+        tag = F.lit(batch_id).cast("long")
+        overwrite_partitions(survivors.withColumn(_BATCH, tag), docs_path, [_BATCH])
+        overwrite_partitions(
+            bands.join(survivors.select(id_col), id_col, "left_semi")
+            .select(*keys, id_col, _LAYOUT)
+            .withColumn(_BATCH, tag),
+            self.path,
+            [_LAYOUT, _BATCH],
+        )
+
+    def sink(self, docs_path: str, sweep, admit=None):
+        """The foreachBatch callable ``(batch_df, batch_id)``: :meth:`fold`
+        into ``docs_path``. Refuses a ``partitions`` that is not an int
+        >= 1 here, when the sink is built."""
+        if not _is_partition_count(self.partitions):
+            raise ValueError(
+                f"store_partitions must be an int >= 1, got {self.partitions!r}"
+            )
+        return partial(self.fold, docs_path=docs_path, sweep=sweep, admit=admit)
+
+    def compact(self, spark: SparkSession) -> dict[str, int]:
+        """Dedup the store's band rows (one row per ``(bucket_pmod,
+        *keys)`` bucket, min-id owner kept for lineage) and rewrite them
+        one file per ``bucket_pmod`` partition under ``_batch_id = -1``.
+        The manifest must be readable; it is checked before any work
+        and travels whole with the compacted store. A store written
+        before the ``_batch_id`` layout comes out in it.
+
+        Run it between micro-batch cycles (single-writer contract and
+        local-path rename swap, same as ``compact_parquet``). Returns
+        ``{"files_before", "files_after", "rows_before",
+        "rows_after"}``."""
+        import glob
+        import shutil
+
+        if "://" in self.path:
+            raise ValueError(
+                "compact_bucket_store handles local paths only; use the table "
+                "format's compaction on remote filesystems"
+            )
+        path = self.path.rstrip("/")
+        manifest = _read_manifest(spark, path, action="compact")
+
+        def files() -> list[str]:
+            found = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+            return [f for f in found if os.path.isfile(f)]
+
+        before = files()
+        if not before:
+            raise ValueError(f"compact_bucket_store: no parquet files under {path!r}")
+        store = spark.read.parquet(path)
+        rows_before = store.count()
+        id_col, keys = self.index.id_col, list(self.index.keys)
+        deduped = (
+            store.groupBy(_LAYOUT, *keys)
+            .agg(F.min(id_col).alias(id_col))
+            .withColumn(_BATCH, F.lit(_COMPACTED).cast("long"))
+            .repartition(_LAYOUT)
+        )
+        tmp, old = path + "._compact_tmp", path + "._compact_old"
+        for stale in (tmp, old):
+            shutil.rmtree(stale, ignore_errors=True)
+        deduped.write.mode("overwrite").partitionBy(_LAYOUT, _BATCH).parquet(tmp)
+        rows_after = spark.read.parquet(tmp).count()
+        _write_manifest(spark, tmp, manifest)
+        os.rename(path, old)
+        os.rename(tmp, path)
+        shutil.rmtree(old)
+        return {
+            "files_before": len(before),
+            "files_after": len(files()),
+            "rows_before": rows_before,
+            "rows_after": rows_after,
+        }

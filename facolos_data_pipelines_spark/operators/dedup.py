@@ -37,7 +37,6 @@ from .dedup_minhash import (  # noqa: F401
     minhash_band_state,
     minhash_delta_pairs,
     minhash_dedup_delta,
-    minhash_state_append,
     exact_dedup,
     normalized_words,
     word_shingles,
@@ -80,7 +79,6 @@ from .dedup_embedding import (  # noqa: F401
     embedding_band_state,
     embedding_delta_pairs,
     embedding_dedup_delta,
-    embedding_state_append,
     cosine_similarity,
     _exact_pairs_gemm,
     _auto_num_planes,

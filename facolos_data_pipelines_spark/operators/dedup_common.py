@@ -37,7 +37,9 @@ _MINHASH_B = [_to_i64(_splitmix64(2 * i + 1)) for i in range(_MAX_LANES)]
 
 def _ansi_enabled(df: DataFrame) -> bool:
     try:
-        return df.sparkSession.conf.get("spark.sql.ansi.enabled", "false") == "true"
+        # no fallback: get(key) returns the effective value, which on
+        # Spark 4 is "true" when the key was never set
+        return df.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
     except Exception:  # pragma: no cover — static-conf sessions
         return True  # assume the strict mode if unknowable
 

@@ -751,7 +751,6 @@ def embedding_delta_pairs(
     dim: int | None = None,
     signature_impl: str = "expr",
     max_bucket_size: int | None = None,
-    batch_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs between a NEW embedding batch and the PERSISTED
     corpus state — (left_id: batch vector, right_id: historical vector,
@@ -771,14 +770,12 @@ def embedding_delta_pairs(
     :func:`embedding_band_state` on re-indexing).
 
     ``num_planes``/``num_bands``/``dim``/``signature_impl`` must match
-    the state's pinned store contract. ``batch_sigs`` optionally feeds
-    precomputed batch band rows so a loop that also appends them
-    (:func:`embedding_state_append`) signs the batch once."""
+    the state's pinned store contract; the state rows are
+    :func:`embedding_band_state` rows."""
     ix = _cosine_index(
         vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
     )
-    lb = batch_sigs if batch_sigs is not None else ix.sign(batch)
-    return ix.cross_pairs(lb, state, batch, corpus, max_bucket_size)
+    return ix.cross_pairs(ix.sign(batch), state, batch, corpus, max_bucket_size)
 
 
 def embedding_dedup_delta(
@@ -802,37 +799,9 @@ def embedding_dedup_delta(
     :func:`dedup_minhash.minhash_dedup_delta`, over cosine instead of
     Jaccard. The batch is signed ONCE (persisted band rows feed both
     the history probe and the internal self-join); append
-    :func:`embedding_state_append` of the survivors to complete the
-    cycle. Zero-norm vectors have no cosine to anyone and pass through
-    as survivors."""
+    :func:`embedding_band_state` of the survivors to complete the cycle
+    (``num_bands`` rows per non-zero-norm survivor). Zero-norm vectors
+    have no cosine to anyone and pass through as survivors."""
     return _cosine_index(
         vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
     ).delta_survivors(batch, state, corpus, max_bucket_size)
-
-
-def embedding_state_append(
-    survivors: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    num_planes: int = 12,
-    num_bands: int = 4,
-    dim: int | None = None,
-    signature_impl: str = "expr",
-    batch_sigs: DataFrame | None = None,
-) -> DataFrame:
-    """The state rows a completed cycle appends: band rows of the batch
-    vectors that survived :func:`embedding_dedup_delta` (``num_bands``
-    rows per non-zero-norm survivor). Same pinned plane-family contract
-    as :func:`embedding_band_state`; appended to the same
-    sig-bucketed table. ``batch_sigs`` accepts the whole batch's
-    precomputed band rows (compute :func:`embedding_band_state` once
-    per cycle, share with :func:`embedding_delta_pairs`) — the append
-    is then a survivor-id semi-join instead of re-signing; identical
-    output either way."""
-    if batch_sigs is not None:
-        return batch_sigs.join(
-            survivors.select(id_col).dropDuplicates(), id_col, "left_semi"
-        )
-    return embedding_band_state(
-        survivors, vec_col, id_col, num_planes, num_bands, dim, signature_impl
-    )

@@ -185,10 +185,7 @@ def minhash_signature(
     # wrap-arithmetic expression that could throw at run time. Callers
     # who know their session is non-ANSI can pass family explicitly
     # after creating/activating the session.
-    ansi = (
-        active is None
-        or active.conf.get("spark.sql.ansi.enabled", "false") == "true"
-    )
+    ansi = active is None or active.conf.get("spark.sql.ansi.enabled") == "true"
     family = _resolve_family(family, ansi)
 
     if family == "md5":
@@ -632,7 +629,6 @@ def minhash_delta_pairs(
     threshold: float = 0.8,
     family: str = "multiply_add",
     max_bucket_size: int | None = None,
-    batch_buckets: DataFrame | None = None,
 ) -> DataFrame:
     """Near-dup pairs between a NEW batch and the PERSISTED corpus
     state — (left_id: batch doc, right_id: historical doc, jaccard) —
@@ -652,16 +648,13 @@ def minhash_delta_pairs(
 
     ``state`` must carry (id_col, band_id, band_hash) computed under
     the SAME family/num_hashes/bands/shingle_n (the persisted-store
-    contract — parameters are part of the schema). ``batch_buckets``
-    optionally supplies the batch's precomputed band rows so a loop
-    that also appends them to the state (:func:`minhash_state_append`)
-    computes them once. Candidate materialization and
-    ``max_bucket_size`` behave as in :func:`minhash_cross_corpus_pairs`."""
+    contract — parameters are part of the schema). Candidate
+    materialization and ``max_bucket_size`` behave as in
+    :func:`minhash_cross_corpus_pairs`."""
     ix = _minhash_index(
         text_col, id_col, num_hashes, bands, shingle_n, family, threshold
     )
-    lb = batch_buckets if batch_buckets is not None else ix.sign(batch)
-    return ix.cross_pairs(lb, state, batch, corpus, max_bucket_size)
+    return ix.cross_pairs(ix.sign(batch), state, batch, corpus, max_bucket_size)
 
 
 def minhash_dedup_delta(
@@ -699,46 +692,12 @@ def minhash_dedup_delta(
     verification touches only candidate ids from either side. No
     historical document is re-signed; the loop's running cost is pinned
     to batch size, not corpus size (measured in SCALE.md §6g). Append
-    :func:`minhash_state_append` of the survivors to the state table to
-    complete the cycle — and a loop that wants the append leg join-only
-    computes ``minhash_band_state(batch)`` itself once and passes it to
-    both steps via their ``batch_buckets`` parameters, instead of the
-    append re-signing survivor text. ``batch_buckets`` here accepts the
-    batch's precomputed band rows directly (same contract as
-    :func:`minhash_delta_pairs`)."""
+    :func:`minhash_band_state` of the survivors to the state table to
+    complete the cycle (``bands`` rows per survivor; losers need no
+    rows — whichever doc beat them is already represented).
+    ``batch_buckets`` optionally supplies the batch's band rows already
+    signed (``minhash_band_state(batch)``), so a loop that keeps them
+    can select the survivors' rows by id instead of re-signing."""
     return _minhash_index(
         text_col, id_col, num_hashes, bands, shingle_n, family, threshold
     ).delta_survivors(batch, state, corpus, max_bucket_size, batch_buckets)
-
-
-def minhash_state_append(
-    survivors: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    family: str = "multiply_add",
-    batch_buckets: DataFrame | None = None,
-) -> DataFrame:
-    """The state rows a completed cycle appends: the band rows of the
-    batch docs that survived :func:`minhash_dedup_delta` (losers need no
-    representation — their content is represented by whichever doc beat
-    them, historical or batch-internal, which IS in the state). Row
-    count is ``bands`` x survivors by construction. Same persisted-store
-    contract as :func:`minhash_band_state`: identical parameters, same
-    family, appended to the same bucketed table.
-
-    ``batch_buckets`` accepts the WHOLE batch's precomputed band rows
-    (:func:`minhash_band_state` of the batch — compute them once per
-    cycle and share them with :func:`minhash_delta_pairs`); the append
-    rows are then a survivor-id semi-join instead of re-signing the
-    survivors' text. Identical output either way — the band rows of a
-    doc don't depend on which frame they're selected from."""
-    if batch_buckets is not None:
-        return batch_buckets.join(
-            survivors.select(id_col).dropDuplicates(), id_col, "left_semi"
-        )
-    return minhash_band_state(
-        survivors, text_col, id_col, num_hashes, bands, shingle_n, family
-    )

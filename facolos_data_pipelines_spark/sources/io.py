@@ -61,6 +61,20 @@ def write_replace(df: DataFrame, path: str, partition_by: list[str] | None = Non
     w.parquet(path)
 
 
+def overwrite_partitions(df: DataFrame, path: str, partition_by: list[str]) -> None:
+    """Dynamic partition overwrite: replace exactly the ``partition_by``
+    partitions ``df`` holds and leave every other partition of ``path``
+    as it is (an empty ``df`` changes nothing). Rewriting the same rows
+    lands them once — the exactly-once effect of a redelivered
+    micro-batch tagged with its id, or of a partition-scoped merge."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
+
+
 def write_truncate_insert(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
     """S10 'truncate_insert' — TRUNCATE keeps the table definition and
     reloads (database.py:184-210). On files this is overwrite with the
@@ -156,10 +170,10 @@ def upsert_parquet(
             )
             existing = existing.filter(pred)  # partition pruning: only touched files
         out, _ = materialize_counted(merge_upsert(existing, incoming, keys, order_col))
-    w = out.write.mode("overwrite")
     if partition_by:
-        w = w.option("partitionOverwriteMode", "dynamic").partitionBy(*partition_by)
-    w.parquet(path)
+        overwrite_partitions(out, path, partition_by)
+    else:
+        write_replace(out, path)
     return n
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..eager import materialize_counted, materialize_observed
+from ..eager import materialize_counted
 
 
 def read_parquet_stream(
@@ -263,251 +263,6 @@ def merge_upsert_sink(
     return q
 
 
-_STORE_META_NAME = "_NEAR_DUP_STORE_META.json"
-
-#: The observed metric an ``admit`` step counts its dropped rows under.
-_UNSIGNABLE = "unsignable_rows"
-
-
-def _store_meta_path(bucket_store_path: str) -> str:
-    return bucket_store_path.rstrip("/") + "/" + _STORE_META_NAME
-
-
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for any Hadoop-resolvable URI — file://, hdfs://,
-    s3a://, ... — via the session's Hadoop configuration."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def _is_partition_count(n) -> bool:
-    # bool subclasses int: True would pin a one-partition layout by accident
-    return isinstance(n, int) and not isinstance(n, bool) and n >= 1
-
-
-def _meta_template(index=None) -> str:
-    """The repair text for a store manifest: the layout key plus the
-    signing-family keys of ``index`` (a
-    :class:`~..operators.band_index.BandIndex`), or a pointer to them
-    when the family is not known here."""
-    if index is None:
-        return (
-            '{"store_partitions": N} plus the signing-family keys its sink '
-            "recorded"
-        )
-    keys = "".join(f', "{k}": <{k}>' for k in index.family)
-    return '{"store_partitions": N' + keys + "}"
-
-
-def _refusal(
-    path: str, problem: str, index=None, action: str = "probe or append"
-) -> ValueError:
-    """The one refusal for a store whose manifest does not admit the
-    caller: its repair text names every key the manifest must hold."""
-    return ValueError(
-        f"band store at {path!r} {problem}; refusing to {action}. Write its "
-        f"meta file ({_STORE_META_NAME}) as {_meta_template(index)}, with "
-        "the values the store was created with, or re-index the accepted "
-        "corpus into a new store"
-    )
-
-
-def _store_is_new(spark, store_path: str) -> bool:
-    """True when the store holds neither a manifest nor band rows: it is
-    absent, or a first batch whose manifest write failed left only the
-    directory (hidden ``_``/``.`` files are not band rows)."""
-    fs, jpath = _hadoop_fs(spark, store_path)
-    if not fs.exists(jpath):
-        return True
-    names = [s.getPath().getName() for s in fs.listStatus(jpath)]
-    return _STORE_META_NAME not in names and all(
-        n.startswith(("_", ".")) for n in names
-    )
-
-
-def _read_manifest(
-    spark, store_path: str, index=None, action: str = "probe or append"
-) -> dict:
-    """The store's manifest. Raises the repair ``ValueError`` when it is
-    absent, unreadable, not a JSON object, or its ``store_partitions``
-    is not an int >= 1. Plain paths are read with Python file IO: Hadoop's
-    LocalFileSystem would check the ``.crc`` it wrote beside the file,
-    which a hand repair leaves stale. ``://`` paths go through the
-    Hadoop FileSystem API."""
-    import json
-
-    from py4j.protocol import Py4JJavaError
-
-    mp = _store_meta_path(store_path)
-    try:
-        if "://" in store_path:
-            fs, jpath = _hadoop_fs(spark, mp)
-            if not fs.exists(jpath):
-                raise FileNotFoundError(mp)
-            stream = fs.open(jpath)
-            try:
-                payload = bytes(stream.readAllBytes())
-            finally:
-                stream.close()
-        else:
-            with open(mp, "rb") as fh:
-                payload = fh.read()
-        meta = json.loads(payload)
-    except FileNotFoundError:
-        raise _refusal(store_path, "has no meta file", index, action) from None
-    except (OSError, ValueError, Py4JJavaError):
-        # a checksum failure, an IO error or bad JSON alike
-        meta = None
-    if not isinstance(meta, dict):
-        raise _refusal(
-            store_path, "has a meta file that could not be read or parsed",
-            index, action,
-        )
-    if not _is_partition_count(meta.get("store_partitions")):
-        raise _refusal(
-            store_path, "has a meta without a valid store_partitions (an int >= 1)",
-            index, action,
-        )
-    return meta
-
-
-def _write_manifest(spark, store_path: str, manifest: dict) -> None:
-    """Write ``manifest`` into the store directory, creating it; raises
-    on failure."""
-    import json
-    import os
-
-    payload = json.dumps(manifest)
-    if "://" in store_path:
-        fs, jpath = _hadoop_fs(spark, _store_meta_path(store_path))
-        out = fs.create(jpath, True)
-        try:
-            out.write(bytearray(payload.encode("utf-8")))
-        finally:
-            out.close()
-        return
-    os.makedirs(store_path, exist_ok=True)
-    with open(_store_meta_path(store_path), "w") as fh:
-        fh.write(payload)
-
-
-def _check_manifest(meta: dict, store_path: str, index, store_partitions: int) -> None:
-    """Refuse a reopened store whose manifest does not pin ``index``'s
-    signing family and ``store_partitions``: signatures under another
-    family never match, and another N probes the wrong pmod space, so
-    either would silently miss every historical bucket."""
-    if not index.family.keys() <= meta.keys():
-        raise _refusal(store_path, f"has a meta without the pinned {index.noun}", index)
-    recorded = {k: meta[k] for k in index.family}
-    if recorded != index.family:
-        stored = ", ".join(f"{k}={v!r}" for k, v in recorded.items())
-        configured = ", ".join(f"{k}={v!r}" for k, v in index.family.items())
-        raise _refusal(
-            store_path,
-            f"was created with {stored} but the sink was configured with "
-            f"{configured}; signatures under a different {index.noun} never "
-            "match",
-            index,
-        )
-    n = meta["store_partitions"]
-    if n != store_partitions:
-        raise _refusal(
-            store_path,
-            f"was created with store_partitions={n} but the sink was "
-            f"configured with {store_partitions}; the layout is sticky, so "
-            f"pass {n}",
-            index,
-        )
-
-
-def _band_store_sink(
-    index,
-    docs_sink_path: str,
-    store_path: str,
-    store_partitions: int,
-    sweep,
-    admit=None,
-):
-    """The foreachBatch body both near-dup sinks share; the store it
-    keeps follows the band-store contract of
-    :class:`~..operators.band_index.BandIndex`. Per micro-batch: check a
-    reopened store's manifest, or write a new store's, before anything
-    else; sign the batch ONCE (checkpointed band rows); ``sweep(batch,
-    bands) -> survivors`` within the batch; drop every survivor sharing
-    a band key with the store (broadcast probe); checkpoint the
-    survivors; then append the docs and their band rows.
-    ``admit(batch_df) -> batch`` optionally drops rows the index cannot
-    sign, counting them as the observed metric ``_UNSIGNABLE``; the
-    count is read back from the signing checkpoint and logged."""
-    import logging
-
-    if not _is_partition_count(store_partitions):
-        raise ValueError(
-            f"store_partitions must be an int >= 1, got {store_partitions!r}"
-        )
-    id_col, keys = index.id_col, list(index.keys)
-    manifest = {"store_partitions": store_partitions, **index.family}
-
-    def filter_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if not batch_df.head(1):
-            return
-        store_is_new = _store_is_new(spark, store_path)
-        if store_is_new:
-            _write_manifest(spark, store_path, manifest)
-        else:
-            meta = _read_manifest(spark, store_path, index)
-            _check_manifest(meta, store_path, index, store_partitions)
-        batch = admit(batch_df) if admit else batch_df
-        # ONE signing chain per micro-batch: the in-batch sweep, the
-        # store probe and the store append all select from these rows.
-        bands = index.sign(batch).withColumn(
-            "bucket_pmod", F.pmod(F.col(keys[1]), F.lit(store_partitions))
-        )
-        bands, unsignable = materialize_observed(
-            bands, *([_UNSIGNABLE] if admit else [])
-        )
-        if any(unsignable):
-            logging.getLogger(__name__).info(
-                "batch %s: dropped %d row(s) with no bucket identity under "
-                "the %s — not replay-protectable",
-                batch_id, unsignable[0], index.noun,
-            )
-        survivors = sweep(batch, bands.select(id_col, *keys))
-        probe_keys = ["bucket_pmod", *keys]
-        if not store_is_new:
-            # The band rows' own schema, not inference: a store holding
-            # only its manifest reads as empty instead of failing.
-            store = spark.read.schema(bands.select(*probe_keys).schema).parquet(
-                store_path
-            )
-            # Broadcast the (small) batch side; the store is scanned
-            # map-side only — no store shuffle, and the partition-column
-            # equi-join key lets dynamic partition pruning skip store
-            # partitions the batch doesn't touch. Probing the WHOLE
-            # batch's band rows (not just in-batch survivors) returns a
-            # superset of hit ids whose extras are exactly the in-batch
-            # losers — already dropped — so the survivor set is unchanged.
-            hit_ids = (
-                store.join(
-                    F.broadcast(
-                        bands.select(*probe_keys, F.col(id_col).alias("_probe_id"))
-                    ),
-                    probe_keys,
-                )
-                .select(F.col("_probe_id").alias(id_col))
-                .dropDuplicates()
-            )
-            survivors = survivors.join(hit_ids, id_col, "left_anti")
-        survivors, _ = materialize_counted(survivors)
-        survivors.write.mode("append").parquet(docs_sink_path)
-        bands.join(survivors.select(id_col), id_col, "left_semi").select(
-            *probe_keys, id_col
-        ).write.mode("append").partitionBy("bucket_pmod").parquet(store_path)
-
-    return filter_batch
-
-
 def near_dup_filter_sink(
     docs_sink_path: str,
     bucket_store_path: str,
@@ -534,19 +289,23 @@ def near_dup_filter_sink(
        Jaccard 0.6 for 32x8) — because verifying would require keeping
        every historical text online; keep a text/shingle store and
        verify in a second join if your corpus needs exactness;
-    3. survivors append to ``docs_sink_path``; their buckets append to
+    3. survivors land in ``docs_sink_path`` and their buckets in
        ``bucket_store_path`` (band_id, band_hash, doc_id — id kept for
-       lineage/debugging).
+       lineage/debugging), both tagged with the micro-batch's
+       ``_batch_id``: the docs sink gains a ``_batch_id`` partition
+       column.
 
-    The store follows the band-store contract of
+    The store is a :class:`~..operators.band_index.BandStore` and
+    follows the band-store contract of
     :class:`~..operators.band_index.BandIndex` (manifest, pmod layout,
-    broadcast probe, replay and its crash window): here the manifest
-    pins ``store_partitions``, ``num_hashes``, ``bands``, ``shingle_n``
-    and ``family``, the store is partitioned by ``bucket_pmod =
-    pmod(band_hash, store_partitions)``, and ``compact_bucket_store``
-    dedups and re-files it at maintenance time. State is one parquet
-    table of id-width bucket rows, O(docs x bands), never text.
+    broadcast probe, exactly-once replay): here the manifest pins
+    ``store_partitions``, ``num_hashes``, ``bands``, ``shingle_n`` and
+    ``family``, the layout hashes ``band_hash``, and
+    ``compact_bucket_store`` dedups and re-files the store at
+    maintenance time. State is one parquet table of id-width bucket
+    rows, O(docs x bands), never text.
     """
+    from ..operators.band_index import BandStore
     from ..operators.dedup_components import _drop_pair_losers
     from ..operators.dedup_minhash import _minhash_index, lsh_candidate_pairs
 
@@ -560,8 +319,8 @@ def near_dup_filter_sink(
         pairs = index.verify(lsh_candidate_pairs(band_rows, id_col), batch)
         return _drop_pair_losers(batch, pairs, id_col, transitive=False)
 
-    return _band_store_sink(
-        index, docs_sink_path, bucket_store_path, store_partitions, sweep
+    return BandStore(bucket_store_path, index, store_partitions).sink(
+        docs_sink_path, sweep
     )
 
 
@@ -582,14 +341,12 @@ def hist_state_sink(
     whose per-batch cost is one narrow scan of the batch and whose
     scoring query never touches a historical fact row.
 
-    REPLAY-IDEMPOTENT the way a counting sink must be: unlike the
-    near-dup sinks (where the redelivery of a completed batch is
-    absorbed by the bucket probe), recounting a redelivered micro-batch would DOUBLE
-    its mass, so rows land partitioned by ``_batch_id`` with dynamic
-    partition overwrite — a replayed batch id overwrites its own
-    partition instead of appending next to it (the standard
-    exactly-once-effect pattern for foreachBatch under at-least-once
-    delivery). Readers are unaffected: psi_from_hist_state sums
+    REPLAY-IDEMPOTENT: recounting a redelivered micro-batch would
+    DOUBLE its mass, so rows land partitioned by ``_batch_id`` with
+    dynamic partition overwrite (``sources.io.overwrite_partitions``) —
+    a replayed batch id overwrites its own partition instead of
+    appending next to it (the standard exactly-once-effect pattern for
+    foreachBatch under at-least-once delivery). Readers are unaffected: psi_from_hist_state sums
     duplicate (day, bin) rows ACROSS batch partitions by design, and
     the extra column is ignored.
 
@@ -617,6 +374,7 @@ def hist_state_sink(
         import logging
 
         from ..quality.checks import hist_edges_drift, hist_state, pinned_edges
+        from ..sources.io import overwrite_partitions
 
         spark = batch_df.sparkSession
         if not batch_df.head(1):
@@ -629,12 +387,7 @@ def hist_state_sink(
         )
         if edge_guard_threshold is not None:
             rows, _ = materialize_counted(rows)
-        (
-            rows.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(store_path)
-        )
+        overwrite_partitions(rows, store_path, ["_batch_id"])
         if edge_guard_threshold is not None:
             flagged = (
                 hist_edges_drift(
@@ -692,20 +445,21 @@ def embedding_near_dup_sink(
        embedding_dedup_delta — run it as the foreachBatch body
        instead, at the cost of the corpus-side vector fetch per
        batch);
-    3. survivors append to ``docs_sink_path``; their band rows append
-       to ``band_store_path`` (band, sig, id — id kept for lineage).
+    3. survivors land in ``docs_sink_path`` and their band rows in
+       ``band_store_path`` (band, sig, id — id kept for lineage), both
+       tagged with the micro-batch's ``_batch_id``: the docs sink gains
+       a ``_batch_id`` partition column.
 
-    The store follows the band-store contract of
-    :class:`~..operators.band_index.BandIndex`, like
+    The store is a :class:`~..operators.band_index.BandStore`, like
     :func:`near_dup_filter_sink`'s: here the manifest pins
-    ``store_partitions``, ``num_planes`` and ``num_bands``, the store is
-    partitioned by ``bucket_pmod = pmod(sig, store_partitions)``, and
-    ``compact_bucket_store`` takes ``id_col="vec_id", key_cols=("band",
-    "sig")``. DEGENERATE vectors (NULL, zero-norm, or with a NaN/NULL
-    element) are DROPPED and counted in the batch's log line: they have
-    no defined cosine and no bucket identity, so they carry no replay
-    protection — a policy difference from the batch operators (which
-    pass them through as survivors) that the streaming contract forces.
+    ``store_partitions``, ``num_planes`` and ``num_bands``, the layout
+    hashes ``sig``, and ``compact_bucket_store`` takes
+    ``id_col="vec_id", key_cols=("band", "sig")``. DEGENERATE vectors
+    (NULL, zero-norm, or with a NaN/NULL element) are DROPPED and
+    counted in the batch's log line: they have no defined cosine and no
+    bucket identity, so they carry no replay protection — a policy
+    difference from the batch operators (which pass them through as
+    survivors) that the streaming contract forces.
 
     ``num_planes`` must be an explicit int (embedding_band_state rejects
     'auto'/bool) and — because the decision here is bucket-level, NOT
@@ -719,6 +473,7 @@ def embedding_near_dup_sink(
     practical p, which is the regime a bucket-level streaming gate is
     for; the occupancy-sized default (12) suits the verified batch loop,
     not this sink, at large N."""
+    from ..operators.band_index import _UNSIGNABLE, BandStore
     from ..operators.dedup_embedding import (
         _cosine_index,
         _norm_sq,
@@ -768,8 +523,8 @@ def embedding_near_dup_sink(
             signature_impl=signature_impl, bands_df=band_rows,
         )
 
-    return _band_store_sink(
-        index, docs_sink_path, band_store_path, store_partitions, sweep, admit
+    return BandStore(band_store_path, index, store_partitions).sink(
+        docs_sink_path, sweep, admit
     )
 
 
@@ -779,69 +534,29 @@ def compact_bucket_store(
     id_col: str = "doc_id",
     key_cols: tuple[str, ...] = ("band_id", "band_hash"),
 ) -> dict[str, int]:
-    """Maintenance compaction for a streaming band-bucket store: dedup
-    bucket rows (one row per ``key_cols`` bucket — (band_id, band_hash)
-    for ``near_dup_filter_sink``'s minhash store, ("band", "sig") with
-    ``id_col="vec_id"`` for ``embedding_near_dup_sink``'s store — min-id
-    owner kept for lineage) and rewrite them one file per ``bucket_pmod``
-    partition. The store's manifest must be readable (the band-store
-    contract of :class:`~..operators.band_index.BandIndex`); it is
-    checked before any work and travels whole with the compacted store.
+    """Maintenance compaction for a streaming band-bucket store
+    (:meth:`~..operators.band_index.BandStore.compact`): dedup bucket
+    rows (one row per ``key_cols`` bucket — (band_id, band_hash) for
+    ``near_dup_filter_sink``'s minhash store, ("band", "sig") with
+    ``id_col="vec_id"`` for ``embedding_near_dup_sink``'s store —
+    min-id owner kept for lineage) and rewrite them one file per layout
+    partition. The store's manifest must be readable; it is checked
+    before any work and travels whole with the compacted store.
 
     Run this between micro-batch cycles (single-writer contract and
     local-path rename swap, same as ``compact_parquet``) on whatever
     cadence keeps the per-partition file count bounded — the probe join
     is correct with duplicates and small files, just slower; compaction
     restores the O(distinct buckets) scan in ONE pass (dedup + re-file
-    in the same job, no second rewrite). Returns ``{"files_before",
+    in the same job, no second rewrite). A redelivered micro-batch that
+    compaction already folded lands nothing. Returns ``{"files_before",
     "files_after", "rows_before", "rows_after"}``.
     """
-    import glob
-    import os
-    import shutil
+    from types import SimpleNamespace
 
-    if "://" in bucket_store_path:
-        raise ValueError(
-            "compact_bucket_store handles local paths only; use the table "
-            "format's compaction on remote filesystems"
-        )
-    path = bucket_store_path.rstrip("/")
-    manifest = _read_manifest(spark, path, action="compact")
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    if not files:
-        raise ValueError(f"compact_bucket_store: no parquet files under {path!r}")
+    from ..operators.band_index import BandStore
 
-    store = spark.read.parquet(path)
-    rows_before = store.count()
-    # one output file per store partition (buckets are id-width; a
-    # partition of a 100 TB store is still modest parquet)
-    deduped = (
-        store.groupBy("bucket_pmod", *key_cols)
-        .agg(F.min(id_col).alias(id_col))
-        .repartition("bucket_pmod")
-    )
-    tmp = path + "._compact_tmp"
-    old = path + "._compact_old"
-    for stale in (tmp, old):
-        shutil.rmtree(stale, ignore_errors=True)
-    deduped.write.mode("overwrite").partitionBy("bucket_pmod").parquet(tmp)
-    rows_after = spark.read.parquet(tmp).count()
-    _write_manifest(spark, tmp, manifest)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    return {
-        "files_before": len(files),
-        "files_after": len(after),
-        "rows_before": rows_before,
-        "rows_after": rows_after,
-    }
+    # compaction reads only the index's column names; the partition
+    # count and family stay as the store's manifest records them
+    columns = SimpleNamespace(id_col=id_col, keys=tuple(key_cols))
+    return BandStore(bucket_store_path, columns, None).compact(spark)

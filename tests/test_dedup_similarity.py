@@ -137,6 +137,21 @@ def test_minhash_family_explicit_no_silent_switch(spark, docs):
         dedup.minhash_signatures(docs, family="sha9000")
 
 
+def test_ansi_guard_reads_the_effective_value(spark, docs):
+    """With ``spark.sql.ansi.enabled`` unset, the guard reads the
+    session's effective value — ``true``, Spark 4's default — not a
+    ``"false"`` fallback, so multiply_add refuses at plan build."""
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    spark.conf.unset(key)
+    try:
+        assert spark.conf.get(key) == "true"
+        with pytest.raises(ValueError, match="ANSI"):
+            dedup.minhash_signatures(docs, num_hashes=8)
+    finally:
+        spark.conf.set(key, before)
+
+
 def test_minhash_signature_column_api_ansi_rejects(spark, docs):
     """The column API checks the active session's ANSI flag at
     expression-build time and rejects multiply_add with a clear error;
@@ -1557,7 +1572,6 @@ def test_minhash_dedup_delta_semantics(spark):
         minhash_band_state,
         minhash_delta_pairs,
         minhash_dedup_delta,
-        minhash_state_append,
     )
 
     corpus, batch = _delta_fixture(spark)
@@ -1576,7 +1590,7 @@ def test_minhash_dedup_delta_semantics(spark):
     # 11, 12 lose to history; 14 loses to 13 internally; 13, 15 survive
     assert ids == {13, 15}, ids
 
-    append = minhash_state_append(survivors, family="xxhash")
+    append = minhash_band_state(survivors, family="xxhash")
     rows = append.collect()
     assert {r["doc_id"] for r in rows} == {13, 15}
     assert len(rows) == 8 * 2  # bands x survivors
@@ -1627,7 +1641,6 @@ def test_minhash_delta_multi_cycle_loop(spark, tmp_path):
         minhash_band_state,
         minhash_dedup,
         minhash_dedup_delta,
-        minhash_state_append,
     )
 
     sents = {
@@ -1681,7 +1694,7 @@ def test_minhash_delta_multi_cycle_loop(spark, tmp_path):
             ).collect()
         }
         assert got == (ref_internal & ref_cross), (i, got)
-        minhash_state_append(
+        minhash_band_state(
             survivors, num_hashes=16, bands=bands, family="xxhash"
         ).write.mode("append").parquet(store)
         accepted = accepted.unionByName(
@@ -1731,7 +1744,6 @@ def test_embedding_dedup_delta_semantics(spark):
         embedding_band_state,
         embedding_delta_pairs,
         embedding_dedup_delta,
-        embedding_state_append,
     )
 
     hist, batch = _edelta_fixture(spark)
@@ -1747,7 +1759,7 @@ def test_embedding_dedup_delta_semantics(spark):
     # 11, 12 lose to history; 14 loses to 13 internally; 13, 15, 16 survive
     assert ids == {13, 15, 16}, ids
 
-    app = embedding_state_append(surv, **kw)
+    app = embedding_band_state(surv, **kw)
     rows = app.collect()
     assert {r["vec_id"] for r in rows} == {13, 15}  # zero-norm 16 has no sig
     assert len(rows) == 4 * 2
@@ -1852,7 +1864,6 @@ def test_embedding_delta_multi_cycle_loop(spark, tmp_path):
         embedding_dedup,
         embedding_dedup_delta,
         embedding_delta_pairs,
-        embedding_state_append,
     )
 
     kw = dict(num_planes=6, num_bands=4, dim=4)
@@ -1887,45 +1898,12 @@ def test_embedding_delta_multi_cycle_loop(spark, tmp_path):
             ).collect()
         }
         assert got == (ref_internal - cross_losers), (i, got)
-        embedding_state_append(surv, **kw).write.mode("append").parquet(store)
+        embedding_band_state(surv, **kw).write.mode("append").parquet(store)
         accepted = accepted.unionByName(
             batch.join(surv.select("vec_id"), "vec_id", "left_semi")
         )
     assert {r["vec_id"] for r in accepted.collect()} == {1, 2, 4, 7}
     assert spark.read.parquet(store).count() == 4 * accepted.count()
-
-
-def test_state_append_bucket_reuse_identity(spark):
-    """The batch_buckets/batch_sigs fast path of the two state-append
-    operators (survivor-id semi-join on precomputed band rows) returns
-    exactly the rows the re-signing path returns."""
-    from facolos_data_pipelines_spark.operators.dedup import (
-        embedding_band_state,
-        embedding_state_append,
-        minhash_band_state,
-        minhash_state_append,
-    )
-
-    corpus, batch = _delta_fixture(spark)
-    surv = batch.filter("doc_id in (13, 15)")
-    bb = minhash_band_state(batch, family="xxhash")
-    resign = sorted(
-        map(tuple, minhash_state_append(surv, family="xxhash").collect())
-    )
-    reuse = sorted(
-        map(tuple, minhash_state_append(surv, batch_buckets=bb).collect())
-    )
-    assert resign == reuse and resign
-
-    ehist, ebatch = _edelta_fixture(spark)
-    kw = dict(num_planes=6, num_bands=4, dim=4)
-    esurv = ebatch.filter("vec_id in (13, 15)")
-    esigs = embedding_band_state(ebatch, **kw)
-    eresign = sorted(map(tuple, embedding_state_append(esurv, **kw).collect()))
-    ereuse = sorted(
-        map(tuple, embedding_state_append(esurv, batch_sigs=esigs).collect())
-    )
-    assert eresign == ereuse and eresign
 
 
 def test_verify_dispatch_memo_evicts_oldest(spark, monkeypatch):

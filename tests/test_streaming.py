@@ -490,11 +490,11 @@ def test_near_dup_sink_partitioned_store_many_batches(spark, tmp_root):
     """Long-running-stream shape of the bucket store: 20 micro-batches
     against a bucket_pmod-partitioned store, then compaction. Checks:
     (a) the cross-batch near-dups are dropped, (b) the store lands
-    partitioned by pmod(band_hash, N) so per-batch probes scan bounded
-    per-partition inputs, and (c) compact_bucket_store collapses the
-    one-file-per-batch accumulation to one file per partition with
-    bucket rows deduped — the growth-control the sink needs under
-    continuous ingestion."""
+    partitioned by pmod(band_hash, N) (then by _batch_id) so per-batch
+    probes scan bounded per-partition inputs, and (c)
+    compact_bucket_store collapses the one-file-per-batch accumulation
+    to one file per pmod partition with bucket rows deduped — the
+    growth-control the sink needs under continuous ingestion."""
     import glob
     import os
 
@@ -552,7 +552,7 @@ def test_near_dup_sink_partitioned_store_many_batches(spark, tmp_root):
     )
     assert part_dirs and all(d.startswith("bucket_pmod=") for d in part_dirs)
     files_per_part_before = {
-        d: len(glob.glob(os.path.join(store_path, d, "*.parquet")))
+        d: len(glob.glob(os.path.join(store_path, d, "**", "*.parquet"), recursive=True))
         for d in part_dirs
     }
     # 20 appends -> many files per partition; compaction must bound it
@@ -566,7 +566,7 @@ def test_near_dup_sink_partitioned_store_many_batches(spark, tmp_root):
     assert stats["files_after"] < stats["files_before"]
     assert stats["rows_after"] <= stats["rows_before"]
     files_per_part_after = {
-        d: len(glob.glob(os.path.join(store_path, d, "*.parquet")))
+        d: len(glob.glob(os.path.join(d, "**", "*.parquet"), recursive=True))
         for d in glob.glob(os.path.join(store_path, "bucket_pmod=*"))
     }
     files_per_part_after = {
@@ -613,7 +613,7 @@ def test_near_dup_sink_store_layout_is_sticky_and_validated(spark, tmp_root):
         embedding_near_dup_sink,
         near_dup_filter_sink,
     )
-    from facolos_data_pipelines_spark.streaming.pipeline import (
+    from facolos_data_pipelines_spark.operators.band_index import (
         _STORE_META_NAME,
         _read_manifest,
     )
@@ -678,7 +678,7 @@ def test_near_dup_sink_refuses_foreign_signing_family(spark, tmp_root):
     from pyspark.sql import types as T
 
     from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
-    from facolos_data_pipelines_spark.streaming.pipeline import (
+    from facolos_data_pipelines_spark.operators.band_index import (
         _STORE_META_NAME,
         _read_manifest,
     )
@@ -736,7 +736,7 @@ def test_near_dup_sink_store_meta_on_uri_paths(spark, tmp_root):
     from pyspark.sql import types as T
 
     from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
-    from facolos_data_pipelines_spark.streaming.pipeline import (
+    from facolos_data_pipelines_spark.operators.band_index import (
         _STORE_META_NAME,
         _read_manifest,
         _write_manifest,
@@ -796,7 +796,7 @@ def test_store_meta_unreadable_is_not_absent(spark, tmp_root):
     from pyspark.sql import types as T
 
     from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
-    from facolos_data_pipelines_spark.streaming.pipeline import _STORE_META_NAME
+    from facolos_data_pipelines_spark.operators.band_index import _STORE_META_NAME
 
     local = f"{tmp_root}/corrupt_meta_store"
     store = f"file://{local}"
@@ -845,10 +845,8 @@ def test_compact_refuses_unreadable_meta(spark, tmp_root):
 
     import pytest
 
-    from facolos_data_pipelines_spark.streaming.pipeline import (
-        _STORE_META_NAME,
-        compact_bucket_store,
-    )
+    from facolos_data_pipelines_spark.operators.band_index import _STORE_META_NAME
+    from facolos_data_pipelines_spark.streaming.pipeline import compact_bucket_store
 
     local = f"{tmp_root}/corrupt_meta_compact"
     store = f"file://{local}"
@@ -881,7 +879,6 @@ def test_minhash_state_loop_under_foreachbatch(spark, tmp_root):
         minhash_band_state,
         minhash_dedup,
         minhash_dedup_delta,
-        minhash_state_append,
     )
 
     DOC_SCHEMA = T.StructType(
@@ -916,7 +913,7 @@ def test_minhash_state_loop_under_foreachbatch(spark, tmp_root):
         st = batch_df.sparkSession.read.parquet(state)
         corpus = batch_df.sparkSession.read.parquet(accepted)
         surv = minhash_dedup_delta(batch_df, st, corpus, **kw).localCheckpoint()
-        minhash_state_append(
+        minhash_band_state(
             surv, num_hashes=16, bands=bands, family="xxhash"
         ).write.mode("append").parquet(state)
         surv.write.mode("append").parquet(accepted)
@@ -1386,7 +1383,7 @@ def test_band_store_refuses_without_matching_manifest(
     the docs sink and the store are left byte-for-byte unchanged."""
     import json
 
-    from facolos_data_pipelines_spark.streaming.pipeline import _STORE_META_NAME
+    from facolos_data_pipelines_spark.operators.band_index import _STORE_META_NAME
 
     root = tmp_path / "copy"
     shutil.copytree(band_stores(family, scheme), root)
@@ -1418,37 +1415,173 @@ def test_band_store_refuses_without_matching_manifest(
 def test_band_store_manifest_write_failure_then_redelivery(
     spark, tmp_root, monkeypatch
 ):
-    """A new store's manifest is written before anything is appended: a
-    write that fails (after creating the store directory) raises, lands
-    nothing, and the redelivered batch then lands exactly once."""
+    """A new store's manifest is written before anything else: a write
+    that fails — before any byte lands (after creating the store
+    directory) or midway through the bytes, like a full disk — raises,
+    lands nothing, leaves no torn manifest behind, and the redelivered
+    batch then lands exactly once."""
+    import builtins
+    import errno
     import os
 
+    from facolos_data_pipelines_spark.operators import band_index
     from facolos_data_pipelines_spark.streaming import near_dup_filter_sink
-    from facolos_data_pipelines_spark.streaming import pipeline
 
-    sink, store = f"{tmp_root}/mf_sink", f"{tmp_root}/mf_store"
-    fold = near_dup_filter_sink(sink, store, store_partitions=2)
     _, _, (rows, schema), _ = _SINK_FAMILIES["minhash"]
+    real_open = builtins.open
 
     def failing_write(spark, store_path, manifest):
         os.makedirs(store_path, exist_ok=True)
         raise OSError("injected manifest write failure")
 
-    monkeypatch.setattr(pipeline, "_write_manifest", failing_write)
-    with pytest.raises(OSError, match="injected"):
-        fold(spark.createDataFrame(rows, schema), 0)
-    assert not os.path.exists(sink)
-    assert os.listdir(store) == []
+    class Torn:
+        """A file whose write lands half its bytes, then fails."""
 
-    monkeypatch.undo()
-    fold(spark.createDataFrame(rows, schema), 0)
-    ids = [r["doc_id"] for r in spark.read.parquet(sink).collect()]
-    assert sorted(ids) == [2, 3]
-    assert pipeline._read_manifest(spark, store) == {
-        "store_partitions": 2, "num_hashes": 32, "bands": 8, "shingle_n": 3,
-        "family": "multiply_add",
-    }
-    assert spark.read.parquet(store).select("doc_id").distinct().count() == 2
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, data):
+            self.fh.write(data[: len(data) // 2])
+            raise OSError(errno.ENOSPC, "injected: no space left on device")
+
+    for case in ("before_write", "mid_write"):
+        sink, store = f"{tmp_root}/mf_{case}_sink", f"{tmp_root}/mf_{case}_store"
+        fold = near_dup_filter_sink(sink, store, store_partitions=2)
+
+        def torn_open(file, mode="r", *args, store=store, **kwargs):
+            fh = real_open(file, mode, *args, **kwargs)
+            return Torn(fh) if "w" in mode and str(file).startswith(store) else fh
+
+        if case == "before_write":
+            monkeypatch.setattr(band_index, "_write_manifest", failing_write)
+        else:
+            monkeypatch.setattr(builtins, "open", torn_open)
+        with pytest.raises(OSError, match="injected"):
+            fold(spark.createDataFrame(rows, schema), 0)
+        monkeypatch.undo()
+        assert not os.path.exists(sink)
+        assert all(n.startswith((".", "_")) for n in os.listdir(store)), case
+        assert band_index._STORE_META_NAME not in os.listdir(store), case
+
+        fold(spark.createDataFrame(rows, schema), 0)
+        ids = [r["doc_id"] for r in spark.read.parquet(sink).collect()]
+        assert sorted(ids) == [2, 3], case
+        assert band_index._read_manifest(spark, store) == {
+            "store_partitions": 2, "num_hashes": 32, "bands": 8, "shingle_n": 3,
+            "family": "multiply_add",
+        }
+        assert spark.read.parquet(store).select("doc_id").distinct().count() == 2
+
+
+def _sorted_rows(spark, path):
+    return sorted((tuple(r) for r in spark.read.parquet(path).collect()), key=repr)
+
+
+def _two_batches(
+    spark, root, family, monkeypatch=None, crash_after=None, compact=False,
+    redeliver=False,
+):
+    """Feed a family's two batches to a fresh sink at ``root``. With
+    ``crash_after`` ("sink" or "store"), batch 1's first delivery dies
+    right after that write and batch 1 is delivered again. ``compact``
+    then compacts the store; ``redeliver`` then delivers batch 1 once
+    more. Returns (docs rows, store rows), each sorted."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from facolos_data_pipelines_spark.streaming import compact_bucket_store
+
+    kwargs, (rows0, schema), (rows1, _), _ = _SINK_FAMILIES[family]
+    paths = {"sink": f"{root}/sink", "store": f"{root}/store"}
+    fold = _sink_factory(family)(
+        paths["sink"], paths["store"], store_partitions=2, **kwargs
+    )
+    fold(spark.createDataFrame(rows0, schema), 0)
+    if crash_after is not None:
+        real = DataFrameWriter.parquet
+
+        def crashing(self, path, *args, **kw):
+            real(self, path, *args, **kw)
+            if path == paths[crash_after]:
+                raise RuntimeError("injected crash")
+
+        monkeypatch.setattr(DataFrameWriter, "parquet", crashing)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            fold(spark.createDataFrame(rows1, schema), 1)
+        monkeypatch.undo()
+    fold(spark.createDataFrame(rows1, schema), 1)
+    if compact:
+        id_col, key_cols = (
+            ("doc_id", ("band_id", "band_hash")) if family == "minhash"
+            else ("vec_id", ("band", "sig"))
+        )
+        compact_bucket_store(spark, paths["store"], id_col=id_col, key_cols=key_cols)
+    if redeliver:
+        fold(spark.createDataFrame(rows1, schema), 1)
+    return _sorted_rows(spark, paths["sink"]), _sorted_rows(spark, paths["store"])
+
+
+@pytest.mark.parametrize("family", sorted(_SINK_FAMILIES))
+def test_band_store_redelivery_is_exactly_once(spark, tmp_path, monkeypatch, family):
+    """A delivery that dies after the docs write, or after the band
+    write, and is then redelivered under the same batch id leaves the
+    docs sink and the store row-for-row equal to a clean run; so does
+    redelivering a batch that compaction already folded."""
+    clean = _two_batches(spark, tmp_path / "clean", family)
+    docs, store = clean
+    # batch 1's near-dup of batch 0 was dropped, its new row landed
+    assert {r[-1] for r in docs} == {0, 1} and store
+    for crash_after in ("sink", "store"):
+        got = _two_batches(
+            spark, tmp_path / crash_after, family, monkeypatch, crash_after
+        )
+        assert got == clean, crash_after
+    compacted = _two_batches(spark, tmp_path / "compacted", family, compact=True)
+    assert compacted[0] == docs
+    assert {r[-1] for r in compacted[1]} == {-1}
+    again = _two_batches(
+        spark, tmp_path / "again", family, compact=True, redeliver=True
+    )
+    assert again == compacted
+
+
+@pytest.mark.parametrize("family", sorted(_SINK_FAMILIES))
+def test_band_store_state_refuses_foreign_manifest(spark, band_stores, family):
+    """BandStore.state() checks the manifest before it reads: another
+    signing family or another store_partitions raises the repair
+    ValueError; the matching store reads its band rows."""
+    from facolos_data_pipelines_spark.operators.band_index import BandStore
+    from facolos_data_pipelines_spark.operators.dedup_embedding import _cosine_index
+    from facolos_data_pipelines_spark.operators.dedup_minhash import _minhash_index
+
+    kwargs, _, _, drift = _SINK_FAMILIES[family]
+
+    def index(**over):
+        if family == "minhash":
+            kw = {"num_hashes": 32, "bands": 8, **over}
+            return _minhash_index(
+                "text", "doc_id", kw["num_hashes"], kw["bands"], 3, "multiply_add", 0.8
+            )
+        kw = {**kwargs, **over}
+        return _cosine_index(
+            "embedding", "vec_id", kw["num_planes"], kw["num_bands"], kw["dim"]
+        )
+
+    path = str(band_stores(family, "") / "store")
+    with pytest.raises(ValueError, match="never match") as err:
+        BandStore(path, index(**drift), 2).state(spark)
+    assert "with the values the store was created with" in str(err.value)
+    with pytest.raises(ValueError, match="sticky"):
+        BandStore(path, index(), 4).state(spark)
+    ix = index()
+    rows = BandStore(path, ix, 2).state(spark)
+    assert rows.columns == [ix.id_col, *ix.keys, "bucket_pmod"]
+    assert rows.count() > 0
 
 
 def test_embedding_sink_leaves_session_usable_for_ml(spark, tmp_root, caplog):
