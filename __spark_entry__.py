@@ -3994,40 +3994,76 @@ def q_quantile_bin_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # The full registry, insertion order immaterial — queries() below
-    # reorders it so the driver's 50-entry sample window rotates each
-    # round (see _R12_WINDOW).
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # The order is part of the contract: bench.py times entries in this
+    # order, and callers that sample a prefix keep seeing the same names.
     return {
+        "decontaminate": q_decontaminate,
+        "dup_rate_by_source": q_dup_rate_by_source,
+        "freq_encode_priority": q_freq_encode_priority,
+        "funnel": q_funnel,
+        "gap_fill_daily": q_gap_fill_daily,
+        "group_percentiles": q_group_percentiles,
+        "hybrid_search": q_hybrid_search,
+        "incremental_daily_sales": q_incremental_daily_sales,
+        "incremental_distinct": q_incremental_distinct,
+        "nation_profit": q_nation_profit,
+        "nation_trade": q_nation_trade,
+        "pq_topk": q_pq_topk,
+        "priority_shipclass": q_priority_shipclass,
+        "promo_revenue": q_promo_revenue,
+        "psi_drift": q_psi_drift,
+        "quantile_bin_prices": q_quantile_bin_prices,
+        "repetition_stats": q_repetition_stats,
+        "returned_top_customers": q_returned_top_customers,
+        "semantic_decontaminate": q_semantic_decontaminate,
+        "split_leakage": q_split_leakage,
+        "strip_dup_spans": q_strip_dup_spans,
+        "supplier_variety": q_supplier_variety,
+        "supplier_wait": q_supplier_wait,
+        "temperature_mix": q_temperature_mix,
+        "token_budget_mix": q_token_budget_mix,
+        "top_supplier": q_top_supplier,
+        "tumbling_window": q_tumbling_window,
+        "unigram_scores": q_unigram_scores,
+        "hist_rebin_stitch": q_hist_rebin_stitch,
+        "hist_percentiles_daily": q_hist_percentiles_daily,
+        "anti_join_new_keys": q_anti_join_new_keys,
         "bigram_lm_scores": q_bigram_lm_scores,
-        "corpus_overlap": q_corpus_overlap,
+        "column_profile_approx": q_column_profile_approx,
+        "column_profile_tdigest": q_column_profile_tdigest,
         "corpus_overlap_delta": q_corpus_overlap_delta,
-        "gram_state_append": q_gram_state_append,
         "cross_corpus_dedup": q_cross_corpus_dedup,
-        "minhash_dedup_delta": q_minhash_dedup_delta,
+        "decayed_user_value": q_decayed_user_value,
+        "dedup_keep_best": q_dedup_keep_best,
+        "dup_cluster_sizes": q_dup_cluster_sizes,
+        "dup_components": q_dup_components,
         "embedding_dedup_delta": q_embedding_dedup_delta,
+        "embedding_near_dups": q_embedding_near_dups,
+        "embedding_near_dups_exact": q_embedding_near_dups_exact,
+        "gram_state_append": q_gram_state_append,
+        "interval_join": q_interval_join,
+        "json_props_stats": q_json_props_stats,
+        "ks_drift": q_ks_drift,
+        "leakage_safe_split": q_leakage_safe_split,
+        "minhash_dedup_delta": q_minhash_dedup_delta,
+        "minhash_dedup_portable": q_minhash_dedup_portable,
+        "corpus_overlap": q_corpus_overlap,
         "robust_profile": q_robust_profile,
         "rolling_psi_drift": q_rolling_psi_drift,
         "hist_state_append": q_hist_state_append,
         "psi_state_series": q_psi_state_series,
         "hist_edges_drift": q_hist_edges_drift,
         "hist_percentiles": q_hist_percentiles,
-        "hist_rebin_stitch": q_hist_rebin_stitch,
-        "hist_percentiles_daily": q_hist_percentiles_daily,
         "profile_state_append": q_profile_state_append,
         "incremental_profile": q_incremental_profile,
         "robust_anomaly": q_robust_anomaly,
-        "decayed_user_value": q_decayed_user_value,
         "length_histogram": q_length_histogram,
-        "quantile_bin_prices": q_quantile_bin_prices,
         "cube_sales": q_cube_sales,
         "corpus_diversity": q_corpus_diversity,
         "doc_containment": q_doc_containment,
-        "column_profile_approx": q_column_profile_approx,
         "script_profile": q_script_profile,
-        "hybrid_search": q_hybrid_search,
         "contamination_score": q_contamination_score,
-        "column_profile_tdigest": q_column_profile_tdigest,
         "audio_signal_features": q_audio_signal_features,
         "compression_signal": q_compression_signal,
         "multimodal_features": q_multimodal_features,
@@ -4055,7 +4091,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "negative_count": q_negative_count,
         "latest_by_key": q_latest_by_key,
         "merge_stats": q_merge_stats,
-        "anti_join_new_keys": q_anti_join_new_keys,
         "dim_enrichment_join": q_dim_enrichment_join,
         "topk_orders": q_topk_orders,
         "window_rank": q_window_rank,
@@ -4073,21 +4108,14 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "similarity_topk": q_similarity_topk,
         "similarity_threshold": q_similarity_threshold,
         "doc_fingerprint": q_doc_fingerprint,
-        # -- outside the 50-entry driver window: previously
-        # driver-certified (r1-r5) and re-certified locally --
-        "embedding_near_dups": q_embedding_near_dups,
-        "embedding_near_dups_exact": q_embedding_near_dups_exact,
         "sessionization": q_sessionization,
         "asof_join_events": q_asof_join_events,
         "asof_join_forward": q_asof_join_forward,
-        "decontaminate": q_decontaminate,
         "top_ngrams": q_top_ngrams,
         "cluster_assign": q_cluster_assign,
         "sliding_window": q_sliding_window,
-        "funnel": q_funnel,
         "cohort_retention": q_cohort_retention,
         "snapshot_drift": q_snapshot_drift,
-        "interval_join": q_interval_join,
         "scd2_history": q_scd2_history,
         "pivot_status": q_pivot_status,
         "tfidf_top_terms": q_tfidf_top_terms,
@@ -4101,76 +4129,45 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "revenue_share": q_revenue_share,
         "window_percentiles": q_window_percentiles,
         "session_window_agg": q_session_window_agg,
-        "group_percentiles": q_group_percentiles,
-        "incremental_daily_sales": q_incremental_daily_sales,
         "customer_order_distribution": q_customer_order_distribution,
         "weighted_sample": q_weighted_sample,
-        "json_props_stats": q_json_props_stats,
         "repeat_buyers": q_repeat_buyers,
         "small_quantity_revenue": q_small_quantity_revenue,
         "scd2_asof_lookup": q_scd2_asof_lookup,
-        "dup_rate_by_source": q_dup_rate_by_source,
-        "incremental_distinct": q_incremental_distinct,
         "ann_recall_trained": q_ann_recall_trained,
-        "leakage_safe_split": q_leakage_safe_split,
         "pca_project": q_pca_project,
-        "ks_drift": q_ks_drift,
         "chi2_drift": q_chi2_drift,
         "bm25_search": q_bm25_search,
-        "gap_fill_daily": q_gap_fill_daily,
         "rolling_features": q_rolling_features,
         "winsorize_prices": q_winsorize_prices,
-        "freq_encode_priority": q_freq_encode_priority,
         "char_entropy": q_char_entropy,
         "semantic_dedup": q_semantic_dedup,
         "duplicate_spans": q_duplicate_spans,
-        "strip_dup_spans": q_strip_dup_spans,
         "decontaminate_bloom": q_decontaminate_bloom,
-        "split_leakage": q_split_leakage,
         "forecast_revenue": q_forecast_revenue,
-        "top_supplier": q_top_supplier,
         "large_orders": q_large_orders,
         "disjunctive_revenue": q_disjunctive_revenue,
         "cold_customers": q_cold_customers,
-        "nation_trade": q_nation_trade,
-        "nation_profit": q_nation_profit,
-        "returned_top_customers": q_returned_top_customers,
-        "priority_shipclass": q_priority_shipclass,
-        "promo_revenue": q_promo_revenue,
         "frequent_items": q_frequent_items,
         "curriculum_order": q_curriculum_order,
         "excess_suppliers": q_excess_suppliers,
         "min_cost_supplier": q_min_cost_supplier,
-        "dedup_keep_best": q_dedup_keep_best,
-        "semantic_decontaminate": q_semantic_decontaminate,
-        "token_budget_mix": q_token_budget_mix,
         "important_parts": q_important_parts,
-        "supplier_variety": q_supplier_variety,
-        "psi_drift": q_psi_drift,
-        "temperature_mix": q_temperature_mix,
         "c4_clean": q_c4_clean,
-        "pq_topk": q_pq_topk,
         "ivfpq_topk": q_ivfpq_topk,
         "ann_recall": q_ann_recall,
-        "dup_cluster_sizes": q_dup_cluster_sizes,
         "fuzzy_match": q_fuzzy_match,
         "line_dedup": q_line_dedup,
-        "supplier_wait": q_supplier_wait,
         "market_share": q_market_share,
         "anomaly_zscore": q_anomaly_zscore,
         "expectations": q_expectations,
         "key_skew": q_key_skew,
-        "unigram_scores": q_unigram_scores,
-        "dup_components": q_dup_components,
         "approx_distinct": q_approx_distinct,
         "ngram_jaccard_dedup": q_ngram_jaccard_dedup,
         "daily_sales_summary": q_daily_sales_summary,
-        "tumbling_window": q_tumbling_window,
         "column_profile": q_column_profile,
-        "repetition_stats": q_repetition_stats,
         "knn_join": q_knn_join,
         "knn_join_lsh": q_knn_join_lsh,
-        "minhash_dedup_portable": q_minhash_dedup_portable,
         "simhash_dedup_portable": q_simhash_dedup_portable,
         "minhash_dedup": q_minhash_dedup,
         "simhash_dedup": q_simhash_dedup,
@@ -4184,50 +4181,6 @@ def _all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dataset_split": q_dataset_split,
         "sample_per_group": q_sample_per_group,
     }
-
-
-# Round-12 driver window (the driver oracle-checks the FIRST 50
-# entries of queries() each round; earlier windows live in the r1-r11
-# CORRECTNESS artifacts): the whole 28-name round-8-vintage band —
-# every [Q] name whose newest driver attestation is CORRECTNESS_r08
-# (4 rounds old after r12, crossing the 3-round staleness bar; exactly
-# VERDICT r11 next-round ask #1) — then the TWO new round-12 queries
-# (hist_rebin_stitch, the edge re-bootstrap transition's stitched PSI
-# series, and hist_percentiles_daily, the monitoring-grain quantile
-# series — new-query attestation outranks early refreshes, the
-# standing convention); the remaining 20 slots early-refresh the
-# oldest round-9 names (alphabetical), shrinking the 50-name r9 band
-# that crosses the bar in round 13 to 30 (it would not fit in one
-# 50-slot window otherwise — the spill the r11 verdict prescribes).
-# No [NQ] rows-only names (their row counts ride the full-surface
-# local artifact; their hash-certified attestations are the *_portable
-# twins). Exactly 50 entries: the driver samples the FIRST 50, so a
-# 51st name would silently miss its attestation.
-_R12_WINDOW = [
-    # the 28 r8-vintage names (alphabetical)
-    "decontaminate", "dup_rate_by_source", "freq_encode_priority",
-    "funnel", "gap_fill_daily", "group_percentiles", "hybrid_search",
-    "incremental_daily_sales", "incremental_distinct", "nation_profit",
-    "nation_trade", "pq_topk", "priority_shipclass", "promo_revenue",
-    "psi_drift", "quantile_bin_prices", "repetition_stats",
-    "returned_top_customers", "semantic_decontaminate", "split_leakage",
-    "strip_dup_spans", "supplier_variety", "supplier_wait",
-    "temperature_mix", "token_budget_mix", "top_supplier",
-    "tumbling_window", "unigram_scores",
-    # new round-12 queries (the guard->recovery transition certified
-    # end-to-end, and the per-day state-quantile series)
-    "hist_rebin_stitch", "hist_percentiles_daily",
-    # 20 early r9 refreshes (oldest alphabetical) — the r9 band
-    # crosses the staleness bar in round 13; every early refresh
-    # shrinks that rotation (50 -> 30)
-    "anti_join_new_keys", "bigram_lm_scores", "column_profile_approx",
-    "column_profile_tdigest", "corpus_overlap_delta", "cross_corpus_dedup",
-    "decayed_user_value", "dedup_keep_best", "dup_cluster_sizes",
-    "dup_components", "embedding_dedup_delta", "embedding_near_dups",
-    "embedding_near_dups_exact", "gram_state_append", "interval_join",
-    "json_props_stats", "ks_drift", "leakage_safe_split",
-    "minhash_dedup_delta", "minhash_dedup_portable",
-]
 
 
 def q_cube_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4270,15 +4223,6 @@ def q_doc_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("containment") + 1e-9, 6).alias("containment"),
         "contained_id",
     ).orderBy("id_a", "id_b")
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    all_q = _all_queries()
-    missing = [n for n in _R12_WINDOW if n not in all_q]
-    if missing:
-        raise KeyError(f"_R12_WINDOW names not in the registry: {missing}")
-    rest = [n for n in all_q if n not in set(_R12_WINDOW)]
-    return {n: all_q[n] for n in [*_R12_WINDOW, *rest]}
 
 
 def _vec_sql() -> str:

@@ -70,10 +70,10 @@ def main() -> None:
     timings = {name: round(statistics.median(samples[name]), 3) for name in names}
     total = round(sum(timings.values()), 3)
     # The stable round-over-round signal: sum of the RECORDED isolated
-    # baselines (BENCH_ISOLATED.json, maintained by scripts/
-    # bench_ratchet.py — one warm quiet subprocess, min-ratcheted) over
-    # this run's 10 slowest queries. The contended total above swings
-    # 1.3x+ with machine state; the committed baselines don't. Reported
+    # baselines (BENCH_ISOLATED.json, a frozen baseline of warm
+    # single-process medians taken at 32 cores) over this run's 10
+    # slowest queries. The contended total above swings 1.3x+ with
+    # machine state; the committed baselines don't. Reported
     # as null until every one of the 10 has a recorded baseline, so a
     # partially-covered figure can't masquerade as the full one.
     iso_top10 = None
@@ -102,7 +102,6 @@ def main() -> None:
         "sf": sf,
         # full-surface runs share one JVM back-to-back, so individual
         # timings carry scheduling contention; isolated-process medians
-        # (scripts/bench_diff.py protocol, reported in BENCH_DIFF.md)
         # are the apples-to-apples per-query numbers
         "timing_mode": "contended-sequential",
         "isolated_top10": iso_top10,

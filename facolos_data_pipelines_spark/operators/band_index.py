@@ -246,6 +246,20 @@ def _refusal(
     )
 
 
+def _refuse_pre_batch_layout(spark: SparkSession, path: str, stray: str, repair: str):
+    """Raise the repair ``ValueError`` when the ``stray`` glob under
+    ``path`` lists anything: data files written before the ``_batch_id``
+    layout sit outside ``_batch_id=`` directories, and one batch on top
+    of them leaves a table Spark cannot read. One listing, no job."""
+    fs, jglob = _hadoop_fs(spark, f"{path.rstrip('/')}/{stray}")
+    found = fs.globStatus(jglob)
+    if found is not None and len(found):
+        raise ValueError(
+            f"{path!r} holds data files outside {_BATCH}= partitions (written "
+            f"before the {_BATCH} layout); refusing to append. {repair}"
+        )
+
+
 def _store_is_new(spark: SparkSession, path: str) -> bool:
     """True when the store holds neither a manifest nor band rows: it is
     absent, or a first batch whose manifest write failed left only the
@@ -432,12 +446,16 @@ class BandStore:
         redelivery lands exactly once. ``admit(batch_df) -> batch``
         optionally drops rows the index cannot sign, counting them as
         the observed metric ``_UNSIGNABLE``; the count is read back from
-        the signing checkpoint and logged."""
+        the signing checkpoint and logged. A store or docs sink written
+        before the ``_batch_id`` layout refuses before any write."""
         from ..sources.io import overwrite_partitions
 
         spark = batch_df.sparkSession
         if not batch_df.head(1):
             return
+        _refuse_pre_batch_layout(
+            spark, docs_path, "[!_.]*", "Point the sink at a new docs path.",
+        )
         ix = self.index
         id_col, keys = ix.id_col, list(ix.keys)
         batch = admit(batch_df) if admit else batch_df
@@ -449,6 +467,11 @@ class BandStore:
             _LAYOUT, F.pmod(F.col(keys[1]), F.lit(self.partitions))
         )
         history = self.open(spark, batch_id, bands.schema)
+        # after open, so a refused manifest is reported first
+        _refuse_pre_batch_layout(
+            spark, self.path, f"{_LAYOUT}=*/[!_.]*",
+            "Migrate the store with one compact_bucket_store.",
+        )
         bands, unsignable = materialize_observed(
             bands, *([_UNSIGNABLE] if admit else [])
         )

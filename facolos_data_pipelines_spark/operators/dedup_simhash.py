@@ -188,7 +188,7 @@ def simhash_fingerprints_md5(
     # ``(h >> l) & 0x0001000100010001`` instead of 60 per-bit sums —
     # 15 conv + 60 bit-extractions per word-row collapse to 1 conv +
     # 16 lane masks; measured ~3 s -> ~1 s on the sf0.1 vote stage,
-    # OPTIMIZATION_r12.md §7). Digit d sits at H-bits 4*(14-d)..+3
+    # plans/r12/OPTIMIZATION.md §7). Digit d sits at H-bits 4*(14-d)..+3
     # (leftmost digit = top nibble), so the assembly below remaps
     # fingerprint bit j to H-bit 4*(14 - j//4) + (j%4); votes_j > 0
     # under the old +1/-1 sum is exactly 2*cnt_j > n. Exact up to

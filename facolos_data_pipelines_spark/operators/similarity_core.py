@@ -42,7 +42,7 @@ def lit_double_array(vals: list[float]) -> Column:
     trips; for the 64-wide planes/centroids this family inlines by the
     dozen, that is thousands of driver round trips PER PLAN BUILD —
     measured ~7 s of pure driver time for 24 plane dots at dim 64
-    (OPTIMIZATION_r12.md). One ``F.expr`` parse of the same literals is
+    (plans/r12/OPTIMIZATION.md). One ``F.expr`` parse of the same literals is
     ~40x cheaper and analyzes to the identical CreateArray(Literal...)
     tree, so results are bit-identical. Falls back to the per-element
     path if any value is non-finite (no SQL literal syntax)."""
@@ -208,7 +208,7 @@ def banded_signatures(
     # one parsed SQL expression (see hyperplane_signature) — the py4j
     # round-trip count per plan build drops from ~num_bands*num_planes*
     # (dim+6) to ~num_bands parses (measured ~7 s -> ~0.2 s of driver
-    # time at 4 bands x 6 planes x dim 64; OPTIMIZATION_r12.md).
+    # time at 4 bands x 6 planes x dim 64; plans/r12/OPTIMIZATION.md).
     arr = F.array(
         *[
             F.struct(

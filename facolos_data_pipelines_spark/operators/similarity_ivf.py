@@ -501,7 +501,7 @@ def assign_nearest_centroid(
     # instead of per-centroid Column/lambda py4j round trips —
     # identical named_struct/transform/aggregate tree, bit-identical
     # assignments (same rationale as pq_encode;
-    # OPTIMIZATION_r12.md §4). Integer cid literals mirror F.lit's
+    # plans/r12/OPTIMIZATION.md §4). Integer cid literals mirror F.lit's
     # int-vs-long typing.
     from .similarity_core import _fmt_double
 

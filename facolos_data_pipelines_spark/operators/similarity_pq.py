@@ -197,7 +197,7 @@ def pq_encode(
     # expression instead of ~100 py4j round trips of Column/lambda
     # scaffolding — same named_struct/transform/aggregate tree, same
     # summation order, bit-identical codes; measured seconds of pure
-    # driver time per encode at 16 subspaces (OPTIMIZATION_r12.md §4).
+    # driver time per encode at 16 subspaces (plans/r12/OPTIMIZATION.md §4).
     def subspace_code_sql(j: int, cb) -> str:
         structs = ",".join(
             f"named_struct('code', {ci}, 'v', {_arr_sql(cvec)})"
@@ -300,7 +300,7 @@ def encode_ivfpq(
     # The coarse argmin and the residual build as ONE parsed SQL
     # expression each instead of per-centroid Column/lambda py4j round
     # trips — identical trees, bit-identical cells/residuals (same
-    # rationale as pq_encode above; OPTIMIZATION_r12.md §4).
+    # rationale as pq_encode above; plans/r12/OPTIMIZATION.md §4).
     cent_structs = ",".join(
         f"named_struct('cid', {i}, 'v', {_arr_sql(c)})" for i, c in enumerate(cents)
     )

@@ -115,7 +115,7 @@ def column_profile(
         # two-level HashAggregate over un-expanded rows (one tiny buffer
         # set total, map-side combined) and lets the distinct pass dedup
         # map-side with no object buffers: ~9 s -> ~3 s A/B-interleaved
-        # at sf0.1, same values (OPTIMIZATION_r12.md).
+        # at sf0.1, same values (plans/r12/OPTIMIZATION.md).
         # The two one-row results recombine with a trivial 1x1 cross join.
         one_row = df.agg(*aggs).crossJoin(df.agg(*dist_aggs))
     else:

@@ -159,7 +159,7 @@ def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFr
 # inference) and view registration ~15 ms — a query surface whose
 # entries each call ``_t`` 1-3 times pays that per QUERY per repeat
 # (measured ~290 ms/call, the largest single fixed cost on the bench
-# tail; OPTIMIZATION_r12.md §6). The cache holds only the immutable
+# tail; plans/r12/OPTIMIZATION.md §6). The cache holds only the immutable
 # DataFrame (a lazy plan — every execution still scans the parquet
 # files; no rows are cached), keyed by (applicationId, sf_dir, file
 # mtime, name) so a new session, a different scale factor, or a

@@ -6,7 +6,7 @@ Usage:
 Builds each named ``__spark_entry__.queries()`` entry, runs it through
 the noop sink (bench.py's timed action), and prints how many Spark JOBS
 the whole build+execute cycle submitted (statusTracker job-id delta) —
-the deterministic per-query action/job census OPTIMIZATION_r12.md §3
+the deterministic per-query action/job census plans/r12/OPTIMIZATION.md §3
 used to target eager-execution fusion. Wall seconds are printed too,
 but the job delta is the signal: it is identical across repeats while
 wall times swing with the host. Honors SPARK_GRAFT_SF_DIR.

@@ -1,11 +1,15 @@
 """Structural guards: the band-store layout and the dynamic partition
-overwrite are each written in one module."""
+overwrite are each written in one module, and every document the code
+cites exists."""
 
 import pathlib
+import re
+import subprocess
 
 import facolos_data_pipelines_spark
 
 PACKAGE = pathlib.Path(facolos_data_pipelines_spark.__file__).parent
+ROOT = PACKAGE.parent
 
 
 def _modules_naming(text: str) -> list[str]:
@@ -27,3 +31,22 @@ def test_partition_overwrite_only_in_io():
     """Every dynamic partition overwrite goes through
     ``sources.io.overwrite_partitions``."""
     assert _modules_naming("partitionOverwriteMode") == ["sources/io.py"]
+
+
+def test_cited_docs_exist():
+    """Every ``*.md`` path cited by the package, ``__spark_entry__.py`` or
+    ``bench.py`` is a tracked file under the repository root."""
+    tracked = set(
+        subprocess.run(
+            ["git", "ls-files", "*.md"], cwd=ROOT, capture_output=True,
+            text=True, check=True,
+        ).stdout.split()
+    )
+    sources = [*PACKAGE.rglob("*.py"), ROOT / "__spark_entry__.py", ROOT / "bench.py"]
+    cited = {
+        (str(path.relative_to(ROOT)), doc)
+        for path in sources
+        for doc in re.findall(r"[\w./-]+\.md\b", path.read_text())
+    }
+    assert cited
+    assert sorted(c for c in cited if c[1] not in tracked) == []

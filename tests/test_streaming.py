@@ -1584,6 +1584,40 @@ def test_band_store_state_refuses_foreign_manifest(spark, band_stores, family):
     assert rows.count() > 0
 
 
+def test_band_store_refuses_pre_batch_id_layout(spark, band_stores, tmp_path):
+    """A store partitioned only by bucket_pmod, or a docs sink of flat
+    part files, predates the _batch_id layout. The sink refuses either
+    before any write (one batch on top would leave a store Spark cannot
+    read and hide the old docs); compact_bucket_store migrates the
+    store, and the docs move to a new path."""
+    from facolos_data_pipelines_spark.operators.band_index import _STORE_META_NAME
+    from facolos_data_pipelines_spark.streaming import compact_bucket_store
+
+    built, root = band_stores("minhash", ""), tmp_path / "old"
+    for name, layout in (("sink", []), ("store", ["bucket_pmod"])):
+        spark.read.parquet(str(built / name)).drop("_batch_id").write.partitionBy(
+            *layout
+        ).parquet(str(root / name))
+    shutil.copy(built / "store" / _STORE_META_NAME, root / "store")
+    kwargs, _, (rows, schema), _ = _SINK_FAMILIES["minhash"]
+
+    def fold(sink):
+        _sink_factory("minhash")(
+            str(root / sink), str(root / "store"), store_partitions=2, **kwargs
+        )(spark.createDataFrame(rows, schema), 1)
+
+    before = _tree_bytes(root)
+    with pytest.raises(ValueError, match="new docs path"):
+        fold("sink")
+    with pytest.raises(ValueError, match="compact_bucket_store"):
+        fold("new_sink")
+    assert _tree_bytes(root) == before
+    compact_bucket_store(spark, str(root / "store"))
+    fold("new_sink")
+    assert spark.read.parquet(str(root / "new_sink")).count() > 0
+    assert spark.read.parquet(str(root / "store")).count() > 0
+
+
 def test_embedding_sink_leaves_session_usable_for_ml(spark, tmp_root, caplog):
     """The embedding sink's degenerate-vector count is a named observed
     metric read back from the signing checkpoint (and logged), not a
