@@ -2213,6 +2213,7 @@ def q_hist_edges_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference anchor is the alert-on-degradation contract of
     src/monitoring/production_monitor.py:84-125 (threshold rules over
     monitor series)."""
+    from facolos_data_pipelines_spark.eager import materialize
     from facolos_data_pipelines_spark.quality.checks import (
         hist_edges,
         hist_edges_drift,
@@ -2228,7 +2229,7 @@ def q_hist_edges_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = pinned_edges(
         hist_edges(boot, "value", num_bins=10), "q_hist_edges_drift"
     )
-    state = hist_state(events, "ts", "value", edges).persist()
+    state = materialize(hist_state(events, "ts", "value", edges))
     return hist_edges_drift(state, threshold=0.4, edges=edges).orderBy("day")
 
 
@@ -2253,6 +2254,7 @@ def q_hist_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolation expression, quantile_cont == Spark percentile for
     the edges) and the same in_bin booleans, so the value hash matches
     iff both the estimates AND the bound hold on both engines."""
+    from facolos_data_pipelines_spark.eager import materialize
     from facolos_data_pipelines_spark.quality.checks import (
         hist_edges,
         hist_state,
@@ -2262,11 +2264,11 @@ def q_hist_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     events = _t(spark, sf_dir, "events")
     boot = events.filter(F.to_date("ts") <= F.lit("2024-01-15"))
-    # one bootstrap aggregate, shared edge list, cached state
+    # one bootstrap aggregate, shared edge list, materialized state
     edges = pinned_edges(
         hist_edges(boot, "value", num_bins=10), "q_hist_percentiles"
     )
-    state = hist_state(events, "ts", "value", edges).persist()
+    state = materialize(hist_state(events, "ts", "value", edges))
     qs = [0.1, 0.5, 0.9]
     # RAW estimates: the containment bound must compare unrounded
     # doubles — rounding can collapse a strict inequality to equality
@@ -2333,6 +2335,7 @@ def q_hist_rebin_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift. Reference anchor: the alert→recovery pairing of
     src/monitoring/production_monitor.py:84-125 (every threshold rule
     has an action)."""
+    from facolos_data_pipelines_spark.eager import materialize
     from facolos_data_pipelines_spark.quality.checks import (
         hist_edges,
         hist_state,
@@ -2378,13 +2381,15 @@ def q_hist_rebin_stitch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     old_edges = _bs(_row["_bs_old"], "old")
     new_edges = _bs(_row["_bs_new"], "new")
-    old_state = hist_state(
-        events.filter(F.to_date("ts") <= F.lit("2024-01-21")),
-        "ts", "value", old_edges,
-    ).persist()
-    # rebin_hist_state returns a PERSISTED frame when old_state is
-    # given (the mass check's collect executes the rescan; the cache
-    # lets the baseline probe and the stitched series reuse it)
+    old_state = materialize(
+        hist_state(
+            events.filter(F.to_date("ts") <= F.lit("2024-01-21")),
+            "ts", "value", old_edges,
+        )
+    )
+    # rebin_hist_state returns a materialized frame when old_state is
+    # given (the baseline probe and the stitched series reuse the
+    # rescan the mass check executed)
     new_state = rebin_hist_state(
         events, "ts", "value", new_edges, "2024-01-20", old_state=old_state
     )
@@ -2405,6 +2410,7 @@ def q_hist_percentiles_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     moved, the daily p50/p90 series says where. Everything from
     days x bins state rows + the 1-row edge store; the same
     cumulative-fraction interpolation per day, partitioned by day."""
+    from facolos_data_pipelines_spark.eager import materialize
     from facolos_data_pipelines_spark.quality.checks import (
         hist_edges,
         hist_state,
@@ -2419,9 +2425,9 @@ def q_hist_percentiles_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "q_hist_percentiles_daily",
     )
-    # cached state, like the siblings: the reader's bin-overflow probe
-    # already executes the aggregation once at build time
-    state = hist_state(events, "ts", "value", edges).persist()
+    # materialized state, like the siblings: the reader's bin-overflow
+    # probe already executes the aggregation once at build time
+    state = materialize(hist_state(events, "ts", "value", edges))
     return quantiles_from_hist_state(
         state, edges, [0.25, 0.5, 0.9], per_day=True
     ).orderBy("day", "q")
@@ -2896,12 +2902,10 @@ def q_freq_encode_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document character-entropy quality signal
-    (operators.text.char_entropy) on the DEFAULT arrow impl — one
-    shuffle-free mapInPandas pass, numpy bincount per doc (~9x the
-    expression path at sf0.1). The DuckDB twin rebuilds the histogram
-    as the portable list_distinct/list_filter pipeline (= the
-    operator's impl='expr', tested equivalent); per-doc summation-order
-    float noise is absorbed by the shared round-4 convention."""
+    (operators.text.char_entropy) — one shuffle-free mapInPandas pass,
+    numpy bincount per doc. The DuckDB twin rebuilds the histogram as a
+    list_distinct/list_filter pipeline; per-doc summation-order float
+    noise is absorbed by the shared round-4 convention."""
     from facolos_data_pipelines_spark.operators.text import char_entropy
 
     docs = _t(spark, sf_dir, "documents")

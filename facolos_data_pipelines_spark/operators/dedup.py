@@ -41,7 +41,6 @@ from .dedup_minhash import (  # noqa: F401
     normalized_words,
     word_shingles,
     exploded_shingles,
-    minhash_signature,
     minhash_signatures,
     minhash_lsh_buckets,
     lsh_candidate_pairs,
@@ -68,7 +67,6 @@ from .dedup_ngram import (  # noqa: F401
     strip_duplicate_spans,
 )
 from .dedup_simhash import (  # noqa: F401
-    simhash,
     simhash_fingerprints,
     hamming_distance,
     simhash_dedup,
@@ -82,7 +80,6 @@ from .dedup_embedding import (  # noqa: F401
     cosine_similarity,
     _exact_pairs_gemm,
     _auto_num_planes,
-    _bucket_verify_arrow,
     embedding_near_dup_pairs,
     embedding_dedup,
     semantic_dedup_pairs,

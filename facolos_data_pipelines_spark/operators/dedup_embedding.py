@@ -1,5 +1,5 @@
-"""Embedding-cosine near-dup: banded hyperplane LSH blocking with
-expr/arrow verification, exact tiled-GEMM opt-in, and SemDeDup
+"""Embedding-cosine near-dup: banded hyperplane LSH blocking with the
+certified expr verify join, exact tiled-GEMM opt-in, and SemDeDup
 cluster-then-dedup. Split from dedup.py; operators.dedup re-exports
 the surface."""
 
@@ -12,15 +12,6 @@ from ..eager import materialize
 from ..session import local_frame
 from .band_index import BandIndex
 from .dedup_components import _drop_pair_losers
-
-# verify_impl='auto' dispatch memo: (applicationId, plan semanticHash,
-# threshold) -> bool ("more than threshold vectors?"). Both verify
-# implementations return identical pairs, so this caches a
-# performance-only routing decision, never data; bounded, oldest entry
-# evicted first.
-_VERIFY_DISPATCH_MEMO: dict[tuple, bool] = {}
-_VERIFY_DISPATCH_MEMO_MAX = 256
-
 
 # ---------------------------------------------------------------------------
 # Embedding cosine near-dup
@@ -50,7 +41,7 @@ def _exact_pairs_gemm(
     scaled: DataFrame,
     id_col: str,
     threshold: float,
-    tile_rows: int,
+    tile_rows: int = 2048,
 ) -> DataFrame:
     """Exact all-pairs cosine via a distributed tiled matrix product.
 
@@ -133,59 +124,6 @@ def _auto_num_planes(n_vectors: int, target_occupancy: int = 64) -> int:
     return max(6, min(24, raw))
 
 
-def _bucket_verify_arrow(
-    sigs: DataFrame, scaled: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
-    """Bucket-local GEMM candidate verification (the scale path of
-    :func:`embedding_near_dup_pairs`): join the L2-normalized vectors
-    to the (id, band, sig) bucket rows — O(bands * corpus) shuffle
-    bytes, never O(candidates) — then one ``M @ M.T`` per (band, sig)
-    group emits only the pairs at or above the threshold. Rows are
-    sorted by id inside each group so id_a < id_b holds for any
-    orderable id type, and cross-band duplicates (a pair sharing more
-    than one band signature) collapse in one id-pair dropDuplicates
-    over survivors only."""
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    joined = sigs.join(scaled.select(F.col(id_col), F.col("_sv")), id_col)
-    id_type = joined.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("id_a", id_type),
-            T.StructField("id_b", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    thr = float(threshold)
-    id_name = id_col
-
-    def bucket_pairs(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []})
-        pdf = pdf.sort_values(id_name, kind="mergesort")
-        mat = np.stack(pdf["_sv"].to_numpy()).astype(np.float64)
-        sims = mat @ mat.T
-        ii, jj = np.triu_indices(n, k=1)
-        vals = sims[ii, jj]
-        ids = pdf[id_name].to_numpy()
-        # ids[ii] != ids[jj] mirrors the expr path's strict id_a < id_b:
-        # duplicate ids must never emit a self-pair
-        keep = (vals >= thr) & (ids[ii] != ids[jj])
-        return pd.DataFrame(
-            {"id_a": ids[ii[keep]], "id_b": ids[jj[keep]], "cosine": vals[keep]}
-        )
-
-    return (
-        joined.groupBy("band", "sig")
-        .applyInPandas(bucket_pairs, out_schema)
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
 def embedding_near_dup_pairs(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -195,12 +133,7 @@ def embedding_near_dup_pairs(
     num_bands: int = 4,
     dim: int | None = None,
     max_bucket_size: int | None = None,
-    signature_impl: str = "expr",
-    exact_impl: str = "gemm",
-    exact_tile_rows: int = 2048,
     auto_bucket_occupancy: int = 64,
-    verify_impl: str = "auto",
-    arrow_verify_threshold: int = 100_000,
     bands_df: "DataFrame | None" = None,
 ) -> DataFrame:
     """Embedding near-dup pairs above a cosine threshold, blocked by
@@ -216,45 +149,6 @@ def embedding_near_dup_pairs(
     Identical output: a vector's band rows don't depend on which frame
     selects them.
 
-    The DEFAULTS are the scale-safe configuration: ``num_planes='auto'``
-    and ``verify_impl='auto'`` (one column-pruned count of the corpus
-    dispatches both). The previously-fixed 6-plane / expr-verify
-    defaults were MEASURED dying quadratically at 2M vectors (38 GB of
-    shuffle spill, SCALE.md §6c) while auto is property-tested to
-    resolve to the identical configuration at small corpora — a scale
-    claim must not require the caller to know the magic kwargs.
-
-    ``verify_impl`` picks how candidates are verified:
-
-    - ``'expr'`` (the oracle-certified plan): materialize the
-      deduplicated candidate id pairs, join the normalized vectors
-      back by id, fold the dot product in codegen. Exactly
-      reproducible by an external SQL engine — but the pair-keyed
-      vector joins move O(candidates * dim) bytes through the
-      shuffle, and the per-pair higher-order-function fold costs
-      ~2.5us per element: both grow with the CANDIDATE count, which
-      at scale dwarfs the corpus (the 6-plane sf10 run shuffled 38 GB
-      of spill before dying).
-    - ``'arrow'`` (the 100 TB path): carry the normalized vectors
-      through the (band, sig) bucket shuffle — O(bands * corpus)
-      bytes, linear — and verify each bucket with ONE numpy matmul
-      inside ``applyInPandas`` (occupancy^2 dots at BLAS speed,
-      measured orders of magnitude over the per-pair fold); only
-      surviving pairs materialize, deduplicated across bands
-      afterwards. Cosine VALUES may differ from the expr fold in the
-      last ulp (BLAS summation order), which the 4dp oracle rounding
-      absorbs; the pair SET agrees except for pairs whose true cosine
-      sits within one ulp of ``threshold`` — membership is evaluated
-      on the unrounded value in both impls, so a knife-edge pair can
-      land on different sides (same certified-twin convention as
-      minhash's signature_impl; thresholds are corpus-level knobs,
-      not exact decision boundaries).
-    - ``'auto'`` (default): 'arrow' when the corpus exceeds
-      ``arrow_verify_threshold`` vectors (default 100k — past that
-      the candidate-keyed expr joins dominate and the measured-safe
-      bucket GEMM wins), else 'expr'. Same size-dispatch precedent as
-      :func:`connected_components`' driver union-find.
-
     ``num_planes="auto"`` (default) sizes the signature from the corpus
     itself (one column-pruned count): planes = ceil(log2(n /
     ``auto_bucket_occupancy``)), clamped to [6, 24] — see
@@ -267,7 +161,7 @@ def embedding_near_dup_pairs(
     ``num_planes=6`` explicitly, so their results are reproducible at
     any sf; at the oracle's sf0.01 corpus auto resolves to the same 6
     (property-tested, and the default path is tested pair-set-equal to
-    the pinned 6x4/expr config there).
+    the pinned 6x4 config there).
 
     Each band hashes the vector against ``num_planes`` independent
     hyperplanes (plane family is deterministic by index, see
@@ -278,15 +172,12 @@ def embedding_near_dup_pairs(
     retention is ~0.95 while unrelated pairs are pruned ~50x). The
     self-join is bucket-local on (band, sig) — never an O(n^2)
     cartesian product — and only (id, band, sig) rows shuffle;
-    normalized vectors are joined back by id for the verify dot
-    product, proportional to candidates, not corpus².
+    normalized vectors are joined back by id and the verify dot
+    product folds in codegen, proportional to candidates, not corpus².
 
     ``num_planes=0`` is an explicit opt-in that compares ALL pairs
-    (exact). ``exact_impl='gemm'`` (default) runs it as a distributed
-    tiled numpy matrix product over an (i, j) tile grid — see
-    :func:`_exact_pairs_gemm`; measured ~6x the per-pair expression
-    fold, which remains available as ``exact_impl='expr'`` for
-    zero-Python environments. Either way the cost is inherently
+    (exact) as a distributed tiled numpy matrix product over an (i, j)
+    tile grid — see :func:`_exact_pairs_gemm`. The cost is inherently
     quadratic in the corpus — a scale-killer past ~10^5 vectors.
     ``max_bucket_size`` drops degenerate buckets (e.g. an all-near-zero
     signature hot spot) the same way lsh_candidate_pairs caps text LSH
@@ -312,68 +203,18 @@ def embedding_near_dup_pairs(
             "positive num_planes — the pinned family the rows were "
             "computed under ('auto' cannot be re-derived from band rows)"
         )
-    n_vectors: int | None = None
     if num_planes == "auto":
-        n_vectors = df.select(id_col).count()
-        num_planes = _auto_num_planes(n_vectors, auto_bucket_occupancy)
+        num_planes = _auto_num_planes(
+            df.select(id_col).count(), auto_bucket_occupancy
+        )
     elif isinstance(num_planes, str):
         raise ValueError(
             f"embedding_near_dup_pairs: num_planes must be an int or 'auto', "
             f"got {num_planes!r}"
         )
-    if verify_impl == "auto":
-        if num_planes <= 0:
-            verify_impl = "expr"  # exact path: verify dispatch is moot
-        else:
-            if n_vectors is not None:
-                over = n_vectors > arrow_verify_threshold
-            else:
-                # the dispatch only needs "more than threshold rows?",
-                # never the exact count — LocalLimit plans a per-
-                # partition limit, so the probe scans at most
-                # (threshold+1) x num_partitions rows (bounded per
-                # partition by the threshold; still far cheaper than a
-                # full count — the full count was a whole-corpus pass
-                # at 100 TB; same bounded-probe rule as
-                # similarity_ivf's small_threshold gate). The verdict
-                # is memoized per (app, plan, threshold): both verify
-                # impls produce identical pairs (pytest-pinned), so
-                # the dispatch is performance-only and a memo hit can
-                # never change a result — it removes the one fixed
-                # probe job from every later call on the same plan in
-                # a driver loop (VERDICT r12 item 7).
-                key = (
-                    df.sparkSession.sparkContext.applicationId,
-                    df.semanticHash(),
-                    int(arrow_verify_threshold),
-                )
-                over = _VERIFY_DISPATCH_MEMO.get(key)
-                if over is None:
-                    over = (
-                        df.select(id_col).limit(arrow_verify_threshold + 1).count()
-                        > arrow_verify_threshold
-                    )
-                    if len(_VERIFY_DISPATCH_MEMO) >= _VERIFY_DISPATCH_MEMO_MAX:
-                        # dicts iterate in insertion order: evict the oldest
-                        del _VERIFY_DISPATCH_MEMO[next(iter(_VERIFY_DISPATCH_MEMO))]
-                    _VERIFY_DISPATCH_MEMO[key] = over
-            verify_impl = "arrow" if over else "expr"
-    elif verify_impl not in ("expr", "arrow"):
-        raise ValueError(
-            f"embedding_near_dup_pairs: verify_impl must be 'expr', 'arrow' "
-            f"or 'auto', got {verify_impl!r}"
-        )
     scaled = _normalized_vectors(df, vec_col, id_col)
-    dot = _dot(F.col("va"), F.col("vb"))
     if num_planes <= 0:
-        if exact_impl == "gemm":
-            return _exact_pairs_gemm(scaled, id_col, threshold, exact_tile_rows)
-        a = scaled.select(F.col(id_col).alias("id_a"), F.col("_sv").alias("va"))
-        b = scaled.select(F.col(id_col).alias("id_b"), F.col("_sv").alias("vb"))
-        pairs = a.join(b, F.col("id_a") < F.col("id_b"))
-        return pairs.select("id_a", "id_b", dot.alias("cosine")).filter(
-            F.col("cosine") >= threshold
-        )
+        return _exact_pairs_gemm(scaled, id_col, threshold)
     # Banded blocking: (id, band, sig) rows only — signatures on the RAW
     # vector (sign is scale-invariant; the oracle mirrors raw too).
     # Eagerly materialized: the self-join references this frame twice
@@ -387,17 +228,13 @@ def embedding_near_dup_pairs(
         bands_df.select(F.col(id_col), "band", "sig")
         if bands_df is not None
         else materialize(
-            embedding_band_state(
-                df, vec_col, id_col, num_planes, num_bands, dim, signature_impl
-            )
+            embedding_band_state(df, vec_col, id_col, num_planes, num_bands, dim)
         )
     )
     if max_bucket_size is not None:
         from .skew import drop_oversized_groups
 
         sigs = drop_oversized_groups(sigs, ["band", "sig"], max_bucket_size)
-    if verify_impl == "arrow":
-        return _bucket_verify_arrow(sigs, scaled, id_col, threshold)
     a = sigs.select(F.col(id_col).alias("id_a"), "band", "sig")
     b = sigs.select(F.col(id_col).alias("id_b"), "band", "sig")
     cand = (
@@ -409,6 +246,7 @@ def embedding_near_dup_pairs(
     va = scaled.select(F.col(id_col).alias("id_a"), F.col("_sv").alias("va"))
     vb = scaled.select(F.col(id_col).alias("id_b"), F.col("_sv").alias("vb"))
     pairs = cand.join(va, "id_a").join(vb, "id_b")
+    dot = _dot(F.col("va"), F.col("vb"))
     return pairs.select("id_a", "id_b", dot.alias("cosine")).filter(
         F.col("cosine") >= threshold
     )
@@ -423,34 +261,25 @@ def embedding_dedup(
     num_bands: int = 4,
     dim: int | None = None,
     transitive: bool = False,
-    signature_impl: str = "expr",
     score_col: str | None = None,
     descending: bool = True,
-    verify_impl: str = "auto",
     max_bucket_size: int | None = None,
     auto_bucket_occupancy: int = 64,
-    arrow_verify_threshold: int = 100_000,
     bands_df: "DataFrame | None" = None,
 ) -> DataFrame:
     """Drop the higher id of every near-duplicate embedding pair (or,
     with ``transitive=True``, keep one vector per single-link
     component; with ``score_col``, the best-scoring member of each
-    component). Banded-LSH blocked by default with the scale-safe
-    corpus-sized defaults (``num_planes='auto'``,
-    ``verify_impl='auto'`` — see embedding_near_dup_pairs);
-    ``num_planes=0`` opts into exact all-pairs for small frames.
-    ``signature_impl`` passes through to the blocking stage
-    (``'arrow'`` = the numpy-matmul scale path, see
-    banded_signatures); the scale knobs (``max_bucket_size``,
-    ``auto_bucket_occupancy``, ``arrow_verify_threshold``) pass
+    component). Banded-LSH blocked by default with the corpus-sized
+    ``num_planes='auto'`` (see embedding_near_dup_pairs);
+    ``num_planes=0`` opts into exact all-pairs for small frames. The
+    scale knobs (``max_bucket_size``, ``auto_bucket_occupancy``) pass
     through to the pair search, so the wrapper never has to be
     abandoned to reach them."""
     pairs = embedding_near_dup_pairs(
         df, vec_col, id_col, threshold, num_planes, num_bands, dim,
         max_bucket_size=max_bucket_size,
-        signature_impl=signature_impl, verify_impl=verify_impl,
         auto_bucket_occupancy=auto_bucket_occupancy,
-        arrow_verify_threshold=arrow_verify_threshold,
         bands_df=bands_df,
     )
     return _drop_pair_losers(
@@ -469,7 +298,6 @@ def semantic_dedup_pairs(
     id_col: str = "vec_id",
     threshold: float = 0.9,
     max_cluster_size: int | None = None,
-    pair_impl: str = "gemm",
 ) -> DataFrame:
     """SemDeDup-style near-dup pairs: assign every vector to its
     nearest centroid, then compare cosines ONLY within each cluster
@@ -494,13 +322,12 @@ def semantic_dedup_pairs(
     the wall-clock linear — see SCALE.md §6a). Zero-norm vectors have
     no cosine and are excluded up front.
 
-    ``pair_impl='gemm'`` (default) scores each cluster with one
-    chunked numpy matrix product inside ``applyInPandas`` — the
-    cluster IS the tile, Arrow-batched, memory bounded at
-    2048 x |cluster| per chunk. ``pair_impl='expr'`` keeps the
-    per-pair codegen fold (equi self-join on cluster_id) for
-    zero-Python environments.
+    Each cluster is scored with one chunked numpy matrix product inside
+    ``applyInPandas`` — the cluster IS the tile, Arrow-batched, memory
+    bounded at 2048 x |cluster| per chunk.
     """
+    import pandas as pd
+
     from .similarity import assign_nearest_centroid
     from .skew import drop_oversized_groups
 
@@ -510,57 +337,41 @@ def semantic_dedup_pairs(
     scaled = _normalized_vectors(df, vec_col, id_col).join(assigned, id_col)
     if max_cluster_size is not None:
         scaled = drop_oversized_groups(scaled, ["cluster_id"], max_cluster_size)
-    if pair_impl == "gemm":
-        import pandas as pd
+    id_type = dict(scaled.dtypes)[id_col]
+    cl_type = dict(scaled.dtypes)["cluster_id"]
+    out_schema = (
+        f"cluster_id {cl_type}, id_a {id_type}, id_b {id_type}, cosine double"
+    )
 
-        id_type = dict(scaled.dtypes)[id_col]
-        cl_type = dict(scaled.dtypes)["cluster_id"]
-        out_schema = (
-            f"cluster_id {cl_type}, id_a {id_type}, id_b {id_type}, cosine double"
-        )
+    def cluster_gemm(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        import numpy as np
 
-        def cluster_gemm(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            import numpy as np
-
-            v = np.vstack(pdf["_sv"].to_numpy())
-            ids = pdf[id_col].to_numpy()
-            cl = pdf["cluster_id"].iloc[0]
-            frames = []
-            for s in range(0, len(ids), 2048):
-                m = v[s : s + 2048] @ v.T
-                mask = (m >= threshold) & (ids[s : s + 2048, None] < ids[None, :])
-                r, c = np.nonzero(mask)
-                if len(r):
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "cluster_id": cl,
-                                "id_a": ids[s + r],
-                                "id_b": ids[c],
-                                "cosine": m[r, c],
-                            }
-                        )
+        v = np.vstack(pdf["_sv"].to_numpy())
+        ids = pdf[id_col].to_numpy()
+        cl = pdf["cluster_id"].iloc[0]
+        frames = []
+        for s in range(0, len(ids), 2048):
+            m = v[s : s + 2048] @ v.T
+            mask = (m >= threshold) & (ids[s : s + 2048, None] < ids[None, :])
+            r, c = np.nonzero(mask)
+            if len(r):
+                frames.append(
+                    pd.DataFrame(
+                        {
+                            "cluster_id": cl,
+                            "id_a": ids[s + r],
+                            "id_b": ids[c],
+                            "cosine": m[r, c],
+                        }
                     )
-            if not frames:
-                return pd.DataFrame(
-                    {"cluster_id": [], "id_a": [], "id_b": [], "cosine": []}
                 )
-            return pd.concat(frames, ignore_index=True)
+        if not frames:
+            return pd.DataFrame(
+                {"cluster_id": [], "id_a": [], "id_b": [], "cosine": []}
+            )
+        return pd.concat(frames, ignore_index=True)
 
-        return scaled.groupBy("cluster_id").applyInPandas(cluster_gemm, out_schema)
-    a = scaled.select(
-        F.col("cluster_id"), F.col(id_col).alias("id_a"), F.col("_sv").alias("va")
-    )
-    b = scaled.select(
-        F.col("cluster_id"), F.col(id_col).alias("id_b"), F.col("_sv").alias("vb")
-    )
-    dot = _dot(F.col("va"), F.col("vb"))
-    return (
-        a.join(b, "cluster_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("cluster_id", "id_a", "id_b", dot.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
+    return scaled.groupBy("cluster_id").applyInPandas(cluster_gemm, out_schema)
 
 
 def semantic_dedup(
@@ -572,7 +383,6 @@ def semantic_dedup(
     k: int | None = None,
     transitive: bool = False,
     max_cluster_size: int | None = 100_000,
-    pair_impl: str = "gemm",
     score_col: str | None = None,
     descending: bool = True,
     target_cluster_size: int = 1024,
@@ -615,7 +425,7 @@ def semantic_dedup(
             "cluster_id int, centroid array<double>",
         )
     pairs = semantic_dedup_pairs(
-        df, centroids, vec_col, id_col, threshold, max_cluster_size, pair_impl
+        df, centroids, vec_col, id_col, threshold, max_cluster_size
     )
     return _drop_pair_losers(
         df, pairs, id_col, transitive, score_col=score_col, descending=descending
@@ -653,7 +463,6 @@ def _cosine_index(
     num_planes: int = 12,
     num_bands: int = 4,
     dim: int | None = None,
-    signature_impl: str = "expr",
     threshold: float = 0.95,
 ) -> BandIndex:
     """The hyperplane/cosine :class:`~.band_index.BandIndex`: signs with
@@ -669,7 +478,7 @@ def _cosine_index(
         score="cosine",
         threshold=threshold,
         sign=lambda df: embedding_band_state(
-            df, vec_col, id_col, num_planes, num_bands, dim, signature_impl
+            df, vec_col, id_col, num_planes, num_bands, dim
         ),
         features=lambda df: _normalized_vectors(df, vec_col, id_col),
         similarity=_dot,
@@ -701,7 +510,6 @@ def embedding_band_state(
     num_planes: int = 12,
     num_bands: int = 4,
     dim: int | None = None,
-    signature_impl: str = "expr",
 ) -> DataFrame:
     """The persistable hyperplane-LSH index rows for an embedding
     corpus — (id, band, sig), one row per vector per band — the state
@@ -735,7 +543,6 @@ def embedding_band_state(
     return banded_signatures(
         df.filter(_norm_sq(F.col(vec_col)) > 0),
         vec_col, id_col, num_planes, num_bands, dim, id_col,
-        impl=signature_impl,
     )
 
 
@@ -749,7 +556,6 @@ def embedding_delta_pairs(
     num_planes: int = 12,
     num_bands: int = 4,
     dim: int | None = None,
-    signature_impl: str = "expr",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs between a NEW embedding batch and the PERSISTED
@@ -769,11 +575,11 @@ def embedding_delta_pairs(
     that point the real problem is plane count, not verify speed (see
     :func:`embedding_band_state` on re-indexing).
 
-    ``num_planes``/``num_bands``/``dim``/``signature_impl`` must match
+    ``num_planes``/``num_bands``/``dim`` must match
     the state's pinned store contract; the state rows are
     :func:`embedding_band_state` rows."""
     ix = _cosine_index(
-        vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
+        vec_col, id_col, num_planes, num_bands, dim, threshold
     )
     return ix.cross_pairs(ix.sign(batch), state, batch, corpus, max_bucket_size)
 
@@ -788,7 +594,6 @@ def embedding_dedup_delta(
     num_planes: int = 12,
     num_bands: int = 4,
     dim: int | None = None,
-    signature_impl: str = "expr",
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """One cycle of the incremental embedding dedup loop: the batch
@@ -803,5 +608,5 @@ def embedding_dedup_delta(
     (``num_bands`` rows per non-zero-norm survivor). Zero-norm vectors
     have no cosine to anyone and pass through as survivors."""
     return _cosine_index(
-        vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
+        vec_col, id_col, num_planes, num_bands, dim, threshold
     ).delta_survivors(batch, state, corpus, max_bucket_size)

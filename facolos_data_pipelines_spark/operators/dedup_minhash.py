@@ -154,69 +154,6 @@ def shingle_arrays(
     return sh.groupBy(id_col).agg(F.collect_set("_sh").alias("_shingles"))
 
 
-def minhash_signature(
-    shingles: Column, num_hashes: int = 32, family: str = "multiply_add"
-) -> Column:
-    """MinHash signature as a single column expression. Returns an
-    array of length num_hashes — array<long> for the multiply_add /
-    xxhash families, array<string> (32-char md5 hex) for the portable
-    md5 family; a persisted signature store must pin ONE family and
-    its schema.
-
-    ``family`` selects the hash family (see :data:`MINHASH_FAMILIES`);
-    the default ``multiply_add`` (lane i = min of
-    ``a_i * xxhash64(shingle) + b_i`` over Z/2^64) REQUIRES a non-ANSI
-    session — if the active session is known and has ANSI enabled this
-    raises at expression-build time rather than ArithmeticException at
-    run time; pass ``family='xxhash'`` on ANSI sessions. Never mix
-    signatures computed under different families.
-
-    NOTE: as a single column expression this inlines the shingle
-    computation ``num_hashes`` times (Catalyst's CollapseProject undoes
-    withColumn staging) — use :func:`minhash_signatures` for the
-    DataFrame path, which computes each shingle hash exactly once.
-    """
-    from pyspark.sql import SparkSession
-
-    _check_lanes(num_hashes)
-    active = SparkSession.getActiveSession()
-    # No active session -> the conf is unknowable; assume ANSI (strict),
-    # matching _ansi_enabled's fail-safe direction, so we never build a
-    # wrap-arithmetic expression that could throw at run time. Callers
-    # who know their session is non-ANSI can pass family explicitly
-    # after creating/activating the session.
-    ansi = active is None or active.conf.get("spark.sql.ansi.enabled") == "true"
-    family = _resolve_family(family, ansi)
-
-    if family == "md5":
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(
-                        shingles, lambda s, i=i: F.md5(F.concat(F.lit(f"{i}:"), s))
-                    )
-                )
-                for i in range(num_hashes)
-            ]
-        )
-    if family == "xxhash":
-        return F.array(
-            *[
-                F.array_min(F.transform(shingles, lambda s, i=i: F.xxhash64(s, F.lit(i))))
-                for i in range(num_hashes)
-            ]
-        )
-
-    def _mix(i: int):
-        a, b = F.lit(_MINHASH_A[i]), F.lit(_MINHASH_B[i])
-        return lambda h: h * a + b
-
-    base = F.transform(shingles, lambda s: F.xxhash64(s))
-    return F.array(
-        *[F.array_min(F.transform(base, _mix(i))) for i in range(num_hashes)]
-    )
-
-
 def minhash_signatures(
     df: DataFrame,
     text_col: str = "text",
@@ -230,7 +167,7 @@ def minhash_signatures(
     Shingles are assembled from exploded words with ``lead`` over a
     per-document window (codegen'd; measured 2x faster than the
     interpreted array-slice transform) and each shingle is hashed
-    ``num_hashes`` times exactly once (the column-expression variant
+    ``num_hashes`` times exactly once (a single column expression
     re-derives the shingle array per hash — a 100-1000x plan blowup).
     Duplicate shingles are NOT deduped — the min-aggregate makes them
     harmless and skipping the distinct saves a shuffle. The window and

@@ -2,10 +2,7 @@
 
 Brute-force cosine top-k as the exact baseline; random-hyperplane LSH
 bucketing as the scale path (search only the query's bucket ± probes).
-Dot products run JVM-side via zip_with/aggregate; a vectorized Pandas
-UDF variant is provided because at wide dims numpy's BLAS matmul beats
-per-element codegen — bench.py decides which one the headline query
-uses.
+Dot products run JVM-side via zip_with/aggregate.
 
 Scale design: brute-force top-k is a single narrow pass + a k-row
 TakeOrdered (no full sort, no shuffle of the corpus); LSH cuts the
@@ -22,10 +19,8 @@ from .similarity_core import (  # noqa: F401
     lit_double_array,
     hyperplane_signature,
     banded_signatures,
-    _banded_signatures_arrow,
     cosine_to_query,
     topk_bruteforce,
-    topk_bruteforce_pandas,
     topk_lsh,
     rrf_fuse,
 )

@@ -1,5 +1,5 @@
 """Hyperplane-LSH primitives and exact similarity search: seeded plane
-family, banded signatures (expr + arrow twins), brute-force cosine
+family, banded signatures, brute-force cosine
 top-k, multi-probe LSH top-k, and reciprocal-rank fusion. Split from
 similarity.py along family lines; operators.similarity re-exports the
 surface."""
@@ -8,7 +8,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def _seeded_plane(dim: int, plane_idx: int) -> list[float]:
@@ -171,7 +170,6 @@ def banded_signatures(
     num_bands: int = 4,
     dim: int | None = None,
     out_id: str = "id",
-    impl: str = "expr",
 ) -> DataFrame:
     """(out_id, band, sig) rows: one banded hyperplane-LSH signature per
     band, plane family disjoint across bands (plane index =
@@ -179,31 +177,11 @@ def banded_signatures(
     embedding near-dup and the LSH k-NN join — only (id, band, sig)
     rows ever shuffle.
 
-    ``impl`` selects how the num_bands*num_planes plane dots are
-    computed per row:
-
-    - ``"expr"`` (default): JVM zip_with/aggregate folds — interpreted
-      per element, but the summation order is bit-identical to the
-      DuckDB oracle's ``list_sum``, so this is the CERTIFIED plan.
-    - ``"arrow"``: one numpy matmul per Arrow batch (mapInPandas) —
-      measured ~10x faster on the signature stage at sf1 and the
-      production scale path for wide dims. The sign of a dot can
-      differ from the fold's for |dot| within float ulp of 0 (summation
-      order), flipping that vector's bucket in one band: near-dup
-      RECALL is unaffected in practice (near-orthogonal planes carry
-      no signal about near-identical pairs) but cross-engine signature
-      equality is no longer bit-guaranteed — keep ``"expr"`` wherever
-      an external system must reproduce the buckets.
-
-    Both impls enforce the same loud width contract: a vector whose
+    The plane dots are JVM zip_with/aggregate folds whose summation
+    order is bit-identical to the DuckDB oracle's ``list_sum``, so any
+    external engine reproduces the buckets exactly. A vector whose
     width differs from ``dim`` raises rather than silently collapsing
     the blocking into one bucket."""
-    if impl == "arrow":
-        return _banded_signatures_arrow(
-            df, vec_col, id_col, num_planes, num_bands, dim, out_id
-        )
-    if impl != "expr":
-        raise ValueError(f"banded_signatures: impl={impl!r}; expected 'expr' or 'arrow'")
     # vec_col passed as its NAME: each band's whole signature builds as
     # one parsed SQL expression (see hyperplane_signature) — the py4j
     # round-trip count per plan build drops from ~num_bands*num_planes*
@@ -223,79 +201,6 @@ def banded_signatures(
     return df.select(F.col(id_col).alias(out_id), F.explode(arr).alias("_bs")).select(
         out_id, F.col("_bs.band").alias("band"), F.col("_bs.sig").alias("sig")
     )
-
-
-def _banded_signatures_arrow(
-    df: DataFrame,
-    vec_col: str,
-    id_col: str,
-    num_planes: int,
-    num_bands: int,
-    dim: int | None,
-    out_id: str,
-) -> DataFrame:
-    """Arrow/numpy twin of the expression signatures: per Arrow batch,
-    one (rows x dim) @ (dim x bands*planes) matmul computes every
-    plane dot, signs pack into per-band longs. Only (id, band, sig)
-    rows leave Python. Closure binds numpy-level state by value
-    (cloudpickle), no package import on executors."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    d = dim or 64
-    planes = np.stack(
-        [
-            np.asarray(_seeded_plane(d, band * num_planes + i))
-            for band in range(num_bands)
-            for i in range(num_planes)
-        ],
-        axis=1,
-    )  # (dim, bands*planes)
-    bits = np.asarray(
-        [1 << i for _ in range(num_bands) for i in range(num_planes)],
-        dtype=np.int64,
-    )
-    band_idx = np.asarray(
-        [b for b in range(num_bands) for _ in range(num_planes)], dtype=np.int64
-    )
-    nb = num_bands
-
-    schema = T.StructType(
-        [
-            T.StructField(out_id, T.LongType()),
-            T.StructField("band", T.IntegerType()),
-            T.StructField("sig", T.LongType()),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            widths = pdf[vec_col].map(len).to_numpy()
-            if (widths != d).any():
-                bad = int(widths[widths != d][0])
-                raise ValueError(
-                    f"banded_signatures: vector width {bad} != dim {d}; "
-                    "pass the embedding's real dimension"
-                )
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            dots = mat @ planes  # (rows, bands*planes)
-            contrib = np.where(dots > 0, bits, 0)  # (rows, bands*planes)
-            sigs = np.zeros((len(pdf), nb), dtype=np.int64)
-            for b in range(nb):
-                sigs[:, b] = contrib[:, band_idx == b].sum(axis=1)
-            ids = np.repeat(pdf[id_col].to_numpy(), nb)
-            yield pd.DataFrame(
-                {
-                    out_id: ids,
-                    "band": np.tile(np.arange(nb, dtype=np.int32), len(pdf)),
-                    "sig": sigs.reshape(-1),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(vec_col)).mapInPandas(run, schema)
 
 
 def cosine_to_query(vec_col: Column, query: list[float]) -> Column:
@@ -333,48 +238,6 @@ def topk_bruteforce(
         F.col(id_col), cosine_to_query(F.col(vec_col), query).alias("cosine")
     ).filter(F.col("cosine").isNotNull())
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
-
-
-def topk_bruteforce_pandas(
-    df: DataFrame,
-    query: list[float],
-    k: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Arrow-batched numpy variant: per-batch matmul + local top-k, then
-    global top-k of the per-batch survivors. ~BLAS speed per batch;
-    only k rows per batch leave Python."""
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query, dtype=np.float64)
-    qn = np.linalg.norm(q)
-    if qn == 0.0:
-        raise ValueError("query vector has zero norm; cosine is undefined")
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        for pdf in batches:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            # zero-norm rows have no defined cosine — exclude them (the
-            # SQL twin cosine_to_query returns NULL for the same rows)
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(norms > 0, (mat @ q) / (norms * qn), -np.inf)
-            top = np.argsort(-cos)[:k]
-            keep = top[np.isfinite(cos[top])]
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy()[keep], "cosine": cos[keep]}
-            )
-
-    survivors = df.select(id_col, vec_col).mapInPandas(score, schema)
-    return survivors.orderBy(F.col("cosine").desc(), F.col(id_col).asc()).limit(k)
 
 
 def topk_lsh(

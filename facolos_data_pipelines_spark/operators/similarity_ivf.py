@@ -304,7 +304,6 @@ def knn_join_lsh(
     num_bands: int = 4,
     dim: int | None = None,
     max_bucket_size: int | None = None,
-    signature_impl: str = "expr",
 ) -> DataFrame:
     """Approximate k-NN join for LARGE query sides — the scale twin of
     :func:`knn_join_bruteforce`.
@@ -326,9 +325,9 @@ def knn_join_lsh(
     from .dedup import cosine_similarity
 
     qs = banded_signatures(queries, q_vec, q_id, num_planes, num_bands, dim,
-                           "query_id", impl=signature_impl)
+                           "query_id")
     cs = banded_signatures(corpus, c_vec, c_id, num_planes, num_bands, dim,
-                           "neighbor_id", impl=signature_impl)
+                           "neighbor_id")
     if max_bucket_size is not None:
         # Degenerate hot buckets (e.g. many near-zero vectors all
         # landing on sig=0) would make the candidate join quadratic —

@@ -146,11 +146,8 @@ def pca_project(
     codegen projection, no UDF, no shuffle, the plan shape that runs
     over 100 TB). Output is ``array<double>`` of ``n_components``.
 
-    For very wide (dim x components) products where the expression tree
-    gets large, batch through the Arrow scorer instead (the
-    :func:`topk_bruteforce_pandas` pattern); at the typical reduction
-    shapes (<=1024 in, <=128 out) the expression form stays inside
-    codegen limits.
+    At the typical reduction shapes (<=1024 in, <=128 out) the
+    expression form stays inside codegen limits.
     """
     comps = model["components"]
     mean = model.get("mean") or [0.0] * len(comps[0])

@@ -211,7 +211,6 @@ def char_entropy(
     id_col: str = "doc_id",
     max_chars: int = 20_000,
     round_digits: int = 4,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Per-document Shannon entropy of the character distribution, in
     bits — the cheap randomness probe that separates natural prose
@@ -230,90 +229,49 @@ def char_entropy(
     and the oracle twin truncates identically). Empty/NULL text scores
     entropy 0 with n_chars 0.
 
-    Both impls are shuffle-free and row-parallel; they differ only in
-    the per-row engine (same ``signature_impl`` convention as
-    operators.dedup's minhash):
-
-    - ``'arrow'`` (default, the 100 TB path): one ``mapInPandas`` pass,
-      numpy codepoint bincount per doc — ~10 ns/char, O(len) per row.
-      Measured ~9x faster than the expression path at sf0.1.
-    - ``'expr'`` (the portable twin): pure higher-order functions
-      (distinct chars -> count-per-char via filter/size -> entropy
-      fold), zero Python, O(distinct * len) Catalyst element evals per
-      row (~µs each — the constant factor that loses at corpus scale).
-      This is the formulation the DuckDB oracle reproduces verbatim.
-
-    Values agree after rounding: each doc's float sum differs only in
-    summation order (numpy sums in codepoint order, the expression
-    fold in first-appearance order, DuckDB in its list order) — ~1e-15
-    noise the shared half-ulp nudge + round-4 convention absorbs.
+    One shuffle-free ``mapInPandas`` pass, numpy codepoint bincount per
+    doc — ~10 ns/char, O(len) per row. Each doc's float sum runs in
+    codepoint order (DuckDB sums in its list order): ~1e-15 noise the
+    half-ulp nudge + ``round_digits`` rounding absorbs.
     """
-    if impl not in ("arrow", "expr"):
-        raise ValueError(f"char_entropy: impl={impl!r}; expected 'arrow' or 'expr'")
-    if impl == "arrow":
-        id_type = df.schema[id_col].dataType.simpleString()
-        schema = (
-            f"{id_col} {id_type}, n_chars long, n_distinct_chars long, "
-            "entropy double"
-        )
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = (
+        f"{id_col} {id_type}, n_chars long, n_distinct_chars long, "
+        "entropy double"
+    )
 
-        def run(batches):
-            import numpy as np
-            import pandas as pd
+    def run(batches):
+        import numpy as np
+        import pandas as pd
 
-            for pdf in batches:
-                ids, nch, ndc, ent = [], [], [], []
-                for i, t in zip(pdf[id_col], pdf[text_col]):
-                    s = ("" if t is None else str(t))[:max_chars]
-                    ids.append(i)
-                    if not s:
-                        nch.append(0)
-                        ndc.append(0)
-                        ent.append(0.0)
-                        continue
-                    codes = np.frombuffer(
-                        s.encode("utf-32-le"), dtype=np.uint32
-                    )
-                    counts = np.unique(codes, return_counts=True)[1]
-                    p = counts / counts.sum()
-                    nch.append(len(codes))
-                    ndc.append(len(counts))
-                    ent.append(
-                        round(float(-(p * np.log2(p)).sum()) + 1e-9, round_digits)
-                    )
-                yield pd.DataFrame(
-                    {
-                        id_col: ids,
-                        "n_chars": nch,
-                        "n_distinct_chars": ndc,
-                        "entropy": ent,
-                    }
+        for pdf in batches:
+            ids, nch, ndc, ent = [], [], [], []
+            for i, t in zip(pdf[id_col], pdf[text_col]):
+                s = ("" if t is None else str(t))[:max_chars]
+                ids.append(i)
+                if not s:
+                    nch.append(0)
+                    ndc.append(0)
+                    ent.append(0.0)
+                    continue
+                codes = np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32)
+                counts = np.unique(codes, return_counts=True)[1]
+                p = counts / counts.sum()
+                nch.append(len(codes))
+                ndc.append(len(counts))
+                ent.append(
+                    round(float(-(p * np.log2(p)).sum()) + 1e-9, round_digits)
                 )
+            yield pd.DataFrame(
+                {
+                    id_col: ids,
+                    "n_chars": nch,
+                    "n_distinct_chars": ndc,
+                    "entropy": ent,
+                }
+            )
 
-        return df.select(F.col(id_col), F.col(text_col)).mapInPandas(run, schema)
-    chars = F.filter(
-        F.split(F.substring(F.coalesce(F.col(text_col), F.lit("")), 1, max_chars), ""),
-        lambda x: x != "",
-    )
-    n = F.size(chars)
-    distinct = F.array_distinct(chars)
-    counts = F.transform(
-        distinct, lambda c: F.size(F.filter(chars, lambda x: x == c))
-    )
-    nd = n.cast("double")
-    entropy = -F.aggregate(
-        counts,
-        F.lit(0.0),
-        lambda acc, k: acc + (k / nd) * F.log2(k / nd),
-    )
-    return df.select(
-        F.col(id_col),
-        n.cast("long").alias("n_chars"),
-        F.size(distinct).cast("long").alias("n_distinct_chars"),
-        F.when(n > 0, F.round(entropy + 1e-9, round_digits))
-        .otherwise(F.lit(0.0))
-        .alias("entropy"),
-    )
+    return df.select(F.col(id_col), F.col(text_col)).mapInPandas(run, schema)
 
 
 def compression_ratio(

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..eager import materialize_counted
+from ..eager import materialize, materialize_counted
 from ..session import local_frame
 
 
@@ -1162,13 +1162,13 @@ def rebin_hist_state(
     state was written; either way the seam must move or the fact must
     be repaired before the transition is trustworthy). The check
     compares day-total aggregates (days x 1 rows, broadcast-tiny),
-    and the returned rows come back PERSISTED in this mode: the
-    check's collect already executed the rescan, so caching the
-    days x bins result (tiny) means the caller's materialization —
-    the store write, the stitched read — reuses it instead of
-    rescanning the slice a second time (the rescan is the
+    and the returned rows come back checkpointed in this mode
+    (:func:`~..eager.materialize`): the days x bins result (tiny) is
+    executed once, so the check's collect and the caller's
+    materialization — the store write, the stitched read — reuse it
+    instead of rescanning the slice a second time (the rescan is the
     transition's one data-sized term; measured in SCALE.md §6i
-    addendum).
+    addendum). Nothing is left in the session's cache.
 
     Reference anchor: the alert→recovery pairing of the monitor
     contract (production_monitor.py:84-125 pairs every threshold with
@@ -1183,10 +1183,10 @@ def rebin_hist_state(
     sliced = fact.filter(F.to_date(F.col(ts_col)) >= start)
     new_rows = hist_state(sliced, ts_col, col, new_edges)
     if old_state is not None:
-        # cache the (tiny) days x bins result before the check's
-        # collect executes it, so the caller's own materialization
-        # reuses this execution instead of paying the rescan twice
-        new_rows = new_rows.persist()
+        # materialize the (tiny) days x bins result before the check's
+        # collect reads it, so the caller's own materialization reuses
+        # this execution instead of paying the rescan twice
+        new_rows = materialize(new_rows)
         # LEFT join from the OLD side: a day the old state recorded but
         # the rescan produced nothing for (retention already deleted
         # it) is the worst violation, and an inner join would silently

@@ -421,7 +421,6 @@ def embedding_near_dup_sink(
     num_planes: int = 12,
     num_bands: int = 4,
     dim: int | None = None,
-    signature_impl: str = "expr",
     store_partitions: int = 16,
 ):
     """foreachBatch factory: streaming EMBEDDING ingestion with
@@ -488,7 +487,7 @@ def embedding_near_dup_sink(
             "life; size it for the TARGET corpus"
         )
     index = _cosine_index(
-        vec_col, id_col, num_planes, num_bands, dim, signature_impl, threshold
+        vec_col, id_col, num_planes, num_bands, dim, threshold
     )
 
     def admit(batch_df: DataFrame) -> DataFrame:
@@ -520,7 +519,7 @@ def embedding_near_dup_sink(
     def sweep(batch: DataFrame, band_rows: DataFrame) -> DataFrame:
         return embedding_dedup(
             batch, vec_col, id_col, threshold, num_planes, num_bands, dim,
-            signature_impl=signature_impl, bands_df=band_rows,
+            bands_df=band_rows,
         )
 
     return BandStore(band_store_path, index, store_partitions).sink(

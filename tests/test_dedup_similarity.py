@@ -152,26 +152,6 @@ def test_ansi_guard_reads_the_effective_value(spark, docs):
         spark.conf.set(key, before)
 
 
-def test_minhash_signature_column_api_ansi_rejects(spark, docs):
-    """The column API checks the active session's ANSI flag at
-    expression-build time and rejects multiply_add with a clear error;
-    xxhash builds and runs."""
-    from pyspark.sql import functions as F
-
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    try:
-        with pytest.raises(ValueError, match="ANSI"):
-            dedup.minhash_signature(dedup.word_shingles("text"), num_hashes=4)
-        out = docs.select(
-            dedup.minhash_signature(
-                dedup.word_shingles("text"), num_hashes=4, family="xxhash"
-            ).alias("sig")
-        ).first()
-        assert len(out["sig"]) == 4
-    finally:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-
-
 def test_lsh_bucket_cap_drops_hot_buckets(spark):
     """With every doc identical, all 8 band buckets have size 5; a cap
     of 4 removes them all (no candidate pairs), while uncapped LSH
@@ -290,11 +270,6 @@ def test_embedding_dedup_and_topk(spark):
     assert [r["vec_id"] for r in top] == [1, 2]
     assert top[0]["cosine"] == pytest.approx(1.0)
 
-    # pandas variant agrees with the JVM-side expression variant
-    top_pd = similarity.topk_bruteforce_pandas(emb, [1.0, 0.0, 0.0, 0.0], k=2).collect()
-    assert [r["vec_id"] for r in top_pd] == [1, 2]
-    assert top_pd[0]["cosine"] == pytest.approx(top[0]["cosine"])
-
 
 def test_zero_norm_vectors_never_pair_or_top_rank(spark):
     """Zero vectors have no defined cosine: they must be explicitly
@@ -326,19 +301,13 @@ def test_zero_norm_vectors_never_pair_or_top_rank(spark):
     ).first()
     assert null_pair["c"] is None
 
-    # both variants must exclude undefined-cosine rows for the SAME k:
-    # k=3 exceeds the number of nonzero-norm rows, so both return 2 rows
+    # undefined-cosine rows are excluded: k=3 exceeds the number of
+    # nonzero-norm rows, so top-k returns 2 rows
     top = similarity.topk_bruteforce(emb, [1.0, 0.0], k=3).collect()
     assert [r["vec_id"] for r in top] == [1, 2]  # zero row excluded
-    top_pd = similarity.topk_bruteforce_pandas(emb, [1.0, 0.0], k=3).collect()
-    assert [(r["vec_id"], pytest.approx(r["cosine"])) for r in top_pd] == [
-        (r["vec_id"], r["cosine"]) for r in top
-    ]
 
     with pytest.raises(ValueError, match="zero norm"):
         similarity.topk_bruteforce(emb, [0.0, 0.0], k=1)
-    with pytest.raises(ValueError, match="zero norm"):
-        similarity.topk_bruteforce_pandas(emb, [0.0, 0.0], k=1)
 
 
 def test_embedding_near_dup_blocked_default_is_subset_of_exact(spark, sf_dir):
@@ -375,39 +344,77 @@ def test_embedding_near_dup_blocked_default_is_subset_of_exact(spark, sf_dir):
 
 
 def test_exact_pair_gemm_matches_expr(spark, sf_dir):
-    """The tiled-GEMM exact path must reproduce the per-pair expression
-    fold bit-for-bit at 6 decimals — including with a tile size small
-    enough to force a multi-tile grid, which exercises the cross-tile
-    single-emit (min-id-first) logic, and on the per-cluster GEMM twin
-    used by semantic_dedup."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    """The tiled-GEMM exact path must reproduce a numpy all-pairs
+    reference at 6 decimals — including with a tile size small enough
+    to force a multi-tile grid, which exercises the cross-tile
+    single-emit (min-id-first) logic — and so must the per-cluster
+    GEMM used by semantic_dedup, against the same reference restricted
+    to same-cluster pairs."""
+    import numpy as np
 
-    def keyset(df):
-        return {(r["id_a"], r["id_b"], round(r["cosine"], 6)) for r in df.collect()}
-
-    expr = keyset(
-        dedup.embedding_near_dup_pairs(emb, threshold=0.4, num_planes=0, exact_impl="expr")
+    from facolos_data_pipelines_spark.operators.dedup_embedding import (
+        _normalized_vectors,
     )
-    assert expr  # threshold low enough that pairs exist
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    rows = sorted(
+        (r["vec_id"], r["embedding"]) for r in emb.collect()
+        if any(x != 0 for x in r["embedding"])
+    )
+    ids = np.array([i for i, _ in rows])
+    mat = np.array([v for _, v in rows], dtype=np.float64)
+    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
+    sims = mat @ mat.T
+
+    def reference(threshold, same_group=None):
+        ii, jj = np.triu_indices(len(ids), k=1)
+        keep = sims[ii, jj] >= threshold
+        if same_group is not None:
+            keep &= same_group[ii] == same_group[jj]
+        return {
+            (int(ids[i]), int(ids[j])): float(sims[i, j])
+            for i, j in zip(ii[keep], jj[keep])
+        }
+
+    def check(got, ref, threshold):
+        # a pair within float noise of the threshold may land either
+        # side of it; every other pair must match with its cosine
+        edge = lambda p: abs(p[1] - threshold) < 1e-9  # noqa: E731
+        assert {k for k, c in got.items() if not edge((k, c))} == {
+            k for k, c in ref.items() if not edge((k, c))
+        }
+        for k, c in got.items():
+            assert round(c, 6) == round(ref.get(k, c), 6)
+
+    ref = reference(0.4)
+    assert ref  # threshold low enough that pairs exist
+    scaled = _normalized_vectors(emb, "embedding", "vec_id")
     for tile_rows in (2048, 7):  # single-tile and many-tile grids
-        gemm = keyset(
-            dedup.embedding_near_dup_pairs(
-                emb, threshold=0.4, num_planes=0, exact_impl="gemm",
-                exact_tile_rows=tile_rows,
-            )
-        )
-        assert gemm == expr
+        got = {
+            (r["id_a"], r["id_b"]): r["cosine"]
+            for r in dedup._exact_pairs_gemm(scaled, "vec_id", 0.4, tile_rows).collect()
+        }
+        check(got, ref, 0.4)
+    default = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in dedup.embedding_near_dup_pairs(emb, threshold=0.4, num_planes=0).collect()
+    }
+    check(default, ref, 0.4)
 
     cents = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("cluster_id"), F.col("embedding").alias("centroid")
     )
-    sem_expr = keyset(
-        dedup.semantic_dedup_pairs(emb, cents, threshold=0.3, pair_impl="expr")
-    )
-    sem_gemm = keyset(
-        dedup.semantic_dedup_pairs(emb, cents, threshold=0.3, pair_impl="gemm")
-    )
-    assert sem_expr and sem_gemm == sem_expr
+    cluster = {
+        r["vec_id"]: r["cluster_id"]
+        for r in similarity.assign_nearest_centroid(emb, cents).collect()
+    }
+    sem = {
+        (r["id_a"], r["id_b"]): r["cosine"]
+        for r in dedup.semantic_dedup_pairs(emb, cents, threshold=0.3).collect()
+    }
+    sem_ref = reference(0.3, np.array([cluster[int(i)] for i in ids]))
+    assert sem_ref
+    check(sem, sem_ref, 0.3)
 
 
 def test_hash_split_and_sample_per_group(spark, sf_dir):
@@ -766,38 +773,12 @@ def test_repetition_stats_flags_repeated_content(spark):
     assert out[4]["dup_line_frac"] is None and out[4]["top_bigram_frac"] is None
 
 
-def test_arrow_signatures_match_expr_and_near_dups_agree(spark, sf_dir):
-    """The Arrow/numpy signature impl must bucket identically to the
-    certified expression impl on real data (sign flips need |dot|
-    within float ulp of 0 — vanishingly rare off adversarial inputs),
-    and the blocked near-dup result must be identical end-to-end."""
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    expr_sigs = sorted(
-        map(tuple, similarity.banded_signatures(
-            emb, "embedding", "vec_id", 6, 4, 64, "id").collect())
-    )
-    arrow_sigs = sorted(
-        map(tuple, similarity.banded_signatures(
-            emb, "embedding", "vec_id", 6, 4, 64, "id", impl="arrow").collect())
-    )
-    assert expr_sigs == arrow_sigs
-
-    base = sorted(map(tuple, dedup.embedding_near_dup_pairs(
-        emb, threshold=0.4, dim=64).collect()))
-    fast = sorted(map(tuple, dedup.embedding_near_dup_pairs(
-        emb, threshold=0.4, dim=64, signature_impl="arrow").collect()))
-    assert [p[:2] for p in base] == [p[:2] for p in fast]
-
-    with pytest.raises(ValueError, match="impl='nope'"):
-        similarity.banded_signatures(emb, "embedding", "vec_id", impl="nope")
-
-
 def test_arrow_signatures_loud_on_width_mismatch(spark):
+    """Banded signatures raise on a vector whose width differs from
+    ``dim`` instead of collapsing the blocking into one bucket."""
     emb = spark.createDataFrame([(1, [1.0, 2.0])], ["vec_id", "embedding"])
     with pytest.raises(Exception, match="vector width 2"):
-        similarity.banded_signatures(
-            emb, "embedding", "vec_id", impl="arrow"
-        ).collect()
+        similarity.banded_signatures(emb, "embedding", "vec_id").collect()
 
 
 def test_pq_roundtrip_recall_and_geometry(spark, sf_dir):
@@ -1254,48 +1235,14 @@ def test_auto_num_planes_scaling(spark):
         embedding_near_dup_pairs(df, num_planes="bogus", dim=8)
 
 
-def test_bucket_verify_arrow_matches_expr(spark):
-    """verify_impl='arrow' (bucket-local GEMM) finds the SAME pair set
-    as the certified expr-join plan, with cosines equal to 4dp (BLAS
-    summation order may differ in the last ulp — the oracle rounding
-    convention absorbs it)."""
-    import pytest
-
-    from facolos_data_pipelines_spark.operators.dedup import embedding_near_dup_pairs
-
-    rows = [
-        (i, [float(((i // 4) * 11 + j * 5) % 17 - 8) + 0.01 * (i % 4) for j in range(8)])
-        for i in range(64)
-    ]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    expr = {
-        (r["id_a"], r["id_b"]): round(r["cosine"], 4)
-        for r in embedding_near_dup_pairs(
-            df, threshold=0.6, num_planes=4, num_bands=3, dim=8
-        ).collect()
-    }
-    arrow = {
-        (r["id_a"], r["id_b"]): round(r["cosine"], 4)
-        for r in embedding_near_dup_pairs(
-            df, threshold=0.6, num_planes=4, num_bands=3, dim=8, verify_impl="arrow"
-        ).collect()
-    }
-    assert expr, "fixture must produce pairs"
-    assert arrow == expr
-
-    with pytest.raises(ValueError, match="verify_impl"):
-        embedding_near_dup_pairs(df, dim=8, verify_impl="bogus")
-
-
 def test_embedding_near_dup_defaults_are_scale_safe(spark):
     """Round-8 contract: the SHIPPED DEFAULTS are the scale-safe config.
     num_planes defaults to 'auto' (>= 12 planes at 200k vectors — the
-    fixed 6-plane default was measured dying quadratically at 2M), and
-    verify_impl defaults to 'auto' (size-dispatched to the bucket-GEMM
-    arrow path past arrow_verify_threshold). At oracle scale the default
-    path must emit the SAME pair set as the previously-pinned
-    6-plane/4-band/expr config (which the certified queries still pin
-    explicitly) — tested on the real sf0.01 embeddings table."""
+    fixed 6-plane default was measured dying quadratically at 2M). At
+    oracle scale the default path must emit the SAME pair set as the
+    previously-pinned 6-plane/4-band config (which the certified
+    queries still pin explicitly) — tested on the real sf0.01
+    embeddings table."""
     import inspect
     import os
 
@@ -1309,7 +1256,6 @@ def test_embedding_near_dup_defaults_are_scale_safe(spark):
     # the shipped defaults ARE auto
     sig = inspect.signature(embedding_near_dup_pairs)
     assert sig.parameters["num_planes"].default == "auto"
-    assert sig.parameters["verify_impl"].default == "auto"
     # auto scales the signature with the corpus: >= 12 planes at 200k
     assert _auto_num_planes(200_000) >= 12
 
@@ -1324,29 +1270,24 @@ def test_embedding_near_dup_defaults_are_scale_safe(spark):
             for r in embedding_near_dup_pairs(emb, threshold=0.4, **kw).collect()
         }
 
-    pinned = pairset(num_planes=6, num_bands=4, verify_impl="expr")
+    pinned = pairset(num_planes=6, num_bands=4)
     defaults = pairset()
     assert pinned, "sf0.01 fixture must produce pairs"
     assert defaults == pinned
-    # force the arrow dispatch (500 rows > threshold=10): same pair set
-    arrow_dispatched = pairset(arrow_verify_threshold=10)
-    assert arrow_dispatched == pinned
 
 
 def test_bucket_verify_arrow_never_emits_self_pairs(spark):
     """Duplicate ids sharing a bucket must not produce id_a == id_b
-    rows — the expr path's strict id_a < id_b drops them, and the
-    arrow path must match."""
+    rows — the verify join's strict id_a < id_b drops them."""
     from facolos_data_pipelines_spark.operators.dedup import embedding_near_dup_pairs
 
     v = [1.0, 0.5, -0.25, 0.125]
     rows = [(7, v), (7, v), (8, [-x for x in v])]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    for impl in ("expr", "arrow"):
-        pairs = embedding_near_dup_pairs(
-            df, threshold=0.9, num_planes=4, num_bands=2, dim=4, verify_impl=impl
-        ).collect()
-        assert all(r["id_a"] != r["id_b"] for r in pairs), (impl, pairs)
+    pairs = embedding_near_dup_pairs(
+        df, threshold=0.9, num_planes=4, num_bands=2, dim=4
+    ).collect()
+    assert all(r["id_a"] != r["id_b"] for r in pairs), pairs
 
 
 def test_ngram_containment_pairs_catches_quoted_doc(spark):
@@ -1844,7 +1785,7 @@ def test_embedding_delta_pairs_equal_union_recompute(spark):
             (r["id_a"], r["id_b"]) if r["id_b"] not in batch_ids else (r["id_b"], r["id_a"])
         ) + (round(r["cosine"], 6),)
         for r in embedding_near_dup_pairs(
-            union, threshold=0.95, verify_impl="expr", **kw
+            union, threshold=0.95, **kw
         ).collect()
         if (r["id_a"] in batch_ids) != (r["id_b"] in batch_ids)
     )
@@ -1904,24 +1845,3 @@ def test_embedding_delta_multi_cycle_loop(spark, tmp_path):
         )
     assert {r["vec_id"] for r in accepted.collect()} == {1, 2, 4, 7}
     assert spark.read.parquet(store).count() == 4 * accepted.count()
-
-
-def test_verify_dispatch_memo_evicts_oldest(spark, monkeypatch):
-    """Past its cap the verify_impl='auto' memo drops its oldest entry,
-    not the whole memo: the newest verdicts survive."""
-    from facolos_data_pipelines_spark.operators import dedup_embedding
-
-    monkeypatch.setattr(dedup_embedding, "_VERIFY_DISPATCH_MEMO", {})
-    monkeypatch.setattr(dedup_embedding, "_VERIFY_DISPATCH_MEMO_MAX", 3)
-    df = spark.createDataFrame(
-        [(i, [float(i % 3), 1.0, -0.5, 0.25]) for i in range(8)],
-        "vec_id long, embedding array<float>",
-    )
-    thresholds = [2, 4, 6, 8, 10]
-    for t in thresholds:
-        dedup_embedding.embedding_near_dup_pairs(
-            df, num_planes=4, num_bands=2, dim=4, arrow_verify_threshold=t
-        )
-    memo = dedup_embedding._VERIFY_DISPATCH_MEMO
-    assert [k[2] for k in memo] == thresholds[-3:]
-    assert list(memo.values()) == [8 > t for t in thresholds[-3:]]

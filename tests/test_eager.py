@@ -4,6 +4,8 @@ package goes through ``facolos_data_pipelines_spark.eager``."""
 import ast
 import pathlib
 
+import pytest
+
 import facolos_data_pipelines_spark
 
 PACKAGE = pathlib.Path(facolos_data_pipelines_spark.__file__).parent
@@ -77,3 +79,19 @@ def test_materialize_counted_counts_and_keeps_session_serializable(spark):
         assembled
     )
     assert len(model.transform(assembled).select("probability").collect()) == 20
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["hist_edges_drift", "hist_percentiles", "hist_rebin_stitch", "hist_percentiles_daily"],
+)
+def test_hist_builders_leave_no_cached_frame(spark, sf_dir, name):
+    """The histogram-state queries materialize their state through the
+    eager module instead of ``.persist()``, so nothing stays in the
+    session's cache after the query has been built and collected."""
+    from __spark_entry__ import queries
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert queries()[name](spark, sf_dir).collect()
+    assert cache.isEmpty()

@@ -1,7 +1,9 @@
 """Structural guards: the band-store layout and the dynamic partition
-overwrite are each written in one module, and every document the code
-cites exists."""
+overwrite are each written in one module, every document the code
+cites exists, and no operator grows a second implementation behind a
+selector parameter."""
 
+import ast
 import pathlib
 import re
 import subprocess
@@ -50,3 +52,23 @@ def test_cited_docs_exist():
     }
     assert cited
     assert sorted(c for c in cited if c[1] not in tracked) == []
+
+
+def test_no_impl_selector_params():
+    """Each stage has one kernel: no function in the package takes a
+    parameter named ``impl`` or ``arrow_verify_threshold``, or one
+    ending in ``_impl``."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+                continue
+            a = node.args
+            for arg in [*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg]:
+                if arg is not None and (
+                    arg.arg == "impl"
+                    or arg.arg.endswith("_impl")
+                    or arg.arg == "arrow_verify_threshold"
+                ):
+                    offenders.append(f"{path.relative_to(PACKAGE)}:{node.lineno} {arg.arg}")
+    assert offenders == []
