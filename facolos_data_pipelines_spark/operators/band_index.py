@@ -51,10 +51,10 @@ class BandIndex:
       re-indexed into a new store, never reinterpreted. A store
       directory holding only its manifest reads as empty.
     - Sign once: a batch is signed once and its band rows are
-      materialized (persisted in the delta operators, checkpointed in
-      the sinks); the in-batch sweep, the history probe and the store
-      write all select from them. A document's band rows do not depend
-      on which frame selects them, so every consumer sees the same rows.
+      checkpointed (:func:`~..eager.materialize`); the in-batch sweep,
+      the history probe and the store write all select from them. A
+      document's band rows do not depend on which frame selects them,
+      so every consumer sees the same rows.
     - Probe: a sink store is partitioned by ``bucket_pmod =
       pmod(keys[1], store_partitions)`` and then by ``_batch_id``, and
       probed by broadcasting the batch's band rows against a map-only
@@ -74,13 +74,15 @@ class BandIndex:
       ``_batch_id`` layout is compacted (the store) or moved aside (the
       docs) before a sink reopens it.
 
-    ``verify(cand, left, right)`` scores ``(id_a, id_b)`` candidates,
+    ``verify(cand, left, right)`` scores cross ``(id_a, id_b)``
+    candidates (``id_a`` from ``left``, ``id_b`` from ``right``),
     reading each side's documents id-pruned to the candidate set, and
     keeps pairs whose ``score`` clears ``threshold``. ``features``
     projects ``(id_col, feature)``; ``similarity`` compares two feature
-    columns. ``verify_within`` overrides the in-batch form
-    (``right=None``, both sides from one frame) — MinHash routes it
-    through ``verified_near_dup_pairs``' explode path."""
+    columns. ``verify_within(cand, df)`` is the required in-batch form,
+    both sides from one frame: MinHash runs ``verified_near_dup_pairs``'
+    explode path, cosine one join of the frame's normalized vectors.
+    :meth:`within_pairs` is the one in-batch sweep."""
 
     id_col: str
     keys: tuple[str, str]
@@ -91,15 +93,9 @@ class BandIndex:
     sign: Callable[[DataFrame], DataFrame]
     features: Callable[[DataFrame], DataFrame]
     similarity: Callable[[Column, Column], Column]
-    verify_within: Callable[[DataFrame, DataFrame], DataFrame] | None = None
+    verify_within: Callable[[DataFrame, DataFrame], DataFrame]
 
-    def verify(
-        self, cand: DataFrame, left: DataFrame, right: DataFrame | None = None
-    ) -> DataFrame:
-        if right is None and self.verify_within is not None:
-            return self.verify_within(cand, left)
-        right = left if right is None else right
-
+    def verify(self, cand: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
         def side(df: DataFrame, side_id: str) -> DataFrame:
             ids = cand.select(F.col(side_id).alias(self.id_col)).dropDuplicates()
             return self.features(df.join(ids, self.id_col, "left_semi")).toDF(
@@ -123,6 +119,33 @@ class BandIndex:
         from .skew import drop_oversized_groups
 
         return drop_oversized_groups(out, list(self.keys), max_bucket_size)
+
+    def _self_join(self, bands: DataFrame, max_bucket_size: int | None) -> DataFrame:
+        """(id_a, id_b), id_a < id_b, for every two rows of ``bands``
+        sharing a full key — the one in-batch candidate self-join. A
+        pair sharing several bands repeats; callers de-duplicate."""
+        a = self._keyed(bands, "id_a", max_bucket_size)
+        return (
+            a.join(a.withColumnRenamed("id_a", "id_b"), list(self.keys))
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select("id_a", "id_b")
+        )
+
+    def within_pairs(
+        self,
+        df: DataFrame,
+        bands: DataFrame | None = None,
+        max_bucket_size: int | None = None,
+    ) -> DataFrame:
+        """(id_a, id_b, score), id_a < id_b — the verified near-dup
+        pairs inside ``df``. ``bands`` supplies ``df``'s band rows
+        already signed (the caller owns their materialization);
+        otherwise ``df`` is signed once here and the band rows, which
+        both sides of the self-join read, are checkpointed."""
+        if bands is None:
+            bands = materialize(self.sign(df))
+        cand = self._self_join(bands, max_bucket_size).dropDuplicates()
+        return self.verify_within(cand, df)
 
     def cross_pairs(
         self,
@@ -158,47 +181,43 @@ class BandIndex:
         """The ``batch`` rows with no verified near-dup in history
         (``state`` band rows, ``corpus`` documents) that are not beaten
         by a smaller-id batch row. ``batch_bands`` optionally supplies
-        the batch's band rows already signed."""
-        bb = batch_bands if batch_bands is not None else self.sign(batch)
-        bb.persist()
-        try:
-            # The history probe and the in-batch self-join share ONE
-            # tagged candidate pass, checkpointed once. id_a is always a
-            # batch id; id_b is a corpus id on '_src'='h' rows and a
-            # batch id on '_src'='i' rows, so the tag keeps colliding
-            # ids apart (and dropDuplicates per branch).
-            k = list(self.keys)
-            lb = self._keyed(bb, "id_a", max_bucket_size)
-            rb = self._keyed(state, "id_b", max_bucket_size)
-            hist = lb.join(rb, k).select("id_a", "id_b", F.lit("h").alias("_src"))
-            internal = (
-                lb.join(lb.withColumnRenamed("id_a", "id_b"), k)
-                .filter(F.col("id_a") < F.col("id_b"))
-                .select("id_a", "id_b", F.lit("i").alias("_src"))
-            )
-            cand = materialize(
-                hist.unionByName(internal).dropDuplicates(["_src", "id_a", "id_b"])
-            )
-            # Each branch verifies through its OWN join, consumed lazily
-            # by the returned plan. A tagged-union verify (one join
-            # against the union of both branches' sides) defeats
-            # per-branch broadcast planning; round 13 measured it 1.8x
-            # slower at sf1 on 32 cores. plans/delta_ab_sf1_cpus4.json
-            # times this shape against the older four-action cycle.
-            def branch(tag: str) -> DataFrame:
-                return cand.filter(F.col("_src") == tag).select("id_a", "id_b")
+        the batch's band rows already signed. Either way they are
+        checkpointed once: the history probe and both sides of the
+        in-batch self-join read them."""
+        bb = materialize(batch_bands if batch_bands is not None else self.sign(batch))
+        # The history probe and the in-batch self-join share ONE tagged
+        # candidate pass, checkpointed once. id_a is always a batch id;
+        # id_b is a corpus id on '_src'='h' rows and a batch id on
+        # '_src'='i' rows, so the tag keeps colliding ids apart (and
+        # dropDuplicates per branch).
+        k = list(self.keys)
+        hist = (
+            self._keyed(bb, "id_a", max_bucket_size)
+            .join(self._keyed(state, "id_b", max_bucket_size), k)
+            .select("id_a", "id_b", F.lit("h").alias("_src"))
+        )
+        internal = self._self_join(bb, max_bucket_size).withColumn("_src", F.lit("i"))
+        cand = materialize(
+            hist.unionByName(internal).dropDuplicates(["_src", "id_a", "id_b"])
+        )
+        # Each branch verifies through its OWN join, consumed lazily by
+        # the returned plan. A tagged-union verify (one join against the
+        # union of both branches' sides) defeats per-branch broadcast
+        # planning; round 13 measured it 1.8x slower at sf1 on 32 cores.
+        # plans/delta_ab_sf1_cpus4.json times this shape against the
+        # older four-action cycle.
+        def branch(tag: str) -> DataFrame:
+            return cand.filter(F.col("_src") == tag).select("id_a", "id_b")
 
-            hist_losers = (
-                self.verify(branch("h"), batch, corpus)
-                .select(F.col("id_a").alias(self.id_col))
-                .dropDuplicates()
-            )
-            idups = self.verify(branch("i"), batch)
-            return _drop_pair_losers(
-                batch, idups, self.id_col, transitive=False
-            ).join(hist_losers, self.id_col, "left_anti")
-        finally:
-            bb.unpersist()
+        hist_losers = (
+            self.verify(branch("h"), batch, corpus)
+            .select(F.col("id_a").alias(self.id_col))
+            .dropDuplicates()
+        )
+        idups = self.verify_within(branch("i"), batch)
+        return _drop_pair_losers(batch, idups, self.id_col, transitive=False).join(
+            hist_losers, self.id_col, "left_anti"
+        )
 
 
 _STORE_META_NAME = "_NEAR_DUP_STORE_META.json"
@@ -434,12 +453,12 @@ class BandStore:
         batch_df: DataFrame,
         batch_id: int,
         docs_path: str,
-        sweep: Callable[[DataFrame, DataFrame], DataFrame],
         admit: Callable[[DataFrame], DataFrame] | None = None,
     ) -> None:
         """One micro-batch: sign the batch ONCE (checkpointed band rows);
-        ``sweep(batch, bands) -> survivors`` within the batch; drop every
-        survivor sharing a band key with the rest of the store
+        drop the losers of the in-batch sweep (:meth:`BandIndex.within_pairs`
+        over those rows, the batch operators' one-sweep min-id rule);
+        drop every survivor sharing a band key with the rest of the store
         (broadcast probe); checkpoint the survivors; then write them to
         ``docs_path`` and their band rows to the store, each tagged
         with ``batch_id`` by dynamic partition overwrite, so a
@@ -481,7 +500,9 @@ class BandStore:
                 "the %s — not replay-protectable",
                 batch_id, unsignable[0], ix.noun,
             )
-        survivors = sweep(batch, bands.select(id_col, *keys))
+        survivors = _drop_pair_losers(
+            batch, ix.within_pairs(batch, bands), id_col, transitive=False
+        )
         probe_keys = [_LAYOUT, *keys]
         if history is not None:
             # Broadcast the (small) batch side; the store is scanned
@@ -514,7 +535,7 @@ class BandStore:
             [_LAYOUT, _BATCH],
         )
 
-    def sink(self, docs_path: str, sweep, admit=None):
+    def sink(self, docs_path: str, admit=None):
         """The foreachBatch callable ``(batch_df, batch_id)``: :meth:`fold`
         into ``docs_path``. Refuses a ``partitions`` that is not an int
         >= 1 here, when the sink is built."""
@@ -522,7 +543,7 @@ class BandStore:
             raise ValueError(
                 f"store_partitions must be an int >= 1, got {self.partitions!r}"
             )
-        return partial(self.fold, docs_path=docs_path, sweep=sweep, admit=admit)
+        return partial(self.fold, docs_path=docs_path, admit=admit)
 
     def compact(self, spark: SparkSession) -> dict[str, int]:
         """Dedup the store's band rows (one row per ``(bucket_pmod,

@@ -210,7 +210,6 @@ def _drop_pair_losers(
     pairs: DataFrame,
     id_col: str,
     transitive: bool,
-    eager: bool = False,
     score_col: str | None = None,
     descending: bool = True,
 ) -> DataFrame:
@@ -220,13 +219,7 @@ def _drop_pair_losers(
     ``score_col`` switches the survivor rule from min-id to
     best-score (:func:`keep_best_per_cluster`): components are always
     resolved (the policy needs whole clusters, so ``transitive`` is
-    implied) and the best-scoring member of each survives.
-
-    ``eager`` checkpoints the (tiny) loser-id set immediately — required
-    when ``pairs`` hangs off a persisted frame the caller will unpersist
-    before the returned plan executes (minhash_dedup's bucket cache).
-    The score path's component labels are already eagerly checkpointed
-    inside connected_components, so it is safe under the same caveat."""
+    implied) and the best-scoring member of each survives."""
     if score_col is not None:
         comps = connected_components(pairs)
         return keep_best_per_cluster(df, comps, score_col, id_col, descending)
@@ -238,8 +231,6 @@ def _drop_pair_losers(
         )
     else:
         losers = pairs.select(F.col("id_b").alias(id_col)).dropDuplicates()
-        if eager:
-            losers = materialize(losers)
     return df.join(losers, id_col, "left_anti")
 
 

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..eager import materialize
+from ..eager import materialize_counted
 from ..session import local_frame
 from .band_index import BandIndex
 from .dedup_components import _drop_pair_losers
@@ -59,7 +59,8 @@ def _exact_pairs_gemm(
     """
     import pandas as pd
 
-    n = scaled.count()
+    # both replicas read the checkpoint, and its row count sizes the grid
+    scaled, n = materialize_counted(scaled)
     num_tiles = max(1, -(-n // tile_rows))
     tiled = scaled.select(
         F.col(id_col),
@@ -134,20 +135,9 @@ def embedding_near_dup_pairs(
     dim: int | None = None,
     max_bucket_size: int | None = None,
     auto_bucket_occupancy: int = 64,
-    bands_df: "DataFrame | None" = None,
 ) -> DataFrame:
     """Embedding near-dup pairs above a cosine threshold, blocked by
     banded random-hyperplane LSH — the DEFAULT and the 100 TB path.
-
-    ``bands_df`` optionally feeds precomputed (id, band, sig) rows
-    (:func:`embedding_band_state` under the SAME pinned num_planes /
-    num_bands family — the persisted-store contract) so a caller that
-    also appends band rows to a store signs the batch ONCE instead of
-    twice (the streaming sink); the caller owns their materialization.
-    Requires an explicit positive ``num_planes`` (the family the rows
-    were computed under — 'auto' cannot be re-derived from rows).
-    Identical output: a vector's band rows don't depend on which frame
-    selects them.
 
     ``num_planes="auto"`` (default) sizes the signature from the corpus
     itself (one column-pruned count): planes = ceil(log2(n /
@@ -195,14 +185,6 @@ def embedding_near_dup_pairs(
     (dot + both norms) per pair was measured 3x slower, and the norm
     work grows with the pair count instead of the corpus size.
     """
-    if bands_df is not None and (
-        not isinstance(num_planes, int) or num_planes <= 0
-    ):
-        raise ValueError(
-            "embedding_near_dup_pairs: bands_df requires an explicit "
-            "positive num_planes — the pinned family the rows were "
-            "computed under ('auto' cannot be re-derived from band rows)"
-        )
     if num_planes == "auto":
         num_planes = _auto_num_planes(
             df.select(id_col).count(), auto_bucket_occupancy
@@ -212,44 +194,19 @@ def embedding_near_dup_pairs(
             f"embedding_near_dup_pairs: num_planes must be an int or 'auto', "
             f"got {num_planes!r}"
         )
-    scaled = _normalized_vectors(df, vec_col, id_col)
     if num_planes <= 0:
-        return _exact_pairs_gemm(scaled, id_col, threshold)
-    # Banded blocking: (id, band, sig) rows only — signatures on the RAW
-    # vector (sign is scale-invariant; the oracle mirrors raw too).
-    # Eagerly materialized: the self-join references this frame twice
-    # (three times with the bucket cap), and the signature computation
-    # (num_bands x num_planes dot products per row) is the expensive
-    # subtree — same reasoning as minhash_dedup's persisted buckets.
-    # The checkpointed rows are only (id, band, sig) — id-width, never
-    # vectors. With bands_df the caller supplies (and owns the
-    # materialization of) those rows — one signing per cycle.
-    sigs = (
-        bands_df.select(F.col(id_col), "band", "sig")
-        if bands_df is not None
-        else materialize(
-            embedding_band_state(df, vec_col, id_col, num_planes, num_bands, dim)
+        return _exact_pairs_gemm(
+            _normalized_vectors(df, vec_col, id_col), id_col, threshold
         )
-    )
-    if max_bucket_size is not None:
-        from .skew import drop_oversized_groups
-
-        sigs = drop_oversized_groups(sigs, ["band", "sig"], max_bucket_size)
-    a = sigs.select(F.col(id_col).alias("id_a"), "band", "sig")
-    b = sigs.select(F.col(id_col).alias("id_b"), "band", "sig")
-    cand = (
-        a.join(b, ["band", "sig"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates()
-    )
-    va = scaled.select(F.col(id_col).alias("id_a"), F.col("_sv").alias("va"))
-    vb = scaled.select(F.col(id_col).alias("id_b"), F.col("_sv").alias("vb"))
-    pairs = cand.join(va, "id_a").join(vb, "id_b")
-    dot = _dot(F.col("va"), F.col("vb"))
-    return pairs.select("id_a", "id_b", dot.alias("cosine")).filter(
-        F.col("cosine") >= threshold
-    )
+    # Banded blocking on (id, band, sig) rows signed from the RAW vector
+    # (sign is scale-invariant; the oracle mirrors raw too), checkpointed
+    # once inside within_pairs: the self-join reads them twice (three
+    # times with the bucket cap) and the signature computation
+    # (num_bands x num_planes dot products per row) is the expensive
+    # subtree. The checkpointed rows are id-width, never vectors.
+    return _cosine_index(
+        vec_col, id_col, num_planes, num_bands, dim, threshold
+    ).within_pairs(df, max_bucket_size=max_bucket_size)
 
 
 def embedding_dedup(
@@ -265,7 +222,6 @@ def embedding_dedup(
     descending: bool = True,
     max_bucket_size: int | None = None,
     auto_bucket_occupancy: int = 64,
-    bands_df: "DataFrame | None" = None,
 ) -> DataFrame:
     """Drop the higher id of every near-duplicate embedding pair (or,
     with ``transitive=True``, keep one vector per single-link
@@ -280,7 +236,6 @@ def embedding_dedup(
         df, vec_col, id_col, threshold, num_planes, num_bands, dim,
         max_bucket_size=max_bucket_size,
         auto_bucket_occupancy=auto_bucket_occupancy,
-        bands_df=bands_df,
     )
     return _drop_pair_losers(
         df, pairs, id_col, transitive, score_col=score_col, descending=descending
@@ -467,9 +422,11 @@ def _cosine_index(
 ) -> BandIndex:
     """The hyperplane/cosine :class:`~.band_index.BandIndex`: signs with
     :func:`embedding_band_state`, verifies with the certified expr dot
-    fold over L2-normalized vectors. Each side is id-pruned to the
-    candidate set before the vector-width verify join, so the shuffle
-    carries O(candidates * dim) bytes, not O(batch * dim)."""
+    fold over L2-normalized vectors. The cross form id-prunes each side
+    to the candidate set before the vector-width verify join, so the
+    shuffle carries O(candidates * dim) bytes, not O(corpus * dim); the
+    in-batch form joins the frame's normalized vectors to both sides
+    whole (:func:`_verify_within`)."""
     return BandIndex(
         id_col=id_col,
         keys=("band", "sig"),
@@ -482,6 +439,27 @@ def _cosine_index(
         ),
         features=lambda df: _normalized_vectors(df, vec_col, id_col),
         similarity=_dot,
+        verify_within=lambda cand, df: _verify_within(
+            cand, df, vec_col, id_col, threshold
+        ),
+    )
+
+
+def _verify_within(
+    cand: DataFrame, df: DataFrame, vec_col: str, id_col: str, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, cosine >= threshold) for in-batch candidates: the
+    frame's L2-normalized vectors joined to both sides and the dot
+    product folded in codegen."""
+    scaled = _normalized_vectors(df, vec_col, id_col)
+    va = scaled.select(F.col(id_col).alias("id_a"), F.col("_sv").alias("va"))
+    vb = scaled.select(F.col(id_col).alias("id_b"), F.col("_sv").alias("vb"))
+    dot = _dot(F.col("va"), F.col("vb"))
+    return (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .select("id_a", "id_b", dot.alias("cosine"))
+        .filter(F.col("cosine") >= threshold)
     )
 
 
@@ -602,7 +580,7 @@ def embedding_dedup_delta(
     beaten by a smaller-id batch vector in the whole-batch internal
     sweep — the same two loser rules, same order-free semantics, as
     :func:`dedup_minhash.minhash_dedup_delta`, over cosine instead of
-    Jaccard. The batch is signed ONCE (persisted band rows feed both
+    Jaccard. The batch is signed ONCE (checkpointed band rows feed both
     the history probe and the internal self-join); append
     :func:`embedding_band_state` of the survivors to complete the cycle
     (``num_bands`` rows per non-zero-norm survivor). Zero-norm vectors

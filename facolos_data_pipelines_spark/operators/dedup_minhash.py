@@ -278,24 +278,9 @@ def lsh_candidate_pairs(
     their other, more selective bands). The cap turns the worst-case
     Σ size² self-join into Σ min(size, cap)².
     """
-    if max_bucket_size is not None:
-        from .skew import drop_oversized_groups
-
-        buckets = drop_oversized_groups(
-            buckets, ["band_id", "band_hash"], max_bucket_size
-        )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    return _minhash_index(id_col=id_col)._self_join(
+        buckets, max_bucket_size
+    ).dropDuplicates()
 
 
 def verified_near_dup_pairs(
@@ -369,27 +354,18 @@ def minhash_dedup(
     id) per component — the correct semantics for boilerplate chains,
     at the cost of O(diameter) extra id-only joins.
 
-    The bucket frame is persisted across its self-join (both sides and
-    the downstream verify would otherwise recompute the signature DAG —
-    measured 1.6x slower); the loser-id set is tiny and eagerly
-    checkpointed so the cache can be released before returning the
-    still-lazy survivor plan.
+    The in-batch sweep is :meth:`~.band_index.BandIndex.within_pairs`:
+    the band rows are checkpointed once (both sides of the self-join
+    and the verify would otherwise recompute the signature DAG —
+    measured 1.6x slower), and the loser set stays lazy in the
+    returned plan.
     """
-    buckets = minhash_lsh_buckets(
-        df, text_col, id_col, num_hashes, bands, shingle_n, family
+    dups = _minhash_index(
+        text_col, id_col, num_hashes, bands, shingle_n, family, threshold
+    ).within_pairs(df, max_bucket_size=max_bucket_size)
+    return _drop_pair_losers(
+        df, dups, id_col, transitive, score_col=score_col, descending=descending
     )
-    buckets.persist()
-    try:
-        pairs = lsh_candidate_pairs(buckets, id_col, max_bucket_size)
-        dups = verified_near_dup_pairs(df, pairs, text_col, id_col, shingle_n, threshold)
-        return _drop_pair_losers(
-            df, dups, id_col, transitive, eager=True,
-            score_col=score_col, descending=descending,
-        )
-    finally:
-        buckets.unpersist()
-
-
 
 
 def minhash_cross_corpus_pairs(
@@ -624,7 +600,7 @@ def minhash_dedup_delta(
     of a batch never depends on the order its members are inspected.
 
     Per-cycle cost: within THIS operator the batch's band rows are
-    computed once (persisted across the history join and the internal
+    computed once (checkpointed for the history join and the internal
     self-join), the state is probed by one band-keyed join, and text
     verification touches only candidate ids from either side. No
     historical document is re-signed; the loop's running cost is pinned

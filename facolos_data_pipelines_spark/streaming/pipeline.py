@@ -306,22 +306,12 @@ def near_dup_filter_sink(
     rows, O(docs x bands), never text.
     """
     from ..operators.band_index import BandStore
-    from ..operators.dedup_components import _drop_pair_losers
-    from ..operators.dedup_minhash import _minhash_index, lsh_candidate_pairs
+    from ..operators.dedup_minhash import _minhash_index
 
     index = _minhash_index(
         text_col, id_col, num_hashes, bands, shingle_n, family, threshold
     )
-
-    def sweep(batch: DataFrame, band_rows: DataFrame) -> DataFrame:
-        # minhash_dedup's one-sweep semantics: lsh_candidate_pairs ->
-        # exact-Jaccard verify (verified_near_dup_pairs) -> drop id_b
-        pairs = index.verify(lsh_candidate_pairs(band_rows, id_col), batch)
-        return _drop_pair_losers(batch, pairs, id_col, transitive=False)
-
-    return BandStore(bucket_store_path, index, store_partitions).sink(
-        docs_sink_path, sweep
-    )
+    return BandStore(bucket_store_path, index, store_partitions).sink(docs_sink_path)
 
 
 def hist_state_sink(
@@ -473,11 +463,7 @@ def embedding_near_dup_sink(
     for; the occupancy-sized default (12) suits the verified batch loop,
     not this sink, at large N."""
     from ..operators.band_index import _UNSIGNABLE, BandStore
-    from ..operators.dedup_embedding import (
-        _cosine_index,
-        _norm_sq,
-        embedding_dedup,
-    )
+    from ..operators.dedup_embedding import _cosine_index, _norm_sq
 
     # fail fast on a drifting plane family (bool subclasses int)
     if not isinstance(num_planes, int) or isinstance(num_planes, bool):
@@ -516,14 +502,8 @@ def embedding_near_dup_sink(
             .drop("_nsq")
         )
 
-    def sweep(batch: DataFrame, band_rows: DataFrame) -> DataFrame:
-        return embedding_dedup(
-            batch, vec_col, id_col, threshold, num_planes, num_bands, dim,
-            bands_df=band_rows,
-        )
-
     return BandStore(band_store_path, index, store_partitions).sink(
-        docs_sink_path, sweep, admit
+        docs_sink_path, admit
     )
 
 

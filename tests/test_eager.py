@@ -12,6 +12,9 @@ PACKAGE = pathlib.Path(facolos_data_pipelines_spark.__file__).parent
 
 
 def test_local_checkpoint_only_in_eager_module():
+    """Checkpoints go through ``eager``, and no module caches a frame:
+    a ``persist``/``cache`` outlives the plan that needed it unless every
+    path unpersists it, and a checkpoint cannot leak that way."""
     offenders = []
     for path in sorted(PACKAGE.rglob("*.py")):
         if path == PACKAGE / "eager.py":
@@ -20,12 +23,13 @@ def test_local_checkpoint_only_in_eager_module():
             if (
                 isinstance(node, ast.Call)
                 and isinstance(node.func, ast.Attribute)
-                and node.func.attr == "localCheckpoint"
+                and node.func.attr
+                in {"localCheckpoint", "persist", "cache", "unpersist"}
             ):
                 offenders.append(f"{path.relative_to(PACKAGE)}:{node.lineno}")
     assert not offenders, (
         "call eager.materialize / eager.materialize_counted instead of "
-        f"localCheckpoint: {offenders}"
+        f"localCheckpoint, persist, cache or unpersist: {offenders}"
     )
 
 

@@ -486,6 +486,78 @@ def test_streaming_near_dup_filter_across_batches(spark, tmp_root):
     assert {r["doc_id"] for r in spark.read.parquet(sink).collect()} == {1, 3}
 
 
+def test_sink_in_batch_sweep_equals_batch_operator(spark, tmp_root):
+    """Into an empty store a sink lands exactly its batch operator's
+    survivors: the in-batch sweep is the same one-sweep rule over the
+    same family. The batch holds a chain (doc 3 bridges docs 1 and 2,
+    which do not match each other) and a separate near-dup pair."""
+    import math
+
+    from facolos_data_pipelines_spark.operators.dedup import (
+        embedding_dedup,
+        embedding_near_dup_pairs,
+        minhash_dedup,
+    )
+    from facolos_data_pipelines_spark.streaming import (
+        embedding_near_dup_sink,
+        near_dup_filter_sink,
+    )
+
+    def landed(path, id_col):
+        return {r[id_col] for r in spark.read.parquet(path).collect()}
+
+    a = " ".join(f"w{i}" for i in range(12))
+    b = [f"b{i}" for i in range(12)]
+    c = [f"c{i}" for i in range(12)]
+    solo = "totally different words about spark engines and their planners"
+    docs = spark.createDataFrame(
+        [
+            (1, a + " " + " ".join(b)),
+            (2, a + " " + " ".join(c)),
+            (3, a + " " + " ".join(b[:6] + c[:6])),
+            (10, solo),
+            (11, solo + " today"),
+            (20, "nothing here resembles any other document in the batch"),
+        ],
+        "doc_id long, text string",
+    )
+    family = dict(num_hashes=32, bands=16, threshold=0.4)
+    want = {r["doc_id"] for r in minhash_dedup(docs, **family).collect()}
+    assert want == {1, 2, 10, 20}
+    near_dup_filter_sink(
+        f"{tmp_root}/nd_sink", f"{tmp_root}/nd_store", store_partitions=4, **family
+    )(docs, 0)
+    assert landed(f"{tmp_root}/nd_sink", "doc_id") == want
+
+    def unit(deg):
+        return [math.cos(math.radians(deg)), math.sin(math.radians(deg))] + [0.0] * 6
+
+    vecs = spark.createDataFrame(
+        [
+            (1, unit(0)),
+            (2, unit(40)),
+            (3, unit(20)),  # chain: 1~3 and 3~2, but 1 !~ 2
+            (10, [0.0, 0.0, 1.0] + [0.0] * 5),
+            (11, [0.0, 0.0, 1.0, 0.05] + [0.0] * 4),
+            (20, [0.0] * 7 + [1.0]),
+            (30, [0.0] * 8),  # degenerate: the sink's admit drops it
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    family = dict(threshold=0.9, num_planes=2, num_bands=8, dim=8)
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in embedding_near_dup_pairs(vecs, **family).collect()
+    }
+    assert pairs == {(1, 3), (2, 3), (10, 11)}
+    want = {r["vec_id"] for r in embedding_dedup(vecs, **family).collect()} - {30}
+    assert want == {1, 2, 10, 20}
+    embedding_near_dup_sink(
+        f"{tmp_root}/emb_sink", f"{tmp_root}/emb_store", store_partitions=4, **family
+    )(vecs, 0)
+    assert landed(f"{tmp_root}/emb_sink", "vec_id") == want
+
+
 def test_near_dup_sink_partitioned_store_many_batches(spark, tmp_root):
     """Long-running-stream shape of the bucket store: 20 micro-batches
     against a bucket_pmod-partitioned store, then compaction. Checks:
