@@ -942,16 +942,12 @@ def q_embedding_dedup_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("vec_id")
 
 
-def q_cycle_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 — rolling last-10-cycle summary (quality.monitor.cycle_summary)
-    over a per-day metrics frame derived from events: duration = span of
-    the day's events in whole seconds, success = error rate < 20%. All
-    inputs are integers, so the averaged/percentage outputs are
-    bit-identical across engines."""
-    from facolos_data_pipelines_spark.quality.monitor import cycle_summary
-
+def _event_cycles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CYCLE_METRICS_SCHEMA rows, one per event day: started_at = the
+    day's last event, duration = span of the day's events in whole
+    seconds, success = error rate < 20%."""
     events = _t(spark, sf_dir, "events")
-    metrics = events.groupBy(F.to_date("ts").alias("_d")).agg(
+    return events.groupBy(F.to_date("ts").alias("_d")).agg(
         F.max("ts").alias("started_at"),
         (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
         .cast("double")
@@ -968,7 +964,16 @@ def q_cycle_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         "records_processed",
         "success",
     )
-    return cycle_summary(metrics, last_n=10)
+
+
+def q_cycle_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A7 — rolling last-10-cycle summary (quality.monitor.cycle_summary)
+    over the per-day event cycles (:func:`_event_cycles`). All inputs
+    are integers, so the averaged/percentage outputs are bit-identical
+    across engines."""
+    from facolos_data_pipelines_spark.quality.monitor import cycle_summary
+
+    return cycle_summary(_event_cycles(spark, sf_dir), last_n=10)
 
 
 def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1137,24 +1142,7 @@ def q_schedule_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     from facolos_data_pipelines_spark.quality.checks import multi_table_summary
     from facolos_data_pipelines_spark.quality.monitor import production_health
 
-    events = _t(spark, sf_dir, "events")
-    metrics = events.groupBy(F.to_date("ts").alias("_d")).agg(
-        F.max("ts").alias("started_at"),
-        (F.unix_timestamp(F.max("ts")) - F.unix_timestamp(F.min("ts")))
-        .cast("double")
-        .alias("duration_seconds"),
-        F.count("*").cast("long").alias("records_processed"),
-        (
-            F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0)) * 5
-            < F.count("*")
-        ).alias("success"),
-    ).select(
-        F.col("_d").cast("string").alias("cycle_id"),
-        "started_at",
-        "duration_seconds",
-        "records_processed",
-        "success",
-    )
+    metrics = _event_cycles(spark, sf_dir)
     tables = {
         name: _t(spark, sf_dir, name)
         for name in ["orders", "lineitem", "customer", "documents", "embeddings"]

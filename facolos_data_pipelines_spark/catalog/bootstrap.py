@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from ..sources.io import _hadoop_fs
 from .schemas import STAGING_TABLES
 
 # One namespace per platform — mirrors the reference's enterprise schema
@@ -49,9 +50,8 @@ def bootstrap_catalog(
             path = f"{staging_root}/{name}"
             # createTable resolves the location eagerly — make sure it
             # exists (works for local/HDFS/object-store paths alike)
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(path)
-            hpath.getFileSystem(spark._jsc.hadoopConfiguration()).mkdirs(hpath)
+            fs, jpath = _hadoop_fs(spark, path)
+            fs.mkdirs(jpath)
             kwargs["path"] = path
         spark.catalog.createTable(full, **kwargs)
         executed.append(f"CREATE TABLE {full}")

@@ -17,7 +17,9 @@ with endpoint directories named after the known sources
 Subcommands:
 
 - ``cycle``     one incremental cycle over whatever landed
+- ``backfill``  one cycle per landed date window, then one final gate
 - ``quality``   gate + per-table counts over the staging root
+- ``export``    one staging table to CSV/xlsx for hand checks
 - ``bootstrap`` create the catalog databases / control tables
 
 Every subcommand prints ONE JSON report line to stdout (the
@@ -197,6 +199,7 @@ def cmd_backfill(args: argparse.Namespace) -> dict:
     import os
 
     from .pipelines.runner import run_incremental_cycle
+    from .quality.checks import gate_report
 
     spark = _build_spark("facolos-cli-backfill")
     windows = sorted(
@@ -224,51 +227,37 @@ def cmd_backfill(args: argparse.Namespace) -> dict:
             report["status"] = "partial"
     # final verification over everything landed (reference Phase 3);
     # this top-level gate is what drives the exit code
-    landed = sorted(
-        d
-        for d in os.listdir(args.staging_root)
-        if os.path.isdir(os.path.join(args.staging_root, d))
-    ) if os.path.isdir(args.staging_root) else []
-    with_data = 0
-    total = 0
-    for t in landed:
-        n = spark.read.parquet(os.path.join(args.staging_root, t)).count()
-        total += n
-        with_data += 1 if n > 0 else 0
-    report["quality"] = {
-        "tables_with_data": with_data,
-        "total_tables": len(landed),
-        "total_records": total,
-        "passed": with_data >= args.min_tables,
-    }
+    report["quality"] = gate_report(
+        _staging_tables(spark, args.staging_root), args.min_tables
+    )
     return report
 
 
-def cmd_quality(args: argparse.Namespace) -> dict:
+def _staging_tables(spark: SparkSession, staging_root: str) -> dict[str, DataFrame]:
+    """Every table directory under ``staging_root`` (none when the root
+    does not exist), by name."""
     import os
 
-    from .quality.checks import multi_table_summary, quality_gate
+    if not os.path.isdir(staging_root):
+        return {}
+    return {
+        d: spark.read.parquet(os.path.join(staging_root, d))
+        for d in sorted(os.listdir(staging_root))
+        if os.path.isdir(os.path.join(staging_root, d))
+    }
+
+
+def cmd_quality(args: argparse.Namespace) -> dict:
+    from .quality.checks import gate_report, multi_table_summary
 
     spark = _build_spark("facolos-cli-quality")
-    tables = {
-        d: spark.read.parquet(os.path.join(args.staging_root, d))
-        for d in sorted(os.listdir(args.staging_root))
-        if os.path.isdir(os.path.join(args.staging_root, d))
-    }
+    tables = _staging_tables(spark, args.staging_root)
     if not tables:
         raise SystemExit(f"no staging tables under {args.staging_root}")
-    # collect the per-table counts ONCE and fold the gate driver-side —
-    # running quality_gate over the uncollected summary would execute
-    # the counting plan (one scan per table) a second time
     rows = multi_table_summary(tables).collect()
-    counts = {r["table_name"]: int(r["records"]) for r in rows}
-    with_data = sum(1 for n in counts.values() if n > 0)
     return {
-        "tables": counts,
-        "tables_with_data": with_data,
-        "total_records": sum(counts.values()),
-        "quality_score": round(with_data * 100.0 / len(counts), 2),
-        "passed": with_data >= args.min_tables,
+        "tables": {r["table_name"]: int(r["records"]) for r in rows},
+        **gate_report(tables, args.min_tables),
     }
 
 

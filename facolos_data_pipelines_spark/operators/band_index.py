@@ -230,13 +230,6 @@ _COMPACTED = -1
 _UNSIGNABLE = "unsignable_rows"
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for any Hadoop-resolvable URI — file://, hdfs://,
-    s3a://, ... — via the session's Hadoop configuration."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
 def _is_partition_count(n) -> bool:
     # bool subclasses int: True would pin a one-partition layout by accident
     return isinstance(n, int) and not isinstance(n, bool) and n >= 1
@@ -270,6 +263,8 @@ def _refuse_pre_batch_layout(spark: SparkSession, path: str, stray: str, repair:
     ``path`` lists anything: data files written before the ``_batch_id``
     layout sit outside ``_batch_id=`` directories, and one batch on top
     of them leaves a table Spark cannot read. One listing, no job."""
+    from ..sources.io import _hadoop_fs
+
     fs, jglob = _hadoop_fs(spark, f"{path.rstrip('/')}/{stray}")
     found = fs.globStatus(jglob)
     if found is not None and len(found):
@@ -284,6 +279,8 @@ def _store_is_new(spark: SparkSession, path: str) -> bool:
     absent, or a first batch whose manifest write failed left only the
     directory and perhaps a hidden temp file (hidden ``_``/``.`` names
     are not band rows)."""
+    from ..sources.io import _hadoop_fs
+
     fs, jpath = _hadoop_fs(spark, path)
     if not fs.exists(jpath):
         return True
@@ -303,6 +300,8 @@ def _read_manifest(
     which a hand repair leaves stale. ``://`` paths go through the
     Hadoop FileSystem API."""
     from py4j.protocol import Py4JJavaError
+
+    from ..sources.io import _hadoop_fs
 
     mp = f"{path.rstrip('/')}/{_STORE_META_NAME}"
     try:
@@ -342,6 +341,8 @@ def _write_manifest(spark: SparkSession, path: str, manifest: dict) -> None:
     on failure. The bytes go to a hidden temp file that is then renamed
     into place, so a failed write leaves no torn manifest and the
     directory still counts as a new store."""
+    from ..sources.io import _hadoop_fs
+
     path = path.rstrip("/")
     payload = json.dumps(manifest).encode("utf-8")
     final, tmp = f"{path}/{_STORE_META_NAME}", f"{path}/.{_STORE_META_NAME}.tmp"
@@ -557,45 +558,32 @@ class BandStore:
         local-path rename swap, same as ``compact_parquet``). Returns
         ``{"files_before", "files_after", "rows_before",
         "rows_after"}``."""
-        import glob
-        import shutil
+        from ..sources.io import _swap_compacted
 
-        if "://" in self.path:
-            raise ValueError(
-                "compact_bucket_store handles local paths only; use the table "
-                "format's compaction on remote filesystems"
-            )
         path = self.path.rstrip("/")
         manifest = _read_manifest(spark, path, action="compact")
-
-        def files() -> list[str]:
-            found = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-            return [f for f in found if os.path.isfile(f)]
-
-        before = files()
-        if not before:
-            raise ValueError(f"compact_bucket_store: no parquet files under {path!r}")
-        store = spark.read.parquet(path)
-        rows_before = store.count()
         id_col, keys = self.index.id_col, list(self.index.keys)
-        deduped = (
-            store.groupBy(_LAYOUT, *keys)
-            .agg(F.min(id_col).alias(id_col))
-            .withColumn(_BATCH, F.lit(_COMPACTED).cast("long"))
-            .repartition(_LAYOUT)
+
+        def rewrite(files: list[str], tmp: str) -> tuple[int, int]:
+            store = spark.read.parquet(path)
+            rows_before = store.count()
+            deduped = (
+                store.groupBy(_LAYOUT, *keys)
+                .agg(F.min(id_col).alias(id_col))
+                .withColumn(_BATCH, F.lit(_COMPACTED).cast("long"))
+                .repartition(_LAYOUT)
+            )
+            deduped.write.mode("overwrite").partitionBy(_LAYOUT, _BATCH).parquet(tmp)
+            rows_after = spark.read.parquet(tmp).count()
+            _write_manifest(spark, tmp, manifest)
+            return rows_before, rows_after
+
+        before, after, (rows_before, rows_after) = _swap_compacted(
+            path, "compact_bucket_store", rewrite
         )
-        tmp, old = path + "._compact_tmp", path + "._compact_old"
-        for stale in (tmp, old):
-            shutil.rmtree(stale, ignore_errors=True)
-        deduped.write.mode("overwrite").partitionBy(_LAYOUT, _BATCH).parquet(tmp)
-        rows_after = spark.read.parquet(tmp).count()
-        _write_manifest(spark, tmp, manifest)
-        os.rename(path, old)
-        os.rename(tmp, path)
-        shutil.rmtree(old)
         return {
-            "files_before": len(before),
-            "files_after": len(files()),
+            "files_before": before,
+            "files_after": after,
             "rows_before": rows_before,
             "rows_after": rows_after,
         }

@@ -25,7 +25,7 @@ from pyspark.sql import types as T
 # T4/T5/T6 — safe casts (pandas to_numeric/to_datetime errors='coerce' parity)
 # ---------------------------------------------------------------------------
 
-def safe_cast(df: DataFrame, columns: dict[str, str]) -> DataFrame:
+def safe_cast(df: DataFrame, columns: dict[str, str | T.DataType]) -> DataFrame:
     """Cast each column to the given type; unparseable values -> NULL.
 
     Parity with the reference's ``_safe_float`` / ``_safe_int``
@@ -40,7 +40,8 @@ def safe_cast(df: DataFrame, columns: dict[str, str]) -> DataFrame:
     ``_safe_int('3.5')`` is None (Python int() of a fractional string
     raises), while Spark's non-ANSI cast truncates to 3 and DuckDB's
     TRY_CAST rounds to 4 — so non-integral strings are nulled before
-    the cast (guarded by a property-based parity test).
+    the cast (guarded by a property-based parity test). A target is a
+    type name or a ``DataType``.
     """
     int_targets = {"int", "integer", "bigint", "long", "smallint", "short", "tinyint", "byte"}
     string_cols = {f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)}
@@ -48,8 +49,9 @@ def safe_cast(df: DataFrame, columns: dict[str, str]) -> DataFrame:
     for c in df.columns:
         if c in columns:
             target = columns[c]
+            name = target.simpleString() if isinstance(target, T.DataType) else target
             src = F.col(c)
-            if str(target).lower() in int_targets and c in string_cols:
+            if name.lower() in int_targets and c in string_cols:
                 src = F.when(src.rlike(r"^\s*[+-]?[0-9]+\s*$"), src)
             exprs.append(src.cast(target).alias(c))
         else:
@@ -147,16 +149,18 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     The reference intersects DataFrame columns with
     INFORMATION_SCHEMA.COLUMNS before insert (misa_crm_loader.py:158-171):
     extra columns are dropped, missing ones land as NULL, present ones
-    are cast to the contract type. Pure projection — no shuffle.
+    are cast to the contract type under :func:`safe_cast`'s rules (a
+    landed string id "3.5" is NULL, not 3). Pure projection — no
+    shuffle.
     """
     present = set(df.columns)
-    exprs = []
-    for field in schema.fields:
-        if field.name in present:
-            exprs.append(F.col(field.name).cast(field.dataType).alias(field.name))
-        else:
-            exprs.append(F.lit(None).cast(field.dataType).alias(field.name))
-    return df.select(*exprs)
+    cast = safe_cast(df, {f.name: f.dataType for f in schema.fields if f.name in present})
+    return cast.select(
+        *(
+            F.col(f.name) if f.name in present else F.lit(None).cast(f.dataType).alias(f.name)
+            for f in schema.fields
+        )
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -313,75 +317,6 @@ def flatten_misa_sale_orders(raw: DataFrame, batch_id: str | None = None) -> Dat
     )
     flat = safe_boolean(flat, ["order_is_use_currency", "item_is_promotion"])
     return add_etl_metadata(flat, batch_id, source="misa_crm_api")
-
-
-# Coercion lists for the flat MISA entities — misa_crm_transformer.py.
-MISA_ENTITY_COERCIONS: dict[str, dict[str, list[str]]] = {
-    # transform_customers — :74-104
-    "customers": {
-        "numeric": [
-            "annual_revenue", "debt", "debt_limit", "number_of_days_owed",
-            "number_orders", "order_sales", "average_order_value",
-            "average_number_of_days_between_purchases",
-            "number_days_without_purchase", "billing_long", "billing_lat",
-            "shipping_long", "shipping_lat", "total_score",
-        ],
-        "date": [
-            "purchase_date_recent", "purchase_date_first", "customer_since_date",
-            "last_interaction_date", "last_visit_date", "last_call_date",
-            "issued_on", "celebrate_date", "created_date", "modified_date",
-            "last_modified_date",
-        ],
-        "boolean": [
-            "is_personal", "inactive", "is_public", "is_distributor",
-            "is_portal_access",
-        ],
-    },
-    # transform_contacts — :249-273
-    "contacts": {
-        "numeric": [
-            "mailing_long", "mailing_lat", "shipping_long", "shipping_lat",
-            "total_score", "number_days_not_interacted",
-        ],
-        "date": [
-            "date_of_birth", "customer_since_date", "last_interaction_date",
-            "last_visit_date", "last_call_date", "created_date", "modified_date",
-        ],
-        "boolean": ["email_opt_out", "phone_opt_out", "inactive", "is_public"],
-    },
-    # transform_stocks — :289-301
-    "stocks": {
-        "numeric": [],
-        "date": ["created_date", "modified_date"],
-        "boolean": ["inactive"],
-    },
-    # transform_products — :317-342
-    "products": {
-        "numeric": [
-            "unit_price", "purchased_price", "unit_cost", "unit_price1",
-            "unit_price2", "unit_price_fixed",
-        ],
-        "date": ["created_date", "modified_date"],
-        "boolean": [
-            "price_after_tax", "is_use_tax", "is_follow_serial_number",
-            "is_set_product", "inactive", "is_public",
-        ],
-    },
-}
-
-
-def conform_misa_entity(
-    df: DataFrame, endpoint: str, batch_id: str | None = None
-) -> DataFrame:
-    """Flat-entity conform (customers/contacts/stocks/products) — the
-    ``transform_<endpoint>`` dynamic-dispatch family
-    (misa_crm_transformer.py:55-342, dispatch dags/incremental_etl_dag.py:107-111).
-    """
-    spec = MISA_ENTITY_COERCIONS[endpoint]
-    df = safe_numeric(df, spec["numeric"])
-    df = safe_timestamp(df, spec["date"])
-    df = safe_boolean(df, spec["boolean"])
-    return add_etl_metadata(df, batch_id, source="misa_crm_api")
 
 
 def pivot_aggregate(

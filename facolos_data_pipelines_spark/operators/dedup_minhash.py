@@ -346,9 +346,10 @@ def minhash_dedup(
     gives the same dedup semantics — ``multiply_add`` is faster but
     needs a non-ANSI session, ``xxhash`` runs anywhere.
 
-    ``transitive=False`` (default) does one sweep — b survives only if
-    not matched to any smaller id — which under-drops on chains
-    (a~b, b~c, a!~c keeps c). ``transitive=True`` resolves full
+    ``transitive=False`` (default) does one sweep — every doc matched
+    to a smaller id drops — so a chain a~b, b~c (a!~c) keeps only a,
+    while a bridge with the highest id keeps its ends apart (1~3, 2~3,
+    1!~2 keeps 1 and 2 in one cluster). ``transitive=True`` resolves full
     single-link components over the verified pairs
     (:func:`connected_components`) and keeps exactly one doc (the min
     id) per component — the correct semantics for boilerplate chains,

@@ -5,6 +5,9 @@ complete/historical backfills); here each cycle is a plain function over
 Spark plans: per endpoint extract → conform → load (append-dedup or
 merge-upsert) → stats, then the §5 quality gate, with a `batch_runs`
 control-table row per run (create_facolos_enterprise_schemas.sql:79-91).
+That log is the only cycle record: ``quality.monitor.cycles_from_runs``
+derives the monitor's cycle rows from it. Backfills are the CLI's
+``backfill`` subcommand, one cycle per landed window.
 
 Where the reference materialized at every stage boundary (XCom JSON,
 /tmp parquet — dags/tiktok_shop_orders_etl_dag.py:83-185), a cycle here
@@ -29,7 +32,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 
 from ..catalog.schemas import BATCH_RUNS_SCHEMA
-from ..quality.checks import multi_table_summary, quality_gate
+from ..quality.checks import gate_report
 from ..session import local_frame
 from ..sources.io import append_with_pk_rejection, table_exists, upsert_parquet
 
@@ -187,49 +190,6 @@ def run_incremental_cycle(
         if table_exists(spark, f"{staging_root}/{ep.table()}")
     }
     if landed:
-        gate = quality_gate(
-            multi_table_summary(landed), min_tables_with_data=min_tables_with_data
-        ).collect()[0]
-        report["quality"] = {
-            "tables_with_data": gate["tables_with_data"],
-            "total_tables": gate["total_tables"],
-            "total_records": int(gate["total_records"]),
-            "quality_score": float(gate["quality_score"]),
-            "passed": bool(gate["passed"]),
-        }
+        report["quality"] = gate_report(landed, min_tables_with_data)
     return report
 
-
-def run_backfill(
-    spark: SparkSession,
-    endpoints: list[EndpointSpec],
-    staging_root: str,
-    control_root: str | None = None,
-    windows: list[tuple] | None = None,
-) -> list[dict]:
-    """Complete/historical backfill (§3.2-3.3): run the cycle once per
-    date window (or once when windows is None). The reference's 30-day
-    windowing bounded per-batch memory (run_historical_backfill.py:32-39);
-    Spark doesn't need it for compute, but window-parameterized extracts
-    keep API-side request sizes bounded, so the loop shape survives."""
-    reports = []
-    for window in windows or [None]:
-        eps = endpoints
-        if window is not None:
-            eps = [
-                EndpointSpec(
-                    name=ep.name,
-                    extract=(lambda s, ep=ep, w=window: ep.extract(s, *w)),  # type: ignore[call-arg]
-                    transform=ep.transform,
-                    primary_keys=ep.primary_keys,
-                    load_mode=ep.load_mode,
-                    order_col=ep.order_col,
-                    staging_table=ep.staging_table,
-                    partition_by=ep.partition_by,
-                )
-                for ep in endpoints
-            ]
-        reports.append(
-            run_incremental_cycle(spark, eps, staging_root, control_root)
-        )
-    return reports

@@ -155,14 +155,14 @@ def multi_table_summary(tables: dict[str, DataFrame]) -> DataFrame:
     """A6 — per-table counts + quality score fold
     (production_etl_orchestrator.py:289-320): stacked counts frame with
     tables_with_data and quality_score derivable by one more agg."""
-    spark = next(iter(tables.values())).sparkSession
+    if not tables:
+        raise ValueError("multi_table_summary: empty tables dict, no table to count")
     counts = None
     for name, df in tables.items():
         row = df.agg(F.count("*").alias("records")).select(
             F.lit(name).alias("table_name"), F.col("records")
         )
         counts = row if counts is None else counts.unionByName(row)
-    assert counts is not None, "no tables supplied"
     return counts
 
 
@@ -179,6 +179,29 @@ def quality_gate(summary: DataFrame, min_tables_with_data: int = 5) -> DataFrame
         (F.col("tables_with_data") / F.col("total_tables") * 100).alias("quality_score"),
         (F.col("tables_with_data") >= min_tables_with_data).alias("passed"),
     )
+
+
+def gate_report(tables: dict[str, DataFrame], min_tables_with_data: int = 5) -> dict:
+    """:func:`quality_gate` over :func:`multi_table_summary` of
+    ``tables``, collected in one job as typed Python values — the gate
+    dict the runner's cycle report and the CLI print. No tables at all
+    is the all-zero, failed gate (no job runs)."""
+    if not tables:
+        return {
+            "tables_with_data": 0,
+            "total_tables": 0,
+            "total_records": 0,
+            "quality_score": 0.0,
+            "passed": False,
+        }
+    gate = quality_gate(multi_table_summary(tables), min_tables_with_data).collect()[0]
+    return {
+        "tables_with_data": int(gate["tables_with_data"]),
+        "total_tables": int(gate["total_tables"]),
+        "total_records": int(gate["total_records"]),
+        "quality_score": float(gate["quality_score"]),
+        "passed": bool(gate["passed"]),
+    }
 
 
 def flatten_invariants(

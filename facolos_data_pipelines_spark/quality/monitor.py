@@ -4,9 +4,9 @@ The reference's ProductionMonitor keeps per-cycle metrics in a Python
 deque on the scheduler and alerts on thresholds
 (src/monitoring/production_monitor.py:39-125): duration over budget,
 >=3 consecutive failures, >=5 no-data cycles, rolling success < 80%.
-Here the metrics live in a table (written by the pipeline runner or a
-StreamingQueryListener) and every check is a window/agg query — the
-monitor state survives driver restarts and is itself queryable.
+Here the cycle rows derive from the pipeline runner's ``batch_runs``
+log (:func:`cycles_from_runs`) and every check is a window/agg query —
+the monitor state survives driver restarts and is itself queryable.
 """
 
 from __future__ import annotations
@@ -28,6 +28,30 @@ CYCLE_METRICS_SCHEMA = T.StructType(
         T.StructField("success", T.BooleanType()),
     ]
 )
+
+
+def cycles_from_runs(batch_runs: DataFrame) -> DataFrame:
+    """One CYCLE_METRICS_SCHEMA row per runner cycle, derived from the
+    runner's ``batch_runs`` log (one row per endpoint run, all sharing
+    the cycle's ``batch_id`` and start): the cycle starts at its first
+    ``started_at``, lasts until its last ``finished_at``, processed the
+    summed ``records_loaded`` and succeeded iff every endpoint did.
+    One lazy groupBy — the cycle rows are never stored twice."""
+    return batch_runs.groupBy("batch_id").agg(
+        F.min("started_at").alias("started_at"),
+        (
+            (F.unix_micros(F.max("finished_at")) - F.unix_micros(F.min("started_at")))
+            / 1e6
+        ).alias("duration_seconds"),
+        F.sum("records_loaded").cast("long").alias("records_processed"),
+        F.bool_and(F.col("status") == "success").alias("success"),
+    ).select(
+        F.col("batch_id").alias("cycle_id"),
+        "started_at",
+        "duration_seconds",
+        "records_processed",
+        "success",
+    )
 
 
 def cycle_summary(metrics: DataFrame, last_n: int = 10) -> DataFrame:
@@ -261,20 +285,3 @@ def production_health(
     )
     return health_score(report)
 
-
-def record_cycle(
-    spark,
-    path: str,
-    cycle_id: str,
-    started_at,
-    duration_seconds: float,
-    records_processed: int,
-    success: bool,
-) -> None:
-    """Append one cycle-metrics row (the runner calls this; a
-    StreamingQueryListener would do the same from query progress)."""
-    local_frame(
-        spark,
-        [(cycle_id, started_at, float(duration_seconds), int(records_processed), bool(success))],
-        CYCLE_METRICS_SCHEMA,
-    ).write.mode("append").parquet(path)

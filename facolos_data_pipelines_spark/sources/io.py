@@ -14,6 +14,10 @@ incremental reads prune partitions instead of scanning 100 TB.
 from __future__ import annotations
 
 import datetime as dt
+import glob
+import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -36,13 +40,18 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(FileSystem, Path) for any Hadoop-resolvable URI — file://, hdfs://,
+    s3a://, ... — via the session's Hadoop configuration."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def table_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop-FS existence probe (works for local/HDFS/object stores) —
     avoids try/except-on-read, which logs a spurious ERROR stack."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
+    fs, jpath = _hadoop_fs(spark, path)
+    return bool(fs.exists(jpath))
 
 
 def write_append(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -382,6 +391,38 @@ def write_xlsx(df: DataFrame, path: str, sheet: str = "Sheet1",
     return len(head)
 
 
+def _parquet_files(path: str) -> list[str]:
+    found = glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+    return [f for f in found if os.path.isfile(f)]
+
+
+def _swap_compacted(path: str, what: str, rewrite: Callable[[list[str], str], object]):
+    """The local-path compaction swap behind :func:`compact_parquet` and
+    ``BandStore.compact``: refuse ``://`` paths, list the table's parquet
+    files (refusing none — also the state an interrupted swap leaves, so
+    its ``._compact_old`` copy survives), clear the leftovers of an
+    interrupted run, let ``rewrite(files, tmp)`` write the compacted
+    table into ``<path>._compact_tmp``, then swap it in by two directory
+    renames. Returns ``(files_before, files_after, rewrite's result)``."""
+    if "://" in path:
+        raise ValueError(
+            f"{what} handles local paths only, got {path!r}; use the table "
+            "format's compaction (e.g. Delta OPTIMIZE) on remote filesystems"
+        )
+    path = path.rstrip("/")
+    before = _parquet_files(path)
+    if not before:
+        raise ValueError(f"{what}: no parquet files under {path!r}")
+    tmp, old = path + "._compact_tmp", path + "._compact_old"
+    for stale in (tmp, old):
+        shutil.rmtree(stale, ignore_errors=True)
+    result = rewrite(before, tmp)
+    os.rename(path, old)
+    os.rename(tmp, path)
+    shutil.rmtree(old)
+    return len(before), len(_parquet_files(path)), result
+
+
 def compact_parquet(
     spark: SparkSession,
     path: str,
@@ -407,45 +448,17 @@ def compact_parquet(
     scanned exactly once (the row count is read from the compacted
     output's footers, not a pre-pass).
     """
-    import glob
-    import os
-    import shutil
 
-    if "://" in path:
-        raise ValueError(
-            f"compact_parquet handles local paths only, got {path!r}; "
-            "use the table format's compaction (e.g. Delta OPTIMIZE) on "
-            "remote filesystems"
-        )
-    tmp = path.rstrip("/") + "._compact_tmp"
-    old = path.rstrip("/") + "._compact_old"
-    for stale in (tmp, old):  # leftovers from an interrupted prior run
-        shutil.rmtree(stale, ignore_errors=True)
+    def rewrite(files: list[str], tmp: str) -> int:
+        total_bytes = sum(os.path.getsize(f) for f in files)
+        n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))  # ceil
+        writer = spark.read.parquet(path).repartition(int(n_out)).write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(tmp)
+        # count from the compacted output's metadata — a few large files,
+        # no second scan of the fragmented input
+        return spark.read.parquet(tmp).count()
 
-    files = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    if not files:
-        raise ValueError(f"compact_parquet: no parquet files under {path!r}")
-    total_bytes = sum(os.path.getsize(f) for f in files)
-    n_out = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))  # ceil
-    writer = (
-        spark.read.parquet(path).repartition(int(n_out)).write.mode("overwrite")
-    )
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    # count from the compacted output's metadata — a few large files,
-    # no second scan of the fragmented input
-    rows = spark.read.parquet(tmp).count()
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
-    after = [
-        f
-        for f in glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-        if os.path.isfile(f)
-    ]
-    return {"files_before": len(files), "files_after": len(after), "rows": rows}
+    before, after, rows = _swap_compacted(path, "compact_parquet", rewrite)
+    return {"files_before": before, "files_after": after, "rows": rows}

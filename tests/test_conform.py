@@ -15,6 +15,7 @@ from facolos_data_pipelines_spark.catalog import (
     TIKTOK_ORDER_DETAIL_SCHEMA,
     TRUNCATION_WIDTHS,
 )
+from facolos_data_pipelines_spark.cli import _misa_entity_transform
 from facolos_data_pipelines_spark.operators import conform
 from facolos_data_pipelines_spark.quality import flatten_invariants
 
@@ -214,7 +215,7 @@ def test_conform_misa_entity_dynamic_columns(spark):
         ],
         "id long, annual_revenue string, modified_date string, inactive string",
     )
-    out = conform.conform_misa_entity(df, "customers", batch_id="b3")
+    out = _misa_entity_transform("misa_customers")(df, "b3")
     rows = {r["id"]: r for r in out.collect()}
     assert rows[1]["annual_revenue"] == 12.5 and rows[2]["annual_revenue"] is None
     assert rows[1]["modified_date"] == dt.datetime(2024, 1, 2)
@@ -242,6 +243,11 @@ def test_align_to_schema(spark):
     assert out.columns == ["a", "b", "c"]
     row = out.first()
     assert row["a"] == 1 and row["b"] == 2.0 and row["c"] is None
+    # present columns cast under safe_cast's rules: a fractional string
+    # id is NULL, not truncated to 3
+    ids = spark.createDataFrame([("3.5",), ("7",)], "a string")
+    got = [r["a"] for r in conform.align_to_schema(ids, target).collect()]
+    assert got == [None, 7]
 
 
 def test_flatten_invariants_empty_cycle_passes(spark):

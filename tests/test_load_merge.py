@@ -267,6 +267,19 @@ def test_compact_parquet_reduces_files_preserves_rows(spark, tmp_path):
     assert out.agg(F.sum("v")).first()[0] == 2 * sum(range(1000))
 
 
+def test_compact_parquet_refuses_after_interrupted_swap(spark, tmp_path):
+    """A crash between the swap's two renames leaves the table only in
+    ``<path>._compact_old``: the next compaction refuses (no parquet
+    files at ``path``) before clearing leftovers, so that copy survives."""
+    from facolos_data_pipelines_spark.sources.io import compact_parquet
+
+    path = str(tmp_path / "t")
+    spark.range(10).write.parquet(path + "._compact_old")
+    with pytest.raises(ValueError, match="no parquet files"):
+        compact_parquet(spark, path)
+    assert spark.read.parquet(path + "._compact_old").count() == 10
+
+
 def test_upsert_parquet_delta_merge_dispatch(spark, tmp_path):
     """S11's Delta MERGE INTO slot: when delta-spark is importable,
     upsert_parquet against a Delta table must dispatch to a real

@@ -8,7 +8,6 @@ from facolos_data_pipelines_spark.quality.monitor import (
     cycle_summary,
     health_score,
     production_health,
-    record_cycle,
     schedule_accuracy,
 )
 
@@ -121,16 +120,6 @@ def test_production_health_composes(spark):
     assert report["health_score"] == 80.0
     assert report["health_band"] == "good"
     assert report["schedule_accurate"]
-
-
-def test_record_cycle_roundtrip(spark, tmp_path):
-    path = str(tmp_path / "metrics")
-    record_cycle(spark, path, "c1", dt.datetime(2024, 1, 1), 12.5, 42, True)
-    record_cycle(spark, path, "c2", dt.datetime(2024, 1, 1, 0, 10), 13.5, 0, False)
-    m = spark.read.parquet(path)
-    assert m.count() == 2
-    s = cycle_summary(m).collect()[0]
-    assert s["total_records"] == 42 and s["success_rate_pct"] == 50.0
 
 
 def test_cycle_summary_empty_registry(spark):

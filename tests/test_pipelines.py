@@ -203,6 +203,41 @@ def test_cycle_continues_past_failing_endpoint(spark, tmp_path):
     assert report["quality"]["passed"]
 
 
+def test_runner_cycles_feed_the_monitor(spark, tmp_path):
+    """The monitor's cycle rows derive from the runner's batch_runs log:
+    three real cycles, the last two with a failing endpoint, give three
+    rows matching the reports, and the trailing failures alert."""
+    from facolos_data_pipelines_spark.quality.monitor import (
+        CYCLE_METRICS_SCHEMA,
+        alert_conditions,
+        cycles_from_runs,
+    )
+
+    root, control = str(tmp_path / "staging"), str(tmp_path / "control")
+
+    def boom(s):
+        raise RuntimeError("api down")
+
+    bad = EndpointSpec(name="bad", extract=boom, transform=lambda df, b: df, primary_keys=["x"])
+    reports = [
+        run_incremental_cycle(spark, eps, root, control_root=control, min_tables_with_data=1)
+        for eps in ([_spec(spark)], [bad, _spec(spark)], [bad, _spec(spark)])
+    ]
+    cycles = cycles_from_runs(spark.read.parquet(f"{control}/batch_runs"))
+    assert cycles.columns == CYCLE_METRICS_SCHEMA.names
+    got = {r["cycle_id"]: (r["success"], r["records_processed"]) for r in cycles.collect()}
+    assert got == {
+        r["batch_id"]: (
+            r["status"] == "success",
+            sum(e.get("records", 0) for e in r["endpoints"].values()),
+        )
+        for r in reports
+    }
+    assert list(got.values()).count((True, 3)) == 1
+    alerts = alert_conditions(cycles, max_consecutive_failures=2).first()
+    assert alerts["consecutive_failures"] == 2 and alerts["failure_alert"]
+
+
 def test_curate_corpus_end_to_end(spark, sf_dir, tmp_path):
     from facolos_data_pipelines_spark.pipelines import curate_corpus
 

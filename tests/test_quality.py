@@ -14,6 +14,7 @@ from facolos_data_pipelines_spark.operators.incremental import (
     time_range_filter,
 )
 from facolos_data_pipelines_spark.quality import (
+    gate_report,
     multi_table_summary,
     quality_gate,
     table_stats,
@@ -51,6 +52,25 @@ def test_multi_table_summary_and_gate(spark):
     assert gate["total_records"] == 21
     assert gate["passed"]
     assert abs(gate["quality_score"] - 83.333) < 0.01
+    assert gate_report(tables, 5) == {
+        "tables_with_data": 5,
+        "total_tables": 6,
+        "total_records": 21,
+        "quality_score": gate["quality_score"],
+        "passed": True,
+    }
+
+
+def test_multi_table_summary_rejects_empty_input(spark):
+    with pytest.raises(ValueError, match="empty tables"):
+        multi_table_summary({})
+    assert gate_report({}, 5) == {
+        "tables_with_data": 0,
+        "total_tables": 0,
+        "total_records": 0,
+        "quality_score": 0.0,
+        "passed": False,
+    }
 
 
 def test_validate_pre_load(spark):
