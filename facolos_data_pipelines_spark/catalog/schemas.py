@@ -632,7 +632,7 @@ BATCH_RUNS_SCHEMA = T.StructType(
             ("batch_id", S),
             ("source_name", S),
             ("table_name", S),
-            ("status", S),  # running | success | failed
+            ("status", S),  # running | success | failed | skipped_not_due
             ("records_extracted", L),
             ("records_loaded", L),
             ("started_at", TS),

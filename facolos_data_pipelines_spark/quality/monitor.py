@@ -35,7 +35,9 @@ def cycles_from_runs(batch_runs: DataFrame) -> DataFrame:
     runner's ``batch_runs`` log (one row per endpoint run, all sharing
     the cycle's ``batch_id`` and start): the cycle starts at its first
     ``started_at``, lasts until its last ``finished_at``, processed the
-    summed ``records_loaded`` and succeeded iff every endpoint did.
+    summed ``records_loaded`` and succeeded iff no endpoint ``failed``
+    (a ``skipped_not_due`` row is a 0-record run, not a failure, so a
+    cycle where no source was due is a successful no-data cycle).
     One lazy groupBy — the cycle rows are never stored twice."""
     return batch_runs.groupBy("batch_id").agg(
         F.min("started_at").alias("started_at"),
@@ -44,7 +46,7 @@ def cycles_from_runs(batch_runs: DataFrame) -> DataFrame:
             / 1e6
         ).alias("duration_seconds"),
         F.sum("records_loaded").cast("long").alias("records_processed"),
-        F.bool_and(F.col("status") == "success").alias("success"),
+        F.bool_and(F.col("status") != "failed").alias("success"),
     ).select(
         F.col("batch_id").alias("cycle_id"),
         "started_at",

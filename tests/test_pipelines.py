@@ -238,6 +238,198 @@ def test_runner_cycles_feed_the_monitor(spark, tmp_path):
     assert alerts["consecutive_failures"] == 2 and alerts["failure_alert"]
 
 
+def _orders(name, table="", extract=None):
+    """An append endpoint landing RAW_ORDERS (3 rows) into ``table``
+    (default: its own name)."""
+    return EndpointSpec(
+        name=name,
+        extract=extract or (lambda s: s.createDataFrame(RAW_ORDERS, RAW_TIKTOK_ORDER_SCHEMA)),
+        transform=lambda raw, batch_id: flatten_tiktok_orders(raw, batch_id),
+        primary_keys=["order_id", "item_id", "item_sku_id"],
+        staging_table=table,
+    )
+
+
+def test_skipped_sources_reach_the_monitor(spark, tmp_path):
+    """A not-due endpoint logs a 0-record skipped_not_due row, so a cycle
+    where no source was due still yields a (successful, no-data) cycle
+    row that the monitor's counters and schedule checks read."""
+    import datetime as dt
+
+    from facolos_data_pipelines_spark.pipelines.registry import seed_data_sources
+    from facolos_data_pipelines_spark.quality.monitor import (
+        alert_conditions,
+        cycles_from_runs,
+        production_health,
+        schedule_accuracy,
+    )
+
+    root, control = str(tmp_path / "staging"), str(tmp_path / "control")
+    reg = str(tmp_path / "data_sources")
+    seed_data_sources(spark, reg, [("tiktok_orders", "ecommerce", 1e6)])  # far future
+    now = dt.datetime(2024, 6, 1, 12, 0, 0)
+    reports = [
+        run_incremental_cycle(
+            spark, [_spec(spark)], root, control_root=control,
+            min_tables_with_data=1, registry_path=reg, now=at,
+        )
+        for at in (now, now + dt.timedelta(hours=1))
+    ]
+    assert reports[1]["endpoints"]["tiktok_orders"] == {"status": "skipped_not_due"}
+    assert reports[1]["status"] == "success"
+
+    runs = spark.read.parquet(f"{control}/batch_runs")
+    skipped = runs.filter(F.col("batch_id") == reports[1]["batch_id"]).collect()
+    assert [(r["status"], r["records_loaded"]) for r in skipped] == [("skipped_not_due", 0)]
+
+    cycles = cycles_from_runs(runs)
+    got = {r["cycle_id"]: (r["success"], r["records_processed"]) for r in cycles.collect()}
+    assert got == {reports[0]["batch_id"]: (True, 3), reports[1]["batch_id"]: (True, 0)}
+    alerts = alert_conditions(cycles, max_no_data_cycles=1).first()
+    assert alerts["no_data_cycles"] == 1 and alerts["no_data_alert"]
+    assert alerts["consecutive_failures"] == 0 and alerts["success_rate_pct"] == 100.0
+    assert schedule_accuracy(cycles).first()["n_intervals"] == 1
+    tables = spark.createDataFrame([("tiktok_orders", 3)], "table_name string, records long")
+    health = production_health(cycles, tables).first()
+    assert health["success_rate_pct"] == 100.0
+
+
+def test_cycle_runs_endpoints_concurrently(spark, tmp_path):
+    """Two endpoints on different tables meet at one barrier inside
+    extract: they pass only if they run at the same time (one after the
+    other, the first breaks the barrier after 10 s)."""
+    import threading
+
+    barrier = threading.Barrier(2, timeout=10)
+
+    def extract(s):
+        barrier.wait()
+        return s.createDataFrame(RAW_ORDERS, RAW_TIKTOK_ORDER_SCHEMA)
+
+    root = str(tmp_path / "staging")
+    report = run_incremental_cycle(
+        spark, [_orders("a", extract=extract), _orders("b", extract=extract)], root,
+        min_tables_with_data=2,
+    )
+    assert {k: v["status"] for k, v in report["endpoints"].items()} == {
+        "a": "success", "b": "success"
+    }
+    assert report["quality"]["passed"]
+
+
+def test_cycle_failing_endpoint_fails_alone_among_concurrent(spark, tmp_path):
+    """A raising endpoint between healthy ones: the healthy tables land,
+    the report keeps input order and reads partial, and the log holds
+    one row per endpoint."""
+    import os
+
+    def boom(s):
+        raise RuntimeError("api down")
+
+    root, control = str(tmp_path / "staging"), str(tmp_path / "control")
+    eps = [_orders("a"), _orders("bad", extract=boom), _orders("c"), _orders("d")]
+    report = run_incremental_cycle(
+        spark, eps, root, control_root=control, min_tables_with_data=3
+    )
+    assert list(report["endpoints"]) == ["a", "bad", "c", "d"]
+    assert report["status"] == "partial"
+    assert report["endpoints"]["bad"] == {"status": "failed", "error": "api down"}
+    for name in ("a", "c", "d"):
+        assert report["endpoints"][name]["records"] == 3
+        assert spark.read.parquet(f"{root}/{name}").count() == 3
+    assert not os.path.exists(f"{root}/bad")
+    assert report["quality"]["passed"]
+    runs = spark.read.parquet(f"{control}/batch_runs").collect()
+    assert {r["source_name"]: r["status"] for r in runs} == {
+        "a": "success", "bad": "failed", "c": "success", "d": "success"
+    }
+
+
+def test_cycle_endpoints_sharing_a_table_run_in_order(spark, tmp_path):
+    """Endpoints landing one staging table run in one worker, in input
+    order: the second one's PK rejection sees the first one's rows."""
+    root = str(tmp_path / "staging")
+    eps = [_orders("first", table="orders"), _orders("other"), _orders("second", table="orders")]
+    report = run_incremental_cycle(spark, eps, root, min_tables_with_data=2)
+    assert list(report["endpoints"]) == ["first", "other", "second"]
+    got = {k: v["records"] for k, v in report["endpoints"].items()}
+    assert got == {"first": 3, "other": 3, "second": 0}
+    assert spark.read.parquet(f"{root}/orders").count() == 3
+
+
+def test_cycle_appends_one_batch_runs_file(spark, tmp_path):
+    """The cycle's rows land as one append of one file, however many
+    endpoints ran — also with more staging tables than pool threads."""
+    import os
+
+    root, control = str(tmp_path / "staging"), str(tmp_path / "control")
+    n = spark.sparkContext.defaultParallelism + 2
+    eps = [_orders(f"t{i}") for i in range(n)]
+    reports = [
+        run_incremental_cycle(spark, eps, root, control_root=control, min_tables_with_data=n)
+        for _ in range(2)
+    ]
+    assert [r["endpoints"][f"t{n - 1}"]["records"] for r in reports] == [3, 0]
+    files = [f for f in os.listdir(f"{control}/batch_runs") if f.endswith(".parquet")]
+    assert len(files) == 2
+    assert spark.read.parquet(f"{control}/batch_runs").count() == 2 * n
+
+
+def test_cycle_workers_inherit_caller_context(spark, tmp_path):
+    """The caller's job group, local properties and plan-only mode reach
+    every endpoint; a property one endpoint sets reaches neither a
+    sibling endpoint nor the caller. (Session tags are left out: on
+    Spark 4.1 ``addTag`` makes the shared session unserializable for
+    later ``pyspark.ml`` tasks.)"""
+    import threading
+
+    from facolos_data_pipelines_spark.eager import plan_only_active, plan_only_mode
+
+    sc = spark.sparkContext
+    seen = {}
+    a_set = threading.Event()
+
+    def context(s):
+        return (
+            sc.getLocalProperty("spark.jobGroup.id"),
+            sc.getLocalProperty("cycle.custom"),
+            plan_only_active(),
+            sc.getLocalProperty("cycle.leak"),
+        )
+
+    def extract_a(s):
+        seen["a"] = context(s)
+        sc.setLocalProperty("cycle.leak", "a")
+        a_set.set()
+        return s.createDataFrame(RAW_ORDERS, RAW_TIKTOK_ORDER_SCHEMA)
+
+    def extract_b(s):
+        a_set.wait(10)
+        seen["b"] = context(s)
+        return s.createDataFrame(RAW_ORDERS, RAW_TIKTOK_ORDER_SCHEMA)
+
+    root = str(tmp_path / "staging")
+    sc.setJobGroup("cycle-group", "caller's group")
+    sc.setLocalProperty("cycle.custom", "v")
+    try:
+        with plan_only_mode():
+            report = run_incremental_cycle(
+                spark, [_orders("a", extract=extract_a), _orders("b", extract=extract_b)],
+                root, min_tables_with_data=2,
+            )
+        caller = sc.getLocalProperty("cycle.leak")
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel", "cycle.custom", "cycle.leak"):
+            sc.setLocalProperty(key, None)
+    assert report["status"] == "success"
+    assert seen == {
+        "a": ("cycle-group", "v", True, None),
+        "b": ("cycle-group", "v", True, None),
+    }
+    assert caller is None
+
+
 def test_curate_corpus_end_to_end(spark, sf_dir, tmp_path):
     from facolos_data_pipelines_spark.pipelines import curate_corpus
 
