@@ -67,6 +67,62 @@ def word_shingles(text_col: str | Column, n: int = 3) -> Column:
     return F.filter(F.array_distinct(grams), lambda x: x != "")
 
 
+def _word_gram_rows(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    n: int = 3,
+    carry_cols: "tuple[str, ...] | list[str]" = (),
+) -> DataFrame:
+    """(id, *carry, _pos, _full, _sh) — one row per word position: the
+    word n-gram starting there and whether it is complete. The one
+    n-gram assembly in the package; each consumer filters it to its
+    own rule:
+
+    - :func:`exploded_shingles` keeps full grams plus position 0 (a
+      document shorter than n words contributes its full word join);
+    - ``text_clean.top_ngrams`` and ``text_clean.repetition_stats``
+      keep full grams only;
+    - ``dedup_ngram.duplicate_gram_spans`` / ``strip_duplicate_spans``
+      keep ``_pos`` and take each document's word count before the
+      filter.
+
+    Built as posexplode + ``lead`` over a per-document window instead
+    of the array-slice ``transform``: the window path is whole-stage
+    codegen while nested higher-order functions fall back to
+    interpreted eval — measured 6.5x faster over the sf0.1 corpus.
+    Costs one shuffle on ``id_col`` (which downstream per-doc
+    aggregations reuse). A gram near a document's end that runs out of
+    words holds only the words left (``concat_ws`` skips the NULL
+    leads) and reads ``_full`` false; ``n <= 1`` grams are the words.
+    """
+    w = df.select(
+        F.col(id_col),
+        *carry_cols,
+        F.posexplode(normalized_words(text_col)).alias("_pos", "_w"),
+    )
+    if n <= 1:
+        return w.select(
+            id_col, *carry_cols, "_pos", F.lit(True).alias("_full"),
+            F.col("_w").alias("_sh"),
+        )
+    win = Window.partitionBy(id_col).orderBy("_pos")
+    leads = [f"_w{j}" for j in range(1, n)]
+    return w.select(
+        id_col,
+        *carry_cols,
+        "_pos",
+        "_w",
+        *[F.lead("_w", j).over(win).alias(c) for j, c in enumerate(leads, 1)],
+    ).select(
+        id_col,
+        *carry_cols,
+        "_pos",
+        F.col(leads[-1]).isNotNull().alias("_full"),
+        F.concat_ws(" ", "_w", *leads).alias("_sh"),
+    )
+
+
 def exploded_shingles(
     df: DataFrame,
     text_col: str = "text",
@@ -77,15 +133,16 @@ def exploded_shingles(
 ) -> DataFrame:
     """(id, _sh) rows of word n-gram shingles — the explode-side twin of
     :func:`word_shingles` (same shingle sets: short docs contribute
-    their full word join; empty docs drop out).
+    their full word join; empty docs drop out), filtered from
+    :func:`_word_gram_rows`. ``distinct=True`` adds the per-doc dedup
+    the array form got from ``array_distinct``.
 
-    Built as posexplode + ``lead`` over a per-document window instead
-    of the array-slice ``transform``: the window path is whole-stage
-    codegen while nested higher-order functions fall back to
-    interpreted eval — measured 6.5x faster over the sf0.1 corpus.
-    Costs one shuffle on ``id_col`` (which downstream per-doc
-    aggregations reuse); ``distinct=True`` adds the per-doc dedup the
-    array form got from ``array_distinct``.
+    Consumers: the MinHash signatures and shingle arrays here, the
+    rolling-min fingerprint (``text_quality``), the distinct-gram set
+    behind decontamination and corpus overlap
+    (``text_lm.corpus_gram_state``), the posting join of the exact
+    n-gram pair operators (``dedup_ngram``), corpus diversity and the
+    DSIR gram histograms.
 
     ``carry_cols`` names per-document columns to ride along on every
     shingle row (they must be constant per ``id_col`` — e.g. a
@@ -94,37 +151,23 @@ def exploded_shingles(
     (dsir_logratio_weights' tagged histogram).
     """
     carry = list(carry_cols)
-    # internal names of this function's explode/window pipeline — a
-    # colliding carry column would silently corrupt the window ordering
-    # or the shingle text (ADVICE r12)
-    reserved = {"_pos", "_w", "_sh"} | {f"_w{j}" for j in range(1, max(shingle_n, 1))}
+    # internal names of the gram pipeline — a colliding carry column
+    # would silently corrupt the window ordering or the shingle text
+    reserved = {"_pos", "_w", "_full", "_sh"} | {
+        f"_w{j}" for j in range(1, max(shingle_n, 1))
+    }
     bad = sorted(set(carry) & reserved)
     if bad:
         raise ValueError(
             f"exploded_shingles: carry_cols {bad} collide with internal "
-            "column names ('_pos', '_w', '_w1'.., '_sh'); rename them first"
+            "column names ('_pos', '_w', '_w1'.., '_full', '_sh'); rename "
+            "them first"
         )
-    w = df.select(
-        F.col(id_col),
-        *carry,
-        F.posexplode(normalized_words(text_col)).alias("_pos", "_w"),
+    sh = (
+        _word_gram_rows(df, text_col, id_col, shingle_n, carry)
+        .filter(F.col("_full") | (F.col("_pos") == 0))
+        .select(id_col, *carry, "_sh")
     )
-    if shingle_n <= 1:
-        sh = w.select(id_col, *carry, F.col("_w").alias("_sh"))
-    else:
-        win = Window.partitionBy(id_col).orderBy("_pos")
-        leads = [F.lead("_w", j).over(win).alias(f"_w{j}") for j in range(1, shingle_n)]
-        sh = (
-            w.select(id_col, *carry, "_pos", "_w", *leads)
-            .filter(F.col(f"_w{shingle_n - 1}").isNotNull() | (F.col("_pos") == 0))
-            .select(
-                id_col,
-                *carry,
-                F.concat_ws(" ", "_w", *[f"_w{j}" for j in range(1, shingle_n)]).alias(
-                    "_sh"
-                ),
-            )
-        )
     return sh.dropDuplicates([id_col, "_sh"]) if distinct else sh
 
 

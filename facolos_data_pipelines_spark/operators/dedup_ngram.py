@@ -8,7 +8,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup_components import _drop_pair_losers
-from .dedup_minhash import exploded_shingles, normalized_words
+from .dedup_minhash import _word_gram_rows, exploded_shingles, normalized_words
 
 
 # ---------------------------------------------------------------------------
@@ -44,6 +44,26 @@ def ngram_jaccard_pairs(
     Pass ``None`` for fully exact semantics regardless of skew.
     Doc sizes |A| are always computed from the uncapped postings.
     """
+    jac = F.col("_shared") / (F.col("sz_a") + F.col("sz_b") - F.col("_shared"))
+    return (
+        _shared_gram_pairs(df, text_col, id_col, shingle_n, max_posting_size)
+        .select("id_a", "id_b", jac.alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
+    )
+
+
+def _shared_gram_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_n: int,
+    max_posting_size: int | None,
+) -> DataFrame:
+    """(id_a, id_b, _shared, sz_a, sz_b) for every doc pair (id_a <
+    id_b) sharing at least one distinct shingle: the posting-list self
+    join under the ``max_posting_size`` cap, the shared count from one
+    pair aggregation, and each side's distinct-shingle count from the
+    uncapped postings."""
     sh = exploded_shingles(df, text_col, id_col, shingle_n, distinct=True)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("_sz"))
     if max_posting_size is not None:
@@ -60,12 +80,10 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("_shared"))
     )
-    jac = F.col("_shared") / (F.col("sz_a") + F.col("sz_b") - F.col("_shared"))
-    return (
-        shared.join(sizes.select(F.col(id_col).alias("id_a"), F.col("_sz").alias("sz_a")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("_sz").alias("sz_b")), "id_b")
-        .select("id_a", "id_b", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return shared.join(
+        sizes.select(F.col(id_col).alias("id_a"), F.col("_sz").alias("sz_a")), "id_a"
+    ).join(
+        sizes.select(F.col(id_col).alias("id_b"), F.col("_sz").alias("sz_b")), "id_b"
     )
 
 
@@ -95,22 +113,6 @@ def ngram_containment_pairs(
     extra comparison picks the contained side; at 100 TB the cost
     profile is the Jaccard operator's, bit for bit.
     """
-    sh = exploded_shingles(df, text_col, id_col, shingle_n, distinct=True)
-    sizes = sh.groupBy(id_col).agg(F.count("*").alias("_sz"))
-    if max_posting_size is not None:
-        from .skew import cap_group_size
-
-        posted = cap_group_size(sh, ["_sh"], max_posting_size, order_col=id_col)
-    else:
-        posted = sh
-    a = posted.select(F.col(id_col).alias("id_a"), "_sh")
-    b = posted.select(F.col(id_col).alias("id_b"), "_sh")
-    shared = (
-        a.join(b, ["_sh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("_shared"))
-    )
     containment = F.col("_shared") / F.least(F.col("sz_a"), F.col("sz_b"))
     contained = F.when(F.col("sz_a") < F.col("sz_b"), F.col("id_a")).otherwise(
         F.when(F.col("sz_b") < F.col("sz_a"), F.col("id_b")).otherwise(
@@ -118,14 +120,7 @@ def ngram_containment_pairs(
         )
     )
     return (
-        shared.join(
-            sizes.select(F.col(id_col).alias("id_a"), F.col("_sz").alias("sz_a")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col(id_col).alias("id_b"), F.col("_sz").alias("sz_b")),
-            "id_b",
-        )
+        _shared_gram_pairs(df, text_col, id_col, shingle_n, max_posting_size)
         .select(
             "id_a",
             "id_b",
@@ -377,6 +372,21 @@ def line_dedup(
 # Substring-level duplication (Lee et al. 2022 — duplicated spans)
 # ---------------------------------------------------------------------------
 
+def _positioned_grams(
+    df: DataFrame, text_col: str, id_col: str, n: int
+) -> DataFrame:
+    """(id, _pos, _nw, _sh) — the gram rows of :func:`exploded_shingles`
+    (full grams plus a short document's whole word join) with their
+    start position and the document's word count ``_nw``, taken over
+    every word position before the full-gram filter."""
+    return (
+        _word_gram_rows(df, text_col, id_col, n)
+        .withColumn("_nw", F.max("_pos").over(Window.partitionBy(id_col)) + 1)
+        .filter(F.col("_full") | (F.col("_pos") == 0))
+        .select(id_col, "_pos", "_nw", "_sh")
+    )
+
+
 def duplicate_gram_spans(
     df: DataFrame,
     text_col: str = "text",
@@ -399,8 +409,8 @@ def duplicate_gram_spans(
     words participate as a single whole-document gram (the shared
     shingle fallback), with the span end capped at their last word.
 
-    Plan: posexplode words + lead window builds positioned grams (one
-    shuffle on id, codegen — the exploded_shingles path); gram
+    Plan: :func:`_positioned_grams` builds positioned grams on the
+    shared gram rows (one shuffle on id, codegen); gram
     frequency is one groupBy on the gram string with a distinct-doc
     count (map-side partial agg); marked positions shuffle back to
     their document for the gaps-and-islands merge (second id shuffle,
@@ -408,23 +418,7 @@ def duplicate_gram_spans(
     bounded keys; no self-join, so viral boilerplate grams cost their
     posting list ONCE (linear), unlike pair enumeration.
     """
-    w = df.select(
-        F.col(id_col), F.posexplode(normalized_words(text_col)).alias("_pos", "_w")
-    )
-    doc_win = Window.partitionBy(id_col)
-    order_win = Window.partitionBy(id_col).orderBy("_pos")
-    leads = [F.lead("_w", j).over(order_win).alias(f"_w{j}") for j in range(1, n)]
-    grams = (
-        w.select(id_col, "_pos", "_w", *leads)
-        .withColumn("_nw", F.max("_pos").over(doc_win) + 1)
-        .filter(F.col(f"_w{n - 1}").isNotNull() | (F.col("_pos") == 0))
-        .select(
-            id_col,
-            "_pos",
-            "_nw",
-            F.concat_ws(" ", "_w", *[f"_w{j}" for j in range(1, n)]).alias("_sh"),
-        )
-    )
+    grams = _positioned_grams(df, text_col, id_col, n)
     dup = (
         grams.groupBy("_sh")
         .agg(F.countDistinct(id_col).alias("_nd"))
@@ -432,6 +426,7 @@ def duplicate_gram_spans(
         .select("_sh")
     )
     marked = grams.join(dup, "_sh").select(id_col, "_pos", "_nw")
+    order_win = Window.partitionBy(id_col).orderBy("_pos")
     gap = F.col("_pos") - F.lag("_pos").over(order_win)
     islands = marked.withColumn(
         "_brk", F.when(gap > n, 1).otherwise(0)
@@ -516,20 +511,7 @@ def strip_duplicate_spans(
     w = df.select(
         F.col(id_col), F.posexplode(normalized_words(text_col)).alias("_pos", "_w")
     )
-    doc_win = Window.partitionBy(id_col)
-    order_win = Window.partitionBy(id_col).orderBy("_pos")
-    leads = [F.lead("_w", j).over(order_win).alias(f"_w{j}") for j in range(1, n)]
-    grams = (
-        w.select(id_col, "_pos", "_w", *leads)
-        .withColumn("_nw", F.max("_pos").over(doc_win) + 1)
-        .filter(F.col(f"_w{n - 1}").isNotNull() | (F.col("_pos") == 0))
-        .select(
-            id_col,
-            "_pos",
-            "_nw",
-            F.concat_ws(" ", "_w", *[f"_w{j}" for j in range(1, n)]).alias("_sh"),
-        )
-    )
+    grams = _positioned_grams(df, text_col, id_col, n)
     dup = (
         grams.groupBy("_sh")
         .agg(

@@ -20,7 +20,6 @@ from .text_quality import (  # noqa: F401
     detect_language,
     quality_score,
     _require_unique_ids,
-    _rolling_min_gram,
     fingerprint,
     fingerprint_md5,
 )

@@ -9,7 +9,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
-from .dedup import normalized_words
+from .dedup import exploded_shingles, normalized_words
+from .dedup_minhash import _word_gram_rows
+from .text_lm import corpus_gram_state
 from .text_quality import _require_unique_ids, token_count_whitespace
 
 
@@ -139,14 +141,10 @@ def repetition_stats(
     )
     base = df.select(F.col(id_col), dup_line_frac.alias("dup_line_frac"))
 
-    w = df.select(
-        F.col(id_col), F.posexplode(normalized_words(text_col)).alias("_pos", "_w")
-    )
-    win = Window.partitionBy(id_col).orderBy("_pos")
     grams = (
-        w.select(id_col, "_pos", "_w", F.lead("_w", 1).over(win).alias("_w1"))
-        .filter(F.col("_w1").isNotNull())
-        .select(id_col, F.concat_ws(" ", "_w", "_w1").alias("_g"))
+        _word_gram_rows(df, text_col, id_col, 2)
+        .filter(F.col("_full"))
+        .select(id_col, F.col("_sh").alias("_g"))
     )
     counts = grams.groupBy(id_col, "_g").agg(F.count("*").alias("_c"))
     top = counts.groupBy(id_col).agg(
@@ -182,25 +180,27 @@ def decontaminate(
     at all. Zero-overlap docs are preserved via a left join of the base
     ids against the hit counts (id-only frames — narrow).
     """
-    from .dedup import exploded_shingles
+    bench_grams = corpus_gram_state(benchmark, n, text_col, id_col)
+    doc_grams = _doc_grams(docs, n, id_col, text_col)
+    return _overlap_flags(
+        docs, doc_grams.join(F.broadcast(bench_grams), "gram"), id_col, min_overlap
+    )
 
-    if id_col not in benchmark.columns:
-        # the shingle window only needs SOME per-row key on the bench
-        # side; the ids never leave the distinct-gram subquery
-        benchmark = benchmark.withColumn(id_col, F.monotonically_increasing_id())
-    bench_grams = (
-        exploded_shingles(benchmark, text_col, id_col, n, distinct=False)
-        .select(F.col("_sh").alias("_g"))
-        .distinct()
+
+def _doc_grams(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFrame:
+    """(id, gram) — each training document's distinct word n-grams."""
+    return exploded_shingles(docs, text_col, id_col, n, distinct=True).select(
+        F.col(id_col), F.col("_sh").alias("gram")
     )
-    doc_grams = exploded_shingles(docs, text_col, id_col, n, distinct=True).select(
-        F.col(id_col), F.col("_sh").alias("_g")
-    )
-    hits = (
-        doc_grams.join(F.broadcast(bench_grams), "_g")
-        .groupBy(id_col)
-        .agg(F.count("*").cast("long").alias("n_overlap"))
-    )
+
+
+def _overlap_flags(
+    docs: DataFrame, hit_grams: DataFrame, id_col: str, min_overlap: int
+) -> DataFrame:
+    """(id, n_overlap, contaminated) from the (id, gram) rows that hit
+    the benchmark: one count per document, and every document of
+    ``docs`` kept through an id-only left join (zero hits -> 0)."""
+    hits = hit_grams.groupBy(id_col).agg(F.count("*").cast("long").alias("n_overlap"))
     return (
         docs.select(id_col)
         .join(hits, id_col, "left")
@@ -237,21 +237,12 @@ def contamination_fraction(
     to form any n-gram score 0.0 (no evidence), preserved via the
     id-only left join.
     """
-    from .dedup import exploded_shingles
-
-    if id_col not in benchmark.columns:
-        benchmark = benchmark.withColumn(id_col, F.monotonically_increasing_id())
-    bench_grams = (
-        exploded_shingles(benchmark, text_col, id_col, n, distinct=False)
-        .select(F.col("_sh").alias("_g"))
-        .distinct()
-        .withColumn("_hit", F.lit(1))
-    )
-    doc_grams = exploded_shingles(docs, text_col, id_col, n, distinct=True).select(
-        F.col(id_col), F.col("_sh").alias("_g")
+    bench_grams = corpus_gram_state(benchmark, n, text_col, id_col).withColumn(
+        "_hit", F.lit(1)
     )
     per_doc = (
-        doc_grams.join(F.broadcast(bench_grams), "_g", "left")
+        _doc_grams(docs, n, id_col, text_col)
+        .join(F.broadcast(bench_grams), "gram", "left")
         .groupBy(id_col)
         .agg(
             F.count("*").cast("long").alias("n_grams"),
@@ -370,39 +361,18 @@ def decontaminate_bloom(
     Same output contract as :func:`decontaminate`:
     (id, n_overlap, contaminated).
     """
-    from .dedup import exploded_shingles
-
-    if id_col not in benchmark.columns:
-        benchmark = benchmark.withColumn(id_col, F.monotonically_increasing_id())
-    bench_grams = (
-        exploded_shingles(benchmark, text_col, id_col, n, distinct=False)
-        .select(F.col("_sh").alias("_g"))
-        .distinct()
-    )
-    bitmap = bloom_bitmap(bench_grams, "_g", m_bits, num_hashes)
-    spark = docs.sparkSession
-    bm = local_frame(spark, [(bitmap,)], "_bm array<long>")
+    bench_grams = corpus_gram_state(benchmark, n, text_col, id_col)
+    bitmap = bloom_bitmap(bench_grams, "gram", m_bits, num_hashes)
+    bm = local_frame(docs.sparkSession, [(bitmap,)], "_bm array<long>")
     doc_grams = (
-        exploded_shingles(docs, text_col, id_col, n, distinct=True)
-        .select(F.col(id_col), F.col("_sh").alias("_g"))
+        _doc_grams(docs, n, id_col, text_col)
         .crossJoin(F.broadcast(bm))
-        .filter(bloom_might_contain(F.col("_bm"), F.col("_g"), m_bits, num_hashes))
+        .filter(bloom_might_contain(F.col("_bm"), F.col("gram"), m_bits, num_hashes))
         .drop("_bm")
     )
     if exact_confirm:
-        doc_grams = doc_grams.join(F.broadcast(bench_grams), "_g", "left_semi")
-    hits = doc_grams.groupBy(id_col).agg(
-        F.count("*").cast("long").alias("n_overlap")
-    )
-    return (
-        docs.select(id_col)
-        .join(hits, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_overlap", F.lit(0).cast("long")).alias("n_overlap"),
-            (F.coalesce("n_overlap", F.lit(0)) >= min_overlap).alias("contaminated"),
-        )
-    )
+        doc_grams = doc_grams.join(F.broadcast(bench_grams), "gram", "left_semi")
+    return _overlap_flags(docs, doc_grams, id_col, min_overlap)
 
 
 def top_ngrams(
@@ -415,38 +385,23 @@ def top_ngrams(
     """Corpus-level top-k word n-grams with counts (vocabulary /
     boilerplate inspection — the usual first look at a new crawl).
 
-    Non-distinct n-grams (frequency matters), assembled with the
-    codegen posexplode + ``lead`` formulation (the array-slice
-    ``transform`` form is interpreted CodegenFallback — the same 6.5x
-    measurement behind ``dedup.exploded_shingles``); only full-length
-    grams count (docs shorter than n words contribute nothing). Then
-    one groupBy(gram) with map-side partial aggregation and a global
-    top-k via TakeOrderedAndProject — no full sort of the vocabulary.
-    Ties break on the gram string so the result is deterministic. The
-    per-doc window adds a shuffle on ``id_col`` (synthesized when the
-    frame has none) — measured well worth it against the interpreted
-    per-gram slice cost.
+    Non-distinct n-grams (frequency matters) from the shared gram rows
+    (``dedup_minhash._word_gram_rows``), full-length grams only (docs
+    shorter than n words contribute nothing). Then one groupBy(gram)
+    with map-side partial aggregation and a global top-k via
+    TakeOrderedAndProject — no full sort of the vocabulary. Ties break
+    on the gram string so the result is deterministic. The gram
+    window's shuffle on ``id_col`` needs an id, made up when the frame
+    has none.
     """
-    from .dedup import normalized_words
-
     base = docs
     if id_col not in base.columns:
         base = base.withColumn(id_col, F.monotonically_increasing_id())
-    w = base.select(
-        F.col(id_col), F.posexplode(normalized_words(text_col)).alias("_pos", "_w")
+    grams = (
+        _word_gram_rows(base, text_col, id_col, n)
+        .filter(F.col("_full"))
+        .select(F.col("_sh").alias("ngram"))
     )
-    if n <= 1:
-        grams = w.select(F.col("_w").alias("ngram"))
-    else:
-        win = Window.partitionBy(id_col).orderBy("_pos")
-        leads = [F.lead("_w", j).over(win).alias(f"_w{j}") for j in range(1, n)]
-        grams = (
-            w.select("_w", *leads)
-            .filter(F.col(f"_w{n - 1}").isNotNull())
-            .select(
-                F.concat_ws(" ", "_w", *[f"_w{j}" for j in range(1, n)]).alias("ngram")
-            )
-        )
     return (
         grams.groupBy("ngram")
         .agg(F.count("*").cast("long").alias("n_occurrences"))

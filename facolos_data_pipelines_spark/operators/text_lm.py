@@ -5,11 +5,11 @@ re-exports the surface."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..eager import materialize
-from .dedup import normalized_words
+from .dedup import exploded_shingles, normalized_words
 from .text_quality import token_count_whitespace
 
 
@@ -179,20 +179,10 @@ def corpus_overlap(
     monitoring, persist the distinct-gram sets and re-join only the
     deltas.
     """
-    from .dedup import exploded_shingles
-
     def gram_set(df: DataFrame, marker: str) -> DataFrame:
-        d = df
-        if id_col not in d.columns:
-            d = d.withColumn(id_col, F.monotonically_increasing_id())
-        return (
-            exploded_shingles(d, text_col, id_col, n, distinct=False)
-            .select(F.col("_sh").alias("_g"))
-            .distinct()
-            .withColumn(marker, F.lit(1))
-        )
+        return corpus_gram_state(df, n, text_col, id_col).withColumn(marker, F.lit(1))
 
-    joined = gram_set(a, "_ina").join(gram_set(b, "_inb"), "_g", "full_outer")
+    joined = gram_set(a, "_ina").join(gram_set(b, "_inb"), "gram", "full_outer")
     # outer coalesce: BOTH corpora empty -> the full-outer join has no
     # rows and bare sums would emit NULL counters instead of zeros
     n_a = F.coalesce(F.sum(F.coalesce("_ina", F.lit(0))), F.lit(0)).cast("long")
@@ -305,8 +295,6 @@ def corpus_diversity(
     is id-keyed against an id+group projection of the input (narrow
     columns only). Nothing quadratic, nothing driver-side.
     """
-    from .dedup import exploded_shingles
-
     grams = exploded_shingles(df, text_col, id_col, n, distinct=False).join(
         df.select(F.col(id_col), F.col(by)), id_col
     )
@@ -348,9 +336,12 @@ def corpus_gram_state(
     the corpus. Write it once (bucketed by ``gram`` on a real cluster
     so the delta anti-join below is co-located and shuffle-free on the
     state side), then feed it to :func:`corpus_overlap_delta` each
-    monitoring cycle instead of re-scanning the whole corpus."""
-    from .dedup import exploded_shingles
+    monitoring cycle instead of re-scanning the whole corpus.
 
+    The one distinct-gram set of the package: decontamination and
+    corpus overlap build theirs here too. The gram window needs a row
+    key, made up when the frame has no ``id_col``; it never leaves
+    this subquery."""
     d = df
     if id_col not in d.columns:
         d = d.withColumn(id_col, F.monotonically_increasing_id())

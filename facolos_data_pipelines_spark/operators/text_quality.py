@@ -5,10 +5,10 @@ operators.text re-exports the surface."""
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import normalized_words
+from .dedup import exploded_shingles, normalized_words
 
 
 
@@ -140,28 +140,16 @@ def _require_unique_ids(df: DataFrame, id_col: str, op: str) -> None:
 def _rolling_min_gram(
     df: DataFrame, text_col: str, id_col: str, hash_fn, n: int = 5
 ) -> DataFrame:
-    """(id, fp_rolling_min) = min over rolling n-word-gram hashes.
-
-    posexplode + lead-window + min-aggregate, same shape as
-    dedup.minhash_signatures: every stage is whole-stage codegen and
-    the window + group-by share ONE shuffle on id. The per-row
-    higher-order form (transform over slice/array_join) is interpreted
-    and O(words^2) string work per document — measured ~10x slower.
-    Documents shorter than n words hash their full word join; empty
-    documents drop out (callers coalesce).
+    """(id, fp_rolling_min) = min over rolling n-word-gram hashes: the
+    :func:`~.dedup_minhash.exploded_shingles` rows (duplicates kept —
+    the min absorbs them), hashed, then one per-document ``min`` that
+    reuses the gram window's id shuffle. Documents shorter than n words
+    hash their full word join; empty documents drop out (callers
+    coalesce).
     """
-    w = df.select(
-        F.col(id_col), F.posexplode(normalized_words(F.col(text_col))).alias("_pos", "_w")
-    )
-    win = Window.partitionBy(id_col).orderBy("_pos")
-    leads = [F.lead("_w", j).over(win).alias(f"_w{j}") for j in range(1, n)]
     return (
-        w.select(id_col, "_pos", "_w", *leads)
-        .filter(F.col(f"_w{n - 1}").isNotNull() | (F.col("_pos") == 0))
-        .select(
-            id_col,
-            hash_fn(F.concat_ws(" ", "_w", *[f"_w{j}" for j in range(1, n)])).alias("_gh"),
-        )
+        exploded_shingles(df, text_col, id_col, n, distinct=False)
+        .select(id_col, hash_fn(F.col("_sh")).alias("_gh"))
         .groupBy(id_col)
         .agg(F.min("_gh").alias("fp_rolling_min"))
     )

@@ -446,24 +446,15 @@ def population_stability_index(
     """
     if num_bins < 2:
         raise ValueError("population_stability_index: num_bins must be >= 2")
-    qs = [i / num_bins for i in range(1, num_bins)]
     score = F.col(col).cast("double")
     base_vals = df_base.select(score.alias("_v")).filter(F.col("_v").isNotNull())
     curr_vals = df_curr.select(score.alias("_v")).filter(F.col("_v").isNotNull())
-    fn = (
-        F.percentile_approx("_v", qs, 10000) if approx else F.percentile("_v", qs)
-    )
-    bounds = base_vals.agg(fn.alias("_bs"))
-    bucket = F.aggregate(
-        F.col("_bs"),
-        F.lit(0),
-        lambda acc, b: acc + F.when(F.col("_v") > b, 1).otherwise(0),
-    ).cast("int")
+    bounds = _quantile_edges(base_vals, num_bins, approx)
 
     def binned(vals: DataFrame, tag: str) -> DataFrame:
         return (
             vals.join(F.broadcast(bounds))
-            .select(bucket.alias("bin"))
+            .select(_hist_bucket().alias("bin"))
             .groupBy("bin")
             .agg(F.count("*").cast("long").alias(f"n_{tag}"))
         )
@@ -840,7 +831,6 @@ def rolling_psi_drift(
     """
     if num_bins < 2:
         raise ValueError("rolling_psi_drift: num_bins must be >= 2")
-    qs = [i / num_bins for i in range(1, num_bins)]
     vals = df.select(
         F.to_date(F.col(ts_col)).alias("_day"),
         F.col(col).cast("double").alias("_v"),
@@ -848,10 +838,7 @@ def rolling_psi_drift(
     # edges from the SAME day-filtered values (a NULL-day row carries
     # no position in the series, so it must not move the edges either
     # — hist_edges has no day column and can't make that cut)
-    fn = (
-        F.percentile_approx("_v", qs, 10000) if approx else F.percentile("_v", qs)
-    )
-    bounds = vals.agg(fn.alias("_bs"))
+    bounds = _quantile_edges(vals, num_bins, approx)
     counts = (
         vals.join(F.broadcast(bounds))
         .select("_day", _hist_bucket().alias("bin"))
@@ -859,6 +846,15 @@ def rolling_psi_drift(
         .agg(F.count("*").cast("long").alias("n"))
     )
     return _psi_series(counts, num_bins, epsilon)
+
+
+def _quantile_edges(vals: DataFrame, num_bins: int, approx: bool) -> DataFrame:
+    """1-row frame ``_bs``: the ``num_bins``-quantile edges of a ``_v``
+    column — the exact interpolated percentile, or the mergeable KLL
+    sketch with ``approx=True``."""
+    qs = [i / num_bins for i in range(1, num_bins)]
+    fn = F.percentile_approx("_v", qs, 10000) if approx else F.percentile("_v", qs)
+    return vals.agg(fn.alias("_bs"))
 
 
 def _hist_bucket() -> Column:
@@ -957,14 +953,10 @@ def hist_edges(
     one 1-row aggregate."""
     if num_bins < 2:
         raise ValueError("hist_edges: num_bins must be >= 2")
-    qs = [i / num_bins for i in range(1, num_bins)]
     vals = df.select(F.col(col).cast("double").alias("_v")).filter(
         F.col("_v").isNotNull()
     )
-    fn = (
-        F.percentile_approx("_v", qs, 10000) if approx else F.percentile("_v", qs)
-    )
-    return vals.agg(fn.alias("_bs"))
+    return _quantile_edges(vals, num_bins, approx)
 
 
 def hist_state(

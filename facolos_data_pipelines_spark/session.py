@@ -20,16 +20,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Shuffle parallelism follows core count by default; on a cluster (and in
-# the sfN scale-curve protocol) partitions must scale with DATA so the
-# per-partition working set stays constant — SPARK_GRAFT_SHUFFLE_PARTITIONS
-# overrides without changing local[N] task slots.
-DEFAULT_SHUFFLE_PARTITIONS = int(
-    os.environ.get(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", os.environ.get("SPARK_GRAFT_CPUS", "32")
-    )
-)
-
 # Synthetic-table columns physically stored as TIMESTAMP(NANOS) parquet —
 # they read back as long under nanosAsLong and need ns->timestamp repair.
 KNOWN_TIMESTAMP_COLUMNS: dict[str, dict[str, str]] = {
@@ -49,14 +39,21 @@ def build_spark(
     ``master=None`` with spark-submit supplying master/memory and a
     larger ``shuffle_partitions`` (rule of thumb: 2-3x total cores,
     AQE coalesces the excess at runtime).
+
+    ``local[N]`` takes N from ``SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on (what ``nproc`` prints). Shuffle parallelism
+    follows N by default; on a cluster (and in the sfN scale-curve
+    protocol) partitions must scale with DATA so the per-partition
+    working set stays constant — ``SPARK_GRAFT_SHUFFLE_PARTITIONS``
+    overrides without changing the task slots.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    partitions = shuffle_partitions or int(
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
+    )
     builder = (
         SparkSession.builder.appName(app_name)
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .config("spark.sql.shuffle.partitions", str(partitions))
         # AQE: runtime coalescing, skew-join splitting, join re-selection.
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -15,8 +15,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script sits in, whatever the working directory
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 INTERESTING = (
     "Exchange",

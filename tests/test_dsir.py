@@ -151,11 +151,12 @@ def test_exploded_shingles_rejects_reserved_carry_cols(spark):
     # window names would silently corrupt the shingle pipeline
     from facolos_data_pipelines_spark.operators.dedup import exploded_shingles
 
-    docs = spark.createDataFrame(
-        [(1, "a b c d", 7)], ["doc_id", "text", "_pos"]
-    )
-    with pytest.raises(ValueError, match="carry_cols.*_pos"):
-        exploded_shingles(docs, carry_cols=["_pos"])
+    for name in ("_pos", "_full"):
+        docs = spark.createDataFrame(
+            [(1, "a b c d", 7)], ["doc_id", "text", name]
+        )
+        with pytest.raises(ValueError, match=f"carry_cols.*{name}"):
+            exploded_shingles(docs, carry_cols=[name])
 
 
 def test_dsir_validation_errors(spark):

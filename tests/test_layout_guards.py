@@ -1,7 +1,7 @@
-"""Structural guards: the band-store layout and the dynamic partition
-overwrite are each written in one module, every document the code
-cites exists, and no operator grows a second implementation behind a
-selector parameter."""
+"""Structural guards: the band-store layout, the dynamic partition
+overwrite and the word n-gram assembly are each written in one module,
+every document the code cites exists, and no operator grows a second
+implementation behind a selector parameter."""
 
 import ast
 import pathlib
@@ -33,6 +33,17 @@ def test_partition_overwrite_only_in_io():
     """Every dynamic partition overwrite goes through
     ``sources.io.overwrite_partitions``."""
     assert _modules_naming("partitionOverwriteMode") == ["sources/io.py"]
+
+
+def test_word_gram_window_written_once():
+    """The posexplode + ``lead`` word n-gram assembly exists once, in
+    ``operators/dedup_minhash.py``; every text and dedup operator
+    filters its rows."""
+    count = {
+        str(path.relative_to(PACKAGE)): path.read_text().count('F.lead("_w"')
+        for path in sorted(PACKAGE.rglob("*.py"))
+    }
+    assert {m: c for m, c in count.items() if c} == {"operators/dedup_minhash.py": 1}
 
 
 def test_cited_docs_exist():

@@ -52,3 +52,64 @@ def test_table_cache_global_cap(spark, tmp_path):
     finally:
         sess._TABLE_CACHE_MAX = saved_max
         _purge(app)
+
+
+class _RecordingBuilder:
+    """Stands in for ``SparkSession.builder``: records every conf and the
+    master, and hands back a session whose only used method is a no-op."""
+
+    def __init__(self):
+        self.conf = {}
+
+    def appName(self, _name):
+        return self
+
+    def master(self, master):
+        self.conf["master"] = master
+        return self
+
+    def config(self, key, value):
+        self.conf[key] = value
+        return self
+
+    def getOrCreate(self):
+        class _Context:
+            def setLogLevel(self, _level):
+                pass
+
+        class _Session:
+            sparkContext = _Context()
+
+        return _Session()
+
+
+def _built_conf(monkeypatch, **env):
+    for var in ("SPARK_GRAFT_CPUS", "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+                "SPARK_MASTER", "SPARK_GRAFT_EXTRA_CONF"):
+        monkeypatch.delenv(var, raising=False)
+    for var, value in env.items():
+        monkeypatch.setenv(var, value)
+    builder = _RecordingBuilder()
+    monkeypatch.setattr(sess.SparkSession, "builder", builder)
+    sess.build_spark()
+    return builder.conf
+
+
+def test_build_spark_defaults_to_usable_cpus(monkeypatch):
+    """Without SPARK_GRAFT_CPUS the session takes the CPUs this process
+    may run on, for both task slots and shuffle partitions; the two
+    variables still override, read when the session is built."""
+    n = len(os.sched_getaffinity(0))
+    conf = _built_conf(monkeypatch)
+    assert conf["master"] == f"local[{n}]"
+    assert conf["spark.sql.shuffle.partitions"] == str(n)
+
+    conf = _built_conf(monkeypatch, SPARK_GRAFT_CPUS="3")
+    assert conf["master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "3"
+
+    conf = _built_conf(
+        monkeypatch, SPARK_GRAFT_CPUS="3", SPARK_GRAFT_SHUFFLE_PARTITIONS="11"
+    )
+    assert conf["master"] == "local[3]"
+    assert conf["spark.sql.shuffle.partitions"] == "11"
