@@ -3,7 +3,7 @@
 The reference declares its target schemas as SQL Server DDL; here they
 are explicit ``StructType``s. The DDL is the source of truth:
 
-- TikTok order-detail staging table (57 cols):
+- TikTok order-detail staging table (53 cols):
   reference sql/staging/create_tiktok_shop_orders_table.sql:15-83
 - MISA staging tables:
   reference sql/staging/create_misa_crm_tables.sql:36-539
@@ -211,7 +211,7 @@ _ETL_META = [
     ("etl_updated_at", TS),
 ]
 
-# staging tiktok_shop_order_detail — 57 columns, PK
+# staging tiktok_shop_order_detail — 53 columns (3 ETL metadata + 50), PK
 # (etl_batch_id, order_id, item_id, item_sku_id); reference DDL
 # sql/staging/create_tiktok_shop_orders_table.sql:15-83.
 TIKTOK_ORDER_DETAIL_SCHEMA = T.StructType(

@@ -43,19 +43,11 @@ def _tiktok_transform(raw: DataFrame, batch_id: str) -> DataFrame:
     return truncate_strings(flatten_tiktok_orders(raw, batch_id), TRUNCATION_WIDTHS)
 
 
-def _misa_orders_transform(raw: DataFrame, batch_id: str) -> DataFrame:
-    from .operators.conform import flatten_misa_sale_orders
-
-    return flatten_misa_sale_orders(raw, batch_id)
-
-
 def _misa_entity_transform(table: str):
     def transform(raw: DataFrame, batch_id: str) -> DataFrame:
-        from .catalog.schemas import STAGING_TABLES
-        from .operators.conform import add_etl_metadata, align_to_schema
+        from .operators.conform import to_staging
 
-        stamped = add_etl_metadata(raw, batch_id=batch_id, source="misa_crm_api")
-        return align_to_schema(stamped, STAGING_TABLES[table])
+        return to_staging(raw, table, batch_id, source="misa_crm_api")
 
     return transform
 
@@ -69,6 +61,7 @@ def _known_endpoints() -> dict[str, dict]:
         RAW_MISA_SALE_ORDER_SCHEMA,
         RAW_TIKTOK_ORDER_SCHEMA,
     )
+    from .operators.conform import flatten_misa_sale_orders
 
     eps: dict[str, dict] = {
         "tiktok_shop_orders": {
@@ -82,7 +75,7 @@ def _known_endpoints() -> dict[str, dict]:
         },
         "misa_sale_orders": {
             "raw_schema": RAW_MISA_SALE_ORDER_SCHEMA,
-            "transform": _misa_orders_transform,
+            "transform": flatten_misa_sale_orders,
             "table": "misa_sale_orders_flattened",
             "primary_keys": PRIMARY_KEYS["misa_sale_orders_flattened"],
             "load_mode": "append",

@@ -2,9 +2,17 @@
 
 These re-express the reference's pandas row-loop transforms as
 declarative Spark plans: the per-order flatten loop becomes
-``explode_outer`` (whole-stage-codegen'd, no Python in the hot path),
-struct projection becomes nested-column select, and the pandas
-``errors='coerce'`` casts become non-ANSI Spark casts (failure -> NULL).
+``explode_outer`` (whole-stage-codegen'd, no Python in the hot path)
+and struct projection becomes nested-column select.
+
+The declared ``STAGING_TABLES`` StructTypes are the one contract
+(SURVEY.md §1.2). The flatten functions do structure only (explode,
+projection, renames, derived columns, JSON text) and end in the one
+conform tail, :func:`to_staging`: ETL metadata, then
+:func:`align_to_schema`, which selects, casts and orders every column
+to the contract under :func:`safe_cast`'s rules (the pandas
+``errors='coerce'`` parity: failure -> NULL). No type is written down
+a second time here.
 
 Zero Python UDFs anywhere in this module — every operator survives a
 100 TB scale-up because it is a narrow (per-row) transformation with no
@@ -19,6 +27,8 @@ import uuid
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..catalog.schemas import STAGING_TABLES
 
 
 # ---------------------------------------------------------------------------
@@ -40,46 +50,33 @@ def safe_cast(df: DataFrame, columns: dict[str, str | T.DataType]) -> DataFrame:
     ``_safe_int('3.5')`` is None (Python int() of a fractional string
     raises), while Spark's non-ANSI cast truncates to 3 and DuckDB's
     TRY_CAST rounds to 4 — so non-integral strings are nulled before
-    the cast (guarded by a property-based parity test). A target is a
-    type name or a ``DataType``.
+    the cast (guarded by a property-based parity test). ISO-8601 with a
+    trailing 'Z' parses as a timestamp (the reference's
+    ``.replace('Z','+00:00')``, misa_crm_extractor.py:274). Booleans
+    follow the DDL's BIT contract through Spark's string cast
+    (true/false, t/f, yes/no, y/n, 1/0, any case; other strings NULL),
+    not the reference's ``astype(bool)`` truthiness, a known reference
+    bug (SURVEY §0). A target is a type name or a ``DataType``.
     """
-    int_targets = {"int", "integer", "bigint", "long", "smallint", "short", "tinyint", "byte"}
-    string_cols = {f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)}
-    exprs = []
-    for c in df.columns:
-        if c in columns:
-            target = columns[c]
-            name = target.simpleString() if isinstance(target, T.DataType) else target
-            src = F.col(c)
-            if name.lower() in int_targets and c in string_cols:
-                src = F.when(src.rlike(r"^\s*[+-]?[0-9]+\s*$"), src)
-            exprs.append(src.cast(target).alias(c))
-        else:
-            exprs.append(F.col(c))
-    return df.select(*exprs)
+    return df.select(
+        *(
+            _safe_cast_col(f.name, columns[f.name], f.dataType) if f.name in columns else f.name
+            for f in df.schema.fields
+        )
+    )
 
 
-def safe_numeric(df: DataFrame, cols: list[str], kind: str = "double") -> DataFrame:
-    """T4 — numeric coercion list (double by default, 'int' for counts)."""
-    return safe_cast(df, {c: kind for c in cols})
+_INT_TARGETS = {"int", "integer", "bigint", "long", "smallint", "short", "tinyint", "byte"}
 
 
-def safe_timestamp(df: DataFrame, cols: list[str]) -> DataFrame:
-    """T5 — datetime coercion; ISO-8601 incl. trailing 'Z' parses natively
-    (to_timestamp handles the reference's .replace('Z','+00:00') case,
-    misa_crm_extractor.py:274)."""
-    return safe_cast(df, {c: "timestamp" for c in cols})
-
-
-def safe_boolean(df: DataFrame, cols: list[str]) -> DataFrame:
-    """T6 — boolean coercion to the DDL's BIT contract.
-
-    Intended semantics (BIT column): 'true'/'false'/'1'/'0' parse, other
-    strings -> NULL. The reference's ``astype(bool, errors='ignore')``
-    (misa_crm_transformer.py:97-104) is Python truthiness — a known
-    reference bug per SURVEY §0; we implement the DDL contract.
-    """
-    return safe_cast(df, {c: "boolean" for c in cols})
+def _safe_cast_col(c: str, target: str | T.DataType, source: T.DataType) -> Column:
+    """Column ``c`` of type ``source`` cast to ``target`` under
+    :func:`safe_cast`'s rules."""
+    name = target.simpleString() if isinstance(target, T.DataType) else target
+    src = F.col(c)
+    if name.lower() in _INT_TARGETS and isinstance(source, T.StringType):
+        src = F.when(src.rlike(r"^\s*[+-]?[0-9]+\s*$"), src)
+    return src.cast(target).alias(c)
 
 
 # ---------------------------------------------------------------------------
@@ -110,14 +107,15 @@ def add_etl_metadata(
     batch_id defaults to a fresh uuid4 per call, mirroring the
     per-transformer-instance uuid in the reference.
     """
-    out = (
-        df.withColumn("etl_batch_id", F.lit(batch_id or str(uuid.uuid4())))
-        .withColumn("etl_created_at", F.current_timestamp())
-        .withColumn("etl_updated_at", F.current_timestamp())
-    )
+    now = F.current_timestamp()
+    stamps = {
+        "etl_batch_id": F.lit(batch_id or str(uuid.uuid4())),
+        "etl_created_at": now,
+        "etl_updated_at": now,
+    }
     if source is not None:
-        out = out.withColumn("etl_source", F.lit(source))
-    return out
+        stamps["etl_source"] = F.lit(source)
+    return df.withColumns(stamps)
 
 
 # ---------------------------------------------------------------------------
@@ -153,11 +151,16 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     landed string id "3.5" is NULL, not 3). Pure projection — no
     shuffle.
     """
-    present = set(df.columns)
-    cast = safe_cast(df, {f.name: f.dataType for f in schema.fields if f.name in present})
-    return cast.select(
+    have = {f.name: f.dataType for f in df.schema.fields}
+    # one typed NULL per missing type, not per missing column: each
+    # Column call is a py4j round trip
+    missing = {f.dataType for f in schema.fields if f.name not in have}
+    null = {t: F.lit(None).cast(t) for t in missing}
+    return df.select(
         *(
-            F.col(f.name) if f.name in present else F.lit(None).cast(f.dataType).alias(f.name)
+            f.name if have.get(f.name) == f.dataType
+            else _safe_cast_col(f.name, f.dataType, have[f.name]) if f.name in have
+            else null[f.dataType].alias(f.name)
             for f in schema.fields
         )
     )
@@ -167,8 +170,24 @@ def align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
 # T1/T2/T3/T9 — the signature flatten transforms
 # ---------------------------------------------------------------------------
 
+def to_staging(
+    df: DataFrame, table: str, batch_id: str | None = None, source: str | None = None
+) -> DataFrame:
+    """The one conform tail: stamp the ETL metadata, then align to the
+    table's declared ``STAGING_TABLES`` contract (SURVEY.md §1.2). Every
+    staged type comes from the contract, under :func:`safe_cast`'s rules;
+    a column the contract does not declare is dropped."""
+    return align_to_schema(add_etl_metadata(df, batch_id, source), STAGING_TABLES[table])
+
+
+# ---------------------------------------------------------------------------
+# T1/T2/T3/T9 — the signature flatten transforms (structure only; types
+# come from the contract through to_staging)
+# ---------------------------------------------------------------------------
+
 def flatten_tiktok_orders(raw: DataFrame, batch_id: str | None = None) -> DataFrame:
-    """Nested TikTok order -> flat order-detail rows (one per line item).
+    """Nested TikTok order -> ``tiktok_shop_order_detail`` rows (one per
+    line item).
 
     Re-expresses the reference's per-order Python loop
     (tiktok_shop_transformer.py:39-167) as a single Spark plan:
@@ -177,146 +196,75 @@ def flatten_tiktok_orders(raw: DataFrame, batch_id: str | None = None) -> DataFr
       line_items still emit one row with all item_* fields NULL
       (the `_get_empty_item_fields` branch, :49-53,152-167).
     - T2: order_amount.* / recipient_address.* struct projection with
-      the reference's exact output names (:75-127).
-    - T3/T4: item_* prefixes + safe float/int casts (:131-150,179-195).
+      the reference's exact output names (:75-127); order fields keep
+      their names (:79-97).
+    - T3: item_* names (:131-150).
     - T7: sales_attributes array -> JSON string, NULL when empty (:134-135).
-    - T8: ETL metadata (:169-177).
+    - T4/T8: :func:`to_staging` — safe casts to the contract (a
+      fractional quantity ``"3.5"`` is NULL, :179-195) and ETL metadata
+      (:169-177).
     """
-    oa = "order_amount"
     ra = "recipient_address"
-
-    def money(path: str, alias: str) -> Column:
-        return F.col(path).cast("double").alias(alias)
-
-    exploded = raw.select("*", F.explode_outer("line_items").alias("_item"))
-
-    flat = exploded.select(
-        # order info — tiktok_shop_transformer.py:79-97
-        F.col("order_id"),
-        F.col("order_status"),
-        F.col("buyer_message"),
-        F.col("cancel_reason"),
-        F.col("cancel_user"),
-        F.col("collection_time").cast("long").alias("collection_time"),
-        F.col("create_time").cast("long").alias("create_time"),
-        F.col("delivery_due_time").cast("long").alias("delivery_due_time"),
-        F.col("delivery_time").cast("long").alias("delivery_time"),
-        F.col("fulfillment_type"),
-        F.col("order_line_type"),
-        F.col("payment_method"),
-        F.col("payment_method_name"),
-        F.col("remark"),
-        F.col("request_cancel_reason"),
-        F.col("split_or_combine_tag"),
-        F.col("update_time").cast("long").alias("update_time"),
-        F.col("warehouse_id"),
+    flat = raw.select("*", F.explode_outer("line_items").alias("_item")).select(
+        "*",  # order info keeps its names — tiktok_shop_transformer.py:79-97
         # order amounts — :99-110
-        F.col(f"{oa}.currency").alias("currency"),
-        money(f"{oa}.original_shipping_fee", "original_shipping_fee"),
-        money(f"{oa}.original_total_product_price", "original_total_product_price"),
-        money(f"{oa}.seller_discount", "seller_discount"),
-        money(f"{oa}.shipping_fee", "shipping_fee"),
-        money(f"{oa}.shipping_fee_platform_discount", "shipping_fee_platform_discount"),
-        money(f"{oa}.shipping_fee_seller_discount", "shipping_fee_seller_discount"),
-        money(f"{oa}.subtotal_after_seller_discounts", "subtotal_after_seller_discounts"),
-        money(f"{oa}.tax_amount", "tax_amount"),
-        money(f"{oa}.total_amount", "total_amount"),
+        *[F.col(f"order_amount.{f}").alias(f) for f in raw.schema["order_amount"].dataType.names],
         # recipient — :112-127
-        F.col(f"{ra}.detail").alias("recipient_address_detail"),
-        F.col(f"{ra}.region_code").alias("recipient_address_region_code"),
-        F.col(f"{ra}.state").alias("recipient_address_state"),
-        F.col(f"{ra}.city").alias("recipient_address_city"),
-        F.col(f"{ra}.town").alias("recipient_address_town"),
-        F.col(f"{ra}.district").alias("recipient_address_district"),
-        F.col(f"{ra}.zipcode").alias("recipient_address_zipcode"),
-        F.col(f"{ra}.name").alias("recipient_name"),
-        F.col(f"{ra}.phone").alias("recipient_phone"),
-        F.col(f"{ra}.phone_number").alias("recipient_phone_number"),
+        *[
+            F.col(f"{ra}.{f}").alias(f"{ra}_{f}")
+            for f in ("detail", "region_code", "state", "city", "town", "district", "zipcode")
+        ],
+        *[F.col(f"{ra}.{f}").alias(f"recipient_{f}") for f in ("name", "phone", "phone_number")],
         # item — :131-150
         F.col("_item.product_id").alias("item_id"),
         F.col("_item.product_name").alias("item_name"),
         F.col("_item.sku_id").alias("item_sku_id"),
         F.col("_item.sku_info.sku_image").alias("item_sku_image"),
         F.col("_item.sku_info.sku_name").alias("item_sku_name"),
-        F.col("_item.quantity").cast("int").alias("item_quantity"),
-        F.col("_item.unit_price").cast("double").alias("item_unit_price"),
-        F.col("_item.currency").alias("item_currency"),
-        F.col("_item.is_gift").alias("item_is_gift"),
-        F.col("_item.platform_discount").cast("double").alias("item_platform_discount"),
-        F.col("_item.seller_discount").cast("double").alias("item_seller_discount"),
-        array_to_json(F.col("_item.sku_info.sales_attributes")).alias(
-            "item_sku_sales_attributes"
-        ),
+        *[
+            F.col(f"_item.{f}").alias(f"item_{f}")
+            for f in ("quantity", "unit_price", "currency", "is_gift",
+                      "platform_discount", "seller_discount")
+        ],
+        array_to_json(F.col("_item.sku_info.sales_attributes")).alias("item_sku_sales_attributes"),
     )
-    return add_etl_metadata(flat, batch_id)
+    return to_staging(flat, "tiktok_shop_order_detail", batch_id)
 
 
 def flatten_misa_sale_orders(raw: DataFrame, batch_id: str | None = None) -> DataFrame:
-    """Nested MISA sale order -> one row per product mapping.
+    """Nested MISA sale order -> ``misa_sale_orders_flattened`` rows, one
+    per product mapping.
 
     Re-expresses misa_crm_transformer.py:128-231:
 
     - T13: drop the nested column from the order side (:132).
-    - T3: order fields prefixed ``order_``, item fields ``item_`` (:142-148).
+    - T3: order fields prefixed ``order_``, item fields ``item_`` (:142-148);
+      raw ``id`` and item ``id`` become the PK names order_id, item_id.
     - T9: ``total_items_in_order`` / ``has_multiple_items`` computed from
       the array size BEFORE exploding (:151-152,172-173); empty-mapping
       orders get 0/False and NULL item fields (:154-170).
     - T1: ``explode_outer`` keeps orders with no mappings (one NULL row).
-    - T4/T5/T6: typed coercions per the declared lists (:183-231).
+    - T4/T5/T6: :func:`to_staging` — the contract's types (:183-231);
+      declared columns the API did not send land as typed NULLs, and
+      raw fields the contract does not declare (``modified_date``) are
+      dropped, as the reference loader's INFORMATION_SCHEMA
+      intersection does (misa_crm_loader.py:158-171).
     """
     items_col = "sale_order_product_mappings"
-    order_cols = [c for c in raw.columns if c != items_col]
     n_items = F.size(F.coalesce(F.col(items_col), F.array()))
-
-    exploded = (
-        raw.withColumn("total_items_in_order", n_items.cast("int"))
-        .withColumn("has_multiple_items", n_items > 1)
-        .select("*", F.explode_outer(items_col).alias("_item"))
-        .drop(items_col)
-    )
-
-    item_fields = [f.name for f in raw.schema[items_col].dataType.elementType.fields]
-    flat = exploded.select(
-        *[F.col(c).alias(f"order_{c}") for c in order_cols],
-        *[F.col(f"_item.{f}").alias(f"item_{f}") for f in item_fields],
-        F.col("has_multiple_items"),
-        F.col("total_items_in_order"),
-    )
-
-    # raw `id` -> `order_id`, item `id` -> `item_id`: the prefixing above
-    # already yields the DDL PK names (order_id, item_id).
-
-    flat = safe_numeric(
-        flat,
-        [
-            "order_sale_order_amount",
-            "order_total_summary",
-            "order_tax_summary",
-            "order_discount_summary",
-            "order_exchange_rate",
-            "item_price",
-            "item_amount",
-            "item_total",
-            "item_discount",
-            "item_tax",
-            "item_tax_percent",
-            "item_discount_percent",
+    flat = raw.select(
+        *[F.col(c).alias(f"order_{c}") for c in raw.columns if c != items_col],
+        n_items.alias("total_items_in_order"),
+        (n_items > 1).alias("has_multiple_items"),
+        F.explode_outer(items_col).alias("_item"),
+    ).select(
+        "*",
+        *[
+            F.col(f"_item.{f}").alias(f"item_{f}")
+            for f in raw.schema[items_col].dataType.elementType.names
         ],
     )
-    flat = safe_timestamp(
-        flat,
-        [
-            "order_sale_order_date",
-            "order_due_date",
-            "order_book_date",
-            "order_delivery_date",
-            "order_paid_date",
-            "order_modified_date",
-            "item_expire_date",
-        ],
-    )
-    flat = safe_boolean(flat, ["order_is_use_currency", "item_is_promotion"])
-    return add_etl_metadata(flat, batch_id, source="misa_crm_api")
+    return to_staging(flat, "misa_sale_orders_flattened", batch_id, source="misa_crm_api")
 
 
 def pivot_aggregate(

@@ -19,7 +19,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script sits in, whatever the working directory
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> int:

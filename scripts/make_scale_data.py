@@ -56,9 +56,11 @@ Defaults: /root/testdata/sf0.1 /tmp/scale_sf1 10
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script sits in, whatever the working directory
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 KEY_OFFSET = 1 << 33  # far above any sf0.1 key
 

@@ -176,3 +176,53 @@ def test_cli_backfill_final_gate_drives_exit_code(landing, tmp_path, capsys):
     assert report["status"] == "success"      # loads all succeeded
     assert not report["quality"]["passed"]    # final gate failed
     assert rc == 1
+
+
+def test_cli_cycle_lands_every_table_under_its_contract(spark, tmp_path, capsys):
+    """One cycle over all six endpoints, one record each: every landed
+    table holds exactly its ``STAGING_TABLES`` schema (names, order,
+    types) and reads back through the table ``bootstrap_catalog``
+    registers over it."""
+    from facolos_data_pipelines_spark.catalog.bootstrap import bootstrap_catalog
+    from facolos_data_pipelines_spark.catalog.schemas import STAGING_TABLES
+
+    records = {
+        "tiktok_shop_orders": {
+            "order_id": "O1", "order_status": "COMPLETED", "create_time": 1700000000,
+            "order_amount": {"currency": "VND", "total_amount": "12.5"},
+            "line_items": [{"product_id": "p1", "sku_id": "s1", "quantity": "2",
+                            "unit_price": "6.25"}],
+        },
+        "misa_sale_orders": {
+            "id": 7, "sale_order_no": "SO7", "sale_order_amount": "100.5",
+            "sale_order_date": "2024-05-01T09:00:00Z", "modified_date": "2024-05-02",
+            "sale_order_product_mappings": [{"id": 70, "product_code": "PC1",
+                                             "tax_percent": "10", "price": "2.5"}],
+        },
+        "misa_customers": {"id": 1, "account_name": "acme", "annual_revenue": 12.5},
+        "misa_contacts": {"id": 2, "contact_name": "ann"},
+        "misa_stocks": {"stock_code": "K1", "stock_name": "main"},
+        "misa_products": {"id": 3, "product_code": "P3", "unit_price": 9.5},
+    }
+    landing = tmp_path / "landing"
+    for endpoint, record in records.items():
+        (landing / endpoint).mkdir(parents=True)
+        (landing / endpoint / "batch1.json").write_text(json.dumps(record) + "\n")
+    staging = str(tmp_path / "staging")
+    rc = main(["cycle", "--landing-root", str(landing), "--staging-root", staging,
+               "--min-tables", "6"])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rc == 0 and report["status"] == "success"
+
+    landed = sorted(os.listdir(staging))
+    assert landed == sorted(STAGING_TABLES)
+    try:
+        bootstrap_catalog(spark, staging_root=staging)
+        for t in landed:
+            want = [(f.name, f.dataType) for f in STAGING_TABLES[t].fields]
+            got = [(f.name, f.dataType) for f in spark.read.parquet(f"{staging}/{t}").schema]
+            assert got == want, t
+            assert len(spark.table(f"staging.{t}").collect()) == 1, t
+    finally:
+        for t in STAGING_TABLES:
+            spark.sql(f"DROP TABLE IF EXISTS staging.{t}")

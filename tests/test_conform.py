@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from facolos_data_pipelines_spark.catalog import (
+    MISA_SALE_ORDERS_FLATTENED_SCHEMA,
     RAW_MISA_SALE_ORDER_SCHEMA,
     RAW_TIKTOK_ORDER_SCHEMA,
     TIKTOK_ORDER_DETAIL_SCHEMA,
@@ -69,19 +70,26 @@ def _tiktok_order(order_id, n_items, **over):
 
 @pytest.fixture(scope="module")
 def tiktok_raw(spark):
+    fractional = _tiktok_order("O5", 1)
+    fractional["line_items"][0]["quantity"] = "3.5"  # _safe_int('3.5') is None
     rows = [
         _tiktok_order("O1", 0),   # empty line_items -> one NULL-item row
         _tiktok_order("O2", 1),
         _tiktok_order("O3", 3),
         _tiktok_order("O4", 2, order_amount=None, recipient_address=None),
+        fractional,
     ]
     return spark.createDataFrame(rows, RAW_TIKTOK_ORDER_SCHEMA)
+
+
+def _typed(schema):
+    return [(f.name, f.dataType) for f in schema.fields]
 
 
 def test_tiktok_flatten_explode_outer(tiktok_raw):
     flat = conform.flatten_tiktok_orders(tiktok_raw, batch_id="b1")
     rows = {r["order_id"]: r for r in flat.collect() if r["order_id"] == "O1"}
-    assert flat.count() == 1 + 1 + 3 + 2  # empty order still emits a row
+    assert flat.count() == 1 + 1 + 3 + 2 + 1  # empty order still emits a row
     o1 = rows["O1"]
     assert o1["item_id"] is None and o1["item_quantity"] is None
     assert o1["order_status"] == "COMPLETED"
@@ -96,6 +104,8 @@ def test_tiktok_flatten_safe_casts(tiktok_raw):
     assert o2["item_quantity"] == 1
     assert o2["item_unit_price"] == 10.5
     assert o2["item_seller_discount"] is None
+    o5 = flat.filter(F.col("order_id") == "O5").first()
+    assert o5["item_quantity"] is None  # '3.5' -> null, not truncated to 3
 
 
 def test_tiktok_flatten_null_structs(tiktok_raw):
@@ -116,10 +126,10 @@ def test_tiktok_sales_attributes_json(tiktok_raw):
 
 def test_tiktok_flatten_matches_contract(tiktok_raw):
     flat = conform.flatten_tiktok_orders(tiktok_raw, batch_id="b1")
-    assert set(flat.columns) == {f.name for f in TIKTOK_ORDER_DETAIL_SCHEMA.fields}
+    assert _typed(flat.schema) == _typed(TIKTOK_ORDER_DETAIL_SCHEMA)
 
 
-def _misa_order(oid, n_items, modified="2024-05-01T10:00:00Z"):
+def _misa_order(oid, n_items, sale_order_date="2024-05-01 09:00:00"):
     return {
         "id": oid,
         "sale_order_no": f"SO{oid}",
@@ -132,13 +142,13 @@ def _misa_order(oid, n_items, modified="2024-05-01T10:00:00Z"):
         "tax_summary": None,
         "discount_summary": "1",
         "exchange_rate": "1.0",
-        "sale_order_date": "2024-05-01 09:00:00",
+        "sale_order_date": sale_order_date,
         "due_date": "not a date",
         "book_date": None,
         "delivery_date": None,
         "paid_date": None,
         "is_use_currency": False,
-        "modified_date": modified,
+        "modified_date": "2024-05-01T10:00:00Z",  # not in the contract
         "sale_order_product_mappings": [
             {
                 "id": oid * 100 + i,
@@ -163,7 +173,11 @@ def _misa_order(oid, n_items, modified="2024-05-01T10:00:00Z"):
 
 @pytest.fixture(scope="module")
 def misa_raw(spark):
-    rows = [_misa_order(1, 0), _misa_order(2, 1), _misa_order(3, 3)]
+    rows = [
+        _misa_order(1, 0),
+        _misa_order(2, 1),
+        _misa_order(3, 3, sale_order_date="2024-05-01T10:00:00Z"),
+    ]
     return spark.createDataFrame(rows, RAW_MISA_SALE_ORDER_SCHEMA)
 
 
@@ -200,10 +214,15 @@ def test_misa_flatten_coercions(misa_raw):
     assert r2["order_is_use_currency"] is False
 
 
-def test_misa_modified_date_z_suffix(misa_raw):
+def test_misa_flatten_matches_contract(misa_raw):
     flat = conform.flatten_misa_sale_orders(misa_raw, batch_id="b2")
-    r = flat.filter(F.col("order_id") == 2).first()
-    assert r["order_modified_date"] == dt.datetime(2024, 5, 1, 10, 0, 0)  # Z parsed as UTC
+    assert _typed(flat.schema) == _typed(MISA_SALE_ORDERS_FLATTENED_SCHEMA)
+
+
+def test_misa_sale_order_date_z_suffix(misa_raw):
+    flat = conform.flatten_misa_sale_orders(misa_raw, batch_id="b2")
+    r = flat.filter(F.col("order_id") == 3).first()
+    assert r["order_sale_order_date"] == dt.datetime(2024, 5, 1, 10, 0, 0)  # Z parsed as UTC
 
 
 def test_conform_misa_entity_dynamic_columns(spark):

@@ -1,7 +1,8 @@
 """Structural guards: the band-store layout, the dynamic partition
 overwrite and the word n-gram assembly are each written in one module,
-every document the code cites exists, and no operator grows a second
-implementation behind a selector parameter."""
+every document the code cites exists, no operator grows a second
+implementation behind a selector parameter, and the flatten functions
+take every type from the staging contract."""
 
 import ast
 import pathlib
@@ -83,3 +84,30 @@ def test_no_impl_selector_params():
                 ):
                     offenders.append(f"{path.relative_to(PACKAGE)}:{node.lineno} {arg.arg}")
     assert offenders == []
+
+
+def test_flatten_types_come_from_the_contract():
+    """The flatten functions do structure only: neither contains a
+    ``.cast(`` call (every type comes from ``STAGING_TABLES`` through
+    ``conform.to_staging``), and no per-kind coercion wrapper around
+    ``safe_cast`` is defined in the package."""
+    flatten = {"flatten_tiktok_orders", "flatten_misa_sale_orders"}
+    wrappers = {"safe_numeric", "safe_timestamp", "safe_boolean"}
+    casts, defined, seen = [], [], set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            if node.name in wrappers:
+                defined.append(f"{path.relative_to(PACKAGE)}:{node.lineno} {node.name}")
+            if node.name in flatten:
+                seen.add(node.name)
+                casts += [
+                    f"{node.name}:{call.lineno}"
+                    for call in ast.walk(node)
+                    if isinstance(call, ast.Call)
+                    and isinstance(call.func, ast.Attribute)
+                    and call.func.attr == "cast"
+                ]
+    assert seen == flatten
+    assert casts == [] and defined == []
