@@ -21,7 +21,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..eager import materialize, materialize_counted, materialize_observed
+from ..eager import materialize, materialize_observed
 from .dedup_components import _drop_pair_losers
 
 
@@ -50,11 +50,18 @@ class BandIndex:
       write. There is no adoption: a store with other parameters is
       re-indexed into a new store, never reinterpreted. A store
       directory holding only its manifest reads as empty.
-    - Sign once: a batch is signed once and its band rows are
-      checkpointed (:func:`~..eager.materialize`); the in-batch sweep,
-      the history probe and the store write all select from them. A
-      document's band rows do not depend on which frame selects them,
-      so every consumer sees the same rows.
+    - Sign once: a batch is signed once and checkpointed; the in-batch
+      sweep, the history probe and the store write all select from
+      those rows. The delta operators checkpoint band rows (``sign``).
+      The in-batch sweeps (:meth:`within_pairs`, and a sink's
+      :meth:`BandStore.fold`) checkpoint one row per document
+      (``sign_docs``: its band keys as ``_bands`` plus the verify
+      feature as ``_feat`` — the distinct shingle set, or the
+      normalized vector), so verify reads features the signing pass
+      already computed, and band rows are a narrow ``inline`` of
+      ``_bands``. Each signer is one parsed SQL expression per plan.
+      A document's band rows do not depend on which frame selects
+      them, so every consumer sees the same rows.
     - Probe: a sink store is partitioned by ``bucket_pmod =
       pmod(keys[1], store_partitions)`` and then by ``_batch_id``, and
       probed by broadcasting the batch's band rows against a map-only
@@ -79,10 +86,13 @@ class BandIndex:
     reading each side's documents id-pruned to the candidate set, and
     keeps pairs whose ``score`` clears ``threshold``. ``features``
     projects ``(id_col, feature)``; ``similarity`` compares two feature
-    columns. ``verify_within(cand, df)`` is the required in-batch form,
-    both sides from one frame: MinHash runs ``verified_near_dup_pairs``'
-    explode path, cosine one join of the frame's normalized vectors.
-    :meth:`within_pairs` is the one in-batch sweep."""
+    columns. ``verify_within(cand, df)`` is the in-batch form of the
+    delta operators' internal branch, both sides from one frame:
+    MinHash runs ``verified_near_dup_pairs``' explode path, cosine one
+    join of the frame's normalized vectors. ``sign_docs`` signs one
+    row per document with its feature (see "Sign once"), which both
+    in-batch sweeps read: :meth:`within_pairs` for a corpus,
+    :meth:`bucket_pairs` for a broadcast-sized micro-batch."""
 
     id_col: str
     keys: tuple[str, str]
@@ -91,6 +101,7 @@ class BandIndex:
     score: str
     threshold: float
     sign: Callable[[DataFrame], DataFrame]
+    sign_docs: Callable[[DataFrame], DataFrame]
     features: Callable[[DataFrame], DataFrame]
     similarity: Callable[[Column, Column], Column]
     verify_within: Callable[[DataFrame, DataFrame], DataFrame]
@@ -98,14 +109,18 @@ class BandIndex:
     def verify(self, cand: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
         def side(df: DataFrame, side_id: str) -> DataFrame:
             ids = cand.select(F.col(side_id).alias(self.id_col)).dropDuplicates()
-            return self.features(df.join(ids, self.id_col, "left_semi")).toDF(
-                side_id, f"_f_{side_id}"
-            )
+            return self.features(df.join(ids, self.id_col, "left_semi"))
 
+        return self._scored(cand, side(left, "id_a"), side(right, "id_b"))
+
+    def _scored(self, cand: DataFrame, fa: DataFrame, fb: DataFrame) -> DataFrame:
+        """(id_a, id_b, score) for the ``cand`` pairs whose score clears
+        ``threshold``; ``fa`` / ``fb`` are ``(id_col, feature)`` frames
+        of the two sides."""
         sim = self.similarity(F.col("_f_id_a"), F.col("_f_id_b"))
         return (
-            cand.join(side(left, "id_a"), "id_a")
-            .join(side(right, "id_b"), "id_b")
+            cand.join(fa.toDF("id_a", "_f_id_a"), "id_a")
+            .join(fb.toDF("id_b", "_f_id_b"), "id_b")
             .select("id_a", "id_b", sim.alias(self.score))
             .filter(F.col(self.score) >= self.threshold)
         )
@@ -132,20 +147,57 @@ class BandIndex:
         )
 
     def within_pairs(
-        self,
-        df: DataFrame,
-        bands: DataFrame | None = None,
-        max_bucket_size: int | None = None,
+        self, df: DataFrame, max_bucket_size: int | None = None
     ) -> DataFrame:
         """(id_a, id_b, score), id_a < id_b — the verified near-dup
-        pairs inside ``df``. ``bands`` supplies ``df``'s band rows
-        already signed (the caller owns their materialization);
-        otherwise ``df`` is signed once here and the band rows, which
-        both sides of the self-join read, are checkpointed."""
-        if bands is None:
-            bands = materialize(self.sign(df))
+        pairs inside ``df``, the in-batch sweep of a corpus. ``df`` is
+        signed once (:attr:`sign_docs`) and checkpointed: the candidate
+        self-join reads its band rows (a narrow ``inline``) on both
+        sides, and verify joins each candidate side to the feature the
+        signing pass computed, so no document is read or featurized a
+        second time."""
+        signed = materialize(self.sign_docs(df))
+        bands = signed.selectExpr(f"`{self.id_col}`", "inline(_bands)")
         cand = self._self_join(bands, max_bucket_size).dropDuplicates()
-        return self.verify_within(cand, df)
+        features = signed.select(self.id_col, "_feat")
+        return self._scored(cand, features, features)
+
+    def bucket_pairs(self, signed: DataFrame) -> DataFrame:
+        """(id_a, id_b, score), id_a < id_b, score >= ``threshold`` —
+        the verified pairs among the documents of ``signed``
+        (:attr:`sign_docs` rows), scored from the features the signing
+        pass carried. One shuffle: each band key gathers its members'
+        ``(id, feature)`` and scores them pairwise in place, so no
+        document is joined back or re-featurized. A pair sharing
+        several bands repeats. Every member carries its feature into
+        each of its buckets, so this is the sweep for a
+        broadcast-sized frame (a sink's micro-batch); a corpus takes
+        :meth:`within_pairs`, which shuffles id-width band rows and
+        joins features to candidates only."""
+        members = signed.select(
+            F.struct(F.col(self.id_col).alias("i"), F.col("_feat").alias("f")).alias("_d"),
+            F.inline("_bands"),
+        )
+        buckets = (
+            members.groupBy(*self.keys)
+            .agg(F.collect_list("_d").alias("_m"))
+            .filter(F.size("_m") > 1)
+        )
+
+        def scored(a: Column) -> Column:
+            return F.filter(
+                F.transform(
+                    F.filter("_m", lambda b: b["i"] > a["i"]),
+                    lambda b: F.struct(
+                        a["i"].alias("id_a"),
+                        b["i"].alias("id_b"),
+                        self.similarity(a["f"], b["f"]).alias(self.score),
+                    ),
+                ),
+                lambda p: p[self.score] >= self.threshold,
+            )
+
+        return buckets.select(F.inline(F.flatten(F.transform("_m", scored))))
 
     def cross_pairs(
         self,
@@ -228,6 +280,8 @@ _BATCH = "_batch_id"
 _COMPACTED = -1
 #: The observed metric an ``admit`` step counts its dropped rows under.
 _UNSIGNABLE = "unsignable_rows"
+#: The observed metric the signing checkpoint counts the batch's rows under.
+_BATCH_ROWS = "batch_rows"
 
 
 def _is_partition_count(n) -> bool:
@@ -456,55 +510,66 @@ class BandStore:
         docs_path: str,
         admit: Callable[[DataFrame], DataFrame] | None = None,
     ) -> None:
-        """One micro-batch: sign the batch ONCE (checkpointed band rows);
-        drop the losers of the in-batch sweep (:meth:`BandIndex.within_pairs`
-        over those rows, the batch operators' one-sweep min-id rule);
-        drop every survivor sharing a band key with the rest of the store
-        (broadcast probe); checkpoint the survivors; then write them to
-        ``docs_path`` and their band rows to the store, each tagged
-        with ``batch_id`` by dynamic partition overwrite, so a
-        redelivery lands exactly once. ``admit(batch_df) -> batch``
-        optionally drops rows the index cannot sign, counting them as
-        the observed metric ``_UNSIGNABLE``; the count is read back from
-        the signing checkpoint and logged. A store or docs sink written
-        before the ``_batch_id`` layout refuses before any write."""
+        """One micro-batch in four actions: sign the batch ONCE
+        (:attr:`BandIndex.sign_docs`, checkpointed with each doc's band
+        keys and verify feature); checkpoint the ids it drops — the
+        losers of the in-batch sweep (:meth:`BandIndex.bucket_pairs`,
+        the batch operators' one-sweep min-id rule) and every doc
+        sharing a band key with the rest of the store (broadcast
+        probe); then write the rest to ``docs_path`` and their band
+        rows to the store, each tagged with ``batch_id`` by dynamic
+        partition overwrite, so a redelivery lands exactly once.
+
+        The batch's row count is an observed metric of the signing
+        checkpoint, so an empty batch writes nothing (a new store's
+        manifest aside) without a probe job of its own. It counts
+        batch rows, not signed ones: a batch whose rows all fail to
+        sign (empty texts) still lands them.
+        ``admit(batch_df) -> batch`` optionally drops rows the index
+        cannot sign, counting them as the observed metric
+        ``_UNSIGNABLE``; that count is read back from the same
+        checkpoint and logged. A store or docs sink written before the
+        ``_batch_id`` layout refuses before any write."""
         from ..sources.io import overwrite_partitions
 
         spark = batch_df.sparkSession
-        if not batch_df.head(1):
-            return
         _refuse_pre_batch_layout(
             spark, docs_path, "[!_.]*", "Point the sink at a new docs path.",
         )
         ix = self.index
         id_col, keys = ix.id_col, list(ix.keys)
-        batch = admit(batch_df) if admit else batch_df
-        # ONE signing chain per micro-batch: the in-batch sweep, the
-        # store probe and the store write all select from these rows.
-        # Signing is lazy, so the manifest is still written or checked
-        # before any job runs.
-        bands = ix.sign(batch).withColumn(
-            _LAYOUT, F.pmod(F.col(keys[1]), F.lit(self.partitions))
-        )
-        history = self.open(spark, batch_id, bands.schema)
+        counted = batch_df.observe(_BATCH_ROWS, F.count(F.lit(1)).alias("rows"))
+        batch = admit(counted) if admit else counted
+        # ONE signing pass per micro-batch: the in-batch sweep, the
+        # store probe and the store write all read these rows. Signing
+        # is lazy, so the manifest is still written or checked before
+        # any job runs.
+        signed = ix.sign_docs(batch)
+
+        def band_rows(docs: DataFrame) -> DataFrame:
+            return docs.selectExpr(f"`{id_col}`", "inline(_bands)").withColumn(
+                _LAYOUT, F.pmod(F.col(keys[1]), F.lit(self.partitions))
+            )
+
+        history = self.open(spark, batch_id, band_rows(signed).schema)
         # after open, so a refused manifest is reported first
         _refuse_pre_batch_layout(
             spark, self.path, f"{_LAYOUT}=*/[!_.]*",
             "Migrate the store with one compact_bucket_store.",
         )
-        bands, unsignable = materialize_observed(
-            bands, *([_UNSIGNABLE] if admit else [])
+        signed, (rows, *unsignable) = materialize_observed(
+            signed, _BATCH_ROWS, *([_UNSIGNABLE] if admit else [])
         )
+        if not rows:
+            return
         if any(unsignable):
             logging.getLogger(__name__).info(
                 "batch %s: dropped %d row(s) with no bucket identity under "
                 "the %s — not replay-protectable",
                 batch_id, unsignable[0], ix.noun,
             )
-        survivors = _drop_pair_losers(
-            batch, ix.within_pairs(batch, bands), id_col, transitive=False
-        )
-        probe_keys = [_LAYOUT, *keys]
+        bands = band_rows(signed)
+        drop = ix.bucket_pairs(signed).select(F.col("id_b").alias(id_col))
         if history is not None:
             # Broadcast the (small) batch side; the store is scanned
             # map-side only — no store shuffle, and the partition-column
@@ -512,8 +577,9 @@ class BandStore:
             # partitions the batch doesn't touch. Probing the WHOLE
             # batch's band rows (not just in-batch survivors) returns a
             # superset of hit ids whose extras are exactly the in-batch
-            # losers — already dropped — so the survivor set is unchanged.
-            hit_ids = (
+            # losers — dropped anyway — so the survivor set is unchanged.
+            probe_keys = [_LAYOUT, *keys]
+            drop = drop.unionByName(
                 history.select(*probe_keys)
                 .join(
                     F.broadcast(
@@ -522,18 +588,19 @@ class BandStore:
                     probe_keys,
                 )
                 .select(F.col("_probe_id").alias(id_col))
-                .dropDuplicates()
             )
-            survivors = survivors.join(hit_ids, id_col, "left_anti")
-        survivors, _ = materialize_counted(survivors)
+        # The drop set is a subset of the batch's ids (repeats allowed):
+        # both writes anti-join its broadcast, so neither recomputes the
+        # sweep and no survivor frame is checkpointed.
+        drop, _ = materialize_observed(drop)
         tag = F.lit(batch_id).cast("long")
-        overwrite_partitions(survivors.withColumn(_BATCH, tag), docs_path, [_BATCH])
+
+        def kept(df: DataFrame) -> DataFrame:
+            return df.join(F.broadcast(drop), id_col, "left_anti").withColumn(_BATCH, tag)
+
+        overwrite_partitions(kept(batch), docs_path, [_BATCH])
         overwrite_partitions(
-            bands.join(survivors.select(id_col), id_col, "left_semi")
-            .select(*keys, id_col, _LAYOUT)
-            .withColumn(_BATCH, tag),
-            self.path,
-            [_LAYOUT, _BATCH],
+            kept(bands.select(*keys, id_col, _LAYOUT)), self.path, [_LAYOUT, _BATCH]
         )
 
     def sink(self, docs_path: str, admit=None):
@@ -565,18 +632,23 @@ class BandStore:
         id_col, keys = self.index.id_col, list(self.index.keys)
 
         def rewrite(files: list[str], tmp: str) -> tuple[int, int]:
-            store = spark.read.parquet(path)
-            rows_before = store.count()
-            deduped = (
-                store.groupBy(_LAYOUT, *keys)
+            # ONE shuffle: hashing on the layout column alone clusters
+            # every bucket too, so the dedup aggregate needs no second
+            # exchange and the write lands one file per layout
+            # partition. Both row counts ride the checkpoint's job.
+            deduped, counts = materialize_observed(
+                spark.read.parquet(path)
+                .observe("rows_before", F.count(F.lit(1)).alias("rows"))
+                .repartition(_LAYOUT)
+                .groupBy(_LAYOUT, *keys)
                 .agg(F.min(id_col).alias(id_col))
                 .withColumn(_BATCH, F.lit(_COMPACTED).cast("long"))
-                .repartition(_LAYOUT)
+                .observe("rows_after", F.count(F.lit(1)).alias("rows")),
+                "rows_before", "rows_after",
             )
             deduped.write.mode("overwrite").partitionBy(_LAYOUT, _BATCH).parquet(tmp)
-            rows_after = spark.read.parquet(tmp).count()
             _write_manifest(spark, tmp, manifest)
-            return rows_before, rows_after
+            return tuple(counts)
 
         before, after, (rows_before, rows_after) = _swap_compacted(
             path, "compact_bucket_store", rewrite

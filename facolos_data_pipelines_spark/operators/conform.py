@@ -125,16 +125,16 @@ def add_etl_metadata(
 def truncate_strings(df: DataFrame, widths: dict[str, int]) -> DataFrame:
     """``astype(str).str[:n]`` per column map
     (tiktok_shop_staging_loader.py:275-288) — only string columns, only
-    when present, width 0 means 'not a string, skip'."""
-    string_cols = {f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)}
-    exprs = []
-    for c in df.columns:
-        n = widths.get(c, 0)
-        if n > 0 and c in string_cols:
-            exprs.append(F.substring(F.col(c), 1, n).alias(c))
-        else:
-            exprs.append(F.col(c))
-    return df.select(*exprs)
+    when present, width 0 means 'not a string, skip'. Only the
+    truncated columns are projected (``withColumns`` keeps the rest in
+    place): each Column built is a py4j round trip."""
+    return df.withColumns(
+        {
+            f.name: F.substring(f.name, 1, widths[f.name])
+            for f in df.schema.fields
+            if isinstance(f.dataType, T.StringType) and widths.get(f.name, 0) > 0
+        }
+    )
 
 
 # ---------------------------------------------------------------------------

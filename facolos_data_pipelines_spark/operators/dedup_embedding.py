@@ -198,12 +198,13 @@ def embedding_near_dup_pairs(
         return _exact_pairs_gemm(
             _normalized_vectors(df, vec_col, id_col), id_col, threshold
         )
-    # Banded blocking on (id, band, sig) rows signed from the RAW vector
+    # Banded blocking on (band, sig) keys signed from the RAW vector
     # (sign is scale-invariant; the oracle mirrors raw too), checkpointed
-    # once inside within_pairs: the self-join reads them twice (three
-    # times with the bucket cap) and the signature computation
-    # (num_bands x num_planes dot products per row) is the expensive
-    # subtree. The checkpointed rows are id-width, never vectors.
+    # once inside within_pairs with each vector's normalized form: the
+    # self-join reads the band rows twice (three times with the bucket
+    # cap), the signature computation (num_bands x num_planes dot
+    # products per row) is the expensive subtree, and verify reads the
+    # normalized vectors from the same rows instead of the frame.
     return _cosine_index(
         vec_col, id_col, num_planes, num_bands, dim, threshold
     ).within_pairs(df, max_bucket_size=max_bucket_size)
@@ -437,6 +438,9 @@ def _cosine_index(
         sign=lambda df: embedding_band_state(
             df, vec_col, id_col, num_planes, num_bands, dim
         ),
+        sign_docs=lambda df: _cosine_signed_docs(
+            df, vec_col, id_col, num_planes, num_bands, dim
+        ),
         features=lambda df: _normalized_vectors(df, vec_col, id_col),
         similarity=_dot,
         verify_within=lambda cand, df: _verify_within(
@@ -463,21 +467,57 @@ def _verify_within(
     )
 
 
+def _check_plane_count(num_planes) -> None:
+    # bool subclasses int: True would silently build a degenerate
+    # one-plane family, exactly the config drift this guard exists for
+    if not isinstance(num_planes, int) or isinstance(num_planes, bool):
+        raise ValueError(
+            "embedding_band_state: num_planes must be an explicit int — "
+            "'auto' would let the plane family drift between cycles, and "
+            "signatures under different plane counts never match. Size it "
+            "for the TARGET corpus (ceil(log2(N_target/occupancy)))."
+        )
+
+
+def _nonzero_vectors(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(id, vec, _nsq) for the rows whose squared norm is > 0 (a NULL,
+    zero or NaN-poisoned norm has no defined cosine)."""
+    return df.select(
+        F.col(id_col), F.col(vec_col), _norm_sq(F.col(vec_col)).alias("_nsq")
+    ).filter(F.col("_nsq") > 0)
+
+
+def _unit_sql(vec_col: str) -> str:
+    """SQL text of the L2-normalized double vector of ``vec_col``,
+    over :func:`_nonzero_vectors`' ``_nsq``."""
+    return f"transform(`{vec_col}`, _x -> CAST(_x AS DOUBLE) * (1.0D / sqrt(_nsq)))"
+
+
 def _normalized_vectors(df: DataFrame, vec_col: str, id_col: str) -> DataFrame:
     """(id, _sv): L2-normalized double vectors, zero-norm rows dropped
     (no defined cosine) — the shared verify-side projection."""
-    inv_norm = 1.0 / F.sqrt(F.col("_nsq"))
-    return (
-        df.select(
-            F.col(id_col), F.col(vec_col), _norm_sq(F.col(vec_col)).alias("_nsq")
-        )
-        .filter(F.col("_nsq") > 0)
-        .select(
-            F.col(id_col),
-            F.transform(
-                F.col(vec_col), lambda x: x.cast("double") * inv_norm
-            ).alias("_sv"),
-        )
+    return _nonzero_vectors(df, vec_col, id_col).selectExpr(
+        f"`{id_col}`", f"{_unit_sql(vec_col)} AS _sv"
+    )
+
+
+def _cosine_signed_docs(
+    df: DataFrame,
+    vec_col: str,
+    id_col: str,
+    num_planes: int,
+    num_bands: int,
+    dim: int | None,
+) -> DataFrame:
+    """(id, _bands, _feat) — one row per vector with a norm: its
+    :func:`embedding_band_state` keys as an array and its normalized
+    vector (the ``_sv`` verify reads), from one narrow projection."""
+    from .similarity_core import _banded_signatures_sql
+
+    _check_plane_count(num_planes)
+    sigs = _banded_signatures_sql(f"`{vec_col}`", num_planes, num_bands, dim or 64)
+    return _nonzero_vectors(df, vec_col, id_col).selectExpr(
+        f"`{id_col}`", f"{sigs} AS _bands", f"{_unit_sql(vec_col)} AS _feat"
     )
 
 
@@ -507,15 +547,7 @@ def embedding_band_state(
     the join's required distribution and each cycle's probe join
     shuffles only the batch's band rows (plan-asserted in
     tests/test_bucketed_state.py)."""
-    # bool subclasses int: True would silently build a degenerate
-    # one-plane family, exactly the config drift this guard exists for
-    if not isinstance(num_planes, int) or isinstance(num_planes, bool):
-        raise ValueError(
-            "embedding_band_state: num_planes must be an explicit int — "
-            "'auto' would let the plane family drift between cycles, and "
-            "signatures under different plane counts never match. Size it "
-            "for the TARGET corpus (ceil(log2(N_target/occupancy)))."
-        )
+    _check_plane_count(num_planes)
     from .similarity import banded_signatures
 
     return banded_signatures(

@@ -227,6 +227,38 @@ def minhash_signatures(
     clear ValueError on ANSI sessions instead of silently switching —
     signatures from different families never match each other.
     """
+    return _signature_rows(df, text_col, id_col, num_hashes, shingle_n, family)
+
+
+def _lane_sql(family: str, i: int) -> str:
+    """SQL text of MinHash lane ``i`` of ``family`` over the shingle
+    ``_sh`` (multiply_add reads the shingle's one xxhash64, ``_h``)."""
+    if family == "md5":
+        return f"md5(concat('{i}:', _sh))"
+    if family == "xxhash":
+        # the seed is an INT literal, as F.lit(i) was: xxhash64 hashes
+        # each argument by its type, so a BIGINT seed changes the lane
+        return f"xxhash64(_sh, {i})"
+    return f"_h * {_MINHASH_A[i]}L + {_MINHASH_B[i]}L"
+
+
+def _signature_rows(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    shingle_n: int,
+    family: str,
+    shingles: bool = False,
+) -> DataFrame:
+    """(id, sig[, _shingles]) — :func:`minhash_signatures`, with each
+    doc's distinct shingle set collected in the SAME ``groupBy(id)`` as
+    the min lanes when ``shingles`` is set (the set verify reads, equal
+    to :func:`shingle_arrays`' for the doc).
+
+    The lanes and mins are SQL text: one ``selectExpr`` of every lane,
+    one aggregate expression of every min, whatever ``num_hashes`` —
+    O(1) py4j calls instead of one Column call per lane and per min."""
     # (id, _sh) rows, duplicates kept (the min-aggregate absorbs them)
     sh = exploded_shingles(df, text_col, id_col, shingle_n, distinct=False)
     # Hash the shingle string ONCE, then derive every MinHash lane with
@@ -238,32 +270,29 @@ def minhash_signatures(
     # correct) per-lane seeded string hash valid on any session.
     _check_lanes(num_hashes)
     family = _resolve_family(family, _ansi_enabled(df))
-    if family == "md5":
-        hashed = sh.select(
-            id_col,
-            *[
-                F.md5(F.concat(F.lit(f"{i}:"), F.col("_sh"))).alias(f"_h{i}")
-                for i in range(num_hashes)
-            ],
-        )
-    elif family == "xxhash":
-        hashed = sh.select(
-            id_col,
-            *[F.xxhash64("_sh", F.lit(i)).alias(f"_h{i}") for i in range(num_hashes)],
-        )
-    else:
-        hashed = sh.select(id_col, F.xxhash64("_sh").alias("_h")).select(
-            id_col,
-            *[
-                (F.col("_h") * F.lit(_MINHASH_A[i]) + F.lit(_MINHASH_B[i])).alias(f"_h{i}")
-                for i in range(num_hashes)
-            ],
-        )
-    agg = hashed.groupBy(id_col).agg(
-        *[F.min(f"_h{i}").alias(f"_h{i}") for i in range(num_hashes)]
+    if family == "multiply_add":
+        sh = sh.selectExpr(f"`{id_col}`", "_sh", "xxhash64(_sh) AS _h")
+    keep = ["_sh"] if shingles else []
+    hashed = sh.selectExpr(
+        f"`{id_col}`", *keep,
+        *[f"{_lane_sql(family, i)} AS _h{i}" for i in range(num_hashes)],
     )
-    return agg.select(
-        id_col, F.array(*[f"_h{i}" for i in range(num_hashes)]).alias("sig")
+    mins = ", ".join(f"min(_h{i})" for i in range(num_hashes))
+    aggs = [F.expr(f"array({mins}) AS sig")]
+    if shingles:
+        aggs.append(F.expr("collect_set(_sh) AS _shingles"))
+    return hashed.groupBy(id_col).agg(*aggs)
+
+
+def _band_keys_sql(num_hashes: int, bands: int) -> str:
+    """SQL text of a doc's ``array<struct<band_id: int, band_hash:
+    bigint>>`` from its ``sig``: band b hashes the comma join of lanes
+    ``b * rows .. b * rows + rows - 1`` (rows = num_hashes // bands)."""
+    rows = num_hashes // bands
+    return (
+        f"transform(sequence(0, {bands - 1}), _b -> named_struct('band_id', _b, "
+        f"'band_hash', xxhash64(array_join(transform(slice(sig, _b * {rows} + 1, "
+        f"{rows}), _x -> CAST(_x AS STRING)), ','))))"
     )
 
 
@@ -285,25 +314,31 @@ def minhash_lsh_buckets(
     pins the MinHash hash family (see :data:`MINHASH_FAMILIES`) —
     buckets from different families never match.
     """
-    rows = num_hashes // bands
     sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_n, family)
-    banded = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.struct(
-            b.alias("band_id"),
-            F.xxhash64(
-                F.array_join(
-                    F.transform(
-                        F.slice(F.col("sig"), b * rows + 1, rows),
-                        lambda x: x.cast("string"),
-                    ),
-                    ",",
-                )
-            ).alias("band_hash"),
-        ),
+    return sigs.selectExpr(
+        f"`{id_col}`", f"inline({_band_keys_sql(num_hashes, bands)})"
     )
-    return sigs.select(F.col(id_col), F.explode(banded).alias("b")).select(
-        id_col, F.col("b.band_id").alias("band_id"), F.col("b.band_hash").alias("band_hash")
+
+
+def _minhash_signed_docs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_hashes: int,
+    bands: int,
+    shingle_n: int,
+    family: str,
+) -> DataFrame:
+    """(id, _bands, _feat) — one row per signable doc: its
+    :func:`minhash_lsh_buckets` keys as an array and its distinct
+    shingle set, both from ONE signing pass (one shuffle)."""
+    sigs = _signature_rows(
+        df, text_col, id_col, num_hashes, shingle_n, family, shingles=True
+    )
+    return sigs.selectExpr(
+        f"`{id_col}`",
+        f"{_band_keys_sql(num_hashes, bands)} AS _bands",
+        "_shingles AS _feat",
     )
 
 
@@ -399,10 +434,11 @@ def minhash_dedup(
     at the cost of O(diameter) extra id-only joins.
 
     The in-batch sweep is :meth:`~.band_index.BandIndex.within_pairs`:
-    the band rows are checkpointed once (both sides of the self-join
-    and the verify would otherwise recompute the signature DAG —
-    measured 1.6x slower), and the loser set stays lazy in the
-    returned plan.
+    each doc's band keys and distinct shingle set come from ONE signing
+    pass, checkpointed once (both sides of the self-join and the
+    verify would otherwise recompute the signature DAG — measured 1.6x
+    slower), so verify never tokenizes a candidate again; the loser
+    set stays lazy in the returned plan.
     """
     dups = _minhash_index(
         text_col, id_col, num_hashes, bands, shingle_n, family, threshold
@@ -503,6 +539,9 @@ def _minhash_index(
         score="jaccard",
         threshold=threshold,
         sign=lambda df: minhash_lsh_buckets(
+            df, text_col, id_col, num_hashes, bands, shingle_n, family
+        ),
+        sign_docs=lambda df: _minhash_signed_docs(
             df, text_col, id_col, num_hashes, bands, shingle_n, family
         ),
         features=lambda df: df.select(id_col, word_shingles(text_col, shingle_n)),

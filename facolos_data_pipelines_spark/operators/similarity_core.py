@@ -85,40 +85,80 @@ def dot_literal(vec_col: Column | str, plane: list[float]) -> Column:
     )
 
 
-def _hyperplane_signature_sql(
-    vec_sql: str, num_planes: int, dim: int, plane_offset: int
-) -> str:
-    """Full SQL text of the packed hyperplane signature — the
-    zero-py4j twin of :func:`hyperplane_signature` (same per-bit CASE
-    structure, same width guard, bit-identical result)."""
+def _plane_matrix_sql(dim: int, plane_ids: list[list[int]]) -> str:
+    """ONE ``array<array<array<double>>>`` literal holding the seeded
+    planes ``plane_ids[band][bit]``, parsed from a JSON string. The
+    analyzer sees a single string literal whatever the matrix size
+    (inlined ``array(...)`` text analyzes to one node per double), and
+    ``from_json`` folds to a constant at optimization. ``repr`` text
+    round-trips each double exactly and the JSON reader picks the same
+    nearest value, so the parsed planes are bit-identical to
+    :func:`_seeded_plane`."""
+    import json
+
+    planes = [[_seeded_plane(dim, i) for i in band] for band in plane_ids]
+    return (
+        f"from_json('{json.dumps(planes, separators=(',', ':'))}', "
+        "'array<array<array<double>>>')"
+    )
+
+
+def _plane_fold_sql(vec_sql: str, planes_sql: str, dim: int) -> str:
+    """SQL text of the packed hyperplane signature of ``vec_sql`` over
+    the planes ``planes_sql`` (an ``array<array<double>>``): bit i =
+    sign(vec . plane_i), each dot the zip_with/aggregate fold whose
+    summation order the DuckDB oracle's ``list_sum`` mirrors. A vector
+    whose width is not ``dim`` raises (raise_error) rather than
+    zero-padding the dot. The one fold behind
+    :func:`hyperplane_signature` and :func:`banded_signatures`."""
     size_ok = f"(size({vec_sql}) = {dim})"
     guard = (
         "CAST(raise_error(concat('hyperplane_signature: vector width ', "
         f"CAST(size({vec_sql}) AS STRING), "
         f"' != dim {dim}; pass the embedding''s real dimension')) AS BIGINT)"
     )
-    bits = []
-    for i in range(num_planes):
-        dot = _dot_sql(vec_sql, _seeded_plane(dim, plane_offset + i))
-        bits.append(
-            f"CASE WHEN ({size_ok} AND ({dot} > 0)) THEN CAST({1 << i} AS BIGINT) "
-            f"WHEN (NOT {size_ok}) THEN {guard} ELSE CAST(0 AS BIGINT) END"
-        )
-    out = "CAST(0 AS BIGINT)"
-    for b in bits:
-        out = f"({out} | {b})"
-    return out
+    dot = (
+        f"aggregate(zip_with({vec_sql}, _pl, (_x, _y) -> CAST(_x AS DOUBLE) * _y), "
+        "0.0D, (_s, _z) -> _s + _z)"
+    )
+    bit = (
+        f"CASE WHEN ({size_ok} AND ({dot} > 0)) THEN shiftleft(CAST(1 AS BIGINT), _i) "
+        f"WHEN (NOT {size_ok}) THEN {guard} ELSE CAST(0 AS BIGINT) END"
+    )
+    return (
+        f"aggregate(transform({planes_sql}, (_pl, _i) -> {bit}), CAST(0 AS BIGINT), "
+        "(_sig, _bit) -> _sig | _bit)"
+    )
+
+
+def _banded_signatures_sql(
+    vec_sql: str, num_planes: int, num_bands: int, dim: int, plane_offset: int = 0
+) -> str:
+    """SQL text of ``array<struct<band: int, sig: bigint>>``: one
+    :func:`_plane_fold_sql` signature per band, band b over planes
+    ``plane_offset + b * num_planes + i``. One parse per plan, whatever
+    ``num_bands * num_planes * dim``."""
+    matrix = _plane_matrix_sql(
+        dim,
+        [
+            [plane_offset + b * num_planes + i for i in range(num_planes)]
+            for b in range(num_bands)
+        ],
+    )
+    fold = _plane_fold_sql(vec_sql, "_planes", dim)
+    return f"transform({matrix}, (_planes, _band) -> named_struct('band', _band, 'sig', {fold}))"
 
 
 def hyperplane_signature(
-    vec_col: Column | str,
+    vec_col: str,
     num_planes: int = 8,
     dim: int | None = None,
     plane_offset: int = 0,
 ) -> Column:
-    """Random-hyperplane LSH signature: bit i = sign(vec . plane_i),
-    packed into a long. dim defaults to 64 (the synthetic table's
-    width); pass the real dimension in production.
+    """Random-hyperplane LSH signature of the vector column named
+    ``vec_col``: bit i = sign(vec . plane_i), packed into a long. dim
+    defaults to 64 (the synthetic table's width); pass the real
+    dimension in production.
 
     ``plane_offset`` shifts the plane family (plane index =
     plane_offset + i) so banded LSH (dedup.embedding_near_dup_pairs)
@@ -132,34 +172,18 @@ def hyperplane_signature(
     all LSH blocking into one bucket (an O(n^2) join that still
     "works" on small data and hangs at scale).
 
-    Pass the vector as its column NAME (str) where possible: the whole
-    num_planes-bit signature then builds as ONE parsed SQL expression
-    instead of thousands of py4j round trips (bit-identical tree — see
-    :func:`lit_double_array`)."""
-    d = dim or 64
-    if isinstance(vec_col, str):
-        return F.expr(_hyperplane_signature_sql(f"`{vec_col}`", num_planes, d, plane_offset))
-    width_ok = F.size(vec_col) == d
-    guard = F.raise_error(
-        F.concat(
-            F.lit(f"hyperplane_signature: vector width "),
-            F.size(vec_col).cast("string"),
-            F.lit(f" != dim {d}; pass the embedding's real dimension"),
+    The signature is ONE parsed SQL expression: the planes are one
+    ``from_json`` literal matrix folded by ``transform`` /
+    ``aggregate`` (:func:`_plane_fold_sql`, shared with
+    :func:`banded_signatures`), so its plan holds a constant number of
+    literals whatever ``num_planes * dim``."""
+    if not isinstance(vec_col, str):
+        raise TypeError(
+            "hyperplane_signature: pass the vector column's NAME (a str), "
+            f"got {type(vec_col).__name__}"
         )
-    ).cast("long")
-    bits = [
-        F.when(
-            width_ok & (dot_literal(vec_col, _seeded_plane(d, plane_offset + i)) > 0),
-            F.lit(1 << i).cast("long"),
-        )
-        .when(~width_ok, guard)
-        .otherwise(F.lit(0).cast("long"))
-        for i in range(num_planes)
-    ]
-    out = F.lit(0).cast("long")
-    for b in bits:
-        out = out.bitwiseOR(b)
-    return out
+    sigs = _banded_signatures_sql(f"`{vec_col}`", num_planes, 1, dim or 64, plane_offset)
+    return F.expr(f"{sigs}[0].sig")
 
 
 def banded_signatures(
@@ -182,24 +206,14 @@ def banded_signatures(
     external engine reproduces the buckets exactly. A vector whose
     width differs from ``dim`` raises rather than silently collapsing
     the blocking into one bucket."""
-    # vec_col passed as its NAME: each band's whole signature builds as
-    # one parsed SQL expression (see hyperplane_signature) — the py4j
-    # round-trip count per plan build drops from ~num_bands*num_planes*
-    # (dim+6) to ~num_bands parses (measured ~7 s -> ~0.2 s of driver
-    # time at 4 bands x 6 planes x dim 64; plans/r12/OPTIMIZATION.md).
-    arr = F.array(
-        *[
-            F.struct(
-                F.lit(band).alias("band"),
-                hyperplane_signature(
-                    vec_col, num_planes, dim, plane_offset=band * num_planes
-                ).alias("sig"),
-            )
-            for band in range(num_bands)
-        ]
-    )
-    return df.select(F.col(id_col).alias(out_id), F.explode(arr).alias("_bs")).select(
-        out_id, F.col("_bs.band").alias("band"), F.col("_bs.sig").alias("sig")
+    # the whole banded signature is ONE parsed SQL expression over one
+    # literal plane matrix (_banded_signatures_sql): one py4j parse per
+    # plan build and a constant literal count in the analyzed plan
+    # (per-plane inlined literals analyzed ~3,300 nodes per plan at
+    # 4 bands x 13 planes x dim 64)
+    sigs = _banded_signatures_sql(f"`{vec_col}`", num_planes, num_bands, dim or 64)
+    return df.selectExpr(
+        f"`{id_col}` AS `{out_id}`", f"inline({sigs})"
     )
 
 

@@ -21,6 +21,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..eager import materialize_counted
 from ..operators.incremental import retention_filter
@@ -100,13 +101,53 @@ def append_with_pk_rejection(
 
     The anti-joined plan is eagerly materialized ONCE, with its row
     count observed on the same job, before the write: the
-    extract→conform→anti-join plan executes once per cycle."""
+    extract→conform→anti-join plan executes once per cycle.
+
+    A landed table whose ``(name, dataType)`` list differs from
+    ``incoming``'s (the contract-aligned frame) is refused before any
+    write: the anti join reads only the key columns, so files of
+    another shape would otherwise land beside the old ones and leave a
+    table no reader can collect. The check reads the landed schema
+    Spark already resolved, so it costs no job."""
     existing = spark.read.parquet(path) if table_exists(spark, path) else None
+    if existing is not None:
+        _refuse_other_schema(path, existing.schema, incoming.schema)
     fresh = incoming if existing is None else append_dedup(existing, incoming, keys)
     fresh, n = materialize_counted(fresh)
     if n:
         fresh.write.mode("append").parquet(path)
     return n
+
+
+def _refuse_other_schema(path: str, landed: T.StructType, incoming: T.StructType) -> None:
+    """Raise when the table landed at ``path`` does not have the
+    incoming frame's columns, in its order, with its types."""
+    have = {f.name: f.dataType for f in landed.fields}
+    want = {f.name: f.dataType for f in incoming.fields}
+    if list(have.items()) == list(want.items()):
+        return
+
+    def names(cols: list[str]) -> str:
+        return ", ".join(cols[:5]) + (f" and {len(cols) - 5} more" if len(cols) > 5 else "")
+
+    differ = [
+        f"{label}: {names(cols)}"
+        for label, cols in (
+            ("retyped", [
+                f"{n} {t.simpleString()} -> {want[n].simpleString()}"
+                for n, t in have.items() if n in want and want[n] != t
+            ]),
+            ("landed only", [n for n in have if n not in want]),
+            ("incoming only", [n for n in want if n not in have]),
+        )
+        if cols
+    ] or ["the column order"]
+    raise ValueError(
+        f"landed table at {path!r} ({len(have)} columns) differs from the "
+        f"incoming frame ({len(want)} columns) in {'; '.join(differ)}. Refusing "
+        "to append: rewrite the table under the contract, or move it aside so "
+        "the next cycle lands a new one"
+    )
 
 
 def upsert_parquet(

@@ -280,8 +280,8 @@ def near_dup_filter_sink(
 
     1. WITHIN-batch near-dedup with the full verified MinHash pipeline
        (minhash_dedup's exact semantics — LSH candidates, exact Jaccard
-       verify, drop the higher id — built from band rows the batch
-       signs ONCE per micro-batch);
+       verify, drop the higher id — scored inside each band bucket from
+       the shingle sets the batch's ONE signing pass collected);
     2. CROSS-batch dedup against the persisted band-bucket store: a doc
        sharing ANY (band_id, band_hash) bucket with prior ingests is
        dropped. This decision is bucket-level — the LSH collision
@@ -358,7 +358,13 @@ def hist_state_sink(
     The bin count derives from the pinned family (the mismatch-proof
     call form); the batch frame is checkpointed once so the guard adds
     a tiny-aggregate read, not a second batch scan. ``None`` (default)
-    keeps the guard off."""
+    keeps the guard off.
+
+    The pinned edges are read once per sink, at its first batch: the
+    store contract makes them immutable (a re-bootstrap writes a new
+    ``edges_path`` for a new sink). An empty batch counts no row and
+    so writes nothing; there is no separate emptiness probe."""
+    edges: list[float] = []
 
     def append_batch(batch_df: DataFrame, batch_id: int) -> None:
         import logging
@@ -366,12 +372,10 @@ def hist_state_sink(
         from ..quality.checks import hist_edges_drift, hist_state, pinned_edges
         from ..sources.io import overwrite_partitions
 
-        spark = batch_df.sparkSession
-        if not batch_df.head(1):
-            return
-        edges = pinned_edges(
-            spark.read.parquet(edges_path), "hist_state_sink"
-        )
+        if not edges:
+            edges.extend(pinned_edges(
+                batch_df.sparkSession.read.parquet(edges_path), "hist_state_sink"
+            ))
         rows = hist_state(batch_df, ts_col, col, edges).withColumn(
             "_batch_id", F.lit(int(batch_id))
         )
@@ -421,8 +425,10 @@ def embedding_near_dup_sink(
     streaming sink). Per micro-batch:
 
     1. WITHIN-batch near-dedup with the full verified pipeline
-       (embedding_dedup — vectors are at hand, so candidates get the
-       exact cosine check at ``threshold``);
+       (embedding_dedup's semantics — vectors are at hand, so
+       candidates get the exact cosine check at ``threshold``, scored
+       inside each band bucket from the normalized vectors the signing
+       pass carried);
     2. CROSS-batch dedup against the persisted band-signature store
        (embedding_band_state rows): a vector sharing ANY (band, sig)
        bucket with prior ingests is dropped. Bucket-level on purpose —

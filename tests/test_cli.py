@@ -226,3 +226,38 @@ def test_cli_cycle_lands_every_table_under_its_contract(spark, tmp_path, capsys)
     finally:
         for t in STAGING_TABLES:
             spark.sql(f"DROP TABLE IF EXISTS staging.{t}")
+
+
+def test_cli_cycle_refuses_a_landed_table_of_another_shape(spark, tmp_path, capsys):
+    """A ``misa_sale_orders_flattened`` directory landed in an older,
+    38-column shape (``item_tax_percent`` a double) is refused before
+    any write: the endpoint reports ``failed`` with the repair, and the
+    directory's files are unchanged."""
+    from pyspark.sql import types as T
+
+    from facolos_data_pipelines_spark.catalog.schemas import STAGING_TABLES
+
+    contract = STAGING_TABLES["misa_sale_orders_flattened"]
+    old_shape = T.StructType(
+        [f for f in contract.fields if f.name != "item_tax_percent"][:37]
+        + [T.StructField("item_tax_percent", T.DoubleType())]
+    )
+    staging = tmp_path / "staging"
+    landed = staging / "misa_sale_orders_flattened"
+    spark.createDataFrame([tuple([None] * 38)], old_shape).write.parquet(str(landed))
+    files = sorted(os.listdir(landed))
+
+    landing = tmp_path / "landing" / "misa_sale_orders"
+    landing.mkdir(parents=True)
+    (landing / "batch1.json").write_text(json.dumps({
+        "id": 7, "sale_order_no": "SO7",
+        "sale_order_product_mappings": [{"id": 70, "tax_percent": "10"}],
+    }) + "\n")
+    main(["cycle", "--landing-root", str(tmp_path / "landing"),
+          "--staging-root", str(staging), "--min-tables", "1"])
+    report = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    entry = report["endpoints"]["misa_sale_orders"]
+    assert entry["status"] == "failed"
+    assert "item_tax_percent" in entry["error"]
+    assert "rewrite the table under the contract" in entry["error"]
+    assert sorted(os.listdir(landed)) == files

@@ -249,6 +249,29 @@ def test_truncate_strings(spark):
     assert out["item_quantity"] == 5  # non-string untouched
 
 
+def test_truncate_strings_projects_only_truncated_columns(spark):
+    """Only the truncated string columns are projected, and the
+    optimized plan equals the one-Column-per-column projection's."""
+    widths = dict(TRUNCATION_WIDTHS)
+    df = spark.createDataFrame(
+        [("x" * 600, 5, "y" * 40, "z")],
+        "item_name string, item_quantity int, order_id string, untouched string",
+    )
+    string_cols = {"item_name", "order_id", "untouched"}
+    reference = df.select(
+        *[
+            F.substring(F.col(c), 1, widths[c]).alias(c)
+            if widths.get(c, 0) > 0 and c in string_cols else F.col(c)
+            for c in df.columns
+        ]
+    )
+    out = conform.truncate_strings(df, widths)
+    assert out.columns == df.columns
+    plan = out._jdf.queryExecution().optimizedPlan()
+    assert plan.sameResult(reference._jdf.queryExecution().optimizedPlan())
+    assert out.collect() == reference.collect()
+
+
 def test_align_to_schema(spark):
     target = T.StructType(
         [

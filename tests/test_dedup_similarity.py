@@ -1845,3 +1845,119 @@ def test_embedding_delta_multi_cycle_loop(spark, tmp_path):
         )
     assert {r["vec_id"] for r in accepted.collect()} == {1, 2, 4, 7}
     assert spark.read.parquet(store).count() == 4 * accepted.count()
+
+
+def _plane_reference(vec, dim, planes):
+    """Per-plane reference signature: bit i = sign(vec . plane_i), the
+    dot summed left to right from 0.0 as Spark's zip_with/aggregate
+    fold does (same IEEE double operations, so bit-identical)."""
+    sig = 0
+    for i, p in enumerate(planes):
+        acc = 0.0
+        for x, y in zip(vec, similarity._seeded_plane(dim, p)):
+            acc += float(x) * y
+        if acc > 0:
+            sig |= 1 << i
+    return sig
+
+
+def test_hyperplane_signers_equal_per_plane_reference(spark):
+    """The one-literal plane-matrix fold behind hyperplane_signature and
+    banded_signatures equals a per-plane reference on random vectors,
+    zero vectors included, and keeps the width guard's message."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    dim = 16
+    vecs = [[float(x) for x in rng.standard_normal(dim)] for _ in range(40)]
+    vecs += [[0.0] * dim, [-0.0] * dim, [float(x) * 1e-9 for x in vecs[0]]]
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>"
+    )
+    planes, bands = 7, 3
+    got = {
+        (r["id"], r["band"]): r["sig"]
+        for r in similarity.banded_signatures(
+            emb, "embedding", "vec_id", planes, bands, dim
+        ).collect()
+    }
+    want = {
+        (i, b): _plane_reference(v, dim, range(b * planes, (b + 1) * planes))
+        for i, v in enumerate(vecs)
+        for b in range(bands)
+    }
+    assert got == want
+    single = emb.select(
+        "vec_id",
+        similarity.hyperplane_signature("embedding", planes, dim, plane_offset=2)
+        .alias("s"),
+    ).collect()
+    assert {r["vec_id"]: r["s"] for r in single} == {
+        i: _plane_reference(v, dim, range(2, 2 + planes)) for i, v in enumerate(vecs)
+    }
+    narrow = spark.createDataFrame([(1, [1.0, 2.0])], ["vec_id", "embedding"])
+    for signed in (
+        similarity.banded_signatures(narrow, "embedding", "vec_id", planes, bands, dim),
+        narrow.select(similarity.hyperplane_signature("embedding", planes, dim)),
+    ):
+        with pytest.raises(
+            Exception,
+            match=f"vector width 2 != dim {dim}; pass the embedding's real dimension",
+        ):
+            signed.collect()
+
+
+def test_hyperplane_plan_literals_do_not_grow_with_planes(spark):
+    """The signing plan holds one plane-matrix literal: the analyzed
+    plan's literal count is the same at 4 planes x dim 8 as at
+    13 planes x dim 64 (per-plane inlined literals analyzed one node
+    per double)."""
+
+    def literals(df):
+        return df._jdf.queryExecution().analyzed().toJSON().count(
+            '"class":"org.apache.spark.sql.catalyst.expressions.Literal"'
+        )
+
+    counts = set()
+    for planes, dim in ((4, 8), (13, 64)):
+        emb = spark.createDataFrame(
+            [(1, [0.5] * dim)], "vec_id long, embedding array<double>"
+        )
+        counts.add((
+            literals(similarity.banded_signatures(emb, "embedding", "vec_id", planes, 4, dim)),
+            literals(emb.select(similarity.hyperplane_signature("embedding", planes, dim))),
+        ))
+    assert len(counts) == 1
+
+
+@pytest.mark.parametrize("family", ["multiply_add", "xxhash", "md5"])
+def test_minhash_signatures_equal_per_lane_reference(docs, family):
+    """The SQL-text lanes and mins equal a per-lane Column reference:
+    lane i is a_i * xxhash64(shingle) + b_i (multiply_add),
+    xxhash64(shingle, i) (xxhash) or md5('i:' || shingle) (md5), and
+    each signature entry is the lane's min over the doc's shingles."""
+    from facolos_data_pipelines_spark.operators.dedup_common import (
+        _MINHASH_A,
+        _MINHASH_B,
+    )
+    from facolos_data_pipelines_spark.operators.dedup_minhash import exploded_shingles
+
+    n = 12
+    lanes = {
+        "multiply_add": lambda i: F.xxhash64("_sh") * F.lit(_MINHASH_A[i])
+        + F.lit(_MINHASH_B[i]),
+        "xxhash": lambda i: F.xxhash64("_sh", F.lit(i)),
+        "md5": lambda i: F.md5(F.concat(F.lit(f"{i}:"), F.col("_sh"))),
+    }[family]
+    sh = exploded_shingles(docs, distinct=False)
+    want = {
+        r["doc_id"]: list(r[1:])
+        for r in sh.groupBy("doc_id")
+        .agg(*[F.min(lanes(i)).alias(f"h{i}") for i in range(n)])
+        .collect()
+    }
+    got = {
+        r["doc_id"]: list(r["sig"])
+        for r in dedup.minhash_signatures(docs, num_hashes=n, family=family).collect()
+    }
+    assert got == want and len(got) == 5

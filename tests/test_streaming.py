@@ -1107,8 +1107,10 @@ def test_hist_state_sink_streaming_and_replay_idempotent(spark, tmp_root):
         for r in psi_from_hist_state(spark.read.parquet(store)).collect()
     )
     assert after == want
-    # an empty batch is a no-op
+    # an empty batch is a no-op: it writes nothing at all
+    before = _tree_bytes(store)
     fold(spark.createDataFrame([], schema), 999)
+    assert _tree_bytes(store) == before
     assert sorted(
         tuple(r)
         for r in psi_from_hist_state(spark.read.parquet(store)).collect()
@@ -1864,3 +1866,63 @@ def test_streamed_guard_to_recovery_runbook_end_to_end(spark, tmp_root, caplog):
     }
     for d in ("2024-03-04", "2024-03-05"):
         assert got[d]["psi"] == alone[d]
+
+
+def _jobs_of(spark, action) -> int:
+    """Spark jobs ``action()`` submits, counted by the status tracker
+    under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_sink_micro_batch_job_budget(spark, tmp_root):
+    """A micro-batch that probes history runs a fixed number of Spark
+    jobs: the near-dup sink 9 (sign 2 — one shuffle —, the drop-set
+    checkpoint 3, two writes of 2), the embedding sink 8 (its signing
+    pass is narrow), and the histogram sink 2 once its pinned edges
+    are read (the write's shuffle and result)."""
+    from datetime import datetime
+
+    from facolos_data_pipelines_spark.quality.checks import hist_edges
+    from facolos_data_pipelines_spark.streaming import (
+        embedding_near_dup_sink,
+        hist_state_sink,
+        near_dup_filter_sink,
+    )
+
+    words = _BASE_TEXT.split()
+    docs = [(i, " ".join(words[i % 4:] + [f"w{i}"])) for i in range(12)]
+    vecs = [(i, _vec(i, noise=0.01 * (i % 3))) for i in range(12)]
+    sinks = {
+        "docs": (
+            near_dup_filter_sink(f"{tmp_root}/ds", f"{tmp_root}/dst", store_partitions=4),
+            docs, _DOC_SCHEMA, 9,
+        ),
+        "vecs": (
+            embedding_near_dup_sink(
+                f"{tmp_root}/vs", f"{tmp_root}/vst", num_planes=4, num_bands=2,
+                dim=8, store_partitions=4,
+            ),
+            vecs, _VEC_SCHEMA, 8,
+        ),
+    }
+    for name, (fold, rows, schema, budget) in sinks.items():
+        fold(spark.createDataFrame(rows[::2], schema), 0)
+        second = spark.createDataFrame(rows[1::2], schema)
+        assert _jobs_of(spark, lambda: fold(second, 1)) == budget, name
+
+    events = [(datetime(2024, 3, 1 + i % 2, 12), float(i)) for i in range(40)]
+    schema = "ts timestamp, value double"
+    hist_edges(spark.createDataFrame(events, schema), "value").write.parquet(
+        f"{tmp_root}/edges"
+    )
+    fold = hist_state_sink(f"{tmp_root}/hs", f"{tmp_root}/edges", "ts", "value")
+    fold(spark.createDataFrame(events[:20], schema), 0)
+    second = spark.createDataFrame(events[20:], schema)
+    assert _jobs_of(spark, lambda: fold(second, 1)) == 2
