@@ -52,16 +52,16 @@ class BandIndex:
       directory holding only its manifest reads as empty.
     - Sign once: a batch is signed once and checkpointed; the in-batch
       sweep, the history probe and the store write all select from
-      those rows. The delta operators checkpoint band rows (``sign``).
-      The in-batch sweeps (:meth:`within_pairs`, and a sink's
-      :meth:`BandStore.fold`) checkpoint one row per document
+      those rows. The corpus operators checkpoint id-width band rows
+      (``sign``) and featurize only candidates. A sink's
+      :meth:`BandStore.fold` checkpoints one row per document
       (``sign_docs``: its band keys as ``_bands`` plus the verify
       feature as ``_feat`` — the distinct shingle set, or the
-      normalized vector), so verify reads features the signing pass
-      already computed, and band rows are a narrow ``inline`` of
-      ``_bands``. Each signer is one parsed SQL expression per plan.
-      A document's band rows do not depend on which frame selects
-      them, so every consumer sees the same rows.
+      normalized vector), so its sweep reads features the signing
+      pass already computed, and its band rows are a narrow
+      ``inline`` of ``_bands``. Each signer is one parsed SQL
+      expression per plan. A document's band rows do not depend on
+      which frame selects them, so every consumer sees the same rows.
     - Probe: a sink store is partitioned by ``bucket_pmod =
       pmod(keys[1], store_partitions)`` and then by ``_batch_id``, and
       probed by broadcasting the batch's band rows against a map-only
@@ -86,13 +86,13 @@ class BandIndex:
     reading each side's documents id-pruned to the candidate set, and
     keeps pairs whose ``score`` clears ``threshold``. ``features``
     projects ``(id_col, feature)``; ``similarity`` compares two feature
-    columns. ``verify_within(cand, df)`` is the in-batch form of the
-    delta operators' internal branch, both sides from one frame:
-    MinHash runs ``verified_near_dup_pairs``' explode path, cosine one
-    join of the frame's normalized vectors. ``sign_docs`` signs one
-    row per document with its feature (see "Sign once"), which both
-    in-batch sweeps read: :meth:`within_pairs` for a corpus,
-    :meth:`bucket_pairs` for a broadcast-sized micro-batch."""
+    columns. ``verify_within(cand, df)`` is the required in-batch form,
+    both sides from one frame: MinHash runs ``verified_near_dup_pairs``'
+    explode path, cosine one join of the frame's normalized vectors.
+    :meth:`within_pairs` is the in-batch sweep of a corpus, which
+    returns pairs; :meth:`bucket_losers` is a sink's, which returns
+    only the ids it drops, from ``sign_docs`` rows (see "Sign
+    once")."""
 
     id_col: str
     keys: tuple[str, str]
@@ -109,18 +109,14 @@ class BandIndex:
     def verify(self, cand: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
         def side(df: DataFrame, side_id: str) -> DataFrame:
             ids = cand.select(F.col(side_id).alias(self.id_col)).dropDuplicates()
-            return self.features(df.join(ids, self.id_col, "left_semi"))
+            return self.features(df.join(ids, self.id_col, "left_semi")).toDF(
+                side_id, f"_f_{side_id}"
+            )
 
-        return self._scored(cand, side(left, "id_a"), side(right, "id_b"))
-
-    def _scored(self, cand: DataFrame, fa: DataFrame, fb: DataFrame) -> DataFrame:
-        """(id_a, id_b, score) for the ``cand`` pairs whose score clears
-        ``threshold``; ``fa`` / ``fb`` are ``(id_col, feature)`` frames
-        of the two sides."""
         sim = self.similarity(F.col("_f_id_a"), F.col("_f_id_b"))
         return (
-            cand.join(fa.toDF("id_a", "_f_id_a"), "id_a")
-            .join(fb.toDF("id_b", "_f_id_b"), "id_b")
+            cand.join(side(left, "id_a"), "id_a")
+            .join(side(right, "id_b"), "id_b")
             .select("id_a", "id_b", sim.alias(self.score))
             .filter(F.col(self.score) >= self.threshold)
         )
@@ -151,53 +147,46 @@ class BandIndex:
     ) -> DataFrame:
         """(id_a, id_b, score), id_a < id_b — the verified near-dup
         pairs inside ``df``, the in-batch sweep of a corpus. ``df`` is
-        signed once (:attr:`sign_docs`) and checkpointed: the candidate
-        self-join reads its band rows (a narrow ``inline``) on both
-        sides, and verify joins each candidate side to the feature the
-        signing pass computed, so no document is read or featurized a
-        second time."""
-        signed = materialize(self.sign_docs(df))
-        bands = signed.selectExpr(f"`{self.id_col}`", "inline(_bands)")
+        signed once and its band rows, which both sides of the
+        self-join read, are checkpointed; the checkpointed rows are
+        id-width, and verify featurizes the candidates only."""
+        bands = materialize(self.sign(df))
         cand = self._self_join(bands, max_bucket_size).dropDuplicates()
-        features = signed.select(self.id_col, "_feat")
-        return self._scored(cand, features, features)
+        return self.verify_within(cand, df)
 
-    def bucket_pairs(self, signed: DataFrame) -> DataFrame:
-        """(id_a, id_b, score), id_a < id_b, score >= ``threshold`` —
-        the verified pairs among the documents of ``signed``
-        (:attr:`sign_docs` rows), scored from the features the signing
+    def bucket_losers(self, signed: DataFrame) -> DataFrame:
+        """(id_col) — the ids the one-sweep min-id rule drops among the
+        documents of ``signed`` (:attr:`sign_docs` rows): a document
+        loses when a smaller-id document sharing one of its band keys
+        scores ``>= threshold`` against it, on the features the signing
         pass carried. One shuffle: each band key gathers its members'
-        ``(id, feature)`` and scores them pairwise in place, so no
-        document is joined back or re-featurized. A pair sharing
-        several bands repeats. Every member carries its feature into
-        each of its buckets, so this is the sweep for a
-        broadcast-sized frame (a sink's micro-batch); a corpus takes
-        :meth:`within_pairs`, which shuffles id-width band rows and
-        joins features to candidates only."""
+        ``(id, feature)`` and keeps the members that such a member
+        beats. The output is at most one row per member per band key
+        (an id repeats across bands) and no pair is ever built, so a
+        bucket of n exact duplicates yields n - 1 rows, each found at
+        its first smaller member. Every member carries its feature
+        into each of its buckets: this is the sweep of a sink's
+        micro-batch (:meth:`BandStore.fold`); a corpus takes
+        :meth:`within_pairs`, whose checkpoint is id-width."""
         members = signed.select(
             F.struct(F.col(self.id_col).alias("i"), F.col("_feat").alias("f")).alias("_d"),
             F.inline("_bands"),
         )
-        buckets = (
+
+        def beaten(a: Column) -> Column:
+            return F.exists(
+                "_m",
+                lambda b: (b["i"] < a["i"])
+                & (self.similarity(b["f"], a["f"]) >= self.threshold),
+            )
+
+        return (
             members.groupBy(*self.keys)
             .agg(F.collect_list("_d").alias("_m"))
             .filter(F.size("_m") > 1)
+            .select(F.explode(F.filter("_m", beaten)).alias("_d"))
+            .select(F.col("_d.i").alias(self.id_col))
         )
-
-        def scored(a: Column) -> Column:
-            return F.filter(
-                F.transform(
-                    F.filter("_m", lambda b: b["i"] > a["i"]),
-                    lambda b: F.struct(
-                        a["i"].alias("id_a"),
-                        b["i"].alias("id_b"),
-                        self.similarity(a["f"], b["f"]).alias(self.score),
-                    ),
-                ),
-                lambda p: p[self.score] >= self.threshold,
-            )
-
-        return buckets.select(F.inline(F.flatten(F.transform("_m", scored))))
 
     def cross_pairs(
         self,
@@ -513,7 +502,7 @@ class BandStore:
         """One micro-batch in four actions: sign the batch ONCE
         (:attr:`BandIndex.sign_docs`, checkpointed with each doc's band
         keys and verify feature); checkpoint the ids it drops — the
-        losers of the in-batch sweep (:meth:`BandIndex.bucket_pairs`,
+        losers of the in-batch sweep (:meth:`BandIndex.bucket_losers`,
         the batch operators' one-sweep min-id rule) and every doc
         sharing a band key with the rest of the store (broadcast
         probe); then write the rest to ``docs_path`` and their band
@@ -569,7 +558,7 @@ class BandStore:
                 batch_id, unsignable[0], ix.noun,
             )
         bands = band_rows(signed)
-        drop = ix.bucket_pairs(signed).select(F.col("id_b").alias(id_col))
+        drop = ix.bucket_losers(signed)
         if history is not None:
             # Broadcast the (small) batch side; the store is scanned
             # map-side only — no store shuffle, and the partition-column
@@ -632,23 +621,18 @@ class BandStore:
         id_col, keys = self.index.id_col, list(self.index.keys)
 
         def rewrite(files: list[str], tmp: str) -> tuple[int, int]:
-            # ONE shuffle: hashing on the layout column alone clusters
-            # every bucket too, so the dedup aggregate needs no second
-            # exchange and the write lands one file per layout
-            # partition. Both row counts ride the checkpoint's job.
-            deduped, counts = materialize_observed(
-                spark.read.parquet(path)
-                .observe("rows_before", F.count(F.lit(1)).alias("rows"))
-                .repartition(_LAYOUT)
-                .groupBy(_LAYOUT, *keys)
+            store = spark.read.parquet(path)
+            rows_before = store.count()
+            deduped = (
+                store.groupBy(_LAYOUT, *keys)
                 .agg(F.min(id_col).alias(id_col))
                 .withColumn(_BATCH, F.lit(_COMPACTED).cast("long"))
-                .observe("rows_after", F.count(F.lit(1)).alias("rows")),
-                "rows_before", "rows_after",
+                .repartition(_LAYOUT)
             )
             deduped.write.mode("overwrite").partitionBy(_LAYOUT, _BATCH).parquet(tmp)
+            rows_after = spark.read.parquet(tmp).count()
             _write_manifest(spark, tmp, manifest)
-            return tuple(counts)
+            return rows_before, rows_after
 
         before, after, (rows_before, rows_after) = _swap_compacted(
             path, "compact_bucket_store", rewrite

@@ -198,13 +198,12 @@ def embedding_near_dup_pairs(
         return _exact_pairs_gemm(
             _normalized_vectors(df, vec_col, id_col), id_col, threshold
         )
-    # Banded blocking on (band, sig) keys signed from the RAW vector
+    # Banded blocking on (id, band, sig) rows signed from the RAW vector
     # (sign is scale-invariant; the oracle mirrors raw too), checkpointed
-    # once inside within_pairs with each vector's normalized form: the
-    # self-join reads the band rows twice (three times with the bucket
-    # cap), the signature computation (num_bands x num_planes dot
-    # products per row) is the expensive subtree, and verify reads the
-    # normalized vectors from the same rows instead of the frame.
+    # once inside within_pairs: the self-join reads them twice (three
+    # times with the bucket cap) and the signature computation
+    # (num_bands x num_planes dot products per row) is the expensive
+    # subtree. The checkpointed rows are id-width, never vectors.
     return _cosine_index(
         vec_col, id_col, num_planes, num_bands, dim, threshold
     ).within_pairs(df, max_bucket_size=max_bucket_size)

@@ -434,11 +434,10 @@ def minhash_dedup(
     at the cost of O(diameter) extra id-only joins.
 
     The in-batch sweep is :meth:`~.band_index.BandIndex.within_pairs`:
-    each doc's band keys and distinct shingle set come from ONE signing
-    pass, checkpointed once (both sides of the self-join and the
-    verify would otherwise recompute the signature DAG — measured 1.6x
-    slower), so verify never tokenizes a candidate again; the loser
-    set stays lazy in the returned plan.
+    the band rows are checkpointed once (both sides of the self-join
+    and the verify would otherwise recompute the signature DAG —
+    measured 1.6x slower), and the loser set stays lazy in the
+    returned plan.
     """
     dups = _minhash_index(
         text_col, id_col, num_hashes, bands, shingle_n, family, threshold

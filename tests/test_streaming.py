@@ -1926,3 +1926,41 @@ def test_sink_micro_batch_job_budget(spark, tmp_root):
     fold(spark.createDataFrame(events[:20], schema), 0)
     second = spark.createDataFrame(events[20:], schema)
     assert _jobs_of(spark, lambda: fold(second, 1)) == 2
+
+
+def test_sink_batch_of_identical_rows_keeps_the_min_id(spark, tmp_root):
+    """One micro-batch holding 400 copies of one document (and of one
+    vector) next to a few distinct rows: every copy shares every band
+    key, so the in-batch sweep sees one 400-member bucket per band. It
+    keeps the smallest id of the copies and every distinct row, and the
+    store holds the band rows of the survivors only."""
+    from facolos_data_pipelines_spark.streaming import (
+        embedding_near_dup_sink,
+        near_dup_filter_sink,
+    )
+
+    copies = range(100, 500)
+    docs = [(i, _BASE_TEXT) for i in copies] + [
+        (7, "other words about spark entirely"),
+        (9, "a third unrelated sentence here"),
+    ]
+    vecs = [(i, _vec(1)) for i in copies] + [(7, _vec(4)), (9, _vec(6))]
+    sinks = {
+        "docs": (
+            near_dup_filter_sink(f"{tmp_root}/ds", f"{tmp_root}/dst", store_partitions=4),
+            docs, _DOC_SCHEMA, "doc_id", "ds", "dst",
+        ),
+        "vecs": (
+            embedding_near_dup_sink(
+                f"{tmp_root}/vs", f"{tmp_root}/vst", num_planes=4, num_bands=2,
+                dim=8, store_partitions=4,
+            ),
+            vecs, _VEC_SCHEMA, "vec_id", "vs", "vst",
+        ),
+    }
+    for name, (fold, rows, schema, id_col, out, store) in sinks.items():
+        fold(spark.createDataFrame(rows, schema), 0)
+        kept = {r[0] for r in spark.read.parquet(f"{tmp_root}/{out}").select(id_col).collect()}
+        assert kept == {7, 9, 100}, name
+        filed = {r[0] for r in spark.read.parquet(f"{tmp_root}/{store}").select(id_col).collect()}
+        assert filed == kept, name
