@@ -614,25 +614,23 @@ class BandStore:
         local-path rename swap, same as ``compact_parquet``). Returns
         ``{"files_before", "files_after", "rows_before",
         "rows_after"}``."""
-        from ..sources.io import _swap_compacted
+        from ..sources.io import _parquet_files, _parquet_rows, _swap_compacted
 
         path = self.path.rstrip("/")
         manifest = _read_manifest(spark, path, action="compact")
         id_col, keys = self.index.id_col, list(self.index.keys)
 
         def rewrite(files: list[str], tmp: str) -> tuple[int, int]:
-            store = spark.read.parquet(path)
-            rows_before = store.count()
             deduped = (
-                store.groupBy(_LAYOUT, *keys)
+                spark.read.parquet(path)
+                .groupBy(_LAYOUT, *keys)
                 .agg(F.min(id_col).alias(id_col))
                 .withColumn(_BATCH, F.lit(_COMPACTED).cast("long"))
                 .repartition(_LAYOUT)
             )
             deduped.write.mode("overwrite").partitionBy(_LAYOUT, _BATCH).parquet(tmp)
-            rows_after = spark.read.parquet(tmp).count()
             _write_manifest(spark, tmp, manifest)
-            return rows_before, rows_after
+            return _parquet_rows(files), _parquet_rows(_parquet_files(tmp))
 
         before, after, (rows_before, rows_after) = _swap_compacted(
             path, "compact_bucket_store", rewrite

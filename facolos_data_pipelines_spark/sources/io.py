@@ -437,6 +437,14 @@ def _parquet_files(path: str) -> list[str]:
     return [f for f in found if os.path.isfile(f)]
 
 
+def _parquet_rows(files: list[str]) -> int:
+    """The row count of local parquet ``files``, summed from their
+    footers on the driver: no Spark job, no data page read."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
+
+
 def _swap_compacted(path: str, what: str, rewrite: Callable[[list[str], str], object]):
     """The local-path compaction swap behind :func:`compact_parquet` and
     ``BandStore.compact``: refuse ``://`` paths, list the table's parquet
